@@ -32,7 +32,7 @@ WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
 WORK = os.path.join(WORK_ROOT, str(os.getpid()))
 DEADLINE_S = 170
 
-# session pinned to this machine: one local executor thread per usable
+# session sized to the host it runs on: one local executor thread per usable
 # core, a heap well below physical RAM, every scratch dir in the checkout
 CORES = len(os.sched_getaffinity(0))
 DRIVER_MEMORY = "3g"
