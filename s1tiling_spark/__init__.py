@@ -19,8 +19,8 @@ Layout
                    relational operator mappings (SURVEY.md §2)
 - ``functions``  : vectorized kernels (Gorilla XOR, delta-of-delta,
                    token-histogram sketches)
-- ``plans``      : incremental planner (watermark checkpoint, MERGE-style
-                   sink, lineage + metrics)
+- ``plans``      : incremental planner (one commit seq + one refresh
+                   record per refresh, MERGE-style sink, lineage + metrics)
 - ``streaming``  : Structured Streaming variant of the 1h rollup
 """
 

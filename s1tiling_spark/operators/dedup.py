@@ -103,12 +103,6 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def exact_dedup_survivors(docs: DataFrame) -> DataFrame:
-    """Documents surviving exact dedup (canonical row per text)."""
-    keep = exact_dedup_groups(docs).select(F.col("keep_id").alias("doc_id"))
-    return docs.join(keep, "doc_id", "left_semi")
-
-
 # ----------------------------------------------------- n-gram Jaccard
 def jaccard_pairs(
     docs: DataFrame, k: int = 3, tau: float = 0.8, max_df: int | None = None

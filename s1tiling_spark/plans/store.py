@@ -1,4 +1,4 @@
-"""Tier table store: MERGE-semantics sink + checkpoint + metrics.
+"""Tier table store: MERGE-semantics sink + refresh record (watermarks, metrics).
 
 This is the engine's custom machinery (SURVEY §4 "custom-rule verdict"):
 the reference's incremental re-run layer — skip any task whose product
@@ -12,12 +12,13 @@ Sandbox note: no Iceberg catalog is available, so MERGE is abstracted
 carries a monotonically increasing ``commit_seq`` lineage column; readers
 keep the newest version of each (bucket_start, source) via a window
 rank. On a real deployment the same interface maps to Iceberg
-``MERGE INTO`` + snapshot ids; the checkpoint/planner logic is
+``MERGE INTO`` + snapshot ids; the watermark/planner logic is
 unchanged. Atomicity mirrors the reference's tmp→rename commit
 (`steps.py:123-145`): parquet writes go to a ``_tmp`` dir and are
-renamed into place, and the checkpoint row is committed only after the
-data rename — a crash between the two is repaired by recomputation +
-dedup-on-read (idempotent).
+renamed into place, and the refresh record (watermarks, seq, run id,
+metrics — one JSON file) is replaced only after the data renames — a
+crash between the two is repaired by recomputation + dedup-on-read
+(idempotent).
 
 Partition layout: tier tables are written partitioned by ``p_date``
 (the bucket's calendar date) — the analog of the reference's
@@ -37,8 +38,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-CHECKPOINT_DIR = "_checkpoint"
-METRICS_DIR = "_metrics"
+# the refresh record: watermarks, last commit and run metrics
+STATE_FILE = "_refresh_state.json"
+METRICS_SCHEMA = (
+    "run_id string, tier string, partition string, rows_in long, "
+    "rows_out long, errors long, wall_ms long"
+)
 
 # crashed-append staging dirs younger than this are presumed to be a
 # live concurrent writer's and are left alone by the repair GC
@@ -72,6 +77,20 @@ def _sum_exprs(sum_cols: tuple[str, ...]) -> list:
     the two MUST agree exactly for compaction to be invisible to
     readers (asserted by test_additive_tier_sum_compaction)."""
     return [F.sum(c).alias(c) for c in sum_cols]
+
+
+def _metrics_row(r: dict) -> dict:
+    """A metrics row as the refresh record stores it (the fields of
+    :data:`METRICS_SCHEMA`)."""
+    return {
+        "run_id": r["run_id"],
+        "tier": r["tier"],
+        "partition": r.get("partition", "*"),
+        "rows_in": int(r["rows_in"]),
+        "rows_out": int(r["rows_out"]),
+        "errors": int(r.get("errors", 0)),
+        "wall_ms": int(r["wall_ms"]),
+    }
 
 
 def atomic_json_write(path: str, obj) -> None:
@@ -263,12 +282,6 @@ class TierStore:
     def tier_path(self, tier: str) -> str:
         return os.path.join(self.base_dir, f"tier_{tier}")
 
-    def _ckpt_path(self) -> str:
-        return os.path.join(self.base_dir, CHECKPOINT_DIR)
-
-    def _metrics_path(self) -> str:
-        return os.path.join(self.base_dir, METRICS_DIR)
-
     def _compact_meta_path(self) -> str:
         return os.path.join(self.base_dir, "_compact_meta.json")
 
@@ -314,10 +327,10 @@ class TierStore:
     def last_commit_seq(self) -> int:
         """Newest commit_seq ALLOCATED in this store (0 = none yet) — the
         snapshot id to remember for an as-of read of the CURRENT state
-        (store-global: each tier append consumes its own seq, so an
-        as-of horizon spanning several tiers must come from here, not
-        from one tier's snapshots). Source of truth is the per-seq
-        marker files in ``_commits/`` (see :meth:`next_commit_seq`);
+        (store-global: writers other than the tier refresh consume a
+        seq per append, so an as-of horizon spanning several tiers must
+        come from here, not from one tier's snapshots). Source of truth
+        is the per-seq marker files in ``_commits/`` (see :meth:`next_commit_seq`);
         a seq may be allocated a moment before its data lands, so under
         concurrent writers this is an upper bound on *published* state
         — the same way an Iceberg snapshot id can name an in-flight
@@ -1642,21 +1655,64 @@ class TierStore:
             )
         return rows
 
-    def _remove_commit_files(self, tier: str, commit_seq: int) -> None:
-        """Delete every data file of ``commit_seq`` from ``tier`` (torn
-        keyed-append repair — see :meth:`append`). Driver-side listdir
-        over partition dirs, metadata-scale work."""
+    def _commit_files(self, tier: str, commit_seq: int) -> list[str]:
+        """Paths of the data files ``commit_seq`` appended to ``tier``
+        (by their ``c<seq>-`` name). Driver-side listdir over partition
+        dirs, metadata-scale work."""
         dest = self.tier_path(tier)
         if not os.path.isdir(dest):
-            return
+            return []
         prefix = f"c{commit_seq}-"
+        out = []
         for part in os.listdir(dest):
             dpart = os.path.join(dest, part)
             if not (part.startswith("p_date=") and os.path.isdir(dpart)):
                 continue
-            for fn in os.listdir(dpart):
-                if fn.startswith(prefix) and fn.endswith(".parquet"):
-                    os.remove(os.path.join(dpart, fn))
+            out += [
+                os.path.join(dpart, fn)
+                for fn in os.listdir(dpart)
+                if fn.startswith(prefix) and fn.endswith(".parquet")
+            ]
+        return out
+
+    def _remove_commit_files(self, tier: str, commit_seq: int) -> None:
+        """Delete every data file of ``commit_seq`` from ``tier`` (torn
+        keyed-append repair — see :meth:`append`)."""
+        for fp in self._commit_files(tier, commit_seq):
+            os.remove(fp)
+
+    def commit_watermarks(self, tier: str, commit_seq: int) -> dict[str, int]:
+        """Per source, the newest ``bucket_start`` (epoch micros) among
+        the rows ``commit_seq`` appended to ``tier`` — read back from
+        that commit's own files, two columns, driver-side (no Spark
+        job). A file a concurrent compaction folded away is skipped:
+        an older watermark only makes the next refresh re-plan more."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        schema = pa.schema([("source", pa.string()), ("bucket_start", pa.timestamp("us"))])
+        tables = []
+        for fp in self._commit_files(tier, commit_seq):
+            try:
+                t = pq.read_table(
+                    fp, columns=list(schema.names), coerce_int96_timestamp_unit="us"
+                )
+            except FileNotFoundError:
+                continue
+            tables.append(t.select(list(schema.names)).cast(schema))
+        if not tables:
+            return {}
+        newest = (
+            pa.concat_tables(tables)
+            .filter(pc.is_valid(pc.field("source")))
+            .group_by("source")
+            .aggregate([("bucket_start", "max")])
+        )
+        return dict(zip(
+            newest["source"].to_pylist(),
+            newest["bucket_start_max"].cast(pa.int64()).to_pylist(),
+        ))
 
     def _pending_keyed_commits(self, tier: str) -> list[tuple[int, float]]:
         """(commit_seq, marker age in seconds) of every keyed append
@@ -2245,6 +2301,16 @@ class TierStore:
             .orderBy("commit_seq")
         )
 
+    def partition_dates(self, tier: str) -> list[str]:
+        """The tier's ``p_date`` partitions, sorted (driver-side
+        listdir — the input to a partition-pruned ``read(p_dates=…)``)."""
+        path = self.tier_path(tier)
+        if not os.path.isdir(path):
+            return []
+        return sorted(
+            p.split("=", 1)[1] for p in os.listdir(path) if p.startswith("p_date=")
+        )
+
     def files(self, tier: str) -> list[dict]:
         """File-level metadata table (Iceberg ``table.files`` analog):
         one dict per live parquet file with its partition, size, row
@@ -2804,143 +2870,97 @@ class TierStore:
         ]
         return j.select("op", *keys, *picked)
 
-    # ---------- checkpoint ----------
+    # ---------- refresh state (watermarks + run metrics) ----------
+    # ONE driver-side JSON record is the commit point of a tier
+    # refresh: per tier, per source, the start of the newest bucket
+    # committed (epoch micros); the commit seq and run id that last
+    # advanced it; and that refresh's per-tier metrics. Reading it is a
+    # single small file, however many refreshes came before — no Spark
+    # job, no per-commit checkpoint files to scan.
+    def _state_path(self) -> str:
+        return os.path.join(self.base_dir, STATE_FILE)
+
+    def refresh_state(self) -> dict:
+        """The committed refresh record (``{}`` for a store that has
+        none — the next refresh then recomputes every tier in full)."""
+        path = self._state_path()
+        if not os.path.exists(path):
+            return {}
+        with open(path) as f:
+            return json.load(f)
+
+    def commit_refresh(
+        self,
+        commit_seq: int,
+        run_id: str,
+        watermarks: dict[str, dict[str, int]],
+        metrics: list[dict] | None = None,
+    ) -> None:
+        """Atomically replace the refresh record, AFTER the data it
+        describes is appended. ``watermarks``: tier → source → epoch
+        micros; merged newest-wins into the record, so a concurrent
+        writer's watermark (the streaming sink's) is never lost.
+        ``metrics`` replaces the previous refresh's rows when given.
+        A crash before this call leaves the old record: the next
+        refresh recomputes the same buckets and newest-wins reads
+        keep its copy."""
+        with self._meta_mutex():
+            state = self.refresh_state()
+            wms = state.setdefault("watermarks", {})
+            for tier, by_src in watermarks.items():
+                cur = wms.setdefault(tier, {})
+                for src, us in by_src.items():
+                    cur[src] = max(int(us), cur.get(src, int(us)))
+            if int(commit_seq) >= state.get("commit_seq", 0):
+                state["commit_seq"] = int(commit_seq)
+                state["run_id"] = run_id
+            if metrics is not None:
+                state["metrics"] = [_metrics_row(r) for r in metrics]
+            atomic_json_write(self._state_path(), state)
+
     def read_watermarks(self, tier: str) -> DataFrame | None:
         """Latest committed watermark per source for a tier, or None."""
-        path = self._ckpt_path()
-        if not os.path.isdir(path) or not os.listdir(path):
+        wm = self.refresh_state().get("watermarks", {}).get(tier)
+        if not wm:
             return None
-        names = sorted(
-            fn for fn in os.listdir(path) if fn.endswith(".parquet")
-        )
-        if not names:
-            return None
-        # checkpoint files all carry the fixed watermark schema (written
-        # driver-side); explicit footer schema skips the inference job
-        ck = (
-            self.spark.read.schema(
-                self._footer_schema(os.path.join(path, names[0]))
-            )
-            .parquet(path)
-            .filter(F.col("tier") == tier)
-        )
-        if ck.isEmpty():
-            return None
-        return ck.groupBy("source").agg(F.max("watermark").alias("watermark"))
+        return self.spark.createDataFrame(
+            sorted(wm.items()), "source string, wm_us long"
+        ).select("source", F.timestamp_micros("wm_us").alias("watermark"))
 
     def commit_checkpoint(
         self, tier: str, watermarks: DataFrame, commit_seq: int, run_id: str
     ) -> None:
-        """Commit per-source watermarks AFTER the data append succeeded
-        (crash between append and this call → recompute + dedup-on-read
-        repairs; never lost data, never double-counted)."""
-        # Collect + driver-side pyarrow write, not a Spark write job:
-        # watermarks are O(sources) metadata rows, and the write job
-        # costs ~0.7-1 s per commit on this host (task launch + file
-        # committer) vs ~50 ms for one local footer. Epoch micros are
-        # collected (not datetimes) so no driver-timezone conversion
-        # can perturb the stored instant.
-        import time as _time
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        rows = (
-            watermarks.select(
-                "source", F.unix_micros(F.col("watermark")).alias("wm_us")
-            )
+        """Commit per-source watermarks ``(source, watermark)`` for one
+        tier AFTER its data append succeeded (crash between append and
+        this call → recompute + dedup-on-read repairs; never lost data,
+        never double-counted). One collect of O(sources) rows."""
+        rows = watermarks.select(
+            "source", F.unix_micros(F.col("watermark")).alias("wm_us")
         ).collect()
-        ts = pa.timestamp("us", tz="UTC")
-        table = pa.Table.from_arrays(
-            [
-                pa.array([r["source"] for r in rows], pa.string()),
-                pa.array([r["wm_us"] for r in rows], ts),
-                pa.array([tier] * len(rows), pa.string()),
-                pa.array([int(commit_seq)] * len(rows), pa.int64()),
-                pa.array([run_id] * len(rows), pa.string()),
-                pa.array([int(_time.time() * 1_000_000)] * len(rows), ts),
-            ],
-            names=[
-                "source", "watermark", "tier", "commit_seq", "run_id",
-                "committed_at",
-            ],
+        self.commit_refresh(
+            commit_seq, run_id, {tier: {r["source"]: r["wm_us"] for r in rows}}
         )
-        path = self._ckpt_path()
-        os.makedirs(path, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(path, f".{name}.tmp")
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, os.path.join(path, name))
 
     # ---------- metrics ----------
     def append_metrics(self, rows: list[dict]) -> None:
-        """Per-partition metrics rows — analog of the reference's
-        outcome/error census (`api.py:477-487`).
-
-        Written driver-side with pyarrow, not a Spark job: the rows are
-        O(tiers-per-run) metadata, and a ``createDataFrame([...])
-        .coalesce(1).write`` of that shape costs ~5 s per call on this
-        host — the local-relation scan is a pickled-RDD of
-        default-parallelism near-empty slices, and coalesce(1) makes
-        ONE task launch a Python worker round-trip per slice,
-        serially (measured: 32 slices × ~150 ms; OPTIMIZATION_r06.md).
-        One parquet footer written locally is the metadata-commit
-        shape a real catalog uses for run telemetry anyway."""
+        """Attach per-tier metrics rows — analog of the reference's
+        outcome/error census (`api.py:477-487`) — to the refresh
+        record; the next refresh's commit replaces them."""
         if not rows:
             return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        schema = pa.schema(
-            [
-                ("run_id", pa.string()),
-                ("tier", pa.string()),
-                ("partition", pa.string()),
-                ("rows_in", pa.int64()),
-                ("rows_out", pa.int64()),
-                ("errors", pa.int64()),
-                ("wall_ms", pa.int64()),
+        with self._meta_mutex():
+            state = self.refresh_state()
+            state["metrics"] = state.get("metrics", []) + [
+                _metrics_row(r) for r in rows
             ]
-        )
-        table = pa.Table.from_pylist(
-            [
-                {
-                    "run_id": r["run_id"],
-                    "tier": r["tier"],
-                    "partition": r["partition"],
-                    "rows_in": int(r["rows_in"]),
-                    "rows_out": int(r["rows_out"]),
-                    "errors": int(r.get("errors", 0)),
-                    "wall_ms": int(r["wall_ms"]),
-                }
-                for r in rows
-            ],
-            schema=schema,
-        )
-        path = self._metrics_path()
-        os.makedirs(path, exist_ok=True)
-        # tmp + rename: a reader never sees a torn footer
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        # dot-prefixed tmp: hidden from any concurrent directory scan
-        tmp = os.path.join(path, f".{name}.tmp")
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, os.path.join(path, name))
+            atomic_json_write(self._state_path(), state)
 
     def read_metrics(self) -> DataFrame | None:
-        path = self._metrics_path()
-        if not os.path.isdir(path) or not os.listdir(path):
+        """The last refresh's per-tier metrics rows, or None."""
+        rows = self.refresh_state().get("metrics")
+        if not rows:
             return None
-        names = sorted(
-            fn for fn in os.listdir(path) if fn.endswith(".parquet")
-        )
-        if not names:
-            return None
-        return (
-            self.spark.read.schema(
-                self._footer_schema(os.path.join(path, names[0]))
-            )
-            .parquet(path)
-        )
+        return self.spark.createDataFrame(rows, METRICS_SCHEMA)
 
     # ---------- compaction ----------
     def _repair_crashed_compact(self, tier: str) -> None:

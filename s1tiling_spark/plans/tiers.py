@@ -1,27 +1,36 @@
-"""Incremental tier pipeline: plan → rollup → MERGE-append → checkpoint.
+"""Incremental tier pipeline: one refresh = one plan, one commit.
 
 The planner is the Spark reincarnation of the reference's task pruning:
 "Ignoring %s as the product already exists"
 (`/root/reference/s1tiling/libs/otbpipeline.py:749-756`) plus
 restart-from-existing-files (`otbpipeline.py:814-819`). Instead of
 testing file existence per product, each tier keeps a per-source
-watermark (start of the newest materialized bucket). A run:
+watermark (start of the newest materialized bucket). A refresh:
 
-1. reads watermarks, filters the raw table to ``event_ts >=
-   watermark(source)`` (broadcast join against the tiny watermark dim —
-   new sources pass entirely). The last committed bucket is recomputed
-   in full, so late rows landing in it are MERGED idempotently — the
-   north rule's late-data requirement, which the reference explicitly
-   does NOT handle (`docs/dataflow-main.rst:148-155`).
-2. rolls up only those rows (1h from raw; 1d/30d cascade from the tier
-   below, same watermark logic on bucket_start);
-3. appends with lineage columns (commit_seq, run_id) — dedup-on-read
-   gives MERGE semantics;
-4. commits the new watermarks ONLY after the data append. A crash
-   between 3 and 4 re-runs the same buckets next time; dedup-on-read
-   keeps the newest copy → byte-identical final state (the kill-resume
-   guarantee, mirroring the reference's masks-only restart test
-   `tests/test_0200306-NR.py:178-256`).
+1. loads every tier's watermarks from the store's refresh record (one
+   small JSON file, no Spark job) and allocates ONE commit seq;
+2. plans each tier's fresh input with literal filters that push down:
+   raw rows at/after their source's 1h / hist_1d watermark, and, for
+   the cascades (1d, 30d, hist_30d, blocks_1h), the lower tier read
+   with partition pruning to the dates at/after the upper tier's
+   oldest watermark, then the same per-source filter on bucket_start.
+   Sources a tier has no watermark for pass whole. The last committed
+   bucket is recomputed in full, so late rows landing in it are MERGED
+   idempotently — the north rule's late-data requirement, which the
+   reference explicitly does NOT handle
+   (`docs/dataflow-main.rst:148-155`);
+3. appends all six tier deltas under that seq with lineage columns
+   (commit_seq, run_id) — dedup-on-read gives MERGE semantics. Rows in
+   and out of every tier are counted by Observations riding the writes;
+4. reads the new watermarks back from the files this refresh wrote
+   (two columns, driver-side, no Spark job), then atomically replaces
+   the refresh record (watermarks, seq, run id, per-tier metrics) — the
+   commit point. A crash anywhere before it leaves the old record, so
+   the next refresh re-runs the same buckets and dedup-on-read keeps
+   the newest copy → identical final state (the kill-resume guarantee,
+   mirroring the reference's masks-only restart test
+   `tests/test_0200306-NR.py:178-256`). A store without a record gets
+   a full recompute.
 
 Skew: groupBy partial aggregation already collapses the hot source
 map-side (the aggregate equivalent of salting), and AQE handles skewed
@@ -36,9 +45,12 @@ AQE skew-join split 2.3× with `skew=true` in the final plan.
 
 from __future__ import annotations
 
+import datetime as dt
+import functools
 import time
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -49,12 +61,48 @@ from s1tiling_spark.operators.rollup import (
     rollup_sequences,
     token_hist_long,
 )
-from s1tiling_spark.plans.store import TierStore, new_run_id
+from s1tiling_spark.plans.store import DEFAULT_KEYS, TierStore, new_run_id
+
+STAT_COLS = ("bucket_start", "source", "cnt", "sum_n_tok", "min_n_tok", "max_n_tok")
+HIST_KEYS = ("bucket_start", "source", "bin")
 
 
 def salt_col(key: Column, n_salts: int) -> Column:
     """Deterministic salt in [0, n_salts) from a high-cardinality key."""
     return F.pmod(F.xxhash64(key), F.lit(n_salts)).cast("int")
+
+
+def _sql_list(values) -> str:
+    """``values`` (strings) as a Spark SQL ``IN`` list, sorted."""
+    quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+              for v in sorted(values))
+    return f"({', '.join(quoted)})"
+
+
+def _unseen(sources) -> str:
+    """SQL: rows whose source is not one of ``sources`` (null sources
+    too). Predicates are built as SQL text — one JVM call to parse,
+    where the Column API costs one per literal."""
+    if not sources:
+        return "TRUE"
+    return f"(source IS NULL OR source NOT IN {_sql_list(sources)})"
+
+
+def _at_or_after(ts_col: str, wm: dict[str, int]) -> Column | None:
+    """Rows at/after their source's watermark (epoch micros); sources
+    without one pass whole. Sources sharing a watermark share one term,
+    so the predicate grows with the distinct watermarks, not the
+    sources. None when there is nothing to filter."""
+    if not wm:
+        return None
+    by_wm: dict[int, list[str]] = {}
+    for src, us in wm.items():
+        by_wm.setdefault(int(us), []).append(src)
+    terms = [_unseen(wm)] + [
+        f"(source IN {_sql_list(srcs)} AND {ts_col} >= timestamp_micros({us}))"
+        for us, srcs in sorted(by_wm.items())
+    ]
+    return F.expr(" OR ".join(terms))
 
 
 @dataclass
@@ -63,7 +111,6 @@ class TierPipelineConfig:
     hist: bool = True
     compress: bool = True
     compress_value: str = "sum_n_tok"
-    metrics: bool = True
 
 
 @dataclass
@@ -71,122 +118,123 @@ class TierPipeline:
     store: TierStore
     cfg: TierPipelineConfig = field(default_factory=TierPipelineConfig)
 
-    # ---------- planning ----------
-    def _filter_new(self, df: DataFrame, ts_col: str, tier_key: str) -> DataFrame:
-        """Keep rows at/after each source's watermark (whole table for
-        unseen sources). Watermarks are tiny → broadcast join."""
-        wm = self.store.read_watermarks(tier_key)
-        if wm is None:
-            return df
-        return (
-            df.join(F.broadcast(wm), "source", "left")
-            .filter(F.col("watermark").isNull() | (F.col(ts_col) >= F.col("watermark")))
-            .drop("watermark")
-        )
+    def run(self, seq: DataFrame, run_id: str | None = None) -> dict:
+        """One incremental refresh over the (possibly grown) raw table."""
+        return _Refresh(self.store, self.cfg, run_id or new_run_id()).run(seq)
 
-    def _commit(self, tier_key: str, out: DataFrame, run_id: str,
-                rows_in_obs: Observation | None, t0: float) -> dict:
-        seq = self.store.next_commit_seq()
-        # persist the tier rows across the two consumers (data append +
-        # watermark max): without it the watermark aggregate re-runs
-        # the whole rollup from raw a second time per commit
-        out = out.persist()
+
+class _Refresh:
+    """The state of one refresh: the committed watermarks it plans
+    from, its commit seq, and what it has written so far."""
+
+    def __init__(self, store: TierStore, cfg: TierPipelineConfig, run_id: str):
+        self.store = store
+        self.cfg = cfg
+        self.run_id = run_id
+        self.wm: dict[str, dict[str, int]] = store.refresh_state().get(
+            "watermarks", {}
+        )
+        self.stat = ("1h",) + tuple(t for t in cfg.tiers if t != "1h")
+        tiers = (
+            self.stat
+            + (("hist_1d", "hist_30d") if cfg.hist else ())
+            + (("blocks_1h",) if cfg.compress else ())
+        )
+        # sources every tier of this refresh has a watermark for; an
+        # input row outside them may carry a source some upper tier
+        # has never seen, which disables that cascade's date pruning
+        self.known = set.intersection(*(set(self.wm.get(t, ())) for t in tiers))
+        self.commit_seq = store.next_commit_seq()
+        self.written: list[str] = []
+        self.unseen_rows: dict[str, int] = {}
+        self.metrics: list[dict] = []
+
+    def _fresh(self, df: DataFrame, ts_col: str, tier: str):
+        """``df`` filtered to ``tier``'s fresh rows, observed: rows in,
+        and rows whose source lies outside :attr:`known`."""
+        cond = _at_or_after(ts_col, self.wm.get(tier, {}))
+        if cond is not None:
+            df = df.filter(cond)
+        obs = Observation()
+        return df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_in"),
+            F.expr(f"count_if({_unseen(self.known)})").alias("unseen"),
+        ), obs
+
+    def _write(self, tier: str, delta: DataFrame, obs: Observation, t0: float) -> None:
+        rows_out = self.store.append(tier, delta, self.commit_seq, self.run_id)
         try:
-            rows_out = self.store.append(tier_key, out, seq, run_id)
-            if rows_out:
-                wm = out.groupBy("source").agg(
-                    F.max("bucket_start").alias("watermark")
-                )
-                self.store.commit_checkpoint(tier_key, wm, seq, run_id)
-        finally:
-            out.unpersist()
-        wall_ms = int((time.time() - t0) * 1000)
-        rows_in = int(rows_in_obs.get["rows_in"]) if rows_in_obs and rows_out else 0
-        m = {
-            "run_id": run_id,
-            "tier": tier_key,
+            seen = obs.get
+        except Py4JJavaError:
+            # the write ran without the observed plan: the optimizer
+            # drops it when its input is provably empty (an empty local
+            # relation), so the observation never reports
+            seen = {"rows_in": 0, "unseen": 0}
+        self.unseen_rows[tier] = int(seen["unseen"])
+        if rows_out:
+            self.written.append(tier)
+        self.metrics.append({
+            "run_id": self.run_id,
+            "tier": tier,
             "partition": "*",
-            "rows_in": rows_in,
+            "rows_in": int(seen["rows_in"]),
             "rows_out": rows_out,
             "errors": 0,
-            "wall_ms": wall_ms,
-        }
-        if self.cfg.metrics:
-            self.store.append_metrics([m])
-        return m
+            "wall_ms": int((time.time() - t0) * 1000),
+        })
 
-    # ---------- stages ----------
-    def _run_stat_tiers(self, seq: DataFrame, run_id: str) -> list[dict]:
-        metrics = []
-        # 1h from raw
+    def _cascade(self, lower: str, upper: str, build, cols=STAT_COLS,
+                 keys=DEFAULT_KEYS) -> None:
+        """``upper`` from the deduped ``lower`` tier, read only from the
+        date partitions at/after ``upper``'s oldest watermark (one day
+        of margin keeps the date right in any session time zone). The
+        whole tier is read when ``upper`` has no watermarks, or when
+        ``lower`` may hold a source ``upper`` has none for: one
+        ``lower``'s record names, or one in this refresh's ``lower``
+        delta outside :attr:`known`."""
         t0 = time.time()
-        obs = Observation()
-        fresh = self._filter_new(seq, "event_ts", "1h").observe(
-            obs, F.count(F.lit(1)).alias("rows_in")
-        )
-        t1h_new = rollup_sequences(fresh, "1h")
-        metrics.append(self._commit("1h", t1h_new, run_id, obs, t0))
-        # cascade upward from the merged (deduped) tier below
-        for lower, upper in zip(self.cfg.tiers, self.cfg.tiers[1:]):
+        wm = self.wm.get(upper)
+        p_dates = None
+        lower_srcs = set(self.wm.get(lower, ()))
+        if wm and not self.unseen_rows.get(lower, 1) and lower_srcs <= set(wm):
+            cut = dt.datetime.fromtimestamp(min(wm.values()) / 1e6, dt.timezone.utc)
+            cut = (cut.date() - dt.timedelta(days=1)).isoformat()
+            p_dates = [d for d in self.store.partition_dates(lower) if d >= cut]
+        lower_df = self.store.read(lower, keys=keys, p_dates=p_dates)
+        if lower_df is None:
+            return
+        fresh, obs = self._fresh(lower_df.select(*cols), "bucket_start", upper)
+        self._write(upper, build(fresh), obs, t0)
+
+    def run(self, seq: DataFrame) -> dict:
+        cfg = self.cfg
+        t0 = time.time()
+        fresh, obs = self._fresh(seq, "event_ts", "1h")
+        self._write("1h", rollup_sequences(fresh, "1h"), obs, t0)
+        for lower, upper in zip(self.stat, self.stat[1:]):
+            self._cascade(lower, upper, functools.partial(rollup_from_lower, tier=upper))
+        if cfg.hist:
             t0 = time.time()
-            lower_df = self.store.read(lower)
-            if lower_df is None:
-                continue
-            obs = Observation()
-            fresh_lower = self._filter_new(
-                lower_df.select("bucket_start", "source", "cnt", "sum_n_tok",
-                                "min_n_tok", "max_n_tok"),
-                "bucket_start",
-                upper,
-            ).observe(obs, F.count(F.lit(1)).alias("rows_in"))
-            up = rollup_from_lower(fresh_lower, upper)
-            metrics.append(self._commit(upper, up, run_id, obs, t0))
-        return metrics
-
-    def _run_hist_tiers(self, seq: DataFrame, run_id: str) -> list[dict]:
-        metrics = []
-        t0 = time.time()
-        fresh = self._filter_new(seq, "event_ts", "hist_1d")
-        h1d = token_hist_long(fresh, "1d")
-        metrics.append(self._commit("hist_1d", h1d, run_id, None, t0))
-        t0 = time.time()
-        lower = self.store.read("hist_1d", keys=("bucket_start", "source", "bin"))
-        if lower is not None:
-            fresh_lower = self._filter_new(
-                lower.select("bucket_start", "source", "bin", "tok_cnt"),
-                "bucket_start",
-                "hist_30d",
+            fresh, obs = self._fresh(seq, "event_ts", "hist_1d")
+            self._write("hist_1d", token_hist_long(fresh, "1d"), obs, t0)
+            self._cascade("hist_1d", "hist_30d",
+                          functools.partial(merge_hist_long, tier="30d"),
+                          cols=(*HIST_KEYS, "tok_cnt"), keys=HIST_KEYS)
+        if cfg.compress:
+            self._cascade(
+                "1h", "blocks_1h",
+                lambda fresh: compress_blocks(fresh, cfg.compress_value)
+                .withColumnRenamed("block_start", "bucket_start"),
+                cols=("bucket_start", "source", cfg.compress_value),
             )
-            h30 = merge_hist_long(fresh_lower, "30d")
-            metrics.append(self._commit("hist_30d", h30, run_id, None, t0))
-        return metrics
-
-    def _run_blocks(self, run_id: str) -> list[dict]:
-        t0 = time.time()
-        t1h = self.store.read("1h")
-        if t1h is None:
-            return []
-        fresh = self._filter_new(
-            t1h.select("bucket_start", "source", self.cfg.compress_value),
-            "bucket_start",
-            "blocks_1h",
-        )
-        blocks = compress_blocks(fresh, self.cfg.compress_value).withColumnRenamed(
-            "block_start", "bucket_start"
-        )
-        return [self._commit("blocks_1h", blocks, run_id, None, t0)]
-
-    # ---------- entry ----------
-    def run(self, seq: DataFrame, run_id: str | None = None) -> dict:
-        """One incremental run over the (possibly grown) raw table."""
-        run_id = run_id or new_run_id()
-        metrics = self._run_stat_tiers(seq, run_id)
-        if self.cfg.hist:
-            metrics += self._run_hist_tiers(seq, run_id)
-        if self.cfg.compress:
-            metrics += self._run_blocks(run_id)
+        # the commit point: the watermarks of what this refresh wrote,
+        # read back from its own files, replace the record atomically
+        wms = {t: self.store.commit_watermarks(t, self.commit_seq) for t in self.written}
+        self.store.commit_refresh(self.commit_seq, self.run_id, wms, self.metrics)
         return {
-            "run_id": run_id,
-            "metrics": metrics,
-            "rows_out_total": sum(m["rows_out"] for m in metrics),
+            "run_id": self.run_id,
+            "commit_seq": self.commit_seq,
+            "metrics": self.metrics,
+            "rows_out_total": sum(m["rows_out"] for m in self.metrics),
         }

@@ -50,6 +50,23 @@ def package_zip() -> str:
     return out
 
 
+def default_driver_memory() -> str:
+    """Driver heap when neither ``driver_memory=`` nor
+    ``SPARK_GRAFT_DRIVER_MEM`` sets one: a quarter of physical RAM
+    (``/proc/meminfo`` MemTotal), capped at 48g. ParallelGC grows the
+    heap toward its maximum under allocation pressure, so the maximum
+    must leave the rest of the host to the JVM's off-heap memory, the
+    Python workers, and any other JVM on the machine — e.g. the 1500m
+    writer sessions the multi-writer tests start beside this one."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, kb // 1024 // 4))}m"
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
@@ -93,6 +110,12 @@ def build_session(
         # the matview mixed-refresh dropped 1509 -> 218 tasks, r6).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(2 * cpus, 8)))
+        # compiled-codegen cache: one incremental tier refresh generates
+        # ~115 classes, 80 % of them identical from refresh to refresh,
+        # but the default 100-entry LRU evicts them all before the next
+        # refresh asks again — every refresh recompiled everything
+        # (~0.8 s of Janino per refresh at 4 cores).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -105,7 +128,11 @@ def build_session(
     # workload at large heaps (G1+48g: 130-230s for a 600M-token scan;
     # ParallelGC+48g: 5-8s) — token-array decode allocates at a rate
     # G1's region management collapses under.
-    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM") or "48g"
+    mem = (
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory()
+    )
     builder = builder.config("spark.driver.memory", mem).config(
         "spark.driver.extraJavaOptions", "-XX:+UseParallelGC"
     )

@@ -18,6 +18,8 @@ from tests.helpers import assert_frames_match
 
 N = 4000
 SPLIT_TS = "2024-01-20 00:00:00"
+ALL_TIERS = ("1h", "1d", "30d", "hist_1d", "hist_30d", "blocks_1h")
+HIST_KEYS = ("bucket_start", "source", "bin")
 
 
 @pytest.fixture()
@@ -30,6 +32,25 @@ def _tier_state(store, tier, keys=("bucket_start", "source")):
     assert df is not None
     drop = [c for c in ("commit_seq", "run_id", "p_date") if c in df.columns]
     return df.drop(*drop).toPandas()
+
+
+def _tier_keys(tier):
+    return HIST_KEYS if tier.startswith("hist_") else ("bucket_start", "source")
+
+
+def _decoded_blocks(store):
+    from s1tiling_spark.operators.compress import decompress_blocks
+
+    blocks = store.read("blocks_1h").withColumnRenamed("bucket_start", "block_start")
+    return decompress_blocks(blocks).toPandas()
+
+
+def _assert_equals_oneshot(store, full):
+    """All six tiers and the decoded block points equal ``full``'s."""
+    for tier in ALL_TIERS:
+        keys = _tier_keys(tier)
+        assert_frames_match(_tier_state(store, tier, keys), _tier_state(full, tier, keys))
+    assert_frames_match(_decoded_blocks(store), _decoded_blocks(full))
 
 
 def _full_run_state(spark, seq, tmp_path, name):
@@ -120,11 +141,138 @@ def test_metrics_and_lineage(spark, seq, tmp_path):
     res = pipe.run(seq)
     m = store.read_metrics()
     assert m is not None
-    tiers = {r["tier"] for r in m.collect()}
-    assert {"1h", "1d", "30d", "hist_1d", "hist_30d", "blocks_1h"} <= tiers
+    rows = m.collect()
+    tiers = {r["tier"] for r in rows}
+    assert set(ALL_TIERS) <= tiers
+    # a cold run reads input for every tier, counted on its write
+    for got in (rows, res["metrics"]):
+        rows_in = {r["tier"]: r["rows_in"] for r in got}
+        assert all(rows_in[t] > 0 for t in ALL_TIERS), rows_in
+    assert {r["tier"]: r["rows_in"] for r in rows}["1h"] == seq.count()
     raw = store.read("1h", deduped=False)
     assert {"commit_seq", "run_id", "p_date"} <= set(raw.columns)
     assert raw.filter(F.col("run_id") == res["run_id"]).count() > 0
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("where", ["third_tier_write", "before_commit_record"])
+def test_crash_mid_refresh_repairs_on_rerun(spark, seq, tmp_path, monkeypatch, where):
+    """A refresh dies after writing some or all of its six tier deltas
+    but before its commit record: the next refresh repairs every tier
+    and the decoded blocks to exactly a one-shot build."""
+    store = TierStore(spark, str(tmp_path / "crash6"))
+    pipe = TierPipeline(store)
+    pipe.run(seq.filter(F.col("event_ts") < SPLIT_TS))
+    state_before = store.refresh_state()
+
+    if where == "third_tier_write":
+        append, calls = store.append, []
+
+        def failing_append(*args, **kwargs):
+            calls.append(args[0])
+            if len(calls) == 3:
+                raise _Crash(f"killed writing {args[0]}")
+            return append(*args, **kwargs)
+
+        monkeypatch.setattr(store, "append", failing_append)
+    else:
+        def failing_commit(*args, **kwargs):
+            raise _Crash("killed before the commit record")
+
+        monkeypatch.setattr(store, "commit_refresh", failing_commit)
+    with pytest.raises(_Crash):
+        pipe.run(seq)
+    monkeypatch.undo()
+    # the crashed refresh left data behind but not its record
+    assert store.refresh_state() == state_before
+    if where == "before_commit_record":
+        seq_crashed = store.last_commit_seq()
+        for tier in ALL_TIERS:
+            raw = store.read(tier, deduped=False)
+            assert raw.filter(F.col("commit_seq") == seq_crashed).count() > 0, tier
+
+    pipe.run(seq)
+    full = _full_run_state(spark, seq, tmp_path, "crash6_full")
+    _assert_equals_oneshot(store, full)
+
+
+def test_watermark_state_after_many_refreshes(spark, seq, tmp_path, monkeypatch):
+    """20 back-to-back refreshes over a growing table: every tier's
+    watermarks equal its per-source newest bucket, no per-commit
+    checkpoint or metrics files exist, and a late refresh reads the
+    same metadata files as an early one."""
+    import builtins
+    import collections
+    import os
+    import re
+
+    base = str(tmp_path / "wm20")
+    store = TierStore(spark, base)
+    pipe = TierPipeline(store)
+    # the table grows by one day per refresh, over the last 20 days
+    cuts = [f"2024-01-{d:02d} 12:00:00" for d in range(12, 32)]
+
+    opened = collections.Counter()
+    real_open = builtins.open
+
+    def counting_open(file, *args, **kwargs):
+        name = os.fspath(file) if isinstance(file, (str, os.PathLike)) else ""
+        if isinstance(name, str) and name.startswith(base):
+            # atomic writes open a uniquely named tmp file
+            opened[re.sub(r"\.tmp\.\w+$", ".tmp", os.path.relpath(name, base))] += 1
+        return real_open(file, *args, **kwargs)
+
+    reads = {}
+    for i, cut in enumerate(cuts, start=1):
+        grown = seq.filter(F.col("event_ts") < cut)
+        if i in (2, 20):
+            opened.clear()
+            monkeypatch.setattr(builtins, "open", counting_open)
+            pipe.run(grown)
+            monkeypatch.setattr(builtins, "open", real_open)
+            reads[i] = {p: n for p, n in opened.items() if not p.endswith(".parquet")}
+        else:
+            pipe.run(grown)
+
+    for tier in ALL_TIERS:
+        want = (
+            store.read(tier, keys=_tier_keys(tier))
+            .groupBy("source")
+            .agg(F.max("bucket_start").alias("watermark"))
+            .toPandas()
+        )
+        got = store.read_watermarks(tier).toPandas()
+        assert_frames_match(got, want)
+    assert not any(
+        os.path.exists(os.path.join(base, d)) for d in ("_checkpoint", "_metrics")
+    )
+    assert "_refresh_state.json" in reads[2]
+    assert reads[20] == reads[2], reads
+
+
+def test_watermark_filter_quotes_source_names(spark):
+    """Watermarks reach the pushed-down filter as SQL literals: source
+    names with quotes or backslashes filter exactly, and a source
+    without a watermark passes whole."""
+    import calendar
+    from datetime import datetime
+
+    from s1tiling_spark.plans.tiers import _at_or_after
+
+    names = ["plain", "it's", "back\\slash", "new"]
+    rows = [(n, f"2024-01-01 0{h}:00:00") for n in names for h in (1, 3)]
+    df = spark.createDataFrame(rows, "source string, ts string").select(
+        "source", F.to_timestamp("ts").alias("event_ts")
+    )
+    wm_us = calendar.timegm(datetime(2024, 1, 1, 2).timetuple()) * 1_000_000
+    got = df.filter(_at_or_after("event_ts", {n: wm_us for n in names[:3]}))
+    got = got.select("source", F.hour("event_ts").alias("h")).collect()
+    assert sorted((r["source"], r["h"]) for r in got) == sorted(
+        [(n, 3) for n in names] + [("new", 1)]
+    )
 
 
 def test_blocks_roundtrip_from_store(spark, seq, tmp_path):
