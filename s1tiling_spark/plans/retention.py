@@ -88,11 +88,7 @@ def covering_bucket_start(day: dt.date, guard_tier: str) -> dt.datetime:
 
 
 def _victim_dates(store: TierStore, tier: str, cutoff: dt.date) -> list[str]:
-    return [
-        p["p_date"]
-        for p in store.partitions(tier)
-        if p["p_date"] < cutoff.isoformat()
-    ]
+    return [d for d in store.partition_dates(tier) if d < cutoff.isoformat()]
 
 
 def _check_guard(

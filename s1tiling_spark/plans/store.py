@@ -23,6 +23,11 @@ crash between the two is repaired by recomputation + dedup-on-read
 Partition layout: tier tables are written partitioned by ``p_date``
 (the bucket's calendar date) — the analog of the reference's
 tile/date directory scheme — so bucket-range reads prune partitions.
+Each ``p_date=<date>/`` dir holds ``*.parquet`` data files whose name
+encodes the commit that wrote them: ``c<seq>-`` (an append),
+``m<maxseq>-`` (a compact output) or unprefixed (legacy data).
+:meth:`TierStore._data_files` is the sole owner of these rules — every
+walk of a tier's live data files goes through it.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ import re
 import shutil
 import time
 import uuid
+from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -101,6 +107,21 @@ def atomic_json_write(path: str, obj) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
+
+
+class DataFile(NamedTuple):
+    """One data file yielded by :meth:`TierStore._data_files`."""
+
+    part: str  # partition dir name, ``p_date=<date>``
+    name: str
+    path: str
+    rel: str  # ``<part>/<name>``
+    kind: str | None  # "c" (append), "m" (compact output), None (legacy)
+    seq: int | None  # the commit seq (c) or max commit seq (m) in the name
+
+    @property
+    def p_date(self) -> str:
+        return self.part[len("p_date="):]
 
 
 class TierStore:
@@ -282,6 +303,45 @@ class TierStore:
     def tier_path(self, tier: str) -> str:
         return os.path.join(self.base_dir, f"tier_{tier}")
 
+    # data-file names carry the max commit_seq they contain:
+    # ``c<seq>-`` (append — single-commit files) or ``m<seq>-``
+    # (compact output — folded files, footer-derived max). The two
+    # prefixes are deliberately distinct: torn-keyed-append repair
+    # removes by ``c<seq>-`` and must never match a compacted file
+    # that merely CONTAINS that seq among others.
+    _FILE_SEQ_RE = re.compile(r"^[cm](\d+)-")
+
+    @classmethod
+    def _data_files(cls, root: str) -> Iterator[DataFile]:
+        """Lazily walk the data files under ``root`` (a tier dir, or an
+        append/compact staging dir): every ``p_date=*/*.parquet``, in
+        sorted (partition, name) order — the file-store stand-in for an
+        Iceberg manifest, and the one place that knows the layout.
+        Callers that need only the first file stop after one listdir
+        per partition. A missing root yields nothing; a partition dir
+        that vanishes mid-walk is skipped (reads hold no lock, and
+        compaction renames live partitions aside)."""
+        try:
+            parts = sorted(os.listdir(root))
+        except OSError:
+            return
+        for part in parts:
+            if not part.startswith("p_date="):
+                continue
+            pdir = os.path.join(root, part)
+            try:
+                names = sorted(os.listdir(pdir))
+            except OSError:
+                continue
+            for fn in names:
+                if not fn.endswith(".parquet"):
+                    continue
+                m = cls._FILE_SEQ_RE.match(fn)
+                kind, seq = (fn[0], int(m.group(1))) if m else (None, None)
+                yield DataFile(
+                    part, fn, os.path.join(pdir, fn), f"{part}/{fn}", kind, seq
+                )
+
     def _compact_meta_path(self) -> str:
         return os.path.join(self.base_dir, "_compact_meta.json")
 
@@ -418,7 +478,6 @@ class TierStore:
         df: DataFrame,
         run_id: str,
         audit_id: str,
-        files_per_date: int = 1,
     ) -> int:
         """Write-audit-publish, phase 1: append ``df`` INVISIBLY. The
         staged record is committed to metadata BEFORE any data file
@@ -466,7 +525,7 @@ class TierStore:
         self._update_meta(
             lambda m, t=tier, e=entry: m.setdefault(f"_staged_{t}", []).append(e)
         )
-        self.append(tier, df, seq, run_id, files_per_date=files_per_date)
+        self.append(tier, df, seq, run_id)
         self._set_staged_state(tier, audit_id, "staged")
         return seq
 
@@ -1126,23 +1185,15 @@ class TierStore:
                 )
             return a if ra[1] >= rb[1] else b
 
-        path = self.tier_path(tier)
         merged: dict = {}
         order: list[str] = []
-        for part in sorted(os.listdir(path)):
-            if not part.startswith("p_date="):
-                continue
-            pdir = os.path.join(path, part)
-            for fn in sorted(os.listdir(pdir)):
-                if not fn.endswith(".parquet"):
-                    continue
-                sch = from_arrow_schema(pq.read_schema(os.path.join(pdir, fn)))
-                for f in sch.fields:
-                    if f.name not in merged:
-                        merged[f.name] = f.dataType
-                        order.append(f.name)
-                    elif merged[f.name] != f.dataType:
-                        merged[f.name] = widest(f.name, merged[f.name], f.dataType)
+        for dfile in self._data_files(self.tier_path(tier)):
+            for f in from_arrow_schema(pq.read_schema(dfile.path)).fields:
+                if f.name not in merged:
+                    merged[f.name] = f.dataType
+                    order.append(f.name)
+                elif merged[f.name] != f.dataType:
+                    merged[f.name] = widest(f.name, merged[f.name], f.dataType)
         for op in ops:
             if op["kind"] == "widen" and op["col"] in merged:
                 merged[op["col"]] = widest(
@@ -1183,29 +1234,6 @@ class TierStore:
         sch = from_arrow_schema(pq.read_schema(sample_file))
         self._footer_schemas[sample_file] = (*key, sch)
         return sch
-
-    def _tier_sample_file(self, tier: str) -> str | None:
-        """Lexicographically-first data file of a tier (deterministic
-        sample for :meth:`_footer_schema`); None when the tier holds no
-        data files. One listdir per partition dir, short-circuits on
-        the first hit — same cost discipline as _has_data_files."""
-        path = self.tier_path(tier)
-        try:
-            parts = sorted(os.listdir(path))
-        except OSError:
-            return None
-        for part in parts:
-            if not part.startswith("p_date="):
-                continue
-            pdir = os.path.join(path, part)
-            try:
-                names = sorted(os.listdir(pdir))
-            except OSError:
-                continue
-            for fn in names:
-                if fn.endswith(".parquet"):
-                    return os.path.join(pdir, fn)
-        return None
 
     def drop_column(self, tier: str, col: str) -> int:
         """Metadata-only column drop: hidden from reads at/after the
@@ -1487,27 +1515,6 @@ class TierStore:
             out["delete_seq"] = delete_seq
         return out
 
-    @staticmethod
-    def _has_data_files(path: str) -> bool:
-        """True iff some ``p_date=`` partition holds ≥1 parquet file.
-        Partition dirs can exist EMPTY — a torn keyed commit whose
-        files the replay repair removed, or a crash between mkdir and
-        the file moves — and schema inference over zero files raises
-        (UNABLE_TO_INFER_SCHEMA) where the table is semantically just
-        empty. Short-circuits on the first file, so a live table pays
-        one listdir; only the genuinely-empty table walks every dir."""
-        for p in os.listdir(path):
-            if not p.startswith("p_date="):
-                continue
-            d = os.path.join(path, p)
-            try:
-                names = os.listdir(d)
-            except OSError:
-                continue
-            if any(fn.endswith(".parquet") for fn in names):
-                return True
-        return False
-
     # ---------- data ----------
     def _committed_key_path(self, tier: str, key: str) -> str:
         safe = key.replace("/", "_").replace("=", "~")
@@ -1520,25 +1527,19 @@ class TierStore:
         commit_seq: int,
         run_id: str,
         idempotency_key: str | None = None,
-        files_per_date: int = 1,
     ) -> int:
         """Append tier rows with lineage columns; returns rows written.
 
         Lineage columns are the analog of the reference's propagated
         TIFF metadata (`steps.py:344-403`).
 
-        ``files_per_date``: write distribution (Iceberg's
-        ``write.distribution-mode=hash`` analog). The batch is
-        hash-repartitioned on ``p_date`` (+ a bounded salt when > 1) so
-        each append lands ``files_per_date`` files per touched date —
-        WITHOUT this, a batch arriving in S shuffle partitions spanning
-        D dates writes S×D splinter files and every later read pays the
-        open/footer cost (measured: a 4k-row append wrote ~2.9k files
-        and tripled the matview gate's refresh cost). The default (one
-        file per date per append) matches micro-batch appends whose
-        per-date volume is bounded; bulk backfills spanning huge days
-        pass a larger salt for write parallelism, and compaction folds
-        the files either way.
+        Write distribution (Iceberg's ``write.distribution-mode=hash``
+        analog): the batch is hash-repartitioned on ``p_date`` so each
+        append lands one file per touched date — WITHOUT this, a batch
+        arriving in S shuffle partitions spanning D dates writes S×D
+        splinter files and every later read pays the open/footer cost
+        (measured: a 4k-row append wrote ~2.9k files and tripled the
+        matview gate's refresh cost).
 
         ``idempotency_key``: replay protection for at-least-once
         producers (Spark's foreachBatch recipe — pass the streaming
@@ -1585,22 +1586,16 @@ class TierStore:
             .withColumn("run_id", F.lit(run_id))
             .withColumn("p_date", F.to_date("bucket_start"))
         )
-        if files_per_date > 1:
-            out = out.repartition(
-                F.col("p_date"),
-                F.pmod(F.xxhash64("bucket_start"), F.lit(int(files_per_date))),
-            )
-        else:
-            # EXPLICIT partition count: a bare repartition(col) lets AQE
-            # coalesce the write to ONE task, which then writes every
-            # touched date's file serially (~100 ms/file of fixed
-            # parquet+committer cost — measured 4.7 s for a 45-date
-            # micro-append vs 0.4 s parallel). Parallelism = the number
-            # of concurrently runnable tasks (defaultParallelism /
-            # task.cpus), machine-derived, not a local constant; each
-            # date still hashes to exactly one task, so the one-file-
-            # per-date layout contract is unchanged.
-            out = out.repartition(self._write_slots(), F.col("p_date"))
+        # EXPLICIT partition count: a bare repartition(col) lets AQE
+        # coalesce the write to ONE task, which then writes every
+        # touched date's file serially (~100 ms/file of fixed
+        # parquet+committer cost — measured 4.7 s for a 45-date
+        # micro-append vs 0.4 s parallel). Parallelism = the number of
+        # concurrently runnable tasks (defaultParallelism / task.cpus),
+        # machine-derived, not a local constant; each date still hashes
+        # to exactly one task, so the one-file-per-date layout contract
+        # is unchanged.
+        out = out.repartition(self._write_slots(), F.col("p_date"))
         # ONE action: the row count rides the write itself via observe()
         # — no second scan of the output (VERDICT r2 nit)
         obs = Observation(f"append-{tier}-{commit_seq}")
@@ -1631,20 +1626,13 @@ class TierStore:
         dest = self.tier_path(tier)
         os.makedirs(dest, exist_ok=True)
         moved: list[str] = []
-        for part in os.listdir(tmp):
-            if not part.startswith("p_date="):
-                continue
-            dpart = os.path.join(dest, part)
-            os.makedirs(dpart, exist_ok=True)
-            for fn in os.listdir(os.path.join(tmp, part)):
-                if fn.endswith(".parquet"):
-                    # commit-seq prefix → a torn keyed commit is repairable
-                    # by name (and names stay collision-free across commits)
-                    os.rename(
-                        os.path.join(tmp, part, fn),
-                        os.path.join(dpart, f"c{commit_seq}-{fn}"),
-                    )
-                    moved.append(f"{part}/c{commit_seq}-{fn}")
+        for f in self._data_files(tmp):
+            # commit-seq prefix → a torn keyed commit is repairable by
+            # name (and names stay collision-free across commits)
+            rel = f"{f.part}/c{commit_seq}-{f.name}"
+            os.makedirs(os.path.join(dest, f.part), exist_ok=True)
+            os.rename(f.path, os.path.join(dest, rel))
+            moved.append(rel)
         shutil.rmtree(tmp)
         self._record_file_bounds(tier, moved)
         if marker is not None:
@@ -1659,21 +1647,11 @@ class TierStore:
         """Paths of the data files ``commit_seq`` appended to ``tier``
         (by their ``c<seq>-`` name). Driver-side listdir over partition
         dirs, metadata-scale work."""
-        dest = self.tier_path(tier)
-        if not os.path.isdir(dest):
-            return []
-        prefix = f"c{commit_seq}-"
-        out = []
-        for part in os.listdir(dest):
-            dpart = os.path.join(dest, part)
-            if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                continue
-            out += [
-                os.path.join(dpart, fn)
-                for fn in os.listdir(dpart)
-                if fn.startswith(prefix) and fn.endswith(".parquet")
-            ]
-        return out
+        return [
+            f.path
+            for f in self._data_files(self.tier_path(tier))
+            if f.kind == "c" and f.seq == int(commit_seq)
+        ]
 
     def _remove_commit_files(self, tier: str, commit_seq: int) -> None:
         """Delete every data file of ``commit_seq`` from ``tier`` (torn
@@ -1735,14 +1713,6 @@ class TierStore:
                 out.append((int(rec["commit_seq"]), now - os.path.getmtime(fp)))
         return out
 
-    # data-file names carry the max commit_seq they contain:
-    # ``c<seq>-`` (append — single-commit files) or ``m<seq>-``
-    # (compact output — folded files, footer-derived max). The two
-    # prefixes are deliberately distinct: torn-keyed-append repair
-    # removes by ``c<seq>-`` and must never match a compacted file
-    # that merely CONTAINS that seq among others.
-    _FILE_SEQ_RE = re.compile(r"^[cm](\d+)-")
-
     def _plan_files_above_seq(
         self, tier: str, min_seq: int
     ) -> list[str] | None:
@@ -1760,9 +1730,6 @@ class TierStore:
         and opens the full table's footers just to let row-group stats
         discard compacted history — at 10^12 rows that listing is the
         storm Iceberg's manifests exist to avoid."""
-        path = self.tier_path(tier)
-        if not os.path.isdir(path):
-            return None
         # a published-but-not-yet-baked WAP commit lives in files whose
         # NAME carries its old staged seq while its EFFECTIVE seq is
         # the publish seq — any file that may contain such a row must
@@ -1777,25 +1744,17 @@ class TierStore:
         min_risky = min(risky) if risky else None
         keep: list[str] = []
         skipped = 0
-        for part in os.listdir(path):
-            dpart = os.path.join(path, part)
-            if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                continue
-            for fn in os.listdir(dpart):
-                if not fn.endswith(".parquet"):
+        for f in self._data_files(self.tier_path(tier)):
+            if f.seq is not None and f.seq <= int(min_seq):
+                may_hold_risky = (
+                    f.seq in risky
+                    if f.kind == "c"
+                    else (min_risky is not None and f.seq >= min_risky)
+                )
+                if not may_hold_risky:
+                    skipped += 1
                     continue
-                m = self._FILE_SEQ_RE.match(fn)
-                if m is not None and int(m.group(1)) <= int(min_seq):
-                    n = int(m.group(1))
-                    may_hold_risky = (
-                        n in risky
-                        if fn.startswith("c")
-                        else (min_risky is not None and n >= min_risky)
-                    )
-                    if not may_hold_risky:
-                        skipped += 1
-                        continue
-                keep.append(os.path.join(dpart, fn))
+            keep.append(f.path)
         if skipped == 0 or not keep:
             return None
         return keep
@@ -1885,36 +1844,24 @@ class TierStore:
         bounds = self._file_bounds(tier)
         if not bounds:
             return None
-        path = self.tier_path(tier)
-        if base is None:
-            cand = []
-            for part in os.listdir(path):
-                dpart = os.path.join(path, part)
-                if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                    continue
-                cand.extend(
-                    os.path.join(dpart, fn)
-                    for fn in os.listdir(dpart)
-                    if fn.endswith(".parquet")
-                )
-        else:
-            cand = base
+        allowed = None if base is None else set(base)
+        cand = [
+            f
+            for f in self._data_files(self.tier_path(tier))
+            if allowed is None or f.path in allowed
+        ]
         want = [str(s) for s in sources]
         keep: list[str] = []
-        skipped = 0
-        for fp in cand:
-            rel = "/".join(fp.replace(os.sep, "/").rsplit("/", 2)[-2:])
-            b = bounds.get(rel)
-            if b is not None and not any(b[0] <= s <= b[1] for s in want):
-                skipped += 1
-                continue
-            keep.append(fp)
-        if skipped == 0:
+        for f in cand:
+            b = bounds.get(f.rel)
+            if b is None or any(b[0] <= s <= b[1] for s in want):
+                keep.append(f.path)
+        if len(keep) == len(cand):
             return base
         if not keep:
             # every file pruned: scan one file anyway (the row filter
             # yields the empty result) — reader.parquet() needs a path
-            keep = cand[:1]
+            keep = [cand[0].path]
         return keep
 
     @staticmethod
@@ -1948,25 +1895,17 @@ class TierStore:
         import pyarrow.parquet as pq
 
         bounds: dict[str, list] = {}
-        for part in os.listdir(tmp):
-            dpart = os.path.join(tmp, part)
-            if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                continue
-            for fn in list(os.listdir(dpart)):
-                if not fn.endswith(".parquet"):
-                    continue
-                md = pq.read_metadata(os.path.join(dpart, fn))
-                out_fn = fn
-                if not self._FILE_SEQ_RE.match(fn):
-                    mm = self._footer_col_minmax(md, "commit_seq")
-                    if mm is not None:
-                        out_fn = f"m{int(mm[1])}-{fn}"
-                        os.rename(
-                            os.path.join(dpart, fn), os.path.join(dpart, out_fn)
-                        )
-                sb = self._footer_col_minmax(md, "source")
-                if sb is not None:
-                    bounds[f"{part}/{out_fn}"] = [str(sb[0]), str(sb[1])]
+        for f in self._data_files(tmp):
+            md = pq.read_metadata(f.path)
+            rel = f.rel
+            if f.kind is None:
+                mm = self._footer_col_minmax(md, "commit_seq")
+                if mm is not None:
+                    rel = f"{f.part}/m{int(mm[1])}-{f.name}"
+                    os.rename(f.path, os.path.join(tmp, rel))
+            sb = self._footer_col_minmax(md, "source")
+            if sb is not None:
+                bounds[rel] = [str(sb[0]), str(sb[1])]
         return bounds
 
     def read(
@@ -2067,7 +2006,13 @@ class TierStore:
                 )
             as_of_seq, branch_seqs = self._branch_seqs(tier, branch)
         path = self.tier_path(tier)
-        if not os.path.isdir(path) or not self._has_data_files(path):
+        # partition dirs can exist EMPTY (a torn keyed commit whose files
+        # the replay repair removed, a crash between mkdir and the file
+        # moves) and schema inference over zero files raises where the
+        # table is semantically just empty; the first file is also the
+        # deterministic footer-schema sample for plain scans
+        sample = next(self._data_files(path), None)
+        if sample is None:
             return None
         # ops fully below the compaction horizon are physically baked in
         # (compact rewrites canonical names / applied drops), so reads
@@ -2094,9 +2039,7 @@ class TierStore:
             # between listing and stat — fall back to Spark inference
             # for that read rather than failing it.
             try:
-                sample = self._tier_sample_file(tier)
-                if sample is not None:
-                    reader = reader.schema(self._footer_schema(sample))
+                reader = reader.schema(self._footer_schema(sample.path))
             except OSError:
                 pass
         planned = (
@@ -2302,14 +2245,13 @@ class TierStore:
         )
 
     def partition_dates(self, tier: str) -> list[str]:
-        """The tier's ``p_date`` partitions, sorted (driver-side
-        listdir — the input to a partition-pruned ``read(p_dates=…)``)."""
-        path = self.tier_path(tier)
-        if not os.path.isdir(path):
-            return []
-        return sorted(
-            p.split("=", 1)[1] for p in os.listdir(path) if p.startswith("p_date=")
-        )
+        """The tier's ``p_date`` partitions holding at least one data
+        file, sorted — the dates :meth:`partitions` reports, from names
+        alone (driver-side listdir, no footer; the input to a
+        partition-pruned ``read(p_dates=…)``)."""
+        return list(dict.fromkeys(
+            f.p_date for f in self._data_files(self.tier_path(tier))
+        ))
 
     def files(self, tier: str) -> list[dict]:
         """File-level metadata table (Iceberg ``table.files`` analog):
@@ -2323,34 +2265,24 @@ class TierStore:
         """
         import pyarrow.parquet as pq
 
-        path = self.tier_path(tier)
-        if not os.path.isdir(path):
-            return []
         out = []
-        for part in sorted(os.listdir(path)):
-            if not part.startswith("p_date="):
-                continue
-            pdir = os.path.join(path, part)
-            for fn in sorted(os.listdir(pdir)):
-                if not fn.endswith(".parquet"):
-                    continue
-                fp = os.path.join(pdir, fn)
-                md = pq.read_metadata(fp)
-                seq_mm = self._footer_col_minmax(md, "commit_seq")
-                src_mm = self._footer_col_minmax(md, "source")
-                out.append(
-                    {
-                        "p_date": part.split("=", 1)[1],
-                        "file": fn,
-                        "rows": md.num_rows,
-                        "bytes": os.path.getsize(fp),
-                        "row_groups": md.num_row_groups,
-                        "seq_min": None if seq_mm is None else int(seq_mm[0]),
-                        "seq_max": None if seq_mm is None else int(seq_mm[1]),
-                        "source_min": None if src_mm is None else str(src_mm[0]),
-                        "source_max": None if src_mm is None else str(src_mm[1]),
-                    }
-                )
+        for f in self._data_files(self.tier_path(tier)):
+            md = pq.read_metadata(f.path)
+            seq_mm = self._footer_col_minmax(md, "commit_seq")
+            src_mm = self._footer_col_minmax(md, "source")
+            out.append(
+                {
+                    "p_date": f.p_date,
+                    "file": f.name,
+                    "rows": md.num_rows,
+                    "bytes": os.path.getsize(f.path),
+                    "row_groups": md.num_row_groups,
+                    "seq_min": None if seq_mm is None else int(seq_mm[0]),
+                    "seq_max": None if seq_mm is None else int(seq_mm[1]),
+                    "source_min": None if src_mm is None else str(src_mm[0]),
+                    "source_max": None if src_mm is None else str(src_mm[1]),
+                }
+            )
         return out
 
     def _zorder_bounds_from_footers(
@@ -2382,32 +2314,21 @@ class TierStore:
         ordered = [c for c in cols if dtypes.get(c) != "string"]
         if not ordered:
             return {}
-        path = self.tier_path(tier)
-        if not os.path.isdir(path):
-            return {}
         acc: dict[str, list] = {}
-        for part in sorted(os.listdir(path)):
-            if not part.startswith("p_date="):
-                continue
-            pdir = os.path.join(path, part)
-            for fn in sorted(os.listdir(pdir)):
-                if not fn.endswith(".parquet"):
-                    continue
-                md = pq.read_metadata(os.path.join(pdir, fn))
-                for c in ordered:
-                    mm = self._footer_col_minmax(md, c)
-                    if mm is None:
-                        return None
-                    try:
-                        lo, hi = _to_double(mm[0]), _to_double(mm[1])
-                    except (TypeError, ValueError):
-                        return None
-                    cur = acc.get(c)
-                    acc[c] = (
-                        [lo, hi]
-                        if cur is None
-                        else [min(cur[0], lo), max(cur[1], hi)]
-                    )
+        for f in self._data_files(self.tier_path(tier)):
+            md = pq.read_metadata(f.path)
+            for c in ordered:
+                mm = self._footer_col_minmax(md, c)
+                if mm is None:
+                    return None
+                try:
+                    lo, hi = _to_double(mm[0]), _to_double(mm[1])
+                except (TypeError, ValueError):
+                    return None
+                cur = acc.get(c)
+                acc[c] = (
+                    [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
+                )
         return {c: tuple(v) for c, v in acc.items()}
 
     def partitions(self, tier: str) -> list[dict]:
@@ -2538,33 +2459,20 @@ class TierStore:
         if has_crossing or self._staged_entries(tier):
             return False, None
         dates: set = set()
-        path = self.tier_path(tier)
-        try:
-            parts = os.listdir(path)
-        except OSError:
-            return False, None
-        for part in parts:
-            dpart = os.path.join(path, part)
-            if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                continue
+        for f in self._data_files(self.tier_path(tier)):
             try:
-                d = _dt.date.fromisoformat(part[len("p_date="):])
+                d = _dt.date.fromisoformat(f.p_date)
             except ValueError:
                 # NULL/default partition (or a foreign dir name): no
                 # date literal can select it — the generic path must
                 # decide whether it is touched
                 return False, None
-            for fn in os.listdir(dpart):
-                if not fn.endswith(".parquet"):
-                    continue
-                m = self._FILE_SEQ_RE.match(fn)
-                if m is None:
-                    return False, None
-                n = int(m.group(1))
-                if (
-                    fn.startswith("c") and from_seq < n <= to_eff
-                ) or (fn.startswith("m") and n > from_seq):
-                    dates.add(d)
+            if f.kind is None:
+                return False, None
+            if (f.kind == "c" and from_seq < f.seq <= to_eff) or (
+                f.kind == "m" and f.seq > from_seq
+            ):
+                dates.add(d)
         dpath = self._deletes_path(tier)
         if os.path.isdir(dpath):
             import pyarrow.parquet as pq
@@ -3207,15 +3115,7 @@ class TierStore:
                 gc_audits.append(e["audit_id"])
 
         def _count_files() -> int:
-            n = 0
-            for part in os.listdir(path):
-                if part.startswith("p_date="):
-                    n += sum(
-                        1
-                        for fn in os.listdir(os.path.join(path, part))
-                        if fn.endswith(".parquet")
-                    )
-            return n
+            return sum(1 for _ in self._data_files(path))
 
         files_before = _count_files()
         # merge_schema: a rewrite must carry EVERY column any file has —
@@ -3432,22 +3332,10 @@ class TierStore:
             # anywhere before the swap leaves the live tier untouched
             # (tmp is GC'd by crash repair), and the originals die with
             # the swap's aside dirs as usual.
-            for part in os.listdir(path):
-                dpart = os.path.join(path, part)
-                if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                    continue
-                for fn in os.listdir(dpart):
-                    mseq = self._FILE_SEQ_RE.match(fn)
-                    if (
-                        fn.startswith("c")
-                        and mseq is not None
-                        and int(mseq.group(1)) in carry_seqs
-                    ):
-                        os.makedirs(os.path.join(tmp, part), exist_ok=True)
-                        shutil.copy2(
-                            os.path.join(dpart, fn),
-                            os.path.join(tmp, part, fn),
-                        )
+            for f in self._data_files(path):
+                if f.kind == "c" and f.seq in carry_seqs:
+                    os.makedirs(os.path.join(tmp, f.part), exist_ok=True)
+                    shutil.copy2(f.path, os.path.join(tmp, f.rel))
         # name-encode each output file's exact max commit_seq (m<seq>-)
         # so incremental readers can skip compacted history at planning
         # time; 'm' not 'c': torn-keyed-append repair removes by
@@ -3736,35 +3624,23 @@ class TierStore:
             # seq with NO c-file tier-wide was folded into m-files
             # by an older build (or is empty): range-check the
             # victim m-footers before dropping, conservatively.
+            live = list(self._data_files(path))
             seqs_in_cfiles = {
-                int(m.group(1))
-                for part in os.listdir(path)
-                if part.startswith("p_date=")
-                for fn in os.listdir(os.path.join(path, part))
-                if (m := self._FILE_SEQ_RE.match(fn))
-                and fn.startswith("c")
-                and int(m.group(1)) in protect
+                f.seq for f in live if f.kind == "c" and f.seq in protect
             }
             folded = protect - seqs_in_cfiles
             hit: set[int] = set()
-            for part in victims:
-                dpart = os.path.join(path, part)
-                for fn in os.listdir(dpart):
-                    m = self._FILE_SEQ_RE.match(fn)
-                    if m is None:
-                        continue
-                    if fn.startswith("c"):
-                        if int(m.group(1)) in seqs_in_cfiles:
-                            hit.add(int(m.group(1)))
-                    elif folded and fn.endswith(".parquet"):
-                        mm = self._footer_col_minmax(
-                            pq.read_metadata(os.path.join(dpart, fn)),
-                            "commit_seq",
-                        )
-                        if mm is not None:
-                            hit |= {
-                                s for s in folded if mm[0] <= s <= mm[1]
-                            }
+            for f in live:
+                if f.part not in victims:
+                    continue
+                if f.kind == "c" and f.seq in seqs_in_cfiles:
+                    hit.add(f.seq)
+                elif f.kind == "m" and folded:
+                    mm = self._footer_col_minmax(
+                        pq.read_metadata(f.path), "commit_seq"
+                    )
+                    if mm is not None:
+                        hit |= {s for s in folded if mm[0] <= s <= mm[1]}
             hit = sorted(hit)
             if hit:
                 raise ConcurrentCommitError(

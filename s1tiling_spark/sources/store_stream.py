@@ -44,8 +44,6 @@ Python). ``maxCommitsPerBatch`` bounds a micro-batch the way Iceberg's
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -78,21 +76,10 @@ def _apply_ops_to_names(names: list[str], ops: list[dict]) -> list[str]:
 def _newest_data_file(store, tier: str) -> str | None:
     """Highest-seq live data file (schema authority). Staged/branch
     files are fine here — they share the tier's declared schema."""
-    root = store.tier_path(tier)
-    if not os.path.isdir(root):
-        return None
     best, best_seq = None, -1
-    for part in os.listdir(root):
-        dpart = os.path.join(root, part)
-        if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-            continue
-        for fn in os.listdir(dpart):
-            if not fn.endswith(".parquet"):
-                continue
-            m = store._FILE_SEQ_RE.match(fn)
-            seq = int(m.group(1)) if m else 0
-            if seq > best_seq:
-                best, best_seq = os.path.join(dpart, fn), seq
+    for f in store._data_files(store.tier_path(tier)):
+        if (f.seq or 0) > best_seq:
+            best, best_seq = f.path, f.seq or 0
     return best
 
 
@@ -232,47 +219,30 @@ class TierStoreStreamReader(DataSourceStreamReader):
         renames = tuple(
             (op["from"], op["to"]) for op in ops if op["kind"] == "rename"
         )
-        root = store.tier_path(self.tier)
         parts: list[InputPartition] = []
-        if not os.path.isdir(root):
-            return parts
-        for part in sorted(os.listdir(root)):
-            dpart = os.path.join(root, part)
-            if not (part.startswith("p_date=") and os.path.isdir(dpart)):
-                continue
-            p_date = part.split("=", 1)[1]
-            for fn in sorted(os.listdir(dpart)):
-                if not fn.endswith(".parquet"):
-                    continue
-                m = store._FILE_SEQ_RE.match(fn)
-                if m is None:
-                    # legacy unprefixed file: conservatively a compact
-                    # output covering all history — row-filter it
-                    parts.append(self._mk(dpart, fn, p_date, None, (lo, hi), rb, renames))
-                    continue
-                seq = int(m.group(1))
-                if fn.startswith("c"):
-                    entry = staged.get(seq)
-                    if entry is not None:
-                        if entry["state"] != "published":
-                            continue  # staged/abandoned: invisible
-                        eff = int(entry["pub_seq"])
-                        if lo < eff <= hi and not voided(eff):
-                            parts.append(
-                                self._mk(dpart, fn, p_date, eff, None, (), renames)
-                            )
-                        continue
-                    if lo < seq <= hi and not voided(seq):
-                        parts.append(self._mk(dpart, fn, p_date, None, None, (), renames))
-                else:  # m<maxseq>: compact output, may hold in-range rows
-                    if seq > lo:
-                        parts.append(self._mk(dpart, fn, p_date, None, (lo, hi), rb, renames))
+        for f in store._data_files(store.tier_path(self.tier)):
+            if f.kind is None:
+                # legacy unprefixed file: conservatively a compact
+                # output covering all history — row-filter it
+                parts.append(self._mk(f, None, (lo, hi), rb, renames))
+            elif f.kind == "c":
+                entry = staged.get(f.seq)
+                if entry is not None:
+                    if entry["state"] != "published":
+                        continue  # staged/abandoned: invisible
+                    eff = int(entry["pub_seq"])
+                    if lo < eff <= hi and not voided(eff):
+                        parts.append(self._mk(f, eff, None, (), renames))
+                elif lo < f.seq <= hi and not voided(f.seq):
+                    parts.append(self._mk(f, None, None, (), renames))
+            elif f.seq > lo:  # m<maxseq>: compact output, may hold in-range rows
+                parts.append(self._mk(f, None, (lo, hi), rb, renames))
         return parts
 
-    def _mk(self, dpart, fn, p_date, remap, row_range, excluded, renames):
+    def _mk(self, f, remap, row_range, excluded, renames):
         return _FilePartition(
-            path=os.path.join(dpart, fn),
-            p_date=p_date,
+            path=f.path,
+            p_date=f.p_date,
             remap_seq=remap,
             row_range=row_range,
             excluded=tuple(excluded),
