@@ -164,59 +164,20 @@ def main() -> None:
         spark.stop()
         print(json.dumps(out))
         return
-    # The host has bursty CPU steal (PERF.md §6: up to 3x run-to-run on
-    # identical jobs). The flagship is run twice and the best kept —
-    # both samples are reported — so the headline reflects the engine,
-    # not the noisiest minute. Catalog queries stay single-run unless
-    # they cross the heavy-tail threshold (then best-of-2, DISCLOSED in
-    # the retried/samples fields).
-    # best-of-3 (was 2): the host's steal band moves slower than a
-    # single back-to-back pair — identical cascade code measured 10.05 s
-    # (r4) and a reproducible 12.8 s (r5, three consecutive runs), so a
-    # third sample materially improves the odds one run lands in a
-    # quiet window. Only the best is charged to the headline.
-    runs = [run_tier_cascade(spark) for _ in range(3)]
-    cascade = min(runs, key=lambda r: r["sec"])
+    # every query and the cascade are timed ONCE and reported as
+    # measured — no best-of-N, no retry, no prior-best folding (the
+    # scoreboard for performance claims is perfbench/, which compares
+    # seeded parent/change pairs instead of picking quiet windows)
+    cascade = run_tier_cascade(spark)
     queries["tier_cascade"] = round(cascade["sec"], 3)
-    samples: dict[str, list[float]] = {"tier_cascade": [round(r["sec"], 3) for r in runs]}
-    prior_best: dict[str, float] = {}
 
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "cascade":
         from s1tiling_spark.operators.cache import release_cached
 
-        # committed per-query bests from the last recorded run: any
-        # first sample regressing past 1.4x its prior best is retried
-        # (best-of-2, both samples recorded) — the host's noise band is
-        # wider than real regressions (PERF.md §6), and the bench must
-        # not publish noise as a regression (VERDICT r4 ask #6: ann_lsh
-        # +16% and sessionize +82% shipped as unretried noise samples)
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
-        try:
-            with open(detail_path) as f:
-                prior = json.load(f)
-        except Exception:
-            prior = {}
-        # per-entry try: ONE malformed record must not silently disable
-        # the regression guard for every other query (review catch, r5)
-        for name, sec in (prior.get("queries") or {}).items():
-            try:
-                prior_best[name] = float(sec)
-            except (TypeError, ValueError):
-                continue
-        for name, ss in (prior.get("samples") or {}).items():
-            try:
-                prior_best[name] = min(
-                    [prior_best.get(name, float("inf"))] + [float(s) for s in ss]
-                )
-            except (TypeError, ValueError):
-                continue
-
         for name, fn in e.queries().items():
             t0 = time.time()
             materialize(fn(spark, SF_DIR))
-            t = time.time() - t0
+            queries[name] = round(time.time() - t0, 2)
             # queries that persist intermediates (LSH signatures, IVF
             # prep) must not donate cache to — or steal memory from —
             # later queries: each timing is an independent cold run.
@@ -224,23 +185,6 @@ def main() -> None:
             # (clearCache alone leaves Python-side plan refs behind)
             release_cached()
             spark.catalog.clearCache()
-            pb = prior_best.get(name)
-            regressed = pb is not None and t > 1.4 * pb and t > 0.3
-            if t > 5.0 or regressed:
-                # best-of-2 for the heavy tail (a single sample > 5 s
-                # has decent odds of being a host-steal artifact —
-                # measured 10-20x inflation windows, PERF.md §6) AND
-                # for anything regressing past 1.4x its committed best.
-                # Both samples recorded; a REAL regression shows up as
-                # two matching slow samples.
-                t1 = time.time()
-                materialize(fn(spark, SF_DIR))
-                t2 = time.time() - t1
-                samples[name] = [round(t, 3), round(t2, 3)]
-                t = min(t, t2)
-                release_cached()
-                spark.catalog.clearCache()
-            queries[name] = round(t, 2)
 
     total = round(sum(queries.values()), 2)
     out = {
@@ -254,62 +198,15 @@ def main() -> None:
         "bench_rows": BENCH_ROWS,
         "points_per_sec": round(cascade["points_per_sec"], 1),
         "cascade_output_rows": cascade["output_rows"],
-        "retried": sorted(n for n in samples if n != "tier_cascade"),
     }
-    # committed-best context (disclosed, not substituted): this host's
-    # degraded windows run byte-identical code 1.5-4x slow (PERF.md
-    # §27/§28) — the folded BENCH_DETAIL bests say what the engine does
-    # in a clean window, next to this run's honest numbers above.
-    if prior_best:
-        folded_preview = {
-            n: min(prior_best.get(n, float("inf")), s) for n, s in queries.items()
-        }
-        out["best_total_sec"] = round(sum(folded_preview.values()), 2)
-        if "tier_cascade" in folded_preview and folded_preview["tier_cascade"] > 0:
-            out["best_points_per_sec"] = round(
-                cascade["input_rows"] * 5 / folded_preview["tier_cascade"], 1
-            )
-    # BENCH_DETAIL.json is the retry policy's prior-best table, NOT a
-    # plain dump of this run: its "queries" fold per-query bests across
-    # runs (min of prior best and this run) so one degraded host window
-    # (PERF.md §27/§28: byte-identical code measuring 1.5-4x slow) can
-    # never poison the 1.4x retry baseline; "latest_run" carries this
-    # run as measured, samples included. The stdout line stays the
-    # honest current run. Cascade-only runs (scaling_bench sets
-    # SPARK_GRAFT_BENCH_ONLY=cascade) must not touch the file at all:
-    # that clobbered the full-registry detail with a single entry.
+    # BENCH_DETAIL.json: this run's full record, as measured — the
+    # overflow target for the stdout line below. Cascade-only runs
+    # (scaling_bench sets SPARK_GRAFT_BENCH_ONLY=cascade) leave the
+    # full-registry record alone.
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "cascade":
-        folded = dict(prior_best)
-        for name, sec in queries.items():
-            folded[name] = min(folded.get(name, float("inf")), sec)
-        # drop prior entries for queries no longer registered
-        folded = {n: s for n, s in folded.items() if n in queries}
-        detail = {
-            "metric": out["metric"],
-            "note": (
-                "queries = per-query committed bests folded across runs "
-                "(the bench retry policy's prior-best table, PERF.md "
-                "§27-29); latest_run = the most recent full run as "
-                "measured, with all best-of-2 samples"
-            ),
-            "value": round(sum(folded.values()), 2),
-            "unit": "sec",
-            "queries": folded,
-            "sf": out["sf"],
-            "cpus": cpus,
-            "bench_rows": BENCH_ROWS,
-            "cascade_input_rows": cascade["input_rows"],
-            "latest_run": {
-                "value": out["value"],
-                "points_per_sec": out["points_per_sec"],
-                "queries": queries,
-                "samples": samples,
-                "retried": out["retried"],
-            },
-        }
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json"), "w") as f:
-            json.dump(detail, f, indent=1)
+            json.dump(out, f, indent=1)
     spark.stop()
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > 1900:

@@ -10,10 +10,11 @@ over tier tables.
 Sandbox note: no Iceberg catalog is available, so MERGE is abstracted
 (SURVEY §7 "What's hard" #2) as *append + dedup-on-read*: every write
 carries a monotonically increasing ``commit_seq`` lineage column; readers
-keep the newest version of each (bucket_start, source) via a window
-rank. On a real deployment the same interface maps to Iceberg
-``MERGE INTO`` + snapshot ids; the watermark/planner logic is
-unchanged. Atomicity mirrors the reference's tmp→rename commit
+keep the newest version of each (bucket_start, source) with one
+max-of-struct(commit_seq, values…) aggregate per key
+(:meth:`TierStore._newest_wins`). On a real deployment the same
+interface maps to Iceberg ``MERGE INTO`` + snapshot ids; the
+watermark/planner logic is unchanged. Atomicity mirrors the reference's tmp→rename commit
 (`steps.py:123-145`): parquet writes go to a ``_tmp`` dir and are
 renamed into place, and the refresh record (watermarks, seq, run id,
 metrics — one JSON file) is replaced only after the data renames — a
@@ -28,6 +29,15 @@ encodes the commit that wrote them: ``c<seq>-`` (an append),
 ``m<maxseq>-`` (a compact output) or unprefixed (legacy data).
 :meth:`TierStore._data_files` is the sole owner of these rules — every
 walk of a tier's live data files goes through it.
+
+Commit visibility — which row versions a horizon serves, given WAP
+remaps, hidden staged commits, rollback ranges, the compaction horizon
+and the retention floor — has one owner too: :class:`Visibility`,
+loaded once per store operation by :meth:`TierStore._visibility`. Every
+reader (``read``, ``read_summed``, ``read_incremental``, ``changes``,
+``snapshots``, compaction, the ``tier_store`` stream) resolves rows
+through it, and it raises the one "predates the compaction horizon"
+guard.
 """
 
 from __future__ import annotations
@@ -122,6 +132,124 @@ class DataFile(NamedTuple):
     @property
     def p_date(self) -> str:
         return self.part[len("p_date="):]
+
+
+class Visibility(NamedTuple):
+    """One tier's commit-visibility metadata — the single owner of
+    which row versions a horizon serves. Built by
+    :meth:`TierStore._visibility` from ONE compact-meta load and ONE
+    rollback-file load per store operation, and never cached across
+    calls (another writer may publish, roll back or compact between
+    two reads).
+
+    - ``remap``: published WAP commit, staged seq → publish seq (the
+      file keeps its staged name until compaction bakes the remap);
+    - ``hidden``: staged, abandoned and unmerged-branch seqs — never
+      served unless a read exposes them (audit seq, branch chain);
+    - ``rollbacks``: voided ``(lo, hi]`` commit ranges — invisible to
+      any read whose horizon is PAST the rollback (``as_of > hi`` or
+      current), still visible to as-of reads INSIDE the range
+      (orphaned history stays readable until a compaction expires it,
+      like Iceberg's orphan snapshots before ``expire_snapshots``);
+    - ``min_as_of``: the compaction horizon — history below it is gone;
+    - ``retention``: (oldest retained date, expiry seq) of the last
+      :meth:`TierStore.expire`, or (None, 0);
+    - ``schema_ops``: the rename/drop/widen ops still live above the
+      compaction horizon (older ones are baked into the files),
+      seq-ascending — the columns a read resolves against the same
+      metadata view as its rows."""
+
+    tier: str
+    remap: dict
+    hidden: frozenset
+    rollbacks: tuple
+    min_as_of: int
+    retention: tuple
+    schema_ops: tuple
+
+    def check(self, seq: int, what: str = "snapshot as_of_seq") -> None:
+        """The horizon guard: a read that needs exact history at
+        ``seq`` raises rather than serve a silently wrong answer from
+        a compacted table."""
+        if int(seq) < self.min_as_of:
+            raise ValueError(
+                f"tier {self.tier!r}: {what}={seq} predates the compaction "
+                f"horizon min_as_of={self.min_as_of}; history below it was "
+                "expired (compact with expire_below to retain older "
+                "snapshots)"
+            )
+
+    def as_of(self, df: DataFrame, seq: int, p_dates=None, chain=()) -> DataFrame:
+        """Time travel: restrict ``df`` to versions committed at or
+        before ``seq`` (plus a branch's own ``chain`` commits, which
+        sit past its base horizon), after :meth:`check`.
+
+        Retention carve-out: :meth:`TierStore.expire` physically drops
+        date partitions, so a state committed before the expiry may be
+        missing those dates — raise unless ``p_dates`` scopes the read
+        to surviving dates (the explicit acknowledgment). States at or
+        past the expiry seq reflect post-retention reality. The
+        changelog does not come through here: it diffs two states read
+        from the same surviving files, so expired dates vanish from
+        both sides and incremental consumers keep working."""
+        self.check(seq)
+        floor_date, floor_seq = self.retention
+        if floor_date is not None and int(seq) < floor_seq and (
+            p_dates is None or any(str(d) < floor_date for d in p_dates)
+        ):
+            raise ValueError(
+                f"tier {self.tier!r}: snapshot as_of_seq={seq} predates the "
+                f"retention expiry at seq {floor_seq} (dates < {floor_date} "
+                f"were dropped); pass p_dates >= {floor_date} to read the "
+                "surviving dates of that state"
+            )
+        cond = F.col("commit_seq") <= int(seq)
+        if chain:
+            cond = cond | F.col("commit_seq").isin(list(chain))
+        return df.filter(cond)
+
+    def expose(self, df: DataFrame, exposed=()) -> DataFrame:
+        """WAP semantics as column algebra on ``commit_seq``: published
+        staged seqs are remapped to their publish seq (before any as-of
+        filter or newest-wins pick, so they order exactly like a fresh
+        commit), every other staged seq is hidden unless ``exposed``
+        (an audit read's seq, a branch read's chain)."""
+        if self.remap:
+            expr = F.col("commit_seq")
+            for old, new in sorted(self.remap.items()):
+                expr = F.when(F.col("commit_seq") == old, F.lit(new)).otherwise(expr)
+            df = df.withColumn("commit_seq", expr)
+        hide = sorted(self.hidden - set(exposed))
+        if hide:
+            df = df.filter(~F.col("commit_seq").isin(hide))
+        return df
+
+    def _voided_at(self, h: int | None) -> list:
+        return [(lo, hi) for lo, hi in self.rollbacks if h is None or int(h) > hi]
+
+    def rolled_back(self, h: int | None = None):
+        """Row predicate: the version is voided by a rollback at
+        horizon ``h`` (None = current)."""
+        seq, pred = F.col("commit_seq"), F.lit(False)
+        for lo, hi in self._voided_at(h):
+            pred = pred | ((seq > lo) & (seq <= hi))
+        return pred
+
+    def unvoided(self, df: DataFrame, h: int | None = None) -> DataFrame:
+        """Drop the versions rolled back at horizon ``h`` — a range
+        predicate Catalyst folds into the scan filter."""
+        return df.filter(~self.rolled_back(h)) if self._voided_at(h) else df
+
+    def voided(self, seq: int) -> bool:
+        """Python-side :meth:`rolled_back` at the current horizon, for
+        the driver-side file planners."""
+        return any(lo < seq <= hi for lo, hi in self.rollbacks)
+
+    def crossings(self, from_seq: int, to_seq: int) -> list:
+        """The rollback ranges whose mask is off at ``from_seq`` and on
+        at ``to_seq`` — their voided commits change visibility inside
+        ``(from_seq, to_seq]`` however old they are."""
+        return [(lo, hi) for lo, hi in self.rollbacks if from_seq <= hi < to_seq]
 
 
 class TierStore:
@@ -355,11 +483,30 @@ class TierStore:
     def _write_compact_meta(self, meta: dict) -> None:
         atomic_json_write(self._compact_meta_path(), meta)
 
+    def _visibility(self, tier: str) -> Visibility:
+        """Load ``tier``'s :class:`Visibility` — the one decoder of the
+        staged-commit, horizon, retention and rollback metadata."""
+        meta = self._read_compact_meta()
+        staged = meta.get(f"_staged_{tier}", [])
+        horizon = int(meta.get(tier, 0))
+        ret = meta.get(f"_retention_{tier}")
+        remap = {int(e["seq"]): int(e["pub_seq"]) for e in staged if e["state"] == "published"}
+        ops = sorted(meta.get(f"_schema_{tier}", []), key=lambda o: o["seq"])
+        return Visibility(
+            tier=tier,
+            remap=remap,
+            hidden=frozenset(int(e["seq"]) for e in staged) - set(remap),
+            rollbacks=tuple(self._rollback_ranges(tier)),
+            min_as_of=horizon,
+            retention=(str(ret["floor"]), int(ret["seq"])) if ret else (None, 0),
+            schema_ops=tuple(o for o in ops if o["seq"] > horizon),
+        )
+
     def min_as_of(self, tier: str) -> int:
         """Oldest snapshot horizon still reconstructable for ``tier``.
         0 until a compaction expires history; compact(expire_below=E)
         raises it to E, default compact to the then-current seq."""
-        return int(self._read_compact_meta().get(tier, 0))
+        return self._visibility(tier).min_as_of
 
     # ---------- commit sequence ----------
     def _commits_dir(self) -> str:
@@ -472,6 +619,14 @@ class TierStore:
         abandoned}, ``pub_seq`` once published, ``ts`` at creation."""
         return list(self._read_compact_meta().get(f"_staged_{tier}", []))
 
+    @staticmethod
+    def _staged_entry(entries: list[dict], tier: str, audit_id: str) -> dict:
+        """The staged-commit record of ``audit_id`` (KeyError if none)."""
+        for e in entries:
+            if e["audit_id"] == audit_id:
+                return e
+        raise KeyError(f"tier {tier!r}: no staged commit {audit_id!r}")
+
     def stage(
         self,
         tier: str,
@@ -533,13 +688,10 @@ class TierStore:
         self, tier: str, audit_id: str, state: str, pub_seq: int | None = None
     ) -> None:
         def _flip(m, t=tier, a=audit_id, s=state, p=pub_seq):
-            for e in m.get(f"_staged_{t}", []):
-                if e["audit_id"] == a:
-                    e["state"] = s
-                    if p is not None:
-                        e["pub_seq"] = p
-                    return
-            raise KeyError(f"tier {t!r}: no staged commit {a!r}")
+            e = self._staged_entry(m.get(f"_staged_{t}", []), t, a)
+            e["state"] = s
+            if p is not None:
+                e["pub_seq"] = p
 
         self._update_meta(_flip)
 
@@ -550,12 +702,7 @@ class TierStore:
         ALSO sees ``audit_id``'s staged rows (validation queries run
         against exactly what publishing would serve). Other staged
         commits stay hidden."""
-        entry = next(
-            (e for e in self._staged_entries(tier) if e["audit_id"] == audit_id),
-            None,
-        )
-        if entry is None:
-            raise KeyError(f"tier {tier!r}: no staged commit {audit_id!r}")
+        entry = self._staged_entry(self._staged_entries(tier), tier, audit_id)
         if entry["state"] != "staged":
             raise ValueError(
                 f"tier {tier!r}: staged commit {audit_id!r} is "
@@ -577,16 +724,7 @@ class TierStore:
         seq."""
         with self._meta_mutex():
             meta = self._read_compact_meta()
-            entry = next(
-                (
-                    e
-                    for e in meta.get(f"_staged_{tier}", [])
-                    if e["audit_id"] == audit_id
-                ),
-                None,
-            )
-            if entry is None:
-                raise KeyError(f"tier {tier!r}: no staged commit {audit_id!r}")
+            entry = self._staged_entry(meta.get(f"_staged_{tier}", []), tier, audit_id)
             if entry["state"] != "staged":
                 raise ValueError(
                     f"tier {tier!r}: staged commit {audit_id!r} is "
@@ -604,16 +742,7 @@ class TierStore:
         compaction drops them physically and clears the record."""
         with self._meta_mutex():
             meta = self._read_compact_meta()
-            entry = next(
-                (
-                    e
-                    for e in meta.get(f"_staged_{tier}", [])
-                    if e["audit_id"] == audit_id
-                ),
-                None,
-            )
-            if entry is None:
-                raise KeyError(f"tier {tier!r}: no staged commit {audit_id!r}")
+            entry = self._staged_entry(meta.get(f"_staged_{tier}", []), tier, audit_id)
             if entry["state"] == "published":
                 raise ValueError(
                     f"tier {tier!r}: {audit_id!r} is already published — "
@@ -621,43 +750,6 @@ class TierStore:
                 )
             entry["state"] = "abandoned"
             self._write_compact_meta(meta)
-
-    def _apply_staged(
-        self, df: DataFrame, tier: str, audit_seq: int | None,
-        expose_seqs: frozenset | None = None,
-    ) -> DataFrame:
-        """Reader-side WAP semantics: published staged seqs are
-        REMAPPED to their publish seq (before any as-of filter or
-        dedup window, so the published rows order exactly like a fresh
-        commit), every other staged seq is hidden — except
-        ``audit_seq`` (an :meth:`audit_read`) and ``expose_seqs`` (a
-        branch read's whole commit chain). Plain column algebra on
-        commit_seq; Catalyst folds the remap into the scan
-        projection."""
-        staged = self._staged_entries(tier)
-        if not staged:
-            return df
-        exposed = set(expose_seqs or ())
-        if audit_seq is not None:
-            exposed.add(int(audit_seq))
-        mapping = {
-            int(e["seq"]): int(e["pub_seq"])
-            for e in staged
-            if e["state"] == "published"
-        }
-        hide = [
-            int(e["seq"])
-            for e in staged
-            if e["state"] != "published" and int(e["seq"]) not in exposed
-        ]
-        if mapping:
-            expr = F.col("commit_seq")
-            for old, new in sorted(mapping.items()):
-                expr = F.when(F.col("commit_seq") == old, F.lit(new)).otherwise(expr)
-            df = df.withColumn("commit_seq", expr)
-        if hide:
-            df = df.filter(~F.col("commit_seq").isin(hide))
-        return df
 
     # ---------- refs (tags) ----------
     def _refs_path(self) -> str:
@@ -833,31 +925,13 @@ class TierStore:
         return os.path.join(self.base_dir, "_rollbacks.json")
 
     def _rollback_ranges(self, tier: str) -> list[tuple[int, int]]:
-        """Excluded commit ranges for ``tier``: each ``(lo, hi]`` holds
-        commits voided by a :meth:`rollback` — invisible to any read
-        whose horizon is PAST the rollback (``as_of > hi`` or current),
-        still visible to as-of reads INSIDE the range (orphaned history
-        stays readable until a compaction expires it, like Iceberg's
-        orphan snapshots before ``expire_snapshots``)."""
+        """The ``(lo, hi]`` commit ranges :meth:`rollback` voided for
+        ``tier`` (read through :attr:`Visibility.rollbacks`)."""
         path = self._rollbacks_path()
         if not os.path.exists(path):
             return []
         with open(path) as f:
             return [tuple(r) for r in json.load(f).get(tier, [])]
-
-    def _apply_rollback_mask(
-        self, df: DataFrame, tier: str, as_of_seq: int | None = None
-    ) -> DataFrame:
-        """Drop row versions inside rolled-back ranges visible at this
-        horizon (see :meth:`_rollback_ranges` for the horizon rule).
-        Plain commit_seq range predicates — Catalyst folds them into
-        the scan filter; no join, no shuffle."""
-        for lo, hi in self._rollback_ranges(tier):
-            if as_of_seq is None or int(as_of_seq) > hi:
-                df = df.filter(
-                    ~((F.col("commit_seq") > lo) & (F.col("commit_seq") <= hi))
-                )
-        return df
 
     def rollback(self, tier: str, to_seq: int) -> dict:
         """Roll ``tier`` back to its state as of ``to_seq`` (Iceberg
@@ -875,20 +949,14 @@ class TierStore:
         cur = self.last_commit_seq()
         if to_seq > cur:
             raise ValueError(f"rollback target {to_seq} is in the future (last={cur})")
-        if to_seq < self.min_as_of(tier):
+        vis = self._visibility(tier)
+        vis.check(to_seq, "rollback target")
+        ranges = list(vis.rollbacks)
+        if vis.voided(to_seq):
             raise ValueError(
-                f"tier {tier!r}: rollback target {to_seq} predates the "
-                f"compaction horizon min_as_of={self.min_as_of(tier)}; "
-                "that state was expired"
+                f"rollback target {to_seq} is itself rolled back (voided "
+                f"ranges {ranges}); pick a seq outside every range"
             )
-        ranges = self._rollback_ranges(tier)
-        for lo, hi in ranges:
-            if lo < to_seq <= hi:
-                raise ValueError(
-                    f"rollback target {to_seq} is itself rolled back "
-                    f"(inside ({lo}, {hi}]); pick a seq outside the range "
-                    f"(e.g. {lo})"
-                )
         if to_seq == cur:
             return {"tier": tier, "excluded": None, "rollback_seq": cur}
         # The rollback is itself a commit: consuming a seq makes it
@@ -1150,18 +1218,20 @@ class TierStore:
         return df
 
     def _union_read_schema(self, tier: str, ops: list[dict]):
-        """Explicit requested scan schema while a widen op is live:
-        the per-footer field union with the WIDEST type per column
-        (then any live widen targets applied on top, so the request is
-        wide even before the first wide file lands). Needed because
-        Spark's ``mergeSchema`` refuses int32-vs-int64 footers, while
-        the parquet reader happily upcasts a narrow file under an
-        explicit wider requested schema (verified: Spark 4.x widening
-        reads). Footer metadata only — same per-file cost discipline
-        as ``merge_schema``, paid only while the op is live; the next
-        compact bakes the wide type and reads return to inferred
-        scans. Data columns only: the partition column (``p_date``)
-        stays inference-appended, identical to plain reads."""
+        """Explicit requested scan schema for a read whose files may
+        disagree (``merge_schema``, or any live schema op): the
+        per-footer field union — renames' two spellings and added
+        columns (NULL back-filled for files without them) — with the
+        WIDEST type per column, then any live widen targets applied on
+        top, so the request is wide even before the first wide file
+        lands. Spark's ``mergeSchema`` refuses int32-vs-int64 footers
+        and costs a schema-merge job, while the parquet reader happily
+        upcasts a narrow file under an explicit wider requested schema
+        (verified: Spark 4.x widening reads). Footer metadata only,
+        driver-side; the next compact bakes the ops and reads return
+        to single-footer scans. Data columns only: the partition column
+        (``p_date``) stays inference-appended, identical to plain
+        reads."""
         import pyarrow.parquet as pq
         from pyspark.sql.types import (
             ByteType, DoubleType, FloatType, IntegerType, LongType,
@@ -1382,12 +1452,7 @@ class TierStore:
         shutil.rmtree(tmp)
         return rows
 
-    def _delete_groups(
-        self,
-        tier: str,
-        as_of_seq: int | None = None,
-        apply_rollback: bool = True,
-    ) -> list[tuple[list[str], DataFrame]]:
+    def _delete_groups(self, tier: str) -> list[tuple[list[str], DataFrame]]:
         """Delete files grouped by their OWN key-column set. ``delete``
         allows any key prefix per call, so one tier's ``_deletes`` dir
         may mix schemas (e.g. (bucket_start, source) group deletes next
@@ -1398,7 +1463,8 @@ class TierStore:
         file's key set IS its footer schema minus the lineage columns,
         so group the FILES driver-side by footer (pyarrow, no Spark
         job — the same metadata-not-data discipline as Iceberg's
-        manifest list) and return one DataFrame per distinct key set.
+        manifest list) and return one DataFrame per distinct key set —
+        every delete commit, unmasked (callers scope it to a horizon).
         """
         path = self._deletes_path(tier)
         if not os.path.isdir(path):
@@ -1425,17 +1491,11 @@ class TierStore:
                 self.spark.read.schema(self._footer_schema(files[0]))
                 .parquet(*files)
             )
-            if as_of_seq is not None:
-                df = df.filter(F.col("commit_seq") <= int(as_of_seq))
-            if apply_rollback:
-                # a delete commit inside a rolled-back range is voided
-                # with it (the rollback undoes the DELETE too)
-                df = self._apply_rollback_mask(df, tier, as_of_seq)
             out.append((list(key_cols), df))
         return out
 
     def _apply_delete_mask(
-        self, df: DataFrame, tier: str, as_of_seq: int | None = None
+        self, df: DataFrame, tier: str, vis: Visibility, as_of_seq: int | None = None
     ) -> DataFrame:
         """Row-level mask: drop versions with ``commit_seq <= the
         newest matching delete``. Delete files are small (Iceberg's own
@@ -1444,8 +1504,14 @@ class TierStore:
         group-level deletes (key prefix) mask every row of the group.
         One mask join per distinct key set — sequential application is
         the OR of the masks (a row is dropped iff ANY delete commit
-        newer than it matches on that delete's keys)."""
-        for key_cols, dels in self._delete_groups(tier, as_of_seq):
+        newer than it matches on that delete's keys). The deletes
+        themselves are scoped to the horizon: committed at or before
+        ``as_of_seq``, and a delete inside a rolled-back range is
+        voided with it (the rollback undoes the DELETE too)."""
+        for key_cols, dels in self._delete_groups(tier):
+            if as_of_seq is not None:
+                dels = dels.filter(F.col("commit_seq") <= int(as_of_seq))
+            dels = vis.unvoided(dels, as_of_seq)
             dmax = dels.groupBy(*key_cols).agg(F.max("commit_seq").alias("_del_seq"))
             df = (
                 df.join(F.broadcast(dmax), key_cols, "left")
@@ -1714,7 +1780,7 @@ class TierStore:
         return out
 
     def _plan_files_above_seq(
-        self, tier: str, min_seq: int
+        self, tier: str, min_seq: int, vis: Visibility
     ) -> list[str] | None:
         """Driver-side incremental file planning (the Iceberg
         incremental-manifest analog): the list of live data files that
@@ -1736,11 +1802,7 @@ class TierStore:
         # survive the skip (a c-file iff its seq IS a risky old seq; an
         # m-file iff its max covers one). Conservative by construction;
         # the next compact bakes the remap and retires the exception.
-        risky = {
-            int(e["seq"])
-            for e in self._staged_entries(tier)
-            if e["state"] == "published" and int(e["pub_seq"]) > int(min_seq)
-        }
+        risky = {old for old, new in vis.remap.items() if new > int(min_seq)}
         min_risky = min(risky) if risky else None
         keep: list[str] = []
         skipped = 0
@@ -1923,25 +1985,28 @@ class TierStore:
         min_seq_hint: int | None = None,
         audit_seq: int | None = None,
         _staged_raw: bool = False,
-        _drop_horizon: int | None = None,
-        _retention_ok: bool = False,
     ) -> DataFrame | None:
         """Read a tier table; with ``deduped`` the newest commit wins per
         natural key (default (bucket_start, source); histogram tables add
         ``bin``) — MERGE-on-read.
 
-        Schema evolution (rename/drop — :meth:`rename_column` /
-        :meth:`drop_column`) is applied as metadata, Iceberg
-        field-id style: files keep whatever names they were written
-        with; the read coalesces a renamed column's physical names into
-        the name the requested horizon used (an as-of read BELOW the
-        rename seq serves the OLD name), and drops are hidden only at
-        horizons at/after their seq. ``canonical_names=True`` serves
-        CURRENT names/drops regardless of horizon — for consumers that
-        must align two horizons' schemas (``changes``) or rewrite files
-        (``compact``). ``_drop_horizon`` (internal, compact) bounds
-        which drops are physically applied so history-preserving
-        compaction keeps columns its preserved snapshots still show.
+        Which row versions are visible is decided by the tier's
+        :class:`Visibility`, loaded once per read: WAP staging and the
+        as-of horizon always apply; ``deduped`` reads also drop the
+        versions rolled back at the horizon and those masked by
+        equality deletes (``deduped=False`` is the physical row-version
+        view — compact, snapshots, additive folds).
+
+        Schema evolution (rename/drop/widen — :meth:`rename_column` /
+        :meth:`drop_column` / :meth:`widen_column`) is applied as
+        metadata, Iceberg field-id style: files keep whatever names
+        they were written with; the read coalesces a renamed column's
+        physical names into the name the requested horizon used (an
+        as-of read BELOW the rename seq serves the OLD name), and drops
+        are hidden only at horizons at/after their seq.
+        ``canonical_names=True`` serves CURRENT names/drops regardless
+        of horizon — for consumers that must align two horizons'
+        schemas (``changes``) or rewrite files (``compact``).
 
         ``as_of_seq``: snapshot-as-of (time-travel) read — reconstruct
         the table state as of commit ``as_of_seq`` by restricting the
@@ -1950,15 +2015,17 @@ class TierStore:
         lineage (reference analog: restart-from-existing-products,
         `/root/reference/s1tiling/libs/otbpipeline.py:814-819`).
         Raises if a compaction has expired history below that horizon
-        (``min_as_of``) — a silent wrong answer is never returned.
+        (``min_as_of``), or if a retention expiry dropped dates of that
+        state and ``p_dates`` does not exclude them — a silent wrong
+        answer is never returned.
 
         ``merge_schema``: schema-evolution read (Iceberg add-column
         analog). Appends may carry NEW columns; with ``merge_schema``
-        the scan unions every file's schema and back-fills old rows
-        with NULL. Opt-in because it reads every footer up front —
-        at 10^12-row scale that is a metadata storm to pay only after
-        an actual evolution (a real Iceberg catalog serves the current
-        schema from the table metadata instead).
+        the scan requests the union of every file's footer schema and
+        back-fills old rows with NULL. Opt-in because it reads every
+        footer up front — at 10^12-row scale that is a metadata storm
+        to pay only after an actual evolution (a real Iceberg catalog
+        serves the current schema from the table metadata instead).
 
         ``ref``: read as of a named tag (:meth:`tag`) — sugar for
         ``as_of_seq=self.resolve_ref(ref)``.
@@ -1995,16 +2062,66 @@ class TierStore:
             if as_of_seq is not None:
                 raise ValueError("pass as_of_seq or ref, not both")
             as_of_seq = self.resolve_ref(ref)
-        branch_seqs: list[int] = []
+        chain: list[int] = []
         if branch is not None:
             # a branch read is main AS OF the branch's base snapshot
-            # (every snapshot guard below applies to the base) plus the
+            # (every snapshot guard applies to the base) plus the
             # branch's own commit chain exposed past that horizon
-            if as_of_seq is not None or ref is not None or audit_seq is not None:
+            if as_of_seq is not None or audit_seq is not None:
                 raise ValueError(
                     "branch reads cannot combine with as_of_seq/ref/audit_seq"
                 )
-            as_of_seq, branch_seqs = self._branch_seqs(tier, branch)
+            as_of_seq, chain = self._branch_seqs(tier, branch)
+        vis = self._visibility(tier)
+        df = self._scan(
+            tier,
+            vis,
+            horizon=as_of_seq,
+            exposed=chain if audit_seq is None else [int(audit_seq)],
+            merge_schema=merge_schema,
+            p_dates=p_dates,
+            sources=sources,
+            canonical_names=canonical_names,
+            min_seq_hint=min_seq_hint,
+            staged_raw=_staged_raw,
+        )
+        if df is None:
+            return None
+        if as_of_seq is not None:
+            df = vis.as_of(df, as_of_seq, p_dates, chain)
+        if not deduped:
+            return df
+        # rollback mask BEFORE the newest-wins pick: voiding the newest
+        # version must let the restored older one win again
+        out = self._newest_wins(vis.unvoided(df, as_of_seq), keys)
+        # newest-wins first, mask after: equivalent (the winner is the
+        # max seq — masked iff max <= del_seq either way) and the join
+        # then touches one row per key instead of every version
+        return self._apply_delete_mask(out, tier, vis, as_of_seq)
+
+    def _scan(
+        self,
+        tier: str,
+        vis: Visibility,
+        horizon: int | None = None,
+        exposed=(),
+        merge_schema: bool = False,
+        p_dates: list | None = None,
+        sources: list | None = None,
+        canonical_names: bool = False,
+        min_seq_hint: int | None = None,
+        staged_raw: bool = False,
+        drop_horizon: int | None = None,
+    ) -> DataFrame | None:
+        """The row-version view every reader starts from (see
+        :meth:`read` for the arguments): one scan of the tier's live
+        files, columns resolved through ``vis.schema_ops`` at
+        ``horizon``, WAP remap/hide applied (unless ``staged_raw``),
+        then the partition and source row filters. No horizon filter
+        and no masks — the caller applies those from the same ``vis``.
+        ``drop_horizon`` (compact) bounds which drops are physically
+        applied so history-preserving compaction keeps columns its
+        preserved snapshots still show. None for an empty tier."""
         path = self.tier_path(tier)
         # partition dirs can exist EMPTY (a torn keyed commit whose files
         # the replay repair removed, a crash between mkdir and the file
@@ -2014,23 +2131,13 @@ class TierStore:
         sample = next(self._data_files(path), None)
         if sample is None:
             return None
-        # ops fully below the compaction horizon are physically baked in
-        # (compact rewrites canonical names / applied drops), so reads
-        # go back to single-footer scans once maintenance catches up
-        schema_ops = [
-            o for o in self._schema_ops(tier) if o["seq"] > self.min_as_of(tier)
-        ]
+        ops = vis.schema_ops
         reader = self.spark.read.option("basePath", path)
-        if any(o["kind"] == "widen" for o in schema_ops):
-            # live widen means files may disagree on TYPES, which
-            # mergeSchema refuses — request the explicit footer-union
-            # schema instead (covers renames' two spellings and
-            # merge_schema's new-column NULL back-fill too)
-            reader = reader.schema(self._union_read_schema(tier, schema_ops))
-        elif merge_schema or schema_ops:
-            # live renames mean files disagree on column names — the
-            # scan must union footers to expose both spellings
-            reader = reader.option("mergeSchema", "true")
+        if merge_schema or ops:
+            # files may disagree on column names (live rename/drop, added
+            # columns) or types (live widen): request the footer-union
+            # schema, widest type per column
+            reader = reader.schema(self._union_read_schema(tier, ops))
         else:
             # plain scan: explicit footer schema (driver-side pyarrow,
             # cached) replaces the per-read Spark inference job —
@@ -2043,7 +2150,7 @@ class TierStore:
             except OSError:
                 pass
         planned = (
-            self._plan_files_above_seq(tier, min_seq_hint)
+            self._plan_files_above_seq(tier, min_seq_hint, vis)
             if min_seq_hint is not None
             else None
         )
@@ -2055,86 +2162,25 @@ class TierStore:
         # basePath keeps p_date partition parsing identical for the
         # explicit file list; None → nothing skippable, plain dir scan
         df = reader.parquet(*planned) if planned is not None else reader.parquet(path)
-        if schema_ops:
+        if ops:
             df = self._apply_schema_ops(
                 df,
-                schema_ops,
-                horizon=as_of_seq,
+                ops,
+                horizon=horizon,
                 canonical=canonical_names,
-                drop_horizon=_drop_horizon,
+                drop_horizon=drop_horizon,
             )
-        if not _staged_raw:
-            # WAP: BEFORE the as-of filter and the dedup window — a
+        if not staged_raw:
+            # WAP: BEFORE any as-of filter and the newest-wins pick — a
             # published commit must order as the fresh commit it is
-            # (_staged_raw: compact reads the physical truth and
-            # handles staged rows itself)
-            df = self._apply_staged(
-                df, tier, audit_seq,
-                expose_seqs=frozenset(branch_seqs) if branch_seqs else None,
-            )
+            df = vis.expose(df, exposed)
         if p_dates is not None:
             df = df.filter(F.col("p_date").isin([str(d) for d in p_dates]))
         if sources is not None:
             # the row filter is ALWAYS applied — file skipping above is
             # a pure scan optimization, never the correctness mechanism
             df = df.filter(F.col("source").isin([str(s) for s in sources]))
-        if as_of_seq is not None:
-            horizon = self.min_as_of(tier)
-            if as_of_seq < horizon:
-                raise ValueError(
-                    f"tier {tier!r}: snapshot as_of_seq={as_of_seq} predates "
-                    f"the compaction horizon min_as_of={horizon}; history "
-                    "below it was expired (compact with expire_below to "
-                    "retain older snapshots)"
-                )
-            # retention carve-out from the never-silently-wrong contract:
-            # expire() physically drops date partitions, so any state
-            # committed BEFORE the expiry may be missing those dates.
-            # Raise unless the caller scopes the read to surviving dates
-            # via p_dates (the explicit acknowledgment); states at or
-            # past the expiry seq reflect post-retention reality and
-            # stay exact.
-            # _retention_ok: the changelog diffs TWO as-of states read
-            # from the same surviving files — expired dates vanish from
-            # both sides, so the diff stays consistent (no spurious
-            # retraction, no wrong value) and incremental consumers
-            # keep working across retention. Raising here would brick
-            # every matview whose cursor lagged an expiry (review
-            # catch, r5); the guard protects direct time travel only.
-            floor_date, floor_seq = self.retention_floor(tier)
-            if (
-                not _retention_ok
-                and floor_date is not None
-                and int(as_of_seq) < floor_seq
-            ):
-                if p_dates is None or any(str(d) < floor_date for d in p_dates):
-                    raise ValueError(
-                        f"tier {tier!r}: snapshot as_of_seq={as_of_seq} predates "
-                        f"the retention expiry at seq {floor_seq} (dates < "
-                        f"{floor_date} were dropped); pass p_dates >= "
-                        f"{floor_date} to read the surviving dates of that state"
-                    )
-            cond = F.col("commit_seq") <= int(as_of_seq)
-            if branch_seqs:
-                # the branch's own commits sit PAST the base horizon by
-                # construction — admit exactly them (chain order = seq
-                # order, so within-branch newest-wins is already right)
-                cond = cond | F.col("commit_seq").isin(branch_seqs)
-            df = df.filter(cond)
-        if not deduped:
-            # the physical row-version view (compact / snapshots /
-            # additive folds): equality deletes and rollbacks are NOT
-            # applied here — read_summed masks at row level itself,
-            # compact applies them physically
-            return df
-        # rollback mask BEFORE the newest-wins pick: voiding the newest
-        # version must let the restored older one win again
-        df = self._apply_rollback_mask(df, tier, as_of_seq)
-        out = self._newest_wins(df, keys)
-        # newest-wins first, mask after: equivalent (the winner is the
-        # max seq — masked iff max <= del_seq either way) and the join
-        # then touches one row per key instead of every version
-        return self._apply_delete_mask(out, tier, as_of_seq)
+        return df
 
     @staticmethod
     def _newest_wins(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
@@ -2206,14 +2252,17 @@ class TierStore:
             if as_of_seq is not None:
                 raise ValueError("pass as_of_seq or ref, not both")
             as_of_seq = self.resolve_ref(ref)
-        df = self.read(tier, deduped=False, as_of_seq=as_of_seq)
+        vis = self._visibility(tier)
+        df = self._scan(tier, vis, horizon=as_of_seq)
         if df is None:
             return None
+        if as_of_seq is not None:
+            df = vis.as_of(df, as_of_seq)
         # additive tiers mask at ROW level (each partial <= the delete's
         # seq is excluded from the fold; later partials keep summing);
         # rolled-back partials drop out of the fold the same way
-        df = self._apply_rollback_mask(df, tier, as_of_seq)
-        df = self._apply_delete_mask(df, tier, as_of_seq)
+        df = vis.unvoided(df, as_of_seq)
+        df = self._apply_delete_mask(df, tier, vis, as_of_seq)
         return df.groupBy(*keys).agg(*_sum_exprs(sum_cols))
 
     def snapshots(self, tier: str) -> DataFrame | None:
@@ -2224,14 +2273,10 @@ class TierStore:
         ``voided`` marks commits inside a rollback's excluded range:
         invisible to current reads, still as-of readable as orphaned
         history until a compaction expires them."""
-        df = self.read(tier, deduped=False)
+        vis = self._visibility(tier)
+        df = self._scan(tier, vis)
         if df is None:
             return None
-        voided = F.lit(False)
-        for lo, hi in self._rollback_ranges(tier):
-            voided = voided | (
-                (F.col("commit_seq") > lo) & (F.col("commit_seq") <= hi)
-            )
         return (
             df.groupBy("commit_seq")
             .agg(
@@ -2240,7 +2285,7 @@ class TierStore:
                 F.min("p_date").alias("min_date"),
                 F.max("p_date").alias("max_date"),
             )
-            .withColumn("voided", voided)
+            .withColumn("voided", vis.rolled_back())
             .orderBy("commit_seq")
         )
 
@@ -2392,19 +2437,14 @@ class TierStore:
         """
         to_eff = int(to_seq) if to_seq is not None else self.last_commit_seq()
         from_seq = int(from_seq)
-        horizon = self.min_as_of(tier)
-        if to_eff < horizon:
-            raise ValueError(
-                f"tier {tier!r}: incremental read to_seq={to_eff} predates the "
-                f"compaction horizon min_as_of={horizon}; superseded versions "
-                "in that range were expired (net changes would be wrong)"
-            )
+        vis = self._visibility(tier)
+        vis.check(to_eff, "incremental read to_seq")
         # min_seq_hint: only files that can hold in-range rows are
         # planned — files whose every version predates from_seq cannot
         # contribute a ranked winner here (the range filter drops them
         # first), so skipping them is exact, and the incremental scan
         # costs O(new files) in listing/footers, not O(table)
-        df = self.read(tier, deduped=False, min_seq_hint=from_seq)
+        df = self._scan(tier, vis, min_seq_hint=from_seq)
         if df is None:
             return None
         df = df.filter(
@@ -2413,15 +2453,14 @@ class TierStore:
         # rolled-back versions are not net new rows at the range's
         # horizon (a rollback crossing (from, to] surfaces as deletes
         # in `changes`, never here — this scan is upserts-only)
-        df = self._apply_rollback_mask(df, tier, to_eff)
-        out = self._newest_wins(df, keys)
+        out = self._newest_wins(vis.unvoided(df, to_eff), keys)
         # deletes <= from_seq can never mask an in-range version
         # (version > from_seq >= del_seq), so the as-of-bounded mask is
         # exactly the range's own deletes
-        return self._apply_delete_mask(out, tier, to_eff)
+        return self._apply_delete_mask(out, tier, vis, to_eff)
 
     def _touched_dates_from_manifest(
-        self, tier: str, from_seq: int, to_eff: int, has_crossing: bool
+        self, tier: str, from_seq: int, to_eff: int, vis: Visibility
     ) -> tuple[bool, list | None]:
         """Driver-side derivation of the dates a ``changes`` range can
         touch, from file NAMES + delete-file contents — the incremental
@@ -2456,7 +2495,7 @@ class TierStore:
         Iceberg's own equality-delete assumption)."""
         import datetime as _dt
 
-        if has_crossing or self._staged_entries(tier):
+        if vis.crossings(from_seq, to_eff) or vis.remap or vis.hidden:
             return False, None
         dates: set = set()
         for f in self._data_files(self.tier_path(tier)):
@@ -2538,9 +2577,9 @@ class TierStore:
         sits in low-seq row groups that the scan skips. Requires
         ``bucket_start`` in ``keys``.
 
-        Needs exact history at ``from_seq``, so it inherits
-        ``read(as_of_seq=...)``'s horizon check (raises past expired
-        history — never a silent wrong diff). Cost shape: only keys
+        Needs exact history at ``from_seq``, so both horizons pass the
+        tier's :meth:`Visibility.check` (raises past expired history —
+        never a silent wrong diff). Cost shape: only keys
         TOUCHED in the range (a data version or a delete) can differ,
         so both as-of states are pruned by a semi-join on that touched
         set before the full-outer diff — the changelog costs
@@ -2553,68 +2592,61 @@ class TierStore:
         """
         to_eff = int(to_seq) if to_seq is not None else self.last_commit_seq()
         from_seq = int(from_seq)
-        raw = self.read(tier, deduped=False, canonical_names=True)
+        vis = self._visibility(tier)
+        raw = self._scan(tier, vis, canonical_names=True)
         if raw is None:
             return None
-        in_range = (F.col("commit_seq") > from_seq) & (F.col("commit_seq") <= to_eff)
+        # both images need exact history (raise past expired history —
+        # never a silent wrong diff); canonical names on both horizons
+        # (a rename inside (from, to] must not misalign the images)
+        vis.check(from_seq)
+        vis.check(to_eff)
+        seq = F.col("commit_seq")
+
+        def valid_at(h: int):
+            return (seq <= h) & ~vis.rolled_back(h)
+
+        in_range = (seq > from_seq) & (seq <= to_eff)
         # the touched scan reads only files that can hold in-range
         # versions (name-encoded max seq > from — the manifest analog);
         # `raw` stays the FULL table: delete-file expansion and
         # rollback-crossing sweeps below legitimately reach versions
         # older than from_seq
-        inc = self.read(
-            tier, deduped=False, canonical_names=True, min_seq_hint=from_seq
-        )
+        inc = self._scan(tier, vis, canonical_names=True, min_seq_hint=from_seq)
         touched = inc.filter(in_range).select(*keys)
-        # delete-group masks at the POST horizon (to_eff), so a delete
-        # voided by a rollback older than to_eff is correctly ignored
-        # while one the rollback does not reach still touches its keys
-        for dkeys, dels in self._delete_groups(tier, to_eff):
+        # one footer-grouping pass over the delete files, reused below
+        del_groups = self._delete_groups(tier)
+
+        def deleted_keys(dkeys, dels):
             if set(keys) <= set(dkeys):
                 # row-level deletes (key set covers the changelog keys)
                 # name their touched keys directly — the delete file IS
                 # the touched set, no table scan. A named key with no
                 # live row is harmless: both as-of states are empty for
                 # it, so the diff emits nothing.
-                touched = touched.unionByName(
-                    dels.filter(in_range).select(*keys)
-                )
-            else:
-                # group-level deletes (key prefix) touch every row of
-                # the group — expand through a semi-join against the raw
-                # keys, per delete key set (mixed key sets never share
-                # one join)
-                touched = touched.unionByName(
-                    raw.join(dels.filter(in_range).select(*dkeys), dkeys, "leftsemi")
-                    .select(*keys)
-                )
+                return dels.select(*keys)
+            # group-level deletes (key prefix) touch every row of the
+            # group — expand through a semi-join against the raw keys,
+            # per delete key set (mixed key sets never share one join)
+            return raw.join(dels.select(*dkeys), dkeys, "leftsemi").select(*keys)
+
+        # delete-group masks at the POST horizon (to_eff), so a delete
+        # voided by a rollback older than to_eff is correctly ignored
+        # while one the rollback does not reach still touches its keys
+        for dkeys, dels in del_groups:
+            touched = touched.unionByName(
+                deleted_keys(dkeys, dels.filter(valid_at(to_eff) & in_range))
+            )
         # a rollback whose horizon crossing lands inside (from, to]
         # (mask off at `from`, on at `to`) touches every key with a
         # voided data version OR a voided delete — those commits can be
         # OLDER than from_seq, so the in-range scan above never sees
         # them
-        crossing = [
-            (lo, hi)
-            for lo, hi in self._rollback_ranges(tier)
-            if from_seq <= hi < to_eff
-        ]
-        if crossing:
-            # loop-invariant: one footer-grouping pass, reused per range
-            unmasked_groups = self._delete_groups(tier, apply_rollback=False)
-            for lo, hi in crossing:
-                voided = (F.col("commit_seq") > lo) & (F.col("commit_seq") <= hi)
-                touched = touched.unionByName(raw.filter(voided).select(*keys))
-                for dkeys, dels in unmasked_groups:
-                    if set(keys) <= set(dkeys):
-                        touched = touched.unionByName(
-                            dels.filter(voided).select(*keys)
-                        )
-                    else:
-                        touched = touched.unionByName(
-                            raw.join(
-                                dels.filter(voided).select(*dkeys), dkeys, "leftsemi"
-                            ).select(*keys)
-                        )
+        for lo, hi in vis.crossings(from_seq, to_eff):
+            voided = (seq > lo) & (seq <= hi)
+            touched = touched.unionByName(raw.filter(voided).select(*keys))
+            for dkeys, dels in del_groups:
+                touched = touched.unionByName(deleted_keys(dkeys, dels.filter(voided)))
         touched = touched.distinct()
         p_dates = None
         if prune_partitions:
@@ -2638,7 +2670,7 @@ class TierStore:
             # NULL bucket_start, unrecognized file names — and the
             # generic Spark-side derivation below runs unchanged.
             handled, p_dates = self._touched_dates_from_manifest(
-                tier, from_seq, to_eff, bool(crossing)
+                tier, from_seq, to_eff, vis
             )
             if not handled:
                 # materialize the (small) touched set once: the date
@@ -2673,47 +2705,23 @@ class TierStore:
         # TWO full newest-wins reads (a window shuffle each, plus a
         # delete-mask join each) and a full-outer join — three keyed
         # exchanges where one suffices, and max-of-struct partial-
-        # aggregates map-side where row_number cannot. Horizon guards
-        # are inherited from read(as_of_seq=...) verbatim (raise past
-        # expired history — never a silent wrong diff); canonical names
-        # on both horizons as before (a rename inside (from, to] must
-        # not misalign the images).
-        floor = self.min_as_of(tier)
-        for h in (from_seq, to_eff):
-            if h < floor:
-                raise ValueError(
-                    f"tier {tier!r}: snapshot as_of_seq={h} predates "
-                    f"the compaction horizon min_as_of={floor}; history "
-                    "below it was expired (compact with expire_below to "
-                    "retain older snapshots)"
-                )
-        vers = self.read(
-            tier, deduped=False, canonical_names=True, p_dates=p_dates
+        # aggregates map-side where row_number cannot.
+        vers = self._scan(
+            tier, vis, canonical_names=True, p_dates=p_dates
         ).join(touched, list(keys), "leftsemi")
         val_cols = [c for c in vers.columns if c not in keys]
-        seq = F.col("commit_seq")
-
-        def _horizon_valid(bound: int):
-            v = seq <= bound
-            for lo, hi in self._rollback_ranges(tier):
-                if bound > hi:
-                    v = v & ~((seq > lo) & (seq <= hi))
-            return v
-
-        vers = vers.withColumn("_vpre", _horizon_valid(from_seq)).withColumn(
-            "_vpost", _horizon_valid(to_eff)
+        vers = vers.withColumn("_vpre", valid_at(from_seq)).withColumn(
+            "_vpost", valid_at(to_eff)
         )
         # per-horizon delete masks: one conditional-max per horizon per
         # delete key-set, one broadcast join each (delete files are
         # small — Iceberg's own equality-delete assumption). A delete
-        # row is itself subject to rollback at its horizon, mirroring
-        # _delete_groups(apply_rollback=True).
-        for gi, (dkeys, dels) in enumerate(
-            self._delete_groups(tier, apply_rollback=False)
-        ):
+        # row is itself subject to rollback at its horizon, exactly as
+        # in _apply_delete_mask.
+        for gi, (dkeys, dels) in enumerate(del_groups):
             dmax = dels.groupBy(*dkeys).agg(
-                F.max(F.when(_horizon_valid(from_seq), seq)).alias(f"_dpre{gi}"),
-                F.max(F.when(_horizon_valid(to_eff), seq)).alias(f"_dpost{gi}"),
+                F.max(F.when(valid_at(from_seq), seq)).alias(f"_dpre{gi}"),
+                F.max(F.when(valid_at(to_eff), seq)).alias(f"_dpost{gi}"),
             )
             vers = (
                 vers.join(F.broadcast(dmax), list(dkeys), "left")
@@ -3121,19 +3129,22 @@ class TierStore:
         # merge_schema: a rewrite must carry EVERY column any file has —
         # a single-footer schema would silently drop a column added by
         # a later (schema-evolved) append. Compact reads all footers
-        # anyway; the merge cost is amortized by the full rewrite.
+        # anyway; the union cost is amortized by the full rewrite.
         # canonical_names: the rewrite bakes renames in (files come out
         # uniformly under current names; as-of display below a rename
-        # stays a metadata reverse-map). _drop_horizon: physically apply
+        # stays a metadata reverse-map). drop_horizon: physically apply
         # only drops the expiry horizon covers — history-preserving
         # compaction must keep a column its preserved snapshots show.
-        raw = self.read(
+        # staged_raw: the staged rows' physical truth — the WAP logic
+        # above carries, bakes or drops them itself.
+        vis = self._visibility(tier)
+        raw = self._scan(
             tier,
-            deduped=False,
+            vis,
             merge_schema=True,
             canonical_names=True,
-            _drop_horizon=expire_below,
-            _staged_raw=True,
+            drop_horizon=expire_below,
+            staged_raw=True,
         )
         if raw is None:
             return {"files_before": files_before, "files_after": files_before, "rows": 0}
@@ -3182,7 +3193,7 @@ class TierStore:
         # below every range start: the winner-as-of-E rule could
         # otherwise keep a voided version as a key's only survivor
         # while dropping the version a post-rollback read must serve.
-        rb_ranges = self._rollback_ranges(tier)
+        rb_ranges = vis.rollbacks
         if expire_below is not None and rb_ranges:
             bad = [r for r in rb_ranges if r[0] < int(expire_below)]
             if bad:
@@ -3194,16 +3205,16 @@ class TierStore:
         rollback_applied = bool(rb_ranges) and expire_below is None
         max_rb_hi = max((hi for _, hi in rb_ranges), default=0)
         if rollback_applied:
-            raw = self._apply_rollback_mask(raw, tier)
+            raw = vis.unvoided(raw)
         del_groups = self._delete_groups(tier)
         deletes_applied = bool(del_groups) and expire_below is None
         max_del_seq = 0
         if deletes_applied:
             max_del_seq = max(
-                int(d.agg(F.max("commit_seq").alias("m")).first()["m"] or 0)
+                int(vis.unvoided(d).agg(F.max("commit_seq").alias("m")).first()["m"] or 0)
                 for _, d in del_groups
             )
-            raw = self._apply_delete_mask(raw, tier)
+            raw = self._apply_delete_mask(raw, tier, vis)
         # exact-horizon rule shared by sum mode and latest full expiry:
         # only keys that actually lose versions (_nv > 1) invalidate
         # snapshots, and only below their newest surviving seq
@@ -3559,11 +3570,7 @@ class TierStore:
         :meth:`expire` — (None, 0) if retention never ran. As-of reads
         below the seq consult this to avoid silently reconstructing a
         state missing the dropped dates."""
-        meta = self._read_compact_meta()
-        rec = meta.get(f"_retention_{tier}")
-        if not rec:
-            return None, 0
-        return str(rec["floor"]), int(rec["seq"])
+        return self._visibility(tier).retention
 
     def expire(self, tier: str, keep_after) -> int:
         """Retention: drop partitions whose date < keep_after (the

@@ -168,14 +168,7 @@ class TierStoreStreamReader(DataSourceStreamReader):
             if self.from_seq == "latest"
             else int(self.from_seq)
         )
-        horizon = store.min_as_of(self.tier)
-        if seq < horizon:
-            raise ValueError(
-                f"tier {self.tier!r}: stream start seq {seq} predates the "
-                f"compaction horizon min_as_of={horizon}; that history was "
-                "expired (start from the horizon or re-bootstrap with a "
-                "batch read)"
-            )
+        store._visibility(self.tier).check(seq, "stream start seq")
         return seq
 
     # ---- offsets ----
@@ -201,20 +194,8 @@ class TierStoreStreamReader(DataSourceStreamReader):
         lo, hi = int(start["seq"]), int(end["seq"])
         self._cursor = max(self._cursor or 0, lo, hi)
         store = _store(self.path)
-        horizon = store.min_as_of(self.tier)
-        if lo < horizon:
-            raise ValueError(
-                f"tier {self.tier!r}: stream cursor {lo} predates the "
-                f"compaction horizon min_as_of={horizon}; superseded "
-                "versions in that range were expired (restart the stream "
-                "from a fresh checkpoint)"
-            )
-        staged = {int(e["seq"]): e for e in store._staged_entries(self.tier)}
-        rb = tuple((int(a), int(b)) for a, b in store._rollback_ranges(self.tier))
-
-        def voided(seq: int) -> bool:
-            return any(a < seq <= b for a, b in rb)
-
+        vis = store._visibility(self.tier)
+        vis.check(lo, "stream cursor")
         ops = store._schema_ops(self.tier)
         renames = tuple(
             (op["from"], op["to"]) for op in ops if op["kind"] == "rename"
@@ -224,19 +205,17 @@ class TierStoreStreamReader(DataSourceStreamReader):
             if f.kind is None:
                 # legacy unprefixed file: conservatively a compact
                 # output covering all history — row-filter it
-                parts.append(self._mk(f, None, (lo, hi), rb, renames))
+                parts.append(self._mk(f, None, (lo, hi), vis.rollbacks, renames))
             elif f.kind == "c":
-                entry = staged.get(f.seq)
-                if entry is not None:
-                    if entry["state"] != "published":
-                        continue  # staged/abandoned: invisible
-                    eff = int(entry["pub_seq"])
-                    if lo < eff <= hi and not voided(eff):
-                        parts.append(self._mk(f, eff, None, (), renames))
-                elif lo < f.seq <= hi and not voided(f.seq):
-                    parts.append(self._mk(f, None, None, (), renames))
+                if f.seq in vis.hidden:
+                    continue  # staged/abandoned/unmerged branch: invisible
+                # a published WAP commit streams at its publish seq
+                eff = vis.remap.get(f.seq, f.seq)
+                if lo < eff <= hi and not vis.voided(eff):
+                    remap = eff if f.seq in vis.remap else None
+                    parts.append(self._mk(f, remap, None, (), renames))
             elif f.seq > lo:  # m<maxseq>: compact output, may hold in-range rows
-                parts.append(self._mk(f, None, (lo, hi), rb, renames))
+                parts.append(self._mk(f, None, (lo, hi), vis.rollbacks, renames))
         return parts
 
     def _mk(self, f, remap, row_range, excluded, renames):

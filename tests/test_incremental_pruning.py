@@ -70,7 +70,7 @@ def test_compact_outputs_are_seq_named(spark, tmp_path):
 
 def test_plan_skips_compacted_history(spark, tmp_path):
     store, seqs = _seed(spark, str(tmp_path / "plan"))
-    planned = store._plan_files_above_seq("t", seqs[2])
+    planned = store._plan_files_above_seq("t", seqs[2], store._visibility("t"))
     assert planned is not None and len(planned) == 2
     assert all(os.path.basename(p).startswith(f"c") for p in planned)
     # read with the hint scans exactly those files
@@ -82,7 +82,7 @@ def test_plan_skips_compacted_history(spark, tmp_path):
         "2024-01-02", "2024-01-03",
     }
     # nothing skippable → None (plain dir scan keeps the plan identical)
-    assert store._plan_files_above_seq("t", 0) is None
+    assert store._plan_files_above_seq("t", 0, store._visibility("t")) is None
 
 
 def test_read_incremental_parity_and_pruning(spark, tmp_path):

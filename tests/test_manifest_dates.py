@@ -53,11 +53,11 @@ def test_manifest_dates_cover_appends_and_deletes(spark, tmp_path):
     )
     # range (1, 3]: commit 2's append (02-03) + the delete (02-04);
     # commit 1's dates must NOT appear (c1 files are below the range)
-    handled, dates = st._touched_dates_from_manifest("1h", 1, 3, False)
+    handled, dates = st._touched_dates_from_manifest("1h", 1, 3, st._visibility("1h"))
     assert handled
     assert set(dates) == {date(2024, 2, 3), date(2024, 2, 4)}
     # range (0, 3]: everything
-    handled, dates = st._touched_dates_from_manifest("1h", 0, 3, False)
+    handled, dates = st._touched_dates_from_manifest("1h", 0, 3, st._visibility("1h"))
     assert handled
     assert set(dates) == {
         date(2024, 2, 1), date(2024, 2, 2), date(2024, 2, 3),
@@ -79,15 +79,16 @@ def test_manifest_dates_decline_on_crossing_and_staged(spark, tmp_path):
     st.append("1h", _rows(spark, [
         ("2024-02-01T00:00:00", "a", 1),
     ]), st.next_commit_seq(), "r1")
-    # rollback crossing flag declines outright
-    handled, dates = st._touched_dates_from_manifest("1h", 0, 1, True)
+    # a rollback range crossing the diff range declines outright
+    crossing = st._visibility("1h")._replace(rollbacks=((0, 0),))
+    handled, dates = st._touched_dates_from_manifest("1h", 0, 1, crossing)
     assert not handled and dates is None
     # a live staged (WAP) commit declines — its effective seq is not
     # its file-name seq until publish+compact bake it
     st.stage("1h", _rows(spark, [
         ("2024-02-02T00:00:00", "b", 2),
     ]), "cand", "audit-1")
-    handled, dates = st._touched_dates_from_manifest("1h", 0, 99, False)
+    handled, dates = st._touched_dates_from_manifest("1h", 0, 99, st._visibility("1h"))
     assert not handled and dates is None
 
 
@@ -106,7 +107,7 @@ def test_manifest_dates_decline_without_bucket_start_key(spark, tmp_path):
         "rd",
         keys=("source",),
     )
-    handled, dates = st._touched_dates_from_manifest("1h", 0, 2, False)
+    handled, dates = st._touched_dates_from_manifest("1h", 0, 2, st._visibility("1h"))
     assert not handled and dates is None
     # the generic path still produces the exact changelog
     ch = st.changes(

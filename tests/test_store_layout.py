@@ -101,7 +101,7 @@ def test_store_views_agree_with_the_walker(layout):
     ]
     # the m<s1>- compact outputs are not commit s1's append files
     assert store._commit_files("t", s1) == []
-    planned = store._plan_files_above_seq("t", s1)
+    planned = store._plan_files_above_seq("t", s1, store._visibility("t"))
     assert planned == [f.path for f in walked if f.seq is None or f.seq > s1]
     assert _paths(store.read("t", deduped=False)) == {f.path for f in walked}
     assert _paths(store.read("t", deduped=False, min_seq_hint=s1)) == set(planned)
