@@ -17,30 +17,32 @@ _TRACKED: list[DataFrame] = []
 _PRUNE_AT = 64  # bound registry growth in long-lived sessions
 
 
+def is_cached(df: DataFrame) -> bool:
+    """``df`` still holds a cache entry (not unpersisted, released or
+    dropped by spark.catalog.clearCache())."""
+    try:
+        level = df.storageLevel
+    except Exception:
+        return False
+    return level.useMemory or level.useDisk
+
+
 def _prune() -> None:
-    """Drop entries that are no longer cached (a caller used
-    spark.catalog.clearCache() instead of release_cached()) so the
-    registry — and the plan objects it pins — stays bounded."""
-    live = []
-    for df in _TRACKED:
-        try:
-            if df.storageLevel.useMemory or df.storageLevel.useDisk:
-                live.append(df)
-        except Exception:
-            pass
-    _TRACKED[:] = live
+    """Drop entries that are no longer cached (a caller unpersisted
+    them, or used spark.catalog.clearCache() instead of
+    release_cached()) so the registry — and the plan objects it pins —
+    stays bounded."""
+    _TRACKED[:] = [df for df in _TRACKED if is_cached(df)]
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
-    if len(_TRACKED) >= _PRUNE_AT:
-        _prune()
-    df = df.persist()
-    _TRACKED.append(df)
-    return df
+    return track(df.persist())
 
 
 def track(df: DataFrame) -> DataFrame:
     """Register an ALREADY-persisted relation for release."""
+    if len(_TRACKED) >= _PRUNE_AT:
+        _prune()
     _TRACKED.append(df)
     return df
 

@@ -24,6 +24,7 @@ codecs tightens to equality).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -117,19 +118,22 @@ def compress_blocks(
 
 
 def decompress_blocks(blocks: DataFrame) -> DataFrame:
-    """Inverse of :func:`compress_blocks`: blocks → exact point rows."""
+    """Inverse of :func:`compress_blocks`: blocks → exact point rows.
+    Each Arrow batch of blocks decodes into one frame: the per-block
+    arrays are concatenated, and the source repeated per point."""
 
     def decode(iterator):
         for pdf in iterator:
-            for row in pdf.itertuples(index=False):
-                ts = dod_decode(bytes(row.ts_dod))
-                vals = gorilla_decode(bytes(row.val_gorilla))
-                yield pd.DataFrame(
-                    {
-                        "source": row.source,
-                        "bucket_start": pd.to_datetime(ts, unit="s"),
-                        "value": vals,
-                    }
-                )
+            ts = [dod_decode(bytes(b)) for b in pdf["ts_dod"]]
+            vals = [gorilla_decode(bytes(b)) for b in pdf["val_gorilla"]]
+            yield pd.DataFrame(
+                {
+                    "source": np.repeat(
+                        pdf["source"].to_numpy(), [len(t) for t in ts]
+                    ),
+                    "bucket_start": pd.to_datetime(np.concatenate(ts), unit="s"),
+                    "value": np.concatenate(vals),
+                }
+            )
 
     return blocks.mapInPandas(decode, POINT_SCHEMA)

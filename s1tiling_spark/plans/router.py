@@ -15,9 +15,13 @@ cascade: every stat is a sum/min/max of integers, so
 (30d ⊎ 1d ⊎ 1h) partials == a direct scan of raw rows, exactly —
 gated against a raw-scan DuckDB oracle.
 
-Scale shape: each tier contributes a partition-pruned range filter on
-its own (small) table; a month-long query touches ~1 30d row + ~29 1d
-rows + ~47 1h rows per source instead of ~10^9 raw rows.
+Scale shape: each tier contributes a range filter on its own (small)
+table — ``bucket_start`` against half-open timestamp literals, which
+Parquet row-group stats and in-memory cache batch stats can both skip
+on; a month-long query touches ~1 30d row + ~29 1d rows + ~47 1h rows
+per source instead of ~10^9 raw rows. Served from a store, the three
+tier reads come from its persisted snapshots (``TierStore.snapshot``),
+so repeated queries over an unchanged store rescan no tier files.
 """
 
 from __future__ import annotations
@@ -35,6 +39,12 @@ _30D = 30 * _DAY
 
 def _epoch(ts: datetime) -> int:
     return int(ts.replace(tzinfo=timezone.utc).timestamp())
+
+
+def _instant(e: int):
+    """Timestamp literal for epoch second ``e`` (UTC-aware, so the
+    literal names the same instant whatever the driver's timezone)."""
+    return F.lit(datetime.fromtimestamp(e, tz=timezone.utc))
 
 
 def _ceil_to(e: int, step: int) -> int:
@@ -91,10 +101,10 @@ def plan_range(start: datetime, end: datetime) -> RoutePlan:
 def _slice(tier: DataFrame, spans: tuple[tuple[int, int], ...]) -> DataFrame | None:
     if not spans:
         return None
-    ts = F.unix_timestamp("bucket_start")
+    ts = F.col("bucket_start")
     cond = None
     for lo, hi in spans:
-        c = (ts >= lo) & (ts < hi)
+        c = (ts >= _instant(lo)) & (ts < _instant(hi))
         cond = c if cond is None else (cond | c)
     return tier.filter(cond).select("source", "cnt", "sum_n_tok")
 
@@ -143,20 +153,24 @@ def routed_range_totals_from_store(
     All three tiers must exist — including AT THE HORIZON: a tier
     whose first commit postdates ``as_of_seq`` reads as an empty
     relation, and routing over it would silently undercount the spans
-    that tier serves, so it raises instead (one cheap isEmpty probe
-    per tier on the as-of path; the same never-silently-wrong contract
-    as ``store.read``). Pick horizons at run boundaries
-    (``store.last_commit_seq()`` after a pipeline run) — a mid-run
-    horizon reproduces whatever mid-run state the dashboard actually
-    showed then."""
+    that tier serves, so it raises instead (the row count recorded
+    when the tier's snapshot was built decides; the same
+    never-silently-wrong contract as ``store.read``). Pick horizons at
+    run boundaries (``store.last_commit_seq()`` after a pipeline run)
+    — a mid-run horizon reproduces whatever mid-run state the
+    dashboard actually showed then.
+
+    Each tier is served from ``store.snapshot`` — persisted once per
+    commit state and horizon, so repeated queries over an unchanged
+    store run only the final aggregate."""
     tiers = {}
     for t in ("1h", "1d", "30d"):
-        df = store.read(t, as_of_seq=as_of_seq)
-        if df is None or (as_of_seq is not None and df.isEmpty()):
+        snap = store.snapshot(t, as_of_seq=as_of_seq)
+        if snap is None or (as_of_seq is not None and snap.rows == 0):
             raise ValueError(
                 f"tier {t!r} is empty"
                 + (f" as of seq {as_of_seq}" if as_of_seq is not None else "")
                 + " — run the pipeline (or use a later snapshot) first"
             )
-        tiers[t] = df
+        tiers[t] = snap.df
     return routed_range_totals(tiers["1h"], tiers["1d"], tiers["30d"], start, end)

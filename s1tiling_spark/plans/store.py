@@ -38,6 +38,21 @@ reader (``read``, ``read_summed``, ``read_incremental``, ``changes``,
 ``snapshots``, compaction, the ``tier_store`` stream) resolves rows
 through it, and it raises the one "predates the compaction horizon"
 guard.
+
+Serving snapshots: :meth:`TierStore.snapshot` keeps the deduped tier
+at the head, or at one as-of horizon, persisted for reuse across
+queries (the router serves from it). ``read`` itself stays uncached.
+- Key: ``(tier, keys, as_of_seq)`` plus the live data files (relative
+  path, size, mtime), the :class:`Visibility` record and the
+  ``_deletes/`` file names. It is re-derived on every call and never
+  trusted across calls, so a commit through any store instance or
+  process (append, delete, WAP stage/publish/abandon, rollback,
+  compact, expire, schema op) rebuilds the snapshot on its next use.
+- Bound: one head and one as-of snapshot per tier and store instance;
+  a new horizon or key unpersists the one it replaces.
+- Release: every snapshot is registered with ``operators/cache.py``,
+  so ``release_cached()`` frees it; a released snapshot is rebuilt on
+  its next use.
 """
 
 from __future__ import annotations
@@ -47,6 +62,7 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
 from typing import Iterator, NamedTuple
@@ -132,6 +148,13 @@ class DataFile(NamedTuple):
     @property
     def p_date(self) -> str:
         return self.part[len("p_date="):]
+
+
+class TierSnapshot(NamedTuple):
+    """A persisted deduped tier, returned by :meth:`TierStore.snapshot`."""
+
+    df: DataFrame  # served from the cache
+    rows: int  # counted once, when the snapshot was built
 
 
 class Visibility(NamedTuple):
@@ -275,6 +298,10 @@ class TierStore:
         # footer-schema memo for plain reads: {dir: (sample file path,
         # size, mtime_ns, StructType)} — see _footer_schema
         self._footer_schemas: dict[str, tuple] = {}
+        # serving snapshots: {(tier, as-of?): (key, cached, TierSnapshot)},
+        # swapped under the lock so concurrent queries cannot leak one
+        self._snapshots: dict[tuple, tuple] = {}
+        self._snapshot_lock = threading.Lock()
         os.makedirs(base_dir, exist_ok=True)
 
     # ---------- cross-process locks ----------
@@ -2091,6 +2118,18 @@ class TierStore:
             df = vis.as_of(df, as_of_seq, p_dates, chain)
         if not deduped:
             return df
+        return self._merge_on_read(df, tier, vis, keys, as_of_seq)
+
+    def _merge_on_read(
+        self,
+        df: DataFrame,
+        tier: str,
+        vis: Visibility,
+        keys: tuple[str, ...],
+        as_of_seq: int | None,
+    ) -> DataFrame:
+        """The deduped view of a horizon-filtered scan: rollback mask,
+        newest-wins pick, equality-delete mask."""
         # rollback mask BEFORE the newest-wins pick: voiding the newest
         # version must let the restored older one win again
         out = self._newest_wins(vis.unvoided(df, as_of_seq), keys)
@@ -2098,6 +2137,59 @@ class TierStore:
         # max seq — masked iff max <= del_seq either way) and the join
         # then touches one row per key instead of every version
         return self._apply_delete_mask(out, tier, vis, as_of_seq)
+
+    def snapshot(
+        self,
+        tier: str,
+        keys: tuple[str, ...] = DEFAULT_KEYS,
+        as_of_seq: int | None = None,
+    ) -> TierSnapshot | None:
+        """The deduped tier at the head (or ``as_of_seq``), persisted
+        and reused until the tier's commit state changes — the serving
+        path's read (key, bound and release: see the module docstring).
+        Same rows as ``read(tier, keys=keys, as_of_seq=as_of_seq)``,
+        built from the same :class:`Visibility` record the key holds;
+        None for a tier with no data files."""
+        from s1tiling_spark.operators.cache import is_cached, track
+
+        keys = tuple(keys)
+        vis = self._visibility(tier)
+        path = self.tier_path(tier)
+        files = []
+        for f in self._data_files(path):
+            try:
+                st = os.stat(f.path)
+            except OSError:
+                continue  # retired by a concurrent compact
+            files.append((f.rel, st.st_size, st.st_mtime_ns))
+        dels = self._deletes_path(tier)
+        deletes = sorted(os.listdir(dels)) if os.path.isdir(dels) else []
+        key = (keys, as_of_seq, tuple(files), vis, tuple(deletes))
+        slot = (tier, as_of_seq is not None)
+        with self._snapshot_lock:
+            held = self._snapshots.pop(slot, None)
+            if held is not None:
+                held_key, cached, snap = held
+                if held_key == key and is_cached(cached):
+                    self._snapshots[slot] = held
+                    return snap
+                cached.unpersist()
+            df = self._scan(tier, vis, horizon=as_of_seq)
+            if df is None:
+                return None
+            if as_of_seq is not None:
+                df = vis.as_of(df, as_of_seq)
+            df = self._merge_on_read(df, tier, vis, keys, as_of_seq)
+            # a unique tag on the cached plan: Spark matches cache
+            # entries by plan, so an untagged entry would also serve a
+            # plain read() of the same tier, or another store's
+            # snapshot, from stale rows
+            cached = track(
+                df.withColumn("_snapshot", F.lit(uuid.uuid4().hex)).persist()
+            )
+            snap = TierSnapshot(cached.drop("_snapshot"), cached.count())
+            self._snapshots[slot] = (key, cached, snap)
+            return snap
 
     def _scan(
         self,

@@ -88,6 +88,15 @@ def build_session(
     - Arrow enabled for pandas-UDF kernels (no per-row Python).
     - Session timezone pinned to UTC so time-bucketing is
       deterministic across environments.
+    - File listing stays on the driver up to 4096 paths
+      (``spark.sql.sources.parallelPartitionDiscovery.threshold``,
+      Spark's default is 32). Above the threshold Spark lists through
+      a distributed job, so every read of a tier with more than 32
+      ``p_date`` partitions (or of more than 32 planned files) paid
+      one extra job, although the store already walks the same
+      directories driver-side. A session built elsewhere keeps the
+      default: its tier reads still launch that listing job, once per
+      snapshot build on the serving path.
     """
     cpus = default_parallelism()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -120,6 +129,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.enabled", "false")
     )
