@@ -36,13 +36,15 @@ def _prune() -> None:
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
-    return track(df.persist())
+    if len(_TRACKED) >= _PRUNE_AT:
+        _prune()
+    df = df.persist()
+    _TRACKED.append(df)
+    return df
 
 
 def track(df: DataFrame) -> DataFrame:
     """Register an ALREADY-persisted relation for release."""
-    if len(_TRACKED) >= _PRUNE_AT:
-        _prune()
     _TRACKED.append(df)
     return df
 

@@ -153,24 +153,24 @@ def routed_range_totals_from_store(
     All three tiers must exist — including AT THE HORIZON: a tier
     whose first commit postdates ``as_of_seq`` reads as an empty
     relation, and routing over it would silently undercount the spans
-    that tier serves, so it raises instead (the row count recorded
-    when the tier's snapshot was built decides; the same
-    never-silently-wrong contract as ``store.read``). Pick horizons at
-    run boundaries (``store.last_commit_seq()`` after a pipeline run)
-    — a mid-run horizon reproduces whatever mid-run state the
-    dashboard actually showed then.
+    that tier serves, so it raises instead (the tier's snapshot probes
+    that emptiness once per build; the same never-silently-wrong
+    contract as ``store.read``). Pick horizons at run boundaries
+    (``store.last_commit_seq()`` after a pipeline run) — a mid-run
+    horizon reproduces whatever mid-run state the dashboard actually
+    showed then.
 
     Each tier is served from ``store.snapshot`` — persisted once per
     commit state and horizon, so repeated queries over an unchanged
     store run only the final aggregate."""
     tiers = {}
     for t in ("1h", "1d", "30d"):
-        snap = store.snapshot(t, as_of_seq=as_of_seq)
-        if snap is None or (as_of_seq is not None and snap.rows == 0):
+        df = store.snapshot(t, as_of_seq=as_of_seq)
+        if df is None:
             raise ValueError(
                 f"tier {t!r} is empty"
                 + (f" as of seq {as_of_seq}" if as_of_seq is not None else "")
                 + " — run the pipeline (or use a later snapshot) first"
             )
-        tiers[t] = snap.df
+        tiers[t] = df
     return routed_range_totals(tiers["1h"], tiers["1d"], tiers["30d"], start, end)

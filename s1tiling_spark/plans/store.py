@@ -42,17 +42,21 @@ guard.
 Serving snapshots: :meth:`TierStore.snapshot` keeps the deduped tier
 at the head, or at one as-of horizon, persisted for reuse across
 queries (the router serves from it). ``read`` itself stays uncached.
-- Key: ``(tier, keys, as_of_seq)`` plus the live data files (relative
+- Key: ``(tier, as_of_seq)`` plus the live data files (relative
   path, size, mtime), the :class:`Visibility` record and the
   ``_deletes/`` file names. It is re-derived on every call and never
   trusted across calls, so a commit through any store instance or
   process (append, delete, WAP stage/publish/abandon, rollback,
   compact, expire, schema op) rebuilds the snapshot on its next use.
 - Bound: one head and one as-of snapshot per tier and store instance;
-  a new horizon or key unpersists the one it replaces.
+  a new horizon or commit state unpersists the one it replaces, and a
+  discarded store unpersists its own.
 - Release: every snapshot is registered with ``operators/cache.py``,
   so ``release_cached()`` frees it; a released snapshot is rebuilt on
   its next use.
+- Fill: a snapshot is persisted lazily and filled by the first query
+  that uses it; an as-of snapshot probes once, at build, whether the
+  tier has rows at its horizon.
 """
 
 from __future__ import annotations
@@ -65,6 +69,7 @@ import shutil
 import threading
 import time
 import uuid
+import weakref
 from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -150,11 +155,14 @@ class DataFile(NamedTuple):
         return self.part[len("p_date="):]
 
 
-class TierSnapshot(NamedTuple):
-    """A persisted deduped tier, returned by :meth:`TierStore.snapshot`."""
-
-    df: DataFrame  # served from the cache
-    rows: int  # counted once, when the snapshot was built
+def _unpersist_snapshots(snapshots: dict) -> None:
+    """Free a discarded store's serving snapshots."""
+    for _key, cached, _served in snapshots.values():
+        try:
+            cached.unpersist()
+        except Exception:
+            pass
+    snapshots.clear()
 
 
 class Visibility(NamedTuple):
@@ -298,10 +306,12 @@ class TierStore:
         # footer-schema memo for plain reads: {dir: (sample file path,
         # size, mtime_ns, StructType)} — see _footer_schema
         self._footer_schemas: dict[str, tuple] = {}
-        # serving snapshots: {(tier, as-of?): (key, cached, TierSnapshot)},
-        # swapped under the lock so concurrent queries cannot leak one
+        # serving snapshots: {(tier, as-of?): (key, cached, served)},
+        # swapped under the lock so concurrent queries cannot leak one,
+        # and unpersisted when the store is discarded
         self._snapshots: dict[tuple, tuple] = {}
         self._snapshot_lock = threading.Lock()
+        weakref.finalize(self, _unpersist_snapshots, self._snapshots).atexit = False
         os.makedirs(base_dir, exist_ok=True)
 
     # ---------- cross-process locks ----------
@@ -2139,20 +2149,18 @@ class TierStore:
         return self._apply_delete_mask(out, tier, vis, as_of_seq)
 
     def snapshot(
-        self,
-        tier: str,
-        keys: tuple[str, ...] = DEFAULT_KEYS,
-        as_of_seq: int | None = None,
-    ) -> TierSnapshot | None:
+        self, tier: str, as_of_seq: int | None = None
+    ) -> DataFrame | None:
         """The deduped tier at the head (or ``as_of_seq``), persisted
         and reused until the tier's commit state changes — the serving
         path's read (key, bound and release: see the module docstring).
-        Same rows as ``read(tier, keys=keys, as_of_seq=as_of_seq)``,
-        built from the same :class:`Visibility` record the key holds;
-        None for a tier with no data files."""
-        from s1tiling_spark.operators.cache import is_cached, track
+        Same rows as ``read(tier, as_of_seq=as_of_seq)``, built from the
+        same :class:`Visibility` record the key holds. None for a tier
+        with no data files and, as of a horizon, for a tier with no rows
+        at it: that emptiness is probed once per build, never per
+        query. The cache fills on the snapshot's first use."""
+        from s1tiling_spark.operators.cache import is_cached, persist_tracked
 
-        keys = tuple(keys)
         vis = self._visibility(tier)
         path = self.tier_path(tier)
         files = []
@@ -2164,32 +2172,34 @@ class TierStore:
             files.append((f.rel, st.st_size, st.st_mtime_ns))
         dels = self._deletes_path(tier)
         deletes = sorted(os.listdir(dels)) if os.path.isdir(dels) else []
-        key = (keys, as_of_seq, tuple(files), vis, tuple(deletes))
+        key = (as_of_seq, tuple(files), vis, tuple(deletes))
         slot = (tier, as_of_seq is not None)
         with self._snapshot_lock:
             held = self._snapshots.pop(slot, None)
             if held is not None:
-                held_key, cached, snap = held
+                held_key, cached, served = held
                 if held_key == key and is_cached(cached):
                     self._snapshots[slot] = held
-                    return snap
+                    return served
                 cached.unpersist()
             df = self._scan(tier, vis, horizon=as_of_seq)
             if df is None:
                 return None
             if as_of_seq is not None:
                 df = vis.as_of(df, as_of_seq)
-            df = self._merge_on_read(df, tier, vis, keys, as_of_seq)
+            df = self._merge_on_read(df, tier, vis, DEFAULT_KEYS, as_of_seq)
+            if as_of_seq is not None and df.isEmpty():
+                return None
             # a unique tag on the cached plan: Spark matches cache
             # entries by plan, so an untagged entry would also serve a
             # plain read() of the same tier, or another store's
             # snapshot, from stale rows
-            cached = track(
-                df.withColumn("_snapshot", F.lit(uuid.uuid4().hex)).persist()
+            cached = persist_tracked(
+                df.withColumn("_snapshot", F.lit(uuid.uuid4().hex))
             )
-            snap = TierSnapshot(cached.drop("_snapshot"), cached.count())
-            self._snapshots[slot] = (key, cached, snap)
-            return snap
+            served = cached.drop("_snapshot")
+            self._snapshots[slot] = (key, cached, served)
+            return served
 
     def _scan(
         self,

@@ -5,17 +5,20 @@ state. Contract under test:
 - invalidation: after any commit — by this store instance or another
   one on the same path — the routed answer equals the answer over a
   fresh ``TierStore``;
-- bound: at most a head and an as-of snapshot per tier, all freed by
-  ``release_cached()`` and rebuilt on their next use.
+- bound: at most a head and an as-of snapshot per tier and store, all
+  freed by ``release_cached()`` or by discarding the store, and rebuilt
+  on their next use.
 """
 
 from __future__ import annotations
 
+import gc
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
+from s1tiling_spark.operators import cache
 from s1tiling_spark.operators.cache import release_cached
 from s1tiling_spark.plans.router import routed_range_totals_from_store
 from s1tiling_spark.plans.store import TierStore, new_run_id
@@ -144,7 +147,7 @@ def _expire(store, raw):
 
 def _rename(store, raw):
     store.rename_column("1h", "max_n_tok", "max_tok")
-    assert "max_tok" in store.snapshot("1h").df.columns
+    assert "max_tok" in store.snapshot("1h").columns
 
 
 def _second_writer(store, raw):
@@ -219,3 +222,33 @@ def test_snapshots_are_bounded_and_released(spark, raw, served):
     assert len(persisted()) == base
     for h in (None, horizons[2]):
         assert _routed(store, h) == _routed(_fresh(store), h)
+
+
+def test_discarded_store_frees_its_snapshots(spark, served):
+    store, horizon = served
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    base = len(persisted())
+    other = _fresh(store)
+    _routed(other)
+    _routed(other, horizon)
+    assert len(persisted()) == base + 2 * 3
+    del other
+    gc.collect()
+    assert len(persisted()) == base
+
+
+def test_failed_probe_persists_nothing(spark, served, monkeypatch):
+    store, horizon = served
+
+    def live():
+        return [df for df in cache._TRACKED if cache.is_cached(df)]
+
+    before = len(live())
+
+    def fail(self):
+        raise RuntimeError("probe failed")
+
+    monkeypatch.setattr(type(spark.range(1)), "isEmpty", fail)
+    with pytest.raises(RuntimeError, match="probe failed"):
+        _fresh(store).snapshot("1h", horizon)
+    assert len(live()) == before
