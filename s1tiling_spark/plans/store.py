@@ -2288,11 +2288,14 @@ class TierStore:
     def _newest_wins(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
         """MERGE-on-read: the newest version per natural key.
 
-        Computed as ONE hash aggregate — max over struct(commit_seq,
-        vals…) per key (struct compare leads with commit_seq) — which
+        Computed as ONE aggregate — max over struct(commit_seq, vals…)
+        per key (struct compare leads with commit_seq) — which
         partial-aggregates map-side, so the exchange carries O(keys)
         rows where the previous rank window shuffled AND sorted every
-        version (r6; same formulation as the one-pass changelog). Tie
+        version (r6; same formulation as the one-pass changelog). A max
+        over a struct cannot hash-aggregate, so the plan is
+        ``SortAggregate(partial_max)`` → ``Exchange`` → ``SortAggregate``,
+        with a sort on each side of the exchange. Tie
         order among equal seqs is deterministic (struct field compare)
         where the window was arbitrary — both satisfy the newest-wins
         contract. Map columns are not orderable, so map-bearing tiers

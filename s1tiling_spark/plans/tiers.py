@@ -21,7 +21,14 @@ watermark (start of the newest materialized bucket). A refresh:
    (`docs/dataflow-main.rst:148-155`);
 3. appends all six tier deltas under that seq with lineage columns
    (commit_seq, run_id) — dedup-on-read gives MERGE semantics. Rows in
-   and out of every tier are counted by Observations riding the writes;
+   and out of every tier are counted by Observations riding the writes.
+   The six appends run as a dependency schedule, the Spark analog of
+   the reference's Dask task graph (`otbpipeline.py:766-820`): one
+   thread per tier, each starting once the tier below it is written
+   (1h → 1d → 30d, 1h → blocks_1h, hist_1d → hist_30d), so the fixed
+   cost of independent Spark jobs overlaps. A failed step fails the
+   steps above it and the refresh re-raises its exception before the
+   commit point, so a failure in any step still leaves the old record;
 4. reads the new watermarks back from the files this refresh wrote
    (two columns, driver-side, no Spark job), then atomically replaces
    the refresh record (watermarks, seq, run id, per-tier metrics) — the
@@ -48,11 +55,14 @@ from __future__ import annotations
 import datetime as dt
 import functools
 import time
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from s1tiling_spark.operators.compress import compress_blocks
 from s1tiling_spark.operators.rollup import (
@@ -134,20 +144,9 @@ class _Refresh:
         self.wm: dict[str, dict[str, int]] = store.refresh_state().get(
             "watermarks", {}
         )
-        self.stat = ("1h",) + tuple(t for t in cfg.tiers if t != "1h")
-        tiers = (
-            self.stat
-            + (("hist_1d", "hist_30d") if cfg.hist else ())
-            + (("blocks_1h",) if cfg.compress else ())
-        )
-        # sources every tier of this refresh has a watermark for; an
-        # input row outside them may carry a source some upper tier
-        # has never seen, which disables that cascade's date pruning
-        self.known = set.intersection(*(set(self.wm.get(t, ())) for t in tiers))
         self.commit_seq = store.next_commit_seq()
-        self.written: list[str] = []
         self.unseen_rows: dict[str, int] = {}
-        self.metrics: list[dict] = []
+        self.metrics: dict[str, dict] = {}
 
     def _fresh(self, df: DataFrame, ts_col: str, tier: str):
         """``df`` filtered to ``tier``'s fresh rows, observed: rows in,
@@ -172,9 +171,7 @@ class _Refresh:
             # relation), so the observation never reports
             seen = {"rows_in": 0, "unseen": 0}
         self.unseen_rows[tier] = int(seen["unseen"])
-        if rows_out:
-            self.written.append(tier)
-        self.metrics.append({
+        self.metrics[tier] = {
             "run_id": self.run_id,
             "tier": tier,
             "partition": "*",
@@ -182,7 +179,7 @@ class _Refresh:
             "rows_out": rows_out,
             "errors": 0,
             "wall_ms": int((time.time() - t0) * 1000),
-        })
+        }
 
     def _cascade(self, lower: str, upper: str, build, cols=STAT_COLS,
                  keys=DEFAULT_KEYS) -> None:
@@ -207,34 +204,80 @@ class _Refresh:
         fresh, obs = self._fresh(lower_df.select(*cols), "bucket_start", upper)
         self._write(upper, build(fresh), obs, t0)
 
-    def run(self, seq: DataFrame) -> dict:
-        cfg = self.cfg
+    def _base(self, seq: DataFrame, tier: str, build) -> None:
+        """``tier`` from the raw rows at/after its watermarks."""
         t0 = time.time()
-        fresh, obs = self._fresh(seq, "event_ts", "1h")
-        self._write("1h", rollup_sequences(fresh, "1h"), obs, t0)
-        for lower, upper in zip(self.stat, self.stat[1:]):
-            self._cascade(lower, upper, functools.partial(rollup_from_lower, tier=upper))
+        fresh, obs = self._fresh(seq, "event_ts", tier)
+        self._write(tier, build(fresh), obs, t0)
+
+    def _schedule(self, seq: DataFrame) -> list[tuple[str, str | None, Callable[[], None]]]:
+        """The refresh's tier writes as ``(tier, lower tier, step)``, in
+        dependency order: 1h and hist_1d come from the raw rows, every
+        other tier cascades from the one below it."""
+        cfg = self.cfg
+        part = functools.partial
+        stat = ("1h",) + tuple(t for t in cfg.tiers if t != "1h")
+        steps = [("1h", None, part(self._base, seq, "1h", part(rollup_sequences, tier="1h")))]
+        steps += [
+            (upper, lower, part(self._cascade, lower, upper, part(rollup_from_lower, tier=upper)))
+            for lower, upper in zip(stat, stat[1:])
+        ]
         if cfg.hist:
-            t0 = time.time()
-            fresh, obs = self._fresh(seq, "event_ts", "hist_1d")
-            self._write("hist_1d", token_hist_long(fresh, "1d"), obs, t0)
-            self._cascade("hist_1d", "hist_30d",
-                          functools.partial(merge_hist_long, tier="30d"),
-                          cols=(*HIST_KEYS, "tok_cnt"), keys=HIST_KEYS)
+            steps += [
+                ("hist_1d", None,
+                 part(self._base, seq, "hist_1d", part(token_hist_long, tier="1d"))),
+                ("hist_30d", "hist_1d",
+                 part(self._cascade, "hist_1d", "hist_30d", part(merge_hist_long, tier="30d"),
+                      cols=(*HIST_KEYS, "tok_cnt"), keys=HIST_KEYS)),
+            ]
         if cfg.compress:
-            self._cascade(
-                "1h", "blocks_1h",
+            steps.append(("blocks_1h", "1h", part(
+                self._cascade, "1h", "blocks_1h",
                 lambda fresh: compress_blocks(fresh, cfg.compress_value)
                 .withColumnRenamed("block_start", "bucket_start"),
                 cols=("bucket_start", "source", cfg.compress_value),
-            )
+            )))
+        return steps
+
+    def _step(self, tier: str, lower: Future | None, step: Callable[[], None]) -> None:
+        """Run ``step`` once its lower tier's write has finished; a
+        failed lower write fails this step with the same exception. Its
+        jobs are described as ``tiers/<run_id>/<tier>`` and keep the
+        caller's job group."""
+        if lower is not None:
+            lower.result()
+        self.store.spark.sparkContext.setJobDescription(f"tiers/{self.run_id}/{tier}")
+        step()
+
+    def run(self, seq: DataFrame) -> dict:
+        steps = self._schedule(seq)
+        # sources every tier of this refresh has a watermark for; an
+        # input row outside them may carry a source some upper tier
+        # has never seen, which disables that cascade's date pruning
+        self.known = set.intersection(*(set(self.wm.get(t, ())) for t, _, _ in steps))
+        # one thread per step, so a step waiting on its lower tier never
+        # holds back another; Spark runs jobs from separate threads
+        # concurrently. Each thread is wrapped when submitted, so it
+        # starts from its own copy of the caller's local properties
+        # (job group included).
+        with ThreadPoolExecutor(len(steps), thread_name_prefix="tiers") as pool:
+            futures: dict[str, Future] = {}
+            for tier, lower, step in steps:
+                target = inheritable_thread_target(self.store.spark)(self._step)
+                futures[tier] = pool.submit(target, tier, futures.get(lower), step)
+            for f in futures.values():
+                f.result()
+        metrics = [self.metrics[t] for t, _, _ in steps if t in self.metrics]
         # the commit point: the watermarks of what this refresh wrote,
         # read back from its own files, replace the record atomically
-        wms = {t: self.store.commit_watermarks(t, self.commit_seq) for t in self.written}
-        self.store.commit_refresh(self.commit_seq, self.run_id, wms, self.metrics)
+        wms = {
+            m["tier"]: self.store.commit_watermarks(m["tier"], self.commit_seq)
+            for m in metrics if m["rows_out"]
+        }
+        self.store.commit_refresh(self.commit_seq, self.run_id, wms, metrics)
         return {
             "run_id": self.run_id,
             "commit_seq": self.commit_seq,
-            "metrics": self.metrics,
-            "rows_out_total": sum(m["rows_out"] for m in self.metrics),
+            "metrics": metrics,
+            "rows_out_total": sum(m["rows_out"] for m in metrics),
         }

@@ -8,6 +8,9 @@ must produce exactly the full-run outputs
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -135,15 +138,36 @@ def test_crash_between_append_and_checkpoint(spark, seq, tmp_path):
     assert_frames_match(_tier_state(store, "1h"), _tier_state(full_store, "1h"))
 
 
-def test_metrics_and_lineage(spark, seq, tmp_path):
+def test_metrics_and_lineage(spark, seq, tmp_path, monkeypatch):
     store = TierStore(spark, str(tmp_path / "metrics"))
+    # hold the 1h write until hist_1d's has finished: the two chains
+    # run side by side, and the metrics still come in schedule order
+    append, hist_done = store.append, threading.Event()
+
+    def ordered_append(tier, *args, **kwargs):
+        if tier == "1h":
+            assert hist_done.wait(120), "hist_1d did not run beside 1h"
+        out = append(tier, *args, **kwargs)
+        if tier == "hist_1d":
+            hist_done.set()
+        return out
+
+    monkeypatch.setattr(store, "append", ordered_append)
     pipe = TierPipeline(store)
-    res = pipe.run(seq)
+    # frequent thread switches, so a lost metrics update would show
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        res = pipe.run(seq)
+    finally:
+        sys.setswitchinterval(switch)
     m = store.read_metrics()
     assert m is not None
     rows = m.collect()
     tiers = {r["tier"] for r in rows}
     assert set(ALL_TIERS) <= tiers
+    for got in (res["metrics"], store.refresh_state()["metrics"]):
+        assert tuple(r["tier"] for r in got) == ALL_TIERS
     # a cold run reads input for every tier, counted on its write
     for got in (rows, res["metrics"]):
         rows_in = {r["tier"]: r["rows_in"] for r in got}
@@ -152,6 +176,49 @@ def test_metrics_and_lineage(spark, seq, tmp_path):
     raw = store.read("1h", deduped=False)
     assert {"commit_seq", "run_id", "p_date"} <= set(raw.columns)
     assert raw.filter(F.col("run_id") == res["run_id"]).count() > 0
+
+
+def _run_in_group(spark, group, fn):
+    """``fn()`` under job group ``group``; the ids of the jobs it ran
+    in that group, and of those it ran in no group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return (out, tracker.getJobIdsForGroup(group),
+            set(tracker.getJobIdsForGroup(None)) - ungrouped)
+
+
+def test_refresh_jobs_keep_callers_job_group(spark, seq, tmp_path):
+    """Every job of a refresh runs in the caller's job group (so
+    ``cancelJobGroup`` reaches it), even those its tier writes launch
+    from their own threads."""
+    store = TierStore(spark, str(tmp_path / "group"))
+    _, grouped, ungrouped = _run_in_group(
+        spark, "refresh-group", lambda: TierPipeline(store).run(seq))
+    assert grouped
+    assert not ungrouped
+
+
+def test_refresh_jobs_are_described_by_tier(spark, seq, tmp_path):
+    """Each tier write describes its jobs as ``tiers/<run_id>/<tier>``."""
+    store = TierStore(spark, str(tmp_path / "described"))
+    res, grouped, _ = _run_in_group(
+        spark, "refresh-described", lambda: TierPipeline(store).run(seq))
+    status = spark.sparkContext._jsc.sc().statusStore()
+    described = set()
+    for jid in grouped:
+        desc = status.job(jid).description()
+        if desc.isDefined():
+            described.add(desc.get())
+    assert {f"tiers/{res['run_id']}/{t}" for t in ALL_TIERS} <= described
 
 
 class _Crash(RuntimeError):
@@ -525,3 +592,39 @@ def test_scoped_persists_survives_registry_prune(spark, monkeypatch):
     assert not inner.storageLevel.useMemory  # scope released it
     assert a.storageLevel.useMemory  # outer persist untouched
     cache.release_cached()
+
+
+def test_failed_lower_write_stops_its_cascades(spark, seq, tmp_path, monkeypatch):
+    """A failed 1h write fails the refresh with that very exception:
+    the tiers cascaded from 1h write nothing, the record stays, no
+    thread of the refresh outlives it, and the next refresh repairs
+    every tier to a one-shot build."""
+    store = TierStore(spark, str(tmp_path / "fail1h"))
+    pipe = TierPipeline(store)
+    pipe.run(seq.filter(F.col("event_ts") < SPLIT_TS))
+    state_before = store.refresh_state()
+
+    append, boom = store.append, _Crash("killed writing 1h")
+
+    def failing_append(tier, *args, **kwargs):
+        if tier == "1h":
+            raise boom
+        return append(tier, *args, **kwargs)
+
+    monkeypatch.setattr(store, "append", failing_append)
+    threads_before = set(threading.enumerate())
+    with pytest.raises(_Crash) as err:
+        pipe.run(seq)
+    assert err.value is boom
+    assert set(threading.enumerate()) <= threads_before
+    monkeypatch.undo()
+
+    seq_crashed = store.last_commit_seq()
+    for tier in ("1d", "30d", "blocks_1h"):
+        raw = store.read(tier, deduped=False)
+        assert raw.filter(F.col("commit_seq") == seq_crashed).count() == 0, tier
+    assert store.refresh_state() == state_before
+
+    pipe.run(seq)
+    full = _full_run_state(spark, seq, tmp_path, "fail1h_full")
+    _assert_equals_oneshot(store, full)
