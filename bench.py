@@ -13,9 +13,8 @@ Headline set:
   Reports rolled-up points/sec (BASELINE.json authoritative metric).
 - every registered oracle query at sf0.1 (driver tables).
 
-Scaling-efficiency evidence (N vs 4N executors, sandbox proxy):
-run `python tools/scaling_bench.py` — executes this same flagship at
-local[8] and local[32] and reports both throughputs + efficiency.
+Each is timed once, as measured: this is a smoke check of the driver
+contract, not a performance scoreboard (that is ``perfbench/``).
 """
 
 from __future__ import annotations
@@ -91,37 +90,6 @@ def run_tier_cascade(spark) -> dict:
     }
 
 
-def run_compute_cascade(spark) -> dict:
-    """CPU-bound variant for scaling evidence: the stats-tier cascade +
-    LOCF gap-fill over a spark.range-generated table (no tokens, no
-    parquet) — isolates the ENGINE's aggregation/window scaling from
-    this host's non-scaling parquet nested-decode path (PERF.md §6)."""
-    from s1tiling_spark.operators.gapfill import densify, locf
-    from s1tiling_spark.operators.rollup import rollup_from_lower, rollup_sequences
-    from s1tiling_spark.sources.synth import synth_sequences
-
-    seq = synth_sequences(spark, BENCH_ROWS, with_tokens=False, num_partitions=256)
-    t0 = time.time()
-    t1h = rollup_sequences(seq, "1h").persist()
-    out_rows = materialize(t1h)
-    t1d = rollup_from_lower(t1h, "1d").persist()
-    out_rows += materialize(t1d)
-    out_rows += materialize(rollup_from_lower(t1d, "30d"))
-    out_rows += materialize(locf(densify(t1h.select(
-        "bucket_start", "source", "cnt", "sum_n_tok"), "1h"),
-        ["cnt", "sum_n_tok"]))
-    elapsed = time.time() - t0
-    for df in (t1h, t1d):
-        df.unpersist()
-    points = BENCH_ROWS * 4
-    return {
-        "sec": elapsed,
-        "input_rows": BENCH_ROWS,
-        "output_rows": out_rows,
-        "points_per_sec": points / elapsed if elapsed > 0 else None,
-    }
-
-
 def main() -> None:
     from s1tiling_spark.session import build_session
 
@@ -148,22 +116,6 @@ def main() -> None:
     )
 
     queries: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "compute":
-        cascade = run_compute_cascade(spark)
-        queries["tier_cascade"] = round(cascade["sec"], 3)
-        out = {
-            "metric": "compute-bound stats cascade (no I/O)",
-            "value": queries["tier_cascade"],
-            "unit": "sec",
-            "queries": queries,
-            "sf": "synthetic",
-            "cpus": cpus,
-            "bench_rows": BENCH_ROWS,
-            "points_per_sec": round(cascade["points_per_sec"], 1),
-        }
-        spark.stop()
-        print(json.dumps(out))
-        return
     # every query and the cascade are timed ONCE and reported as
     # measured — no best-of-N, no retry, no prior-best folding (the
     # scoreboard for performance claims is perfbench/, which compares
@@ -171,20 +123,19 @@ def main() -> None:
     cascade = run_tier_cascade(spark)
     queries["tier_cascade"] = round(cascade["sec"], 3)
 
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "cascade":
-        from s1tiling_spark.operators.cache import release_cached
+    from s1tiling_spark.operators.cache import release_cached
 
-        for name, fn in e.queries().items():
-            t0 = time.time()
-            materialize(fn(spark, SF_DIR))
-            queries[name] = round(time.time() - t0, 2)
-            # queries that persist intermediates (LSH signatures, IVF
-            # prep) must not donate cache to — or steal memory from —
-            # later queries: each timing is an independent cold run.
-            # release_cached() also drains the tracked-persist registry
-            # (clearCache alone leaves Python-side plan refs behind)
-            release_cached()
-            spark.catalog.clearCache()
+    for name, fn in e.queries().items():
+        t0 = time.time()
+        materialize(fn(spark, SF_DIR))
+        queries[name] = round(time.time() - t0, 2)
+        # queries that persist intermediates (LSH signatures, IVF
+        # prep) must not donate cache to — or steal memory from —
+        # later queries: each timing is an independent cold run.
+        # release_cached() also drains the tracked-persist registry
+        # (clearCache alone leaves Python-side plan refs behind)
+        release_cached()
+        spark.catalog.clearCache()
 
     total = round(sum(queries.values()), 2)
     out = {
@@ -200,13 +151,10 @@ def main() -> None:
         "cascade_output_rows": cascade["output_rows"],
     }
     # BENCH_DETAIL.json: this run's full record, as measured — the
-    # overflow target for the stdout line below. Cascade-only runs
-    # (scaling_bench sets SPARK_GRAFT_BENCH_ONLY=cascade) leave the
-    # full-registry record alone.
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "cascade":
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json"), "w") as f:
-            json.dump(out, f, indent=1)
+    # overflow target for the stdout line below
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "BENCH_DETAIL.json"), "w") as f:
+        json.dump(out, f, indent=1)
     spark.stop()
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > 1900:

@@ -566,9 +566,8 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "metrics":
             from s1tiling_spark.plans.store import TierStore
 
-            m = TierStore(spark, args.store).read_metrics()
-            for row in (m.collect() if m is not None else []):
-                print(json.dumps(row.asDict(), default=str))
+            for row in TierStore(spark, args.store).refresh_state().get("metrics", []):
+                print(json.dumps(row, default=str))
     finally:
         spark.stop()
     return 0

@@ -304,7 +304,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iters: int = 25,
-    round_stats: list | None = None,
 ) -> DataFrame:
     """Transitive closure of near-duplicate pairs → (doc_id, component,
     keep): the grouping step every dedup pipeline runs after pair
@@ -326,11 +325,6 @@ def connected_components(
     The fixpoint (min reachable id) is unique, so the result is
     deterministic at any parallelism and any iteration schedule —
     which is what lets a recursive-CTE oracle verify it exactly.
-
-    ``round_stats``: pass a list to receive one
-    {round, sec, changed} dict per propagation round (the instrument
-    tools/components_bench.py uses to evidence the O(log diameter)
-    bound at 10^6 edges).
 
     Raises ``RuntimeError`` if ``max_iters`` rounds pass without
     convergence (possible only on long-chain graphs with diameter >
@@ -374,11 +368,8 @@ def connected_components(
     ).localCheckpoint(eager=True)
     from pyspark.sql import Observation
 
-    import time as _time
-
     converged = n_edges == 0
     for i in range(max_iters):
-        _t0 = _time.time()
         neighbor_min = (
             edges.join(
                 labels.select(
@@ -430,12 +421,7 @@ def connected_components(
         # the observe metric) + lineage truncation; superseded
         # checkpoints are freed by the ContextCleaner
         labels = upd.select("doc_id", "component").localCheckpoint(eager=True)
-        changed = int(obs.get["changed"])
-        if round_stats is not None:
-            round_stats.append(
-                {"round": i, "sec": round(_time.time() - _t0, 2), "changed": changed}
-            )
-        if changed == 0:
+        if int(obs.get["changed"]) == 0:
             converged = True
             break
     # the final labels are checkpointed blocks, so the edge cache can

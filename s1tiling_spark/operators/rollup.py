@@ -29,14 +29,19 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from s1tiling_spark.operators.dedup import md5_long
 
 TIERS = ("1h", "1d", "30d")
+# every tier bucket is a whole number of seconds aligned to the Unix
+# epoch (1h/1d truncation in UTC is the same floor)
+TIER_SPAN_S = {"1h": 3_600, "1d": 86_400, "30d": 30 * 86_400}
 _TRUNC = {"1h": "hour", "1d": "day"}
-_30D_SECONDS = 30 * 86400
+_EPOCH = datetime(1970, 1, 1)
 N_HIST_BINS = 64
 VOCAB = 50_000
 
@@ -44,14 +49,24 @@ VOCAB = 50_000
 def bucket_col(ts: Column, tier: str) -> Column:
     """Tumbling-bucket start for a tier. 1h/1d align to wall-clock
     boundaries (`date_trunc`); 30d aligns to the Unix epoch so buckets
-    are stable regardless of the data's min timestamp."""
+    are stable regardless of the data's min timestamp. ``unix_seconds``
+    floors (``unix_timestamp`` truncates toward zero, which would put
+    the last sub-second before the epoch in the epoch's bucket)."""
     if tier in _TRUNC:
         return F.date_trunc(_TRUNC[tier], ts)
     if tier == "30d":
-        return F.timestamp_seconds(
-            F.floor(F.unix_timestamp(ts) / F.lit(_30D_SECONDS)) * F.lit(_30D_SECONDS)
-        )
+        span = F.lit(TIER_SPAN_S["30d"])
+        return F.timestamp_seconds(F.floor(F.unix_seconds(ts) / span) * span)
     raise ValueError(f"unknown tier {tier!r}")
+
+
+def bucket_floor(tier: str, ts: datetime) -> datetime:
+    """Driver-side :func:`bucket_col`: start of the ``tier`` bucket
+    holding ``ts`` (naive UTC)."""
+    if tier not in TIER_SPAN_S:
+        raise ValueError(f"unknown tier {tier!r}")
+    span = timedelta(seconds=TIER_SPAN_S[tier])
+    return _EPOCH + (ts - _EPOCH) // span * span
 
 
 def bucket_sql(ts_expr: str, tier: str) -> str:
@@ -59,10 +74,8 @@ def bucket_sql(ts_expr: str, tier: str) -> str:
     if tier in _TRUNC:
         return f"date_trunc('{_TRUNC[tier]}', {ts_expr})"
     if tier == "30d":
-        return (
-            f"CAST(to_timestamp(floor(epoch({ts_expr})/{_30D_SECONDS})*{_30D_SECONDS}) "
-            "AS TIMESTAMP)"
-        )
+        span = TIER_SPAN_S["30d"]
+        return f"CAST(to_timestamp(floor(epoch({ts_expr})/{span})*{span}) AS TIMESTAMP)"
     raise ValueError(f"unknown tier {tier!r}")
 
 
@@ -221,7 +234,7 @@ def counter_increase(
     """
     from pyspark.sql import Window
 
-    span = {"1h": 3600, "1d": 86400, "30d": 30 * 86400}[tier]
+    span = TIER_SPAN_S[tier]
     w = Window.partitionBy(*keys).orderBy(ts_col, *order_cols)
     prev = F.lag(F.col(counter_col)).over(w)
     delta = (

@@ -44,28 +44,17 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.rollup import rollup_sequences
+from s1tiling_spark.operators.rollup import TIER_SPAN_S, bucket_floor, rollup_sequences
 from .store import TierStore
-
-_SPAN_S = {"1h": 3_600, "1d": 86_400, "30d": 30 * 86_400}
-_EPOCH = datetime(1970, 1, 1)
-
-
-def _floor(tier: str, dt: datetime) -> datetime:
-    """Python-side analog of operators.rollup.bucket_col (same epoch
-    alignment for 30d, same truncation for calendar tiers)."""
-    span = _SPAN_S[tier]
-    secs = int((dt - _EPOCH).total_seconds())
-    return _EPOCH + timedelta(seconds=(secs // span) * span)
 
 
 def expanded_window(
     tier: str, from_ts: datetime, to_ts: datetime
 ) -> tuple[datetime, datetime]:
     """[from, to) expanded outward to tier-bucket boundaries."""
-    lo = _floor(tier, from_ts)
-    hi = _floor(tier, to_ts - timedelta(microseconds=1)) + timedelta(
-        seconds=_SPAN_S[tier]
+    lo = bucket_floor(tier, from_ts)
+    hi = bucket_floor(tier, to_ts - timedelta(microseconds=1)) + timedelta(
+        seconds=TIER_SPAN_S[tier]
     )
     return lo, hi
 

@@ -231,7 +231,7 @@ class AdditiveMatView:
                 split_updates=True,
                 # scan I/O scales with touched DAYS, not table size:
                 # the changelog opens only the partitions the touched
-                # keys live in (measured in tools/matview_bench.py)
+                # keys live in
                 prune_partitions="bucket_start" in self.base_keys,
             )
             if ch is None:

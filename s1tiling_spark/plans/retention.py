@@ -21,11 +21,11 @@ by the guard tier iff ``watermark(s) > covering_bucket_start(d)`` —
 strictly, because the watermark bucket itself is still open and its
 next recompute READS the tier being expired. The check costs one
 metadata-scale scan of the victim partitions (distinct (source, date)
-pairs) plus the tiny watermark dim.
+pairs) plus a read of the refresh record's watermarks (no Spark job).
 
 Scale note (100 TB): the guard reads only the partitions about to be
 dropped (partition-pruned paths, two columns) and the O(sources)
-watermark table; ``expire`` itself is directory surgery. Nothing here
+watermark record; ``expire`` itself is directory surgery. Nothing here
 scans retained data.
 """
 
@@ -34,9 +34,9 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
+from s1tiling_spark.operators.rollup import bucket_floor
 from s1tiling_spark.plans.store import TierStore
 
-_30D_SECONDS = 30 * 86400
 _EPOCH = dt.datetime(1970, 1, 1)
 
 
@@ -68,15 +68,9 @@ class RetentionRule:
 
 def covering_bucket_start(day: dt.date, guard_tier: str) -> dt.datetime:
     """Start of the ``guard_tier`` bucket containing calendar ``day``.
-    1d buckets are the day itself; 30d buckets are epoch-aligned
-    (``operators/rollup.py::bucket_col``) and 86400 divides their span,
-    so a day never straddles two buckets."""
+    1d buckets are the day itself; 30d buckets are epoch-aligned and
+    86400 divides their span, so a day never straddles two buckets."""
     start = dt.datetime(day.year, day.month, day.day)
-    if guard_tier == "1d":
-        return start
-    if guard_tier == "30d":
-        secs = int((start - _EPOCH).total_seconds())
-        return _EPOCH + dt.timedelta(seconds=(secs // _30D_SECONDS) * _30D_SECONDS)
     if guard_tier == "1h":
         # a sub-day guard covers a victim DAY only when every one of the
         # day's guard buckets is final — i.e. the watermark is strictly
@@ -84,7 +78,7 @@ def covering_bucket_start(day: dt.date, guard_tier: str) -> dt.datetime:
         # the day start would pass the check with hours 01-23 never
         # absorbed (ADVICE r5, medium).
         return start + dt.timedelta(hours=23)
-    raise ValueError(f"unknown guard tier {guard_tier!r}")
+    return bucket_floor(guard_tier, start)
 
 
 def _victim_dates(store: TierStore, tier: str, cutoff: dt.date) -> list[str]:
@@ -110,20 +104,17 @@ def _check_guard(
         .distinct()
         .collect()
     )
-    wm_df = store.read_watermarks(guard_tier)
-    wm: dict[str, dt.datetime] = (
-        {r["source"]: r["watermark"] for r in wm_df.collect()}
-        if wm_df is not None
-        else {}
-    )
+    # per source, epoch micros of the newest committed guard bucket
+    wm = store.refresh_state().get("watermarks", {}).get(guard_tier, {})
+
+    def covered_us(p_date) -> int:
+        start = covering_bucket_start(dt.date.fromisoformat(str(p_date)), guard_tier)
+        return (start - _EPOCH) // dt.timedelta(microseconds=1)
+
     uncovered = sorted(
         (r["source"], str(r["p_date"]))
         for r in pairs
-        if r["source"] not in wm
-        or wm[r["source"]]
-        <= covering_bucket_start(
-            dt.date.fromisoformat(str(r["p_date"])), guard_tier
-        )
+        if r["source"] not in wm or wm[r["source"]] <= covered_us(r["p_date"])
     )
     if uncovered:
         raise RetentionGuardError(tier, guard_tier, uncovered)

@@ -32,9 +32,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_HOUR = 3600
-_DAY = 86400
-_30D = 30 * _DAY
+from s1tiling_spark.operators.rollup import TIER_SPAN_S, bucket_floor
 
 
 def _epoch(ts: datetime) -> int:
@@ -47,12 +45,10 @@ def _instant(e: int):
     return F.lit(datetime.fromtimestamp(e, tz=timezone.utc))
 
 
-def _ceil_to(e: int, step: int) -> int:
-    return ((e + step - 1) // step) * step
-
-
-def _floor_to(e: int, step: int) -> int:
-    return (e // step) * step
+def _bucket_ceil(tier: str, ts: datetime) -> datetime:
+    """Start of the first ``tier`` bucket at or after ``ts``."""
+    lo = bucket_floor(tier, ts)
+    return lo if lo == ts else lo + timedelta(seconds=TIER_SPAN_S[tier])
 
 
 @dataclass(frozen=True)
@@ -67,35 +63,39 @@ class RoutePlan:
 def plan_range(start: datetime, end: datetime) -> RoutePlan:
     """Decompose [start, end) (hour-aligned) into tier spans.
 
-    Pure integer arithmetic on the driver — no data access. 30d blocks
-    are epoch-aligned (operators/rollup.py bucket_col), 1d/1h are
-    wall-clock (UTC) aligned.
+    Driver-side bucket arithmetic (``operators/rollup.py``
+    ``bucket_floor``) — no data access. The wall-clock time of
+    ``start``/``end`` is read as UTC.
     """
-    lo, hi = _epoch(start), _epoch(end)
-    if lo % _HOUR or hi % _HOUR:
+    lo, hi = start.replace(tzinfo=None), end.replace(tzinfo=None)
+    if bucket_floor("1h", lo) != lo or bucket_floor("1h", hi) != hi:
         raise ValueError("range must be hour-aligned")
     if lo >= hi:
         raise ValueError("empty range")
-    day_lo, day_hi = _ceil_to(lo, _DAY), _floor_to(hi, _DAY)
-    h_spans: list[tuple[int, int]] = []
-    d_spans: list[tuple[int, int]] = []
-    b_spans: list[tuple[int, int]] = []
+    day_lo, day_hi = _bucket_ceil("1d", lo), bucket_floor("1d", hi)
+    h_spans: list[tuple[datetime, datetime]] = []
+    d_spans: list[tuple[datetime, datetime]] = []
+    b_spans: list[tuple[datetime, datetime]] = []
     if day_lo >= day_hi:  # range inside one day: all hours
-        return RoutePlan(((lo, hi),), (), ())
-    if lo < day_lo:
-        h_spans.append((lo, day_lo))
-    if day_hi < hi:
-        h_spans.append((day_hi, hi))
-    blk_lo, blk_hi = _ceil_to(day_lo, _30D), _floor_to(day_hi, _30D)
-    if blk_lo >= blk_hi:  # no full 30d block: all days
-        d_spans.append((day_lo, day_hi))
+        h_spans.append((lo, hi))
     else:
-        if day_lo < blk_lo:
-            d_spans.append((day_lo, blk_lo))
-        if blk_hi < day_hi:
-            d_spans.append((blk_hi, day_hi))
-        b_spans.append((blk_lo, blk_hi))
-    return RoutePlan(tuple(h_spans), tuple(d_spans), tuple(b_spans))
+        if lo < day_lo:
+            h_spans.append((lo, day_lo))
+        if day_hi < hi:
+            h_spans.append((day_hi, hi))
+        blk_lo, blk_hi = _bucket_ceil("30d", day_lo), bucket_floor("30d", day_hi)
+        if blk_lo >= blk_hi:  # no full 30d block: all days
+            d_spans.append((day_lo, day_hi))
+        else:
+            if day_lo < blk_lo:
+                d_spans.append((day_lo, blk_lo))
+            if blk_hi < day_hi:
+                d_spans.append((blk_hi, day_hi))
+            b_spans.append((blk_lo, blk_hi))
+    return RoutePlan(*(
+        tuple((_epoch(a), _epoch(b)) for a, b in spans)
+        for spans in (h_spans, d_spans, b_spans)
+    ))
 
 
 def _slice(tier: DataFrame, spans: tuple[tuple[int, int], ...]) -> DataFrame | None:

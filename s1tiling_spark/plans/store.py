@@ -2291,15 +2291,13 @@ class TierStore:
         Computed as ONE aggregate — max over struct(commit_seq, vals…)
         per key (struct compare leads with commit_seq) — which
         partial-aggregates map-side, so the exchange carries O(keys)
-        rows where the previous rank window shuffled AND sorted every
-        version (r6; same formulation as the one-pass changelog). A max
+        rows (same formulation as the one-pass changelog). A max
         over a struct cannot hash-aggregate, so the plan is
         ``SortAggregate(partial_max)`` → ``Exchange`` → ``SortAggregate``,
-        with a sort on each side of the exchange. Tie
-        order among equal seqs is deterministic (struct field compare)
-        where the window was arbitrary — both satisfy the newest-wins
-        contract. Map columns are not orderable, so map-bearing tiers
-        keep the window formulation."""
+        with a sort on each side of the exchange. Tie order among
+        equal seqs is deterministic (struct field compare). Map
+        columns are not orderable, so map-bearing relations rank with
+        a window instead."""
         if any("map<" in t for _, t in df.dtypes):
             w = Window.partitionBy(*keys).orderBy(F.desc("commit_seq"))
             return (
@@ -2939,8 +2937,16 @@ class TierStore:
                 state["metrics"] = [_metrics_row(r) for r in metrics]
             atomic_json_write(self._state_path(), state)
 
+    # ---------- compatibility views over the refresh record ----------
+    # read_watermarks, commit_checkpoint, append_metrics and
+    # read_metrics: the engine reads and writes the record through
+    # refresh_state / commit_refresh. These views stay only because
+    # perfbench calls them (workloads.py reads watermarks; spans.py
+    # wraps all four by name); deleting them waits for a change to the
+    # benchmark.
     def read_watermarks(self, tier: str) -> DataFrame | None:
-        """Latest committed watermark per source for a tier, or None."""
+        """Latest committed watermark per source for a tier, or None.
+        Compatibility view kept for perfbench (see above)."""
         wm = self.refresh_state().get("watermarks", {}).get(tier)
         if not wm:
             return None
@@ -2954,7 +2960,8 @@ class TierStore:
         """Commit per-source watermarks ``(source, watermark)`` for one
         tier AFTER its data append succeeded (crash between append and
         this call → recompute + dedup-on-read repairs; never lost data,
-        never double-counted). One collect of O(sources) rows."""
+        never double-counted). One collect of O(sources) rows.
+        Compatibility view kept for perfbench (see above)."""
         rows = watermarks.select(
             "source", F.unix_micros(F.col("watermark")).alias("wm_us")
         ).collect()
@@ -2962,11 +2969,11 @@ class TierStore:
             commit_seq, run_id, {tier: {r["source"]: r["wm_us"] for r in rows}}
         )
 
-    # ---------- metrics ----------
     def append_metrics(self, rows: list[dict]) -> None:
         """Attach per-tier metrics rows — analog of the reference's
         outcome/error census (`api.py:477-487`) — to the refresh
-        record; the next refresh's commit replaces them."""
+        record; the next refresh's commit replaces them. Compatibility
+        view kept for perfbench (see above)."""
         if not rows:
             return
         with self._meta_mutex():
@@ -2977,7 +2984,8 @@ class TierStore:
             atomic_json_write(self._state_path(), state)
 
     def read_metrics(self) -> DataFrame | None:
-        """The last refresh's per-tier metrics rows, or None."""
+        """The last refresh's per-tier metrics rows, or None.
+        Compatibility view kept for perfbench (see above)."""
         rows = self.refresh_state().get("metrics")
         if not rows:
             return None

@@ -45,7 +45,7 @@ shuffle reads. Where partial agg can't help — grouped-map kernels like
 block compression, where one (source, block) group is one Python worker
 call — an explicit salt sub-splits hot groups (see
 ``operators/compress.py`` + ``salt_col``). MEASURED at an 80 %-hot
-source (PERF.md §14, `tools/scaling_bench.py --mode skew`): cascade
+source (PERF.md §14): cascade
 1.15× hot-vs-uniform (neutral), salted compress 6.3× over unsalted,
 AQE skew-join split 2.3× with `skew=true` in the final plan.
 """

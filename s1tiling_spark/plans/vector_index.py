@@ -39,7 +39,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s1tiling_spark.operators.similarity import (
@@ -50,6 +50,7 @@ from s1tiling_spark.operators.similarity import (
     lsh_candidates_from_banded,
     srp_banded_arrow,
 )
+from s1tiling_spark.plans.store import TierStore
 
 
 class VectorIndex:
@@ -256,14 +257,8 @@ class VectorIndex:
     def _deduped_sigs(self, keep_seq: bool) -> DataFrame:
         """Newest commit per (vec_id, band) — THE dedup rule, shared by
         serving (sigs) and compaction so the two can never diverge."""
-        w = Window.partitionBy("vec_id", "band").orderBy(F.desc("commit_seq"))
         cols = ["vec_id", "band", "key"] + (["commit_seq"] if keep_seq else [])
-        return (
-            self._raw_sigs()
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select(*cols)
-        )
+        return TierStore._newest_wins(self._raw_sigs(), ("vec_id", "band")).select(*cols)
 
     def sigs(self) -> DataFrame:
         """Deduped signature relation: newest commit per (vec_id, band)."""
@@ -413,13 +408,8 @@ class VectorIndex:
 
     def _ivf_cells(self) -> DataFrame:
         """Newest cell assignment per vec_id (MERGE-on-read)."""
-        w = Window.partitionBy("vec_id").orderBy(F.desc("commit_seq"))
-        return (
-            self.spark.read.parquet(self._cells_path())
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("vec_id", "cid")
-        )
+        cells = self.spark.read.parquet(self._cells_path())
+        return TierStore._newest_wins(cells, ("vec_id",)).select("vec_id", "cid")
 
     def ivf_topk(
         self,

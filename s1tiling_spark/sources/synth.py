@@ -39,15 +39,12 @@ def synth_sequences(
     max_tok: int = MAX_TOK_DEFAULT,
     num_partitions: int | None = None,
     with_tokens: bool = True,
-    hot_pct: int = 45,
 ) -> DataFrame:
     """Deterministic sequences table of ``n_rows`` rows.
 
     ``with_tokens=False`` omits the token arrays (keeps doc_id/n_tok/
-    source/event_ts) — used by the compute-bound scaling bench where
-    the stats tiers are exercised without array materialization.
-    ``hot_pct`` sets the hot source's share of rows (default 45; the
-    skew bench uses 80 for its zipf-hot scenario)."""
+    source/event_ts), for callers that exercise the stats tiers
+    without array materialization."""
     df = spark.range(0, n_rows, numPartitions=num_partitions)
     h1 = F.xxhash64(F.col("id"), F.lit(seed))
     h2 = F.xxhash64(F.col("id"), F.lit(seed + 1))
@@ -57,8 +54,8 @@ def synth_sequences(
     u = F.pmod(h1, F.lit(100_000)).cast("double") / F.lit(100_000.0)
     n_tok = (F.lit(8) + (F.pow(u, F.lit(3.0)) * F.lit(max_tok - 8)).cast("int")).alias("n_tok")
 
-    # hot source: ~hot_pct% of rows; remainder over 7 cold sources
-    source = F.when(F.pmod(h2, F.lit(100)) < hot_pct, F.lit("src_hot")).otherwise(
+    # hot source: ~45% of rows; remainder over 7 cold sources
+    source = F.when(F.pmod(h2, F.lit(100)) < 45, F.lit("src_hot")).otherwise(
         F.concat(F.lit("src_"), F.pmod(h2, F.lit(7)).cast("string"))
     )
 

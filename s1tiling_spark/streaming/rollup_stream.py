@@ -336,11 +336,11 @@ def run_stream_into_store(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         seq = store.next_commit_seq()
-        store.append("1h", batch_df, seq, f"{run_id}-b{batch_id}")
-        wm = batch_df.groupBy("source").agg(
-            F.max("bucket_start").alias("watermark")
-        )
-        store.commit_checkpoint("1h", wm, seq, f"{run_id}-b{batch_id}")
+        rid = f"{run_id}-b{batch_id}"
+        store.append("1h", batch_df, seq, rid)
+        # watermarks read back from this commit's own files, driver-side
+        # (no second execution of the micro-batch plan)
+        store.commit_refresh(seq, rid, {"1h": store.commit_watermarks("1h", seq)})
 
     writer = (
         agg.writeStream.outputMode("update")

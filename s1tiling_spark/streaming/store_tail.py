@@ -33,7 +33,7 @@ delta.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s1tiling_spark.operators.rollup import bucket_col
@@ -135,11 +135,8 @@ def run_store_mirror(
         # the whole batch lands under one destination seq, so the
         # destination's newest-wins cannot order within it — the source
         # seq decides here, the destination seq across batches
-        w = Window.partitionBy(*keys).orderBy(F.desc("commit_seq"))
-        newest = (
-            batch_df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .drop("_rk", "commit_seq", "run_id", "p_date")
+        newest = TierStore._newest_wins(batch_df, keys).drop(
+            "commit_seq", "run_id", "p_date"
         )
         if newest.isEmpty():
             return

@@ -7,10 +7,19 @@ must match EXACTLY (reproducible across parallelism levels — SURVEY §7
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+
+import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from s1tiling_spark.operators.rollup import (
+    TIER_SPAN_S,
+    TIERS,
     assemble_hist,
+    bucket_col,
+    bucket_floor,
+    bucket_sql,
     merge_hist_long,
     rollup_from_lower,
     rollup_sequences,
@@ -167,3 +176,37 @@ def test_counter_increase_cascades(spark):
     a = {tuple(r) for r in direct_1d.collect()}
     b = {tuple(r) for r in cascaded.collect()}
     assert a == b and len(a) > 50
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_bucket_floor_matches_spark_and_duckdb(spark, tier):
+    """One bucket rule: the driver-side ``bucket_floor``, Spark's
+    ``bucket_col`` and DuckDB's ``bucket_sql`` agree at, just before and
+    just after bucket edges — the epoch itself, a 30d edge and an edge
+    of this tier. Timestamps cross as epoch micros, so no timezone
+    conversion sits between the three."""
+    epoch = datetime(1970, 1, 1)
+    span = timedelta(seconds=TIER_SPAN_S[tier])
+    us = timedelta(microseconds=1)
+    edges = (epoch, epoch + 655 * timedelta(days=30),
+             bucket_floor(tier, datetime(2024, 1, 10, 7, 30)))
+    stamps = sorted({e + d for e in edges for d in (-us, timedelta(0), us, span - us, span)})
+
+    def micros(t: datetime) -> int:
+        return (t - epoch) // us
+
+    want = [micros(bucket_floor(tier, t)) for t in stamps]
+    rows = (
+        spark.createDataFrame([(micros(t),) for t in stamps], "u long")
+        .select(F.unix_micros(bucket_col(F.timestamp_micros("u"), tier)).alias("b"), "u")
+        .orderBy("u")
+        .collect()
+    )
+    assert [r["b"] for r in rows] == want
+    con = duckdb.connect()
+    got_duck = [
+        con.execute(f"SELECT epoch_us({bucket_sql(f'make_timestamp({micros(t)})', tier)})")
+        .fetchone()[0]
+        for t in stamps
+    ]
+    assert got_duck == want

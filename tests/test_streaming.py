@@ -3,6 +3,8 @@ overlapping) must converge to the exact batch-rollup state."""
 
 from __future__ import annotations
 
+from datetime import timedelta
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,6 +50,38 @@ def test_stream_matches_batch(spark, tmp_path):
     )
     want = rollup_sequences(seq, "1h").toPandas()
     assert_frames_match(got, want)
+
+
+def test_stream_sink_commits_watermarks(spark, tmp_path):
+    """The streaming sink's refresh record holds, per source, the newest
+    1h bucket it committed (epoch micros): after each delivery it equals
+    ``max(bucket_start)`` per source of the 1h tier. The second delivery
+    is newer, so it must advance the record."""
+    landing = str(tmp_path / "landing")
+    seq = synth_sequences(spark, 800).cache()
+    cut = seq.agg(F.max("event_ts")).first()[0] - timedelta(days=10)
+    store = TierStore(spark, str(tmp_path / "store"))
+
+    def deliver(rows) -> dict[str, int]:
+        rows.write.mode("append").parquet(landing)
+        q = run_stream_into_store(
+            spark, landing, store, str(tmp_path / "ckpt"),
+            available_now=True, watermark="60 days",
+        )
+        q.awaitTermination(240)
+        want = {
+            r["source"]: r["us"]
+            for r in store.read("1h")
+            .groupBy("source")
+            .agg(F.max(F.unix_micros("bucket_start")).alias("us"))
+            .collect()
+        }
+        assert store.refresh_state()["watermarks"]["1h"] == want
+        return want
+
+    first = deliver(seq.filter(F.col("event_ts") < F.lit(cut)))
+    second = deliver(seq.filter(F.col("event_ts") >= F.lit(cut)))
+    assert any(second[s] > first.get(s, -1) for s in second)
 
 
 def test_stream_hist_matches_batch(spark, tmp_path):

@@ -4,9 +4,8 @@ Usage: python tools/dump_plan.py OUTDIR SUFFIX q1 [q2 ...]
 Writes OUTDIR/<query>_<SUFFIX>.txt for each query.
 
 Store-lifecycle gates return an eager localCheckpoint (their cost is
-commit jobs, not the final plan) — for those the file carries the
-checkpoint plan plus a note; the profiler (tools/profile_gates.py) is
-the evidence source for their job anatomy.
+commit jobs, not the final plan), so for those the file holds only the
+checkpoint's scan, not the work that produced it.
 """
 
 from __future__ import annotations
