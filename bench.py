@@ -24,7 +24,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "600000"))
@@ -39,10 +40,11 @@ def materialize(df) -> int:
 def bench_input_path(spark) -> str:
     """Materialize the deterministic synthetic sequence table to parquet
     ONCE (input generation is not part of engine throughput — the real
-    input is an Iceberg table on storage). Cached across bench runs."""
+    input is an Iceberg table on storage). Cached across bench runs in
+    the checkout's gitignored ``.bench_cache/``."""
     from s1tiling_spark.sources.synth import synth_sequences
 
-    path = f"/tmp/s1tiling_bench/sequences_{BENCH_ROWS}.parquet"
+    path = os.path.join(HERE, ".bench_cache", f"sequences_{BENCH_ROWS}.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # 128 files so any parallelism level up to 128 gets full
         # scan parallelism (row groups don't split further)
@@ -150,10 +152,9 @@ def main() -> None:
         "points_per_sec": round(cascade["points_per_sec"], 1),
         "cascade_output_rows": cascade["output_rows"],
     }
-    # BENCH_DETAIL.json: this run's full record, as measured — the
-    # overflow target for the stdout line below
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_DETAIL.json"), "w") as f:
+    # BENCH_DETAIL.json (gitignored): this run's full record, as
+    # measured — the overflow target for the stdout line below
+    with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as f:
         json.dump(out, f, indent=1)
     spark.stop()
     line = json.dumps(out, separators=(",", ":"))

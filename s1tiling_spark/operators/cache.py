@@ -66,7 +66,8 @@ class scoped_persists:
     since its inputs' caches are gone afterwards.
 
     Guards against the unbounded-cache accumulation an ADVICE review
-    flagged on ``changes(prune_partitions=True)``'s touched-key set.
+    flagged on the touched-key set ``changes()`` persists for
+    partition pruning.
     """
 
     def __enter__(self) -> "scoped_persists":

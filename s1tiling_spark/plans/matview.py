@@ -229,10 +229,6 @@ class AdditiveMatView:
                 to_seq=to_seq,
                 keys=self.base_keys,
                 split_updates=True,
-                # scan I/O scales with touched DAYS, not table size:
-                # the changelog opens only the partitions the touched
-                # keys live in
-                prune_partitions="bucket_start" in self.base_keys,
             )
             if ch is None:
                 delta = None
@@ -592,7 +588,6 @@ class MergeMatView(AdditiveMatView):
             to_seq=to_seq,
             keys=self.base_keys,
             split_updates=True,
-            prune_partitions="bucket_start" in self.base_keys,
         )
         if ch is None:
             return None, None

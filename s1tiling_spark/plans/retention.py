@@ -24,7 +24,7 @@ metadata-scale scan of the victim partitions (distinct (source, date)
 pairs) plus a read of the refresh record's watermarks (no Spark job).
 
 Scale note (100 TB): the guard reads only the partitions about to be
-dropped (partition-pruned paths, two columns) and the O(sources)
+dropped (a partition-pruned store read, two columns) and the O(sources)
 watermark record; ``expire`` itself is directory surgery. Nothing here
 scans retained data.
 """
@@ -90,16 +90,14 @@ def _check_guard(
 ) -> int:
     """Raise :class:`RetentionGuardError` unless every (source, date)
     in the victim partitions sits strictly below the guard tier's
-    per-source watermark. Returns the number of pairs checked."""
-    import os
+    per-source watermark. Returns the number of pairs checked.
 
-    from pyspark.sql import functions as F
-
-    tier_dir = store.tier_path(tier)
-    paths = [os.path.join(tier_dir, f"p_date={d}") for d in victim_dates]
+    The victim rows come from the store's physical row-version view
+    (every version, rolled back or masked ones too), partition-pruned
+    to the victim dates. It hides staged rows; victims holding those
+    are refused by the expiry itself."""
     pairs = (
-        store.spark.read.option("basePath", tier_dir)
-        .parquet(*paths)
+        store.read(tier, deduped=False, p_dates=victim_dates)
         .select("source", "p_date")
         .distinct()
         .collect()

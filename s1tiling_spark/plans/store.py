@@ -30,6 +30,17 @@ encodes the commit that wrote them: ``c<seq>-`` (an append),
 :meth:`TierStore._data_files` is the sole owner of these rules — every
 walk of a tier's live data files goes through it.
 
+Schema: files keep the columns, names and types they were written
+with. Evolution is metadata, recorded as schema ops in the compact
+meta: ``add`` (an append brought columns the tier never had — recorded
+by :meth:`TierStore.append` itself), ``rename``, ``drop`` and
+``widen``. While any op is live (above the compaction horizon) every
+reader scans under the union of the files' footers, widest type per
+column, and resolves names at its horizon; a compaction rewrites every
+file under that union and bakes the ops, after which one footer is the
+tier's schema again. No reader opts into this: the store knows when
+its files disagree.
+
 Commit visibility — which row versions a horizon serves, given WAP
 remaps, hidden staged commits, rollback ranges, the compaction horizon
 and the retention floor — has one owner too: :class:`Visibility`,
@@ -108,6 +119,9 @@ class ConcurrentCommitError(RuntimeError):
 # rewrite dedup another)
 DEFAULT_KEYS = ("bucket_start", "source")
 
+# the columns append() stamps on every row (never data, never schema ops)
+_LINEAGE_COLS = ("commit_seq", "run_id", "p_date")
+
 
 def _sum_exprs(sum_cols: tuple[str, ...]) -> list:
     """The additive fold, shared by read_summed and sum-mode compact —
@@ -185,8 +199,8 @@ class Visibility(NamedTuple):
     - ``min_as_of``: the compaction horizon — history below it is gone;
     - ``retention``: (oldest retained date, expiry seq) of the last
       :meth:`TierStore.expire`, or (None, 0);
-    - ``schema_ops``: the rename/drop/widen ops still live above the
-      compaction horizon (older ones are baked into the files),
+    - ``schema_ops``: the add/rename/drop/widen ops still live above
+      the compaction horizon (older ones are baked into the files),
       seq-ascending — the columns a read resolves against the same
       metadata view as its rows."""
 
@@ -1042,7 +1056,7 @@ class TierStore:
                 del all_ranges[tier]
                 atomic_json_write(path, all_ranges)
 
-    # ---------- schema evolution (rename / drop / widen) ----------
+    # ---------- schema evolution (add / rename / drop / widen) ----------
     # The tier's natural-key and lineage columns are structural: renames
     # would break partitioning, dedup windows and delete-file joins —
     # the same reason Iceberg restricts identifier-field changes. The
@@ -1055,7 +1069,7 @@ class TierStore:
     )
 
     def _schema_ops(self, tier: str) -> list[dict]:
-        """Recorded rename/drop ops for ``tier``, seq-ascending — the
+        """Recorded schema ops for ``tier``, seq-ascending — the
         file-store analog of Iceberg's schema history (field ids)."""
         ops = self._read_compact_meta().get(f"_schema_{tier}", [])
         return sorted(ops, key=lambda o: o["seq"])
@@ -1165,7 +1179,9 @@ class TierStore:
         )
         return seq
 
-    def _align_write_schema(self, tier: str, df: DataFrame) -> DataFrame:
+    def _align_write_schema(
+        self, tier: str, df: DataFrame, commit_seq: int
+    ) -> DataFrame:
         """Write-time schema alignment (the Iceberg write contract):
         every appended batch is resolved against the tier's DECLARED
         (post-schema-ops) types before any file lands.
@@ -1179,8 +1195,14 @@ class TierStore:
           change, exactly Iceberg's rule);
         - a cross-family conflict (string vs int) raises — that is a
           rewrite, not an evolution;
-        - columns the tier has never seen pass through (add-column
-          evolution, served by ``merge_schema`` reads).
+        - columns the tier has never had pass through, and an ``add``
+          schema op is recorded at ``commit_seq`` before any file of
+          the batch moves: every reader then scans under the footer
+          union and serves them (NULL for older rows) until a
+          compaction bakes the op. A name a rename or drop retired is
+          not an addition — it is resolved on read as before;
+        - declared columns the batch omits are written as NULLs, so a
+          baked add never depends on which footer a plain scan samples.
 
         The declared types are memoized per tier (one inference per
         store instance, not per micro-batch); any would-be raise first
@@ -1193,11 +1215,12 @@ class TierStore:
                 return df
             declared = dict(cur.dtypes)
             self._declared_types[tier] = declared
+        dtypes = df.dtypes
 
         def conflicts(decl):
             out = []
-            for name, dt in df.dtypes:
-                if name in ("commit_seq", "run_id", "p_date"):
+            for name, dt in dtypes:
+                if name in _LINEAGE_COLS:
                     continue  # lineage: append overwrites these anyway
                 want = decl.get(name)
                 if want is None or dt == want:
@@ -1210,11 +1233,9 @@ class TierStore:
             # refresh once before judging: the memo may predate a
             # concurrent widen/rename (narrow-vs-wide is re-checked
             # against disk truth, never rejected off a stale memo).
-            # The plain read's schema is ONE footer's view — merge it
-            # with the memo, keeping memo-only columns (add-column
-            # evolutions the footer may not carry) and the wider
-            # spelling per column, so the refresh can only gain
-            # knowledge, never forget it.
+            # Merge the fresh read with the memo, keeping memo-only
+            # columns and the wider spelling per column, so the
+            # refresh can only gain knowledge, never forget it.
             cur = self.read(tier, deduped=False)
             fresh = dict(cur.dtypes) if cur is not None else {}
             for name, t in declared.items():
@@ -1247,16 +1268,27 @@ class TierStore:
                 "families — cast explicitly before append (this is a "
                 "rewrite, not a schema evolution)"
             )
-        # add-column evolution: remember the new columns so a LATER
-        # append's narrower spelling of them is still aligned
-        new_cols = {n: t for n, t in df.dtypes if n not in declared}
-        if new_cols:
-            declared.update(new_cols)
+        cols = [n for n, _ in dtypes]
+        missing = [n for n in declared if n not in cols and n not in _LINEAGE_COLS]
+        if missing:
+            df = df.select(
+                "*", *[F.lit(None).cast(declared[n]).alias(n) for n in missing]
+            )
+        new = [n for n in cols if n not in declared and n not in _LINEAGE_COLS]
+        if new:
+            ops = self._schema_ops(tier)
+            retired = {o["from"] for o in ops if o["kind"] == "rename"}
+            retired |= {o["col"] for o in ops if o["kind"] == "drop"}
+            added = [n for n in new if n not in retired]
+            if added:
+                self._record_schema_op(
+                    tier, {"kind": "add", "cols": added, "seq": int(commit_seq)}
+                )
         return df
 
     def _union_read_schema(self, tier: str, ops: list[dict]):
         """Explicit requested scan schema for a read whose files may
-        disagree (``merge_schema``, or any live schema op): the
+        disagree (any live schema op, or compact's rewrite): the
         per-footer field union — renames' two spellings and added
         columns (NULL back-filled for files without them) — with the
         WIDEST type per column, then any live widen targets applied on
@@ -1312,17 +1344,18 @@ class TierStore:
         """Requested scan schema from ONE parquet footer, read
         driver-side with pyarrow — no Spark schema-inference job.
 
-        Every plain (no live schema ops, no ``merge_schema``) scan in
-        the store pays a tiny Spark job just to infer a schema that is,
-        by the write contract, identical across the tier's files
+        Every plain (no live schema op) scan in the store would pay a
+        tiny Spark job to infer a schema that is, by the write
+        contract, identical across the tier's files
         (:meth:`_align_write_schema` resolves every appended batch
         against the declared types before a file lands). Profiled
         (r6): ~10 such inference jobs per matview refresh, each a full
         job-latency round trip — pure fixed cost at any scale. Reading
         one footer driver-side is exactly the "one footer's view" an
         inferred plain scan serves, made deterministic (the caller
-        picks the sample file; scans of mixed-schema tiers go through
-        ``merge_schema``/``_union_read_schema``, never here).
+        picks the sample file; a tier whose files disagree has a live
+        schema op and scans through ``_union_read_schema``, never
+        here).
 
         Data columns only: ``p_date`` stays inference-appended by
         partition discovery, identical to plain reads (same discipline
@@ -1683,7 +1716,7 @@ class TierStore:
             if prior.get("state", "committed") == "committed":
                 return 0
             self._remove_commit_files(tier, int(prior["commit_seq"]))
-        df = self._align_write_schema(tier, df)
+        df = self._align_write_schema(tier, df, commit_seq)
         out = (
             df.withColumn("commit_seq", F.lit(commit_seq))
             .withColumn("run_id", F.lit(run_id))
@@ -2013,15 +2046,10 @@ class TierStore:
         deduped: bool = True,
         keys: tuple[str, ...] = DEFAULT_KEYS,
         as_of_seq: int | None = None,
-        merge_schema: bool = False,
-        ref: str | None = None,
         branch: str | None = None,
         p_dates: list | None = None,
         sources: list | None = None,
-        canonical_names: bool = False,
-        min_seq_hint: int | None = None,
         audit_seq: int | None = None,
-        _staged_raw: bool = False,
     ) -> DataFrame | None:
         """Read a tier table; with ``deduped`` the newest commit wins per
         natural key (default (bucket_start, source); histogram tables add
@@ -2034,38 +2062,25 @@ class TierStore:
         equality deletes (``deduped=False`` is the physical row-version
         view — compact, snapshots, additive folds).
 
-        Schema evolution (rename/drop/widen — :meth:`rename_column` /
-        :meth:`drop_column` / :meth:`widen_column`) is applied as
-        metadata, Iceberg field-id style: files keep whatever names
-        they were written with; the read coalesces a renamed column's
-        physical names into the name the requested horizon used (an
-        as-of read BELOW the rename seq serves the OLD name), and drops
-        are hidden only at horizons at/after their seq.
-        ``canonical_names=True`` serves CURRENT names/drops regardless
-        of horizon — for consumers that must align two horizons'
-        schemas (``changes``) or rewrite files (``compact``).
+        Schema evolution is applied as metadata, Iceberg field-id
+        style (see the module docstring): a column a later append
+        added is served for every row (NULL where its file lacks it);
+        a renamed column's physical names are coalesced into the name
+        the requested horizon used (an as-of read BELOW the rename seq
+        serves the OLD name); drops are hidden only at horizons at or
+        after their seq.
 
         ``as_of_seq``: snapshot-as-of (time-travel) read — reconstruct
         the table state as of commit ``as_of_seq`` by restricting the
         MERGE-on-read to versions with ``commit_seq <= as_of_seq``.
         The Iceberg ``VERSION AS OF`` analog on the existing commit_seq
         lineage (reference analog: restart-from-existing-products,
-        `/root/reference/s1tiling/libs/otbpipeline.py:814-819`).
+        `/root/reference/s1tiling/libs/otbpipeline.py:814-819`); a
+        named tag reads as ``as_of_seq=self.resolve_ref(name)``.
         Raises if a compaction has expired history below that horizon
         (``min_as_of``), or if a retention expiry dropped dates of that
         state and ``p_dates`` does not exclude them — a silent wrong
         answer is never returned.
-
-        ``merge_schema``: schema-evolution read (Iceberg add-column
-        analog). Appends may carry NEW columns; with ``merge_schema``
-        the scan requests the union of every file's footer schema and
-        back-fills old rows with NULL. Opt-in because it reads every
-        footer up front — at 10^12-row scale that is a metadata storm
-        to pay only after an actual evolution (a real Iceberg catalog
-        serves the current schema from the table metadata instead).
-
-        ``ref``: read as of a named tag (:meth:`tag`) — sugar for
-        ``as_of_seq=self.resolve_ref(ref)``.
 
         ``branch``: read a writable branch (:meth:`create_branch`) —
         main as of the branch's base snapshot plus the branch's own
@@ -2075,9 +2090,8 @@ class TierStore:
 
         ``p_dates``: restrict the scan to these partition dates —
         static partition pruning for callers that already know which
-        dates can matter (``changes(prune_partitions=True)`` derives
-        them from the touched keys). The filter sits directly on the
-        partition column, so unlisted dates are never opened.
+        dates can matter. The filter sits directly on the partition
+        column, so unlisted dates are never opened.
 
         ``sources``: restrict the read to these sources. Semantically a
         row filter on ``source`` applied BEFORE the MERGE-on-read dedup
@@ -2088,17 +2102,9 @@ class TierStore:
         none of the requested sources — the single-source serving read
         scans O(that source's files), not O(all files of the date).
 
-        ``min_seq_hint``: incremental file skipping
-        (:meth:`_plan_files_above_seq`). A pure OPTIMIZATION hint —
-        the caller promises it will anyway discard rows with
-        ``commit_seq <= min_seq_hint``, so the scan may plan only the
-        files whose name-encoded max seq exceeds the hint. The hint
-        never changes results; it changes which files the plan lists.
+        ``audit_seq``: also serve that staged commit's rows
+        (:meth:`audit_read`).
         """
-        if ref is not None:
-            if as_of_seq is not None:
-                raise ValueError("pass as_of_seq or ref, not both")
-            as_of_seq = self.resolve_ref(ref)
         chain: list[int] = []
         if branch is not None:
             # a branch read is main AS OF the branch's base snapshot
@@ -2106,7 +2112,7 @@ class TierStore:
             # branch's own commit chain exposed past that horizon
             if as_of_seq is not None or audit_seq is not None:
                 raise ValueError(
-                    "branch reads cannot combine with as_of_seq/ref/audit_seq"
+                    "branch reads cannot combine with as_of_seq/audit_seq"
                 )
             as_of_seq, chain = self._branch_seqs(tier, branch)
         vis = self._visibility(tier)
@@ -2115,12 +2121,8 @@ class TierStore:
             vis,
             horizon=as_of_seq,
             exposed=chain if audit_seq is None else [int(audit_seq)],
-            merge_schema=merge_schema,
             p_dates=p_dates,
             sources=sources,
-            canonical_names=canonical_names,
-            min_seq_hint=min_seq_hint,
-            staged_raw=_staged_raw,
         )
         if df is None:
             return None
@@ -2216,14 +2218,29 @@ class TierStore:
         drop_horizon: int | None = None,
     ) -> DataFrame | None:
         """The row-version view every reader starts from (see
-        :meth:`read` for the arguments): one scan of the tier's live
-        files, columns resolved through ``vis.schema_ops`` at
-        ``horizon``, WAP remap/hide applied (unless ``staged_raw``),
-        then the partition and source row filters. No horizon filter
-        and no masks — the caller applies those from the same ``vis``.
-        ``drop_horizon`` (compact) bounds which drops are physically
-        applied so history-preserving compaction keeps columns its
-        preserved snapshots still show. None for an empty tier."""
+        :meth:`read` for the shared arguments): one scan of the tier's
+        live files, columns resolved through ``vis.schema_ops`` at
+        ``horizon``, WAP remap/hide applied, then the partition and
+        source row filters. No horizon filter and no masks — the
+        caller applies those from the same ``vis``. None for an empty
+        tier. The internal readers' options:
+
+        - ``merge_schema`` (compact): scan under the all-footer union
+          even with no live schema op — a rewrite must carry every
+          column any file has;
+        - ``canonical_names`` (changes, compact): serve CURRENT
+          names and drops regardless of ``horizon``, so two horizons'
+          images align and rewrites come out under current names;
+        - ``min_seq_hint`` (read_incremental, changes): plan only the
+          files whose name-encoded max seq exceeds the hint
+          (:meth:`_plan_files_above_seq`). The caller promises to
+          discard rows with ``commit_seq <= min_seq_hint`` anyway, so
+          the hint changes which files are listed, never the result;
+        - ``staged_raw`` (compact): skip the WAP remap/hide — the
+          staged rows' physical truth;
+        - ``drop_horizon`` (compact): bound which drops are physically
+          applied so history-preserving compaction keeps columns its
+          preserved snapshots still show."""
         path = self.tier_path(tier)
         # partition dirs can exist EMPTY (a torn keyed commit whose files
         # the replay repair removed, a crash between mkdir and the file
@@ -2236,9 +2253,9 @@ class TierStore:
         ops = vis.schema_ops
         reader = self.spark.read.option("basePath", path)
         if merge_schema or ops:
-            # files may disagree on column names (live rename/drop, added
-            # columns) or types (live widen): request the footer-union
-            # schema, widest type per column
+            # files may disagree on columns (live add/rename/drop) or
+            # types (live widen): request the footer-union schema,
+            # widest type per column
             reader = reader.schema(self._union_read_schema(tier, ops))
         else:
             # plain scan: explicit footer schema (driver-side pyarrow,
@@ -2296,15 +2313,7 @@ class TierStore:
         ``SortAggregate(partial_max)`` → ``Exchange`` → ``SortAggregate``,
         with a sort on each side of the exchange. Tie order among
         equal seqs is deterministic (struct field compare). Map
-        columns are not orderable, so map-bearing relations rank with
-        a window instead."""
-        if any("map<" in t for _, t in df.dtypes):
-            w = Window.partitionBy(*keys).orderBy(F.desc("commit_seq"))
-            return (
-                df.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .drop("_rk")
-            )
+        columns are not orderable; no stored relation carries one."""
         val_cols = [c for c in df.columns if c not in keys]
         img = F.struct(
             *[
@@ -2332,7 +2341,6 @@ class TierStore:
         keys: tuple[str, ...],
         sum_cols: tuple[str, ...],
         as_of_seq: int | None = None,
-        ref: str | None = None,
     ) -> DataFrame | None:
         """ADDITIVE merge-on-read: fold all row versions per key with a
         grouped SUM instead of newest-wins. For tiers whose appended
@@ -2351,10 +2359,6 @@ class TierStore:
         batch after the fact — summing is exactly what it does."""
         if not sum_cols:
             raise ValueError("read_summed requires sum_cols")
-        if ref is not None:
-            if as_of_seq is not None:
-                raise ValueError("pass as_of_seq or ref, not both")
-            as_of_seq = self.resolve_ref(ref)
         vis = self._visibility(tier)
         df = self._scan(tier, vis, horizon=as_of_seq)
         if df is None:
@@ -2647,7 +2651,6 @@ class TierStore:
         to_seq: int | None = None,
         keys: tuple[str, ...] = DEFAULT_KEYS,
         split_updates: bool = False,
-        prune_partitions: bool = False,
     ) -> DataFrame | None:
         """CDC changelog (Iceberg ``create_changelog_view`` analog):
         the row-level diff between the table state as of ``from_seq``
@@ -2667,18 +2670,18 @@ class TierStore:
         are expanded by ``inline`` at the end — the touched-key reads
         are never duplicated.
 
-        ``prune_partitions``: every touched key carries its
-        ``bucket_start``, so the touched set determines exactly which
-        ``p_date`` partitions the two as-of states need — collect those
-        dates (tiny: one value per touched calendar day) and open ONLY
-        them. This is what makes an incremental consumer O(touched
-        days) in scan I/O instead of re-reading the whole table twice:
-        at 10^12 rows a late-data refresh touching one day opens one
-        partition, not a thousand. The touched relation itself stays
-        cheap without pruning — its ``commit_seq > from`` predicate is
-        pushed to the parquet row-group stats, and compacted history
-        sits in low-seq row groups that the scan skips. Requires
-        ``bucket_start`` in ``keys``.
+        Partition pruning: whenever ``bucket_start`` is in ``keys``,
+        every touched key carries it, so the touched set determines
+        exactly which ``p_date`` partitions the two as-of states need —
+        those dates (tiny: one value per touched calendar day) are the
+        only ones opened. This is what makes an incremental consumer
+        O(touched days) in scan I/O instead of re-reading the whole
+        table twice: at 10^12 rows a late-data refresh touching one day
+        opens one partition, not a thousand. The touched relation
+        itself stays cheap either way — its ``commit_seq > from``
+        predicate is pushed to the parquet row-group stats, and
+        compacted history sits in low-seq row groups that the scan
+        skips.
 
         Needs exact history at ``from_seq``, so both horizons pass the
         tier's :meth:`Visibility.check` (raises past expired history —
@@ -2752,12 +2755,7 @@ class TierStore:
                 touched = touched.unionByName(deleted_keys(dkeys, dels.filter(voided)))
         touched = touched.distinct()
         p_dates = None
-        if prune_partitions:
-            if "bucket_start" not in keys:
-                raise ValueError(
-                    "prune_partitions requires 'bucket_start' in keys "
-                    "(the touched set must determine the touched dates)"
-                )
+        if "bucket_start" in keys:
             # Fast path (r6): derive the touched DATES driver-side from
             # the commit manifest the file names already are (c<seq>- /
             # m<maxseq>- data files per partition dir, d<seq>- delete
@@ -3239,10 +3237,10 @@ class TierStore:
             return sum(1 for _ in self._data_files(path))
 
         files_before = _count_files()
-        # merge_schema: a rewrite must carry EVERY column any file has —
-        # a single-footer schema would silently drop a column added by
-        # a later (schema-evolved) append. Compact reads all footers
-        # anyway; the union cost is amortized by the full rewrite.
+        # merge_schema: a rewrite must carry EVERY column any file has,
+        # live add op or not (a store written before add ops were
+        # recorded). Compact reads all footers anyway; the union cost
+        # is amortized by the full rewrite.
         # canonical_names: the rewrite bakes renames in (files come out
         # uniformly under current names; as-of display below a rename
         # stays a metadata reverse-map). drop_horizon: physically apply

@@ -43,8 +43,8 @@ Skew: groupBy partial aggregation already collapses the hot source
 map-side (the aggregate equivalent of salting), and AQE handles skewed
 shuffle reads. Where partial agg can't help — grouped-map kernels like
 block compression, where one (source, block) group is one Python worker
-call — an explicit salt sub-splits hot groups (see
-``operators/compress.py`` + ``salt_col``). MEASURED at an 80 %-hot
+call — an explicit salt sub-splits hot groups (``compress_blocks``'s
+``n_salts`` in ``operators/compress.py``). MEASURED at an 80 %-hot
 source (PERF.md §14): cascade
 1.15× hot-vs-uniform (neutral), salted compress 6.3× over unsalted,
 AQE skew-join split 2.3× with `skew=true` in the final plan.
@@ -75,11 +75,6 @@ from s1tiling_spark.plans.store import DEFAULT_KEYS, TierStore, new_run_id
 
 STAT_COLS = ("bucket_start", "source", "cnt", "sum_n_tok", "min_n_tok", "max_n_tok")
 HIST_KEYS = ("bucket_start", "source", "bin")
-
-
-def salt_col(key: Column, n_salts: int) -> Column:
-    """Deterministic salt in [0, n_salts) from a high-cardinality key."""
-    return F.pmod(F.xxhash64(key), F.lit(n_salts)).cast("int")
 
 
 def _sql_list(values) -> str:

@@ -38,3 +38,32 @@ def assert_frames_match(actual: pd.DataFrame, expected: pd.DataFrame, rtol: floa
 
 def assert_spark_matches_duck(spark_df, duck_con, sql: str, rtol: float = 1e-9):
     assert_frames_match(spark_df.toPandas(), duck_con.sql(sql).df(), rtol=rtol)
+
+
+def diff_of_states(store, tier, ch, from_seq, split_updates=True):
+    """Independent reference for ``store.changes(tier, from_seq)`` under
+    the default keys: the per-key diff of two unpruned as-of reads,
+    ``from_seq`` and the head, as a pandas frame in the changelog
+    ``ch``'s column layout."""
+    keys = ("bucket_start", "source")
+
+    def by_key(seq):
+        df = store.read(tier, as_of_seq=seq)
+        return {tuple(r[k] for k in keys): r.asDict() for r in df.collect()}
+
+    pre, post = by_key(from_seq), by_key(store.last_commit_seq())
+    rows = []
+    for k in pre.keys() | post.keys():
+        a, b = pre.get(k), post.get(k)
+        if a is None:
+            rows.append({**b, "op": "insert"})
+        elif b is None:
+            rows.append({**a, "op": "delete"})
+        elif a["commit_seq"] != b["commit_seq"]:
+            if split_updates:
+                rows += [{**a, "op": "update_before"}, {**b, "op": "update_after"}]
+            else:
+                rows.append({**b, "op": "update"})
+    return store.spark.createDataFrame(
+        [tuple(r[c] for c in ch.columns) for r in rows], ch.schema
+    ).toPandas()

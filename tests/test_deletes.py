@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from s1tiling_spark.operators.rollup import rollup_sequences
 from s1tiling_spark.plans.store import TierStore
 from s1tiling_spark.sources.synth import synth_sequences
-from tests.helpers import assert_frames_match
+from tests.helpers import assert_frames_match, diff_of_states
 
 
 @pytest.fixture()
@@ -408,12 +408,12 @@ def test_changes_split_updates_emits_before_and_after_images(spark, seq, tmp_pat
 def test_changes_pruned_equals_unpruned_through_delete_and_rollback(
     spark, seq, tmp_path
 ):
-    """prune_partitions must be a pure optimization: the pruned
-    changelog equals the unpruned one through updates, an equality
-    delete AND a rollback horizon crossing — and the derived p_date
-    filter must reach the scan's PartitionFilters (not a post-scan
-    DataFilter), or the PERF.md §19 O(touched days) claim silently
-    reverts to full-table reads."""
+    """Partition pruning must be a pure optimization: the (pruned)
+    changelog equals the diff of two unpruned as-of reads through
+    updates, an equality delete AND a rollback horizon crossing — and
+    the derived p_date filter must reach the scan's PartitionFilters
+    (not a post-scan DataFilter), or the PERF.md §19 O(touched days)
+    claim silently reverts to full-table reads."""
     import io
     from contextlib import redirect_stdout
 
@@ -433,14 +433,9 @@ def test_changes_pruned_equals_unpruned_through_delete_and_rollback(
     store.delete("1d", victim, s3, "run-del")
     store.rollback("1d", s2)
 
-    kw = dict(from_seq=s1, split_updates=True)
-    pruned = store.changes("1d", prune_partitions=True, **kw).toPandas()
-    unpruned = store.changes("1d", prune_partitions=False, **kw).toPandas()
-    key_cols = ["op", "bucket_start", "source"]
-    assert_frames_match(
-        pruned.sort_values(key_cols).reset_index(drop=True),
-        unpruned.sort_values(key_cols).reset_index(drop=True),
-    )
+    ch = store.changes("1d", from_seq=s1, split_updates=True)
+    pruned = ch.toPandas()
+    assert_frames_match(pruned, diff_of_states(store, "1d", ch, s1))
     assert len(pruned) > 0
 
     # the static date list must prune AT THE SCAN
@@ -516,8 +511,8 @@ def test_changes_group_delete_prefix_expands_touched_keys(spark, seq, tmp_path):
     the group — the touched-key expansion has to go through the table
     scan because the delete file does not carry ``bucket_start``.
     (Row-level deletes take a direct path: the delete rows ARE the
-    touched keys — this test pins the OTHER branch.) Pruned and
-    unpruned changelogs must agree through it."""
+    touched keys — this test pins the OTHER branch.) The changelog
+    must equal the diff of two unpruned as-of reads through it."""
     store = TierStore(spark, str(tmp_path / "grp_ch"))
     full = rollup_sequences(seq, "1d").cache()
     s1 = store.next_commit_seq()
@@ -532,14 +527,9 @@ def test_changes_group_delete_prefix_expands_touched_keys(spark, seq, tmp_path):
         "run-grp-del",
         keys=("source",),
     )
-    kw = dict(from_seq=s1, split_updates=True)
-    pruned = store.changes("1d", prune_partitions=True, **kw).toPandas()
-    unpruned = store.changes("1d", prune_partitions=False, **kw).toPandas()
-    key_cols = ["op", "bucket_start", "source"]
-    assert_frames_match(
-        pruned.sort_values(key_cols).reset_index(drop=True),
-        unpruned.sort_values(key_cols).reset_index(drop=True),
-    )
+    ch = store.changes("1d", from_seq=s1, split_updates=True)
+    pruned = ch.toPandas()
+    assert_frames_match(pruned, diff_of_states(store, "1d", ch, s1))
     # every key of the group is a delete row; nothing else changed
     assert set(pruned["op"]) == {"delete"}
     assert set(pruned["source"]) == {"src_hot"}

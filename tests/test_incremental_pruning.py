@@ -6,10 +6,10 @@ Without it every incremental batch lists and opens the whole table's
 footers just to let row-group stats discard compacted history; at
 10^12 rows that metadata storm is the thing manifests exist to avoid.
 
-Correctness contract: `min_seq_hint` is a pure optimization hint — the
-caller always re-filters on commit_seq, so a skipped file may only be
-one whose every row the filter would drop anyway. Legacy (unprefixed)
-files are conservatively included.
+Correctness contract: `_scan`'s `min_seq_hint` is a pure optimization
+hint — the caller always re-filters on commit_seq, so a skipped file
+may only be one whose every row the filter would drop anyway. Legacy
+(unprefixed) files are conservatively included.
 """
 
 from __future__ import annotations
@@ -73,8 +73,8 @@ def test_plan_skips_compacted_history(spark, tmp_path):
     planned = store._plan_files_above_seq("t", seqs[2], store._visibility("t"))
     assert planned is not None and len(planned) == 2
     assert all(os.path.basename(p).startswith(f"c") for p in planned)
-    # read with the hint scans exactly those files
-    df = store.read("t", deduped=False, min_seq_hint=seqs[2])
+    # a scan with the hint reads exactly those files
+    df = store._scan("t", store._visibility("t"), min_seq_hint=seqs[2])
     opened = {os.path.basename(p) for p in df.inputFiles()}
     assert opened == {os.path.basename(p) for p in planned}
     # p_date partition parsing is preserved on the explicit file list
@@ -121,7 +121,8 @@ def test_hint_never_changes_results_under_mixed_layout(spark, tmp_path):
         plain = store.read("t", deduped=False).filter(
             F.col("commit_seq") > cursor
         )
-        hinted = store.read("t", deduped=False, min_seq_hint=cursor).filter(
+        vis = store._visibility("t")
+        hinted = store._scan("t", vis, min_seq_hint=cursor).filter(
             F.col("commit_seq") > cursor
         )
         a = sorted((r["v"], r["commit_seq"]) for r in plain.collect())

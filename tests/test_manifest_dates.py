@@ -19,6 +19,7 @@ from datetime import date, datetime
 from pyspark.sql import functions as F
 
 from s1tiling_spark.plans.store import TierStore
+from tests.helpers import assert_frames_match, diff_of_states
 
 SCHEMA = "bucket_start timestamp, source string, cnt long"
 
@@ -63,15 +64,15 @@ def test_manifest_dates_cover_appends_and_deletes(spark, tmp_path):
         date(2024, 2, 1), date(2024, 2, 2), date(2024, 2, 3),
         date(2024, 2, 4),
     }
-    # and the changelog built on top is exact for the range
-    ch = st.changes(
-        "1h", from_seq=1, keys=("bucket_start", "source"),
-        prune_partitions=True,
-    )
+    # and the (pruned) changelog built on top is exact for the range
+    ch = st.changes("1h", from_seq=1)
     got = {(r["op"], r["source"]) for r in ch.collect()}
     assert ("insert", "a") in got  # the 02-03 append
     # the 02-04 delete named a key with no live row: no diff row for it
     assert all(src != "zz" for _, src in got)
+    assert_frames_match(
+        ch.toPandas(), diff_of_states(st, "1h", ch, 1, split_updates=False)
+    )
 
 
 def test_manifest_dates_decline_on_crossing_and_staged(spark, tmp_path):
@@ -110,9 +111,9 @@ def test_manifest_dates_decline_without_bucket_start_key(spark, tmp_path):
     handled, dates = st._touched_dates_from_manifest("1h", 0, 2, st._visibility("1h"))
     assert not handled and dates is None
     # the generic path still produces the exact changelog
-    ch = st.changes(
-        "1h", from_seq=1, keys=("bucket_start", "source"),
-        prune_partitions=True,
-    )
+    ch = st.changes("1h", from_seq=1)
     got = {(r["op"], r["source"]) for r in ch.collect()}
     assert got == {("delete", "a")}
+    assert_frames_match(
+        ch.toPandas(), diff_of_states(st, "1h", ch, 1, split_updates=False)
+    )

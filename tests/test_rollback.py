@@ -251,7 +251,9 @@ def test_tags_resolve_and_guard(spark, seq, tmp_path):
     s2 = store.next_commit_seq()
     store.append("1d", b1.withColumn("cnt", F.col("cnt") * 2), s2, "run-2")
     # tag read == as-of read at the pinned seq
-    assert_frames_match(_state(store, "1d", ref="v1"), state1)
+    assert_frames_match(
+        _state(store, "1d", as_of_seq=store.resolve_ref("v1")), state1
+    )
     assert store.resolve_ref("v1") == s1
 
     with pytest.raises(ValueError, match="already points"):
@@ -262,8 +264,9 @@ def test_tags_resolve_and_guard(spark, seq, tmp_path):
         store.tag("v2", seq=s2 + 99)
     with pytest.raises(KeyError):
         store.resolve_ref("nope")
-    with pytest.raises(ValueError, match="not both"):
-        store.read("1d", ref="v1", as_of_seq=s1)
+    # a tag is resolved by the caller, never passed to a read
+    with pytest.raises(TypeError, match="ref"):
+        store.read("1d", ref="v1")
     store.drop_tag("v1")
     assert "v1" not in store.tags()
 

@@ -9,8 +9,8 @@ Two Iceberg semantics completing the TierStore story:
   at the scan. The test proves the mechanism (file-level ordering via
   the parquet footer/page data itself) and that clustering changes
   nothing about MERGE-on-read results.
-- ``read(merge_schema=True)`` = add-column schema evolution: later
-  appends may carry new columns; old rows surface them as NULL.
+- add-column schema evolution: a later append may carry new columns;
+  every reader serves them, old rows as NULL, without opting in.
 
 Reference analog: the rewrite discipline mirrors the reference's
 tmp→rename product re-write (`/root/reference/s1tiling/libs/
@@ -142,7 +142,7 @@ def test_schema_evolution_merge_read(spark, seq, tmp_path):
     s2 = store.next_commit_seq()
     store.append("1d", late, s2, "run-2")
 
-    df = store.read("1d", merge_schema=True)
+    df = store.read("1d")
     assert "quality_flag" in df.columns
     pdf = df.toPandas()
     old = pdf[pdf["commit_seq"] == s1]
@@ -154,15 +154,113 @@ def test_schema_evolution_merge_read(spark, seq, tmp_path):
     # disjoint date ranges: merge-read row count is the sum
     assert len(pdf) == early.count() + late.count()
 
-    # evolution survives a clustered rewrite (compact reads WITH
-    # merge_schema would drop nothing; default read picks one footer's
-    # schema — exercise the documented path: merge-read after compact)
+    # evolution survives a clustered rewrite
     store.compact(
         "1d", cluster_by=("source", "bucket_start"),
     )
-    pdf2 = store.read("1d", merge_schema=True).toPandas()
+    pdf2 = store.read("1d").toPandas()
     assert "quality_flag" in pdf2.columns
     assert len(pdf2) == len(pdf)
+
+
+_ADD_SCHEMA = "bucket_start timestamp, source string, v long"
+
+
+def _add_rows(spark, rows, with_flag=False):
+    """Rows of (ts, source, v[, n_flag]); ``with_flag`` adds the
+    ``n_flag`` column the tier did not have."""
+    from datetime import datetime
+
+    return spark.createDataFrame(
+        [(datetime.fromisoformat(ts), *rest) for ts, *rest in rows],
+        _ADD_SCHEMA + (", n_flag long" if with_flag else ""),
+    )
+
+
+def _served(store, as_of, from_seq):
+    """What each reader serves of the added ``n_flag`` column."""
+
+    def rows(df, *cols):
+        assert "n_flag" in df.columns, df.columns
+        return {tuple(r[c] for c in cols) for r in df.collect()}
+
+    summed = store.read_summed(
+        "t", keys=("bucket_start", "source"), sum_cols=("v", "n_flag")
+    )
+    return {
+        "read": rows(store.read("t"), "source", "v", "n_flag"),
+        "snapshot": rows(store.snapshot("t"), "source", "v", "n_flag"),
+        "as_of": rows(store.read("t", as_of_seq=as_of), "source", "v", "n_flag"),
+        "incremental": rows(
+            store.read_incremental("t", from_seq=from_seq), "source", "v", "n_flag"
+        ),
+        "changes": rows(store.changes("t", from_seq=from_seq), "op", "source", "n_flag"),
+        "summed": rows(summed, "source", "v", "n_flag"),
+    }
+
+
+@pytest.mark.parametrize("new_day", ["2024-01-05", "2024-01-20"], ids=["before", "after"])
+def test_added_column_served_by_every_reader(spark, tmp_path, new_day):
+    """An append that brings a column the tier never had is served by
+    every reader, NULL for older rows, with no reader opting in:
+    whether the new column's file sorts before or after the old files,
+    after a compaction that bakes the add, and after a later append
+    that omits the column and lands in the earliest partition (the
+    footer a plain scan samples)."""
+    store = TierStore(spark, str(tmp_path / "add"))
+    s1 = store.next_commit_seq()
+    store.append(
+        "t",
+        _add_rows(spark, [("2024-01-10 10:00:00", "a", 1), ("2024-01-11 10:00:00", "b", 2)]),
+        s1,
+        "b1",
+    )
+    # a new key on new_day plus a new version of key a: the second
+    # version makes a full compaction's horizon cover the add
+    s2 = store.next_commit_seq()
+    store.append(
+        "t",
+        _add_rows(
+            spark,
+            [(f"{new_day} 10:00:00", "c", 3, 7), ("2024-01-10 10:00:00", "a", 5, 9)],
+            with_flag=True,
+        ),
+        s2,
+        "b2",
+    )
+    state = {("a", 5, 9), ("b", 2, None), ("c", 3, 7)}
+    assert _served(store, s2, s1) == {
+        "read": state,
+        "snapshot": state,
+        "as_of": state,
+        "incremental": {("a", 5, 9), ("c", 3, 7)},
+        "changes": {("update", "a", 9), ("insert", "c", 7)},
+        "summed": {("a", 6, 9), ("b", 2, None), ("c", 3, 7)},
+    }
+
+    store.compact("t")
+    assert store.min_as_of("t") >= s2  # the add is baked into the files
+    compacted = {
+        "read": state,
+        "snapshot": state,
+        "as_of": state,
+        "incremental": set(),
+        "changes": set(),
+        "summed": state,
+    }
+    assert _served(store, s2, s2) == compacted
+
+    s3 = store.next_commit_seq()
+    store.append("t", _add_rows(spark, [("2024-01-01 10:00:00", "d", 4)]), s3, "b3")
+    head = state | {("d", 4, None)}
+    assert _served(store, s2, s2) == {
+        "read": head,
+        "snapshot": head,
+        "as_of": state,
+        "incremental": {("d", 4, None)},
+        "changes": {("insert", "d", None)},
+        "summed": head,
+    }
 
 
 def test_maybe_compact_triggers_on_version_ratio(spark, seq, tmp_path):
@@ -593,7 +691,7 @@ def test_append_aligns_add_column_evolutions_later_spelling(spark, tmp_path):
                 if fn.endswith(".parquet"):
                     sch = pq.read_schema(os.path.join(pdir, fn))
                     assert str(sch.field("extra").type) == "int64"
-    cur = store.read("t", merge_schema=True)
+    cur = store.read("t")
     assert dict(cur.dtypes)["extra"] == "bigint"
     got = {(r["source"], r["v"], r["extra"]) for r in cur.collect()}
     assert got == {("a", 7, None), ("b", 8, 6_000_000_000), ("c", 9, 11)}

@@ -104,7 +104,8 @@ def test_store_views_agree_with_the_walker(layout):
     planned = store._plan_files_above_seq("t", s1, store._visibility("t"))
     assert planned == [f.path for f in walked if f.seq is None or f.seq > s1]
     assert _paths(store.read("t", deduped=False)) == {f.path for f in walked}
-    assert _paths(store.read("t", deduped=False, min_seq_hint=s1)) == set(planned)
+    hinted = store._scan("t", store._visibility("t"), min_seq_hint=s1)
+    assert _paths(hinted) == set(planned)
 
 
 def test_partition_vanishing_mid_walk_does_not_fail_read(layout, monkeypatch):

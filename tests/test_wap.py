@@ -293,7 +293,7 @@ def test_stage_repairs_torn_prior_attempt(spark, tmp_path):
     second = store.stage("t", _rows(spark, ("b", 2, 51)), "cand-r", "audit-1")
     assert second != first
     # torn attempt's rows are gone; only the restaged candidate exists
-    raw = store.read("t", deduped=False, _staged_raw=True)
+    raw = store._scan("t", store._visibility("t"), staged_raw=True)
     assert raw.filter(f"commit_seq = {first}").count() == 0
     assert [e["state"] for e in store._staged_entries("t")] == ["staged"]
     store.publish("t", "audit-1")
