@@ -16,8 +16,9 @@ Subcommands:
   snapshots  list commits still present in a tier (time-travel catalog)
   files      file-level metadata table: rows/bytes/commit-seq range per
              parquet file, from footers only (Iceberg table.files)
-  partitions partition-level summary: files/rows/bytes/seq span per
-             p_date (Iceberg table.partitions; footers only)
+  partitions partition-level summary: days spanned, files/rows/bytes
+             and seq span per p_date (Iceberg table.partitions;
+             footers only; 1d/hist_1d partitions span a 30d bucket)
   backfill   bucket-aligned window recompute from a corrected raw table
   rollback   void commits after a snapshot for current reads
              (Iceberg rollback_to_snapshot; metadata-only)
@@ -57,7 +58,7 @@ def main(argv: list[str] | None = None) -> int:
     synth.add_argument("--out", required=True)
     synth.add_argument("--seed", type=int, default=42)
 
-    exp = sub.add_parser("expire", help="retention: drop partitions before date")
+    exp = sub.add_parser("expire", help="retention: expire rows dated before date")
     exp.add_argument("--store", required=True)
     exp.add_argument("--tier", required=True)
     exp.add_argument("--before", required=True, help="YYYY-MM-DD")
@@ -147,8 +148,9 @@ def main(argv: list[str] | None = None) -> int:
 
     pts = sub.add_parser(
         "partitions",
-        help="partition-level summary: files/rows/bytes/seq span per "
-        "p_date (Iceberg table.partitions analog; footers only)",
+        help="partition-level summary: days spanned (p_date to end_date), "
+        "files/rows/bytes/seq span per p_date (Iceberg table.partitions "
+        "analog; footers only; 1d/hist_1d partitions span a 30d bucket)",
     )
     pts.add_argument("--store", required=True)
     pts.add_argument("--tier", required=True)

@@ -29,7 +29,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,6 +67,45 @@ def bucket_floor(tier: str, ts: datetime) -> datetime:
         raise ValueError(f"unknown tier {tier!r}")
     span = timedelta(seconds=TIER_SPAN_S[tier])
     return _EPOCH + (ts - _EPOCH) // span * span
+
+
+def partition_tier(tier: str) -> str:
+    """The one partition rule of the tier store: a ``tier`` row lands in
+    the partition named by the start date of its bucket in the tier
+    above it in the cascade. 1d and hist_1d partition by their 30d
+    bucket. Every other tier partitions by day: 1h (the tier above it
+    is 1d), the tiers whose day partitions already hold one 30d bucket
+    each (30d, hist_30d, blocks_1h) and tiers the cascade does not
+    know."""
+    return "30d" if tier in ("1d", "hist_1d") else "1d"
+
+
+def _epoch_date(ts: Column, span_s: int) -> Column:
+    """UTC start date (a DATE) of the epoch-aligned ``span_s`` bucket
+    holding ``ts``, whatever the session time zone. ``unix_seconds``
+    floors, like :func:`bucket_col`."""
+    days = F.floor(F.unix_seconds(ts) / span_s) * (span_s // 86_400)
+    return F.date_from_unix_date(days.cast("int"))
+
+
+def utc_date(ts: Column) -> Column:
+    """The UTC date of ``ts``: the day a reader asks a tier for."""
+    return _epoch_date(ts, 86_400)
+
+
+def partition_col(ts: Column, tier: str) -> Column:
+    """Spark side of :func:`partition_floor`: the partition date of a
+    ``tier`` row whose bucket starts at ``ts``."""
+    return _epoch_date(ts, TIER_SPAN_S[partition_tier(tier)])
+
+
+def partition_floor(tier: str, ts: datetime | date) -> date:
+    """Driver-side :func:`partition_col`: the partition date of a
+    ``tier`` row whose bucket starts at ``ts`` (naive UTC; a date
+    stands for its midnight)."""
+    if not isinstance(ts, datetime):
+        ts = datetime(ts.year, ts.month, ts.day)
+    return bucket_floor(partition_tier(tier), ts).date()
 
 
 def bucket_sql(ts_expr: str, tier: str) -> str:

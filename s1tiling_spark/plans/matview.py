@@ -41,6 +41,8 @@ from operator import or_
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from s1tiling_spark.operators.rollup import utc_date
+
 from .store import TierStore, atomic_json_write
 
 
@@ -629,7 +631,7 @@ class MergeMatView(AdditiveMatView):
             and "bucket_start" in self.view_keys
         )
         date_col = (
-            F.to_date("bucket_start")
+            utc_date(F.col("bucket_start"))
             if span_dates
             else F.lit(None).cast("date")
         )
@@ -702,9 +704,10 @@ class MergeMatView(AdditiveMatView):
         return upsert, dead
 
     def _expand_span_dates(self, days) -> list | None:
-        """Partition list covering the recompute groups' base rows, when
-        the view grain's date span is declared: each group's base rows
-        live in [date(bucket_start), +span days). The touched dates come
+        """The days covering the recompute groups' base rows, when the
+        view grain's date span is declared: each group's base rows live
+        in [date(bucket_start), +span days), and the store reads the
+        partitions holding those days. The touched dates come
         from the side-count collect (metadata-scale, same discipline as
         the changelog's touched-partition pruning — no extra job)."""
         from datetime import timedelta

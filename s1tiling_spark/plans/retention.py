@@ -20,8 +20,10 @@ is ever recomputed). So a victim date ``d`` of source ``s`` is covered
 by the guard tier iff ``watermark(s) > covering_bucket_start(d)`` —
 strictly, because the watermark bucket itself is still open and its
 next recompute READS the tier being expired. The check costs one
-metadata-scale scan of the victim partitions (distinct (source, date)
-pairs) plus a read of the refresh record's watermarks (no Spark job).
+metadata-scale scan of the partitions holding victim rows (distinct
+(source, date) pairs of the rows before the cutoff; a 30d-partitioned
+tier's partition can hold days on both sides of it) plus a read of
+the refresh record's watermarks (no Spark job).
 
 Scale note (100 TB): the guard reads only the partitions about to be
 dropped (a partition-pruned store read, two columns) and the O(sources)
@@ -34,7 +36,9 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
-from s1tiling_spark.operators.rollup import bucket_floor
+from pyspark.sql import functions as F
+
+from s1tiling_spark.operators.rollup import bucket_floor, utc_date
 from s1tiling_spark.plans.store import TierStore
 
 _EPOCH = dt.datetime(1970, 1, 1)
@@ -82,37 +86,41 @@ def covering_bucket_start(day: dt.date, guard_tier: str) -> dt.datetime:
 
 
 def _victim_dates(store: TierStore, tier: str, cutoff: dt.date) -> list[str]:
+    """The partitions that can hold rows dated before ``cutoff``."""
     return [d for d in store.partition_dates(tier) if d < cutoff.isoformat()]
 
 
 def _check_guard(
-    store: TierStore, tier: str, guard_tier: str, victim_dates: list[str]
+    store: TierStore, tier: str, guard_tier: str, victim_dates: list[str],
+    cutoff: dt.date,
 ) -> int:
     """Raise :class:`RetentionGuardError` unless every (source, date)
-    in the victim partitions sits strictly below the guard tier's
-    per-source watermark. Returns the number of pairs checked.
+    of the rows dated before ``cutoff`` sits strictly below the guard
+    tier's per-source watermark. Returns the number of pairs checked.
 
     The victim rows come from the store's physical row-version view
     (every version, rolled back or masked ones too), partition-pruned
-    to the victim dates. It hides staged rows; victims holding those
-    are refused by the expiry itself."""
+    to the victim partitions. It hides staged rows; victims holding
+    those are refused by the expiry itself."""
+    day = utc_date(F.col("bucket_start"))
     pairs = (
         store.read(tier, deduped=False, p_dates=victim_dates)
-        .select("source", "p_date")
+        .select("source", day.alias("day"))
+        .filter(F.col("day") < F.lit(cutoff))
         .distinct()
         .collect()
     )
     # per source, epoch micros of the newest committed guard bucket
     wm = store.refresh_state().get("watermarks", {}).get(guard_tier, {})
 
-    def covered_us(p_date) -> int:
-        start = covering_bucket_start(dt.date.fromisoformat(str(p_date)), guard_tier)
+    def covered_us(day: dt.date) -> int:
+        start = covering_bucket_start(day, guard_tier)
         return (start - _EPOCH) // dt.timedelta(microseconds=1)
 
     uncovered = sorted(
-        (r["source"], str(r["p_date"]))
+        (r["source"], str(r["day"]))
         for r in pairs
-        if r["source"] not in wm or wm[r["source"]] <= covered_us(r["p_date"])
+        if r["source"] not in wm or wm[r["source"]] <= covered_us(r["day"])
     )
     if uncovered:
         raise RetentionGuardError(tier, guard_tier, uncovered)
@@ -153,11 +161,16 @@ def apply_retention_policy(
             # enumeration would be dropped without ever being checked.
             # Appends/deletes wait at publish time while this holds.
             with store._maint_lock(rule.tier):
+                # the expiry ratchets to the recorded floor: guard all
+                # it hides
+                floor = store.retention_floor(rule.tier)[0]
+                if floor is not None:
+                    cutoff = max(cutoff, dt.date.fromisoformat(floor))
                 victims = _victim_dates(store, rule.tier, cutoff)
                 if victims:
                     if rule.guard_tier is not None:
                         rep["checked_pairs"] = _check_guard(
-                            store, rule.tier, rule.guard_tier, victims
+                            store, rule.tier, rule.guard_tier, victims, cutoff
                         )
                     rep["dropped_partitions"] = store._expire_locked(
                         rule.tier, cutoff

@@ -12,8 +12,10 @@ watermark (start of the newest materialized bucket). A refresh:
 2. plans each tier's fresh input with literal filters that push down:
    raw rows at/after their source's 1h / hist_1d watermark, and, for
    the cascades (1d, 30d, hist_30d, blocks_1h), the lower tier read
-   with partition pruning to the dates at/after the upper tier's
-   oldest watermark, then the same per-source filter on bucket_start.
+   with partition pruning to the partitions whose span reaches the
+   upper tier's oldest watermark (a 1d or hist_1d partition spans a
+   30d bucket, every other tier's a day), then the same per-source
+   filter on bucket_start.
    Sources a tier has no watermark for pass whole. The last committed
    bucket is recomputed in full, so late rows landing in it are MERGED
    idempotently — the north rule's late-data requirement, which the
@@ -71,7 +73,12 @@ from s1tiling_spark.operators.rollup import (
     rollup_sequences,
     token_hist_long,
 )
-from s1tiling_spark.plans.store import DEFAULT_KEYS, TierStore, new_run_id
+from s1tiling_spark.plans.store import (
+    DEFAULT_KEYS,
+    TierStore,
+    new_run_id,
+    partition_span,
+)
 
 STAT_COLS = ("bucket_start", "source", "cnt", "sum_n_tok", "min_n_tok", "max_n_tok")
 HIST_KEYS = ("bucket_start", "source", "bin")
@@ -108,6 +115,15 @@ def _at_or_after(ts_col: str, wm: dict[str, int]) -> Column | None:
         for us, srcs in sorted(by_wm.items())
     ]
     return F.expr(" OR ".join(terms))
+
+
+def _reaches(tier: str, p_date: str, cut: dt.datetime) -> bool:
+    """The ``tier`` partition ``p_date`` can hold buckets starting at or
+    after ``cut``; the partition of NULL buckets holds none."""
+    try:
+        return partition_span(tier, p_date)[1] > cut.date()
+    except ValueError:
+        return False
 
 
 @dataclass
@@ -179,10 +195,10 @@ class _Refresh:
     def _cascade(self, lower: str, upper: str, build, cols=STAT_COLS,
                  keys=DEFAULT_KEYS) -> None:
         """``upper`` from the deduped ``lower`` tier, read only from the
-        date partitions at/after ``upper``'s oldest watermark (one day
-        of margin keeps the date right in any session time zone). The
-        whole tier is read when ``upper`` has no watermarks, or when
-        ``lower`` may hold a source ``upper`` has none for: one
+        partitions whose span reaches ``upper``'s oldest watermark
+        (partition dates are UTC, like the watermark, so no margin).
+        The whole tier is read when ``upper`` has no watermarks, or
+        when ``lower`` may hold a source ``upper`` has none for: one
         ``lower``'s record names, or one in this refresh's ``lower``
         delta outside :attr:`known`."""
         t0 = time.time()
@@ -191,8 +207,10 @@ class _Refresh:
         lower_srcs = set(self.wm.get(lower, ()))
         if wm and not self.unseen_rows.get(lower, 1) and lower_srcs <= set(wm):
             cut = dt.datetime.fromtimestamp(min(wm.values()) / 1e6, dt.timezone.utc)
-            cut = (cut.date() - dt.timedelta(days=1)).isoformat()
-            p_dates = [d for d in self.store.partition_dates(lower) if d >= cut]
+            p_dates = [
+                d for d in self.store.partition_dates(lower)
+                if _reaches(lower, d, cut)
+            ]
         lower_df = self.store.read(lower, keys=keys, p_dates=p_dates)
         if lower_df is None:
             return

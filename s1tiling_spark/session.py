@@ -94,9 +94,11 @@ def build_session(
       a distributed job, so every read of a tier with more than 32
       ``p_date`` partitions (or of more than 32 planned files) paid
       one extra job, although the store already walks the same
-      directories driver-side. A session built elsewhere keeps the
-      default: its tier reads still launch that listing job, once per
-      snapshot build on the serving path.
+      directories driver-side. The 1h tier passes 32 partitions after
+      a month of data (one per day); 1d and hist_1d, one partition
+      per 30d bucket, stay far below. A session built elsewhere keeps
+      the default: its 1h reads still launch that listing job, once
+      per snapshot build on the serving path.
     """
     cpus = default_parallelism()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")

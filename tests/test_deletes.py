@@ -22,7 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.rollup import rollup_sequences
+from s1tiling_spark.operators.rollup import partition_col, rollup_sequences
 from s1tiling_spark.plans.store import TierStore
 from s1tiling_spark.sources.synth import synth_sequences
 from tests.helpers import assert_frames_match, diff_of_states
@@ -162,15 +162,17 @@ def test_compact_drops_fully_masked_partition(spark, seq, tmp_path):
     full = rollup_sequences(seq, "1d").cache()
     s1 = store.next_commit_seq()
     store.append("1d", full, s1, "run-1")
-    first_date = full.agg(F.min(F.to_date("bucket_start"))).first()[0]
-    victims = store.read("1d").filter(F.to_date("bucket_start") == F.lit(first_date))
-    keep = full.filter(F.to_date("bucket_start") != F.lit(first_date))
+    first = store.partition_dates("1d")[0]
+    in_first = partition_col(F.col("bucket_start"), "1d") == F.lit(first).cast("date")
+    victims = store.read("1d").filter(in_first)
+    keep = full.filter(~in_first)
+    assert victims.count() > 0 and keep.count() > 0
     s2 = store.next_commit_seq()
     store.delete("1d", victims, s2, "run-del")
 
     store.compact("1d")
     parts = [p for p in os.listdir(store.tier_path("1d")) if p.startswith("p_date=")]
-    assert f"p_date={first_date}" not in parts
+    assert f"p_date={first}" not in parts and parts
     assert_frames_match(_state(store, "1d"), keep.toPandas())
 
 

@@ -8,10 +8,13 @@ must produce exactly the full-run outputs
 
 from __future__ import annotations
 
+import datetime as dt
+import functools
 import sys
 import threading
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from s1tiling_spark.plans.store import TierStore
@@ -453,6 +456,16 @@ def test_compaction_preserves_reads_and_shrinks_files(spark, seq, tmp_path):
     assert newest.filter(F.col("cnt") < 1000).count() == 0
 
 
+def _across_30d_buckets(seq, n=4):
+    """``seq`` repeated ``n`` times, 30 days apart: its 1d rollup spans
+    more than ``n`` 30d buckets, so the 1d tier has more than ``n``
+    partitions."""
+    return functools.reduce(DataFrame.unionByName, [
+        seq.withColumn("event_ts", F.col("event_ts") + F.expr(f"INTERVAL {30 * k} DAYS"))
+        for k in range(n)
+    ])
+
+
 def test_store_read_partition_pruning(spark, seq, tmp_path):
     """A date-filtered read of a tier table must prune p_date partitions
     AT THE SCAN (PartitionFilters in the FileScan) — the property that
@@ -462,11 +475,14 @@ def test_store_read_partition_pruning(spark, seq, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from s1tiling_spark.operators.rollup import rollup_sequences
+    from s1tiling_spark.operators.rollup import partition_floor, rollup_sequences
 
     store = TierStore(spark, str(tmp_path / "prune"))
-    store.append("1d", rollup_sequences(seq, "1d"), store.next_commit_seq(), "r0")
-    df = store.read("1d", deduped=False).filter(F.col("p_date") == "2024-01-05")
+    rows = rollup_sequences(_across_30d_buckets(seq), "1d")
+    store.append("1d", rows, store.next_commit_seq(), "r0")
+    assert len(store.partition_dates("1d")) > 3
+    day = partition_floor("1d", dt.date(2024, 1, 5))
+    df = store.read("1d", deduped=False).filter(F.col("p_date") == day)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -503,7 +519,8 @@ def test_store_read_dynamic_partition_pruning(spark, seq, tmp_path):
     from s1tiling_spark.operators.rollup import rollup_sequences
 
     store = TierStore(spark, str(tmp_path / "dpp"))
-    store.append("1d", rollup_sequences(seq, "1d"), store.next_commit_seq(), "r0")
+    rows = rollup_sequences(_across_30d_buckets(seq), "1d")
+    store.append("1d", rows, store.next_commit_seq(), "r0")
     fact = store.read("1d", deduped=False)
     dates = sorted(r["p_date"] for r in fact.select("p_date").distinct().collect())
     assert len(dates) > 3

@@ -21,6 +21,9 @@ from s1tiling_spark.operators.rollup import (
     bucket_floor,
     bucket_sql,
     merge_hist_long,
+    partition_col,
+    partition_floor,
+    partition_tier,
     rollup_from_lower,
     rollup_sequences,
     token_hist_long,
@@ -210,3 +213,40 @@ def test_bucket_floor_matches_spark_and_duckdb(spark, tier):
         for t in stamps
     ]
     assert got_duck == want
+
+
+@pytest.mark.parametrize(
+    "tier", ("1h", "1d", "30d", "hist_1d", "hist_30d", "blocks_1h", "t")
+)
+def test_partition_floor_matches_spark(spark, tier):
+    """One partition rule: the driver-side ``partition_floor`` and
+    Spark's ``partition_col`` agree at, just before and just after day
+    and 30d edges — the epoch itself (the last sub-second before it
+    included), a 30d edge and a day edge inside a 30d bucket. 1d and
+    hist_1d partition by their 30d bucket, every other tier by day."""
+    assert partition_tier(tier) == ("30d" if tier in ("1d", "hist_1d") else "1d")
+    epoch = datetime(1970, 1, 1)
+    us = timedelta(microseconds=1)
+    day, month = timedelta(days=1), timedelta(days=30)
+    edges = (epoch, epoch + 655 * month, datetime(2024, 1, 10))
+    stamps = sorted({
+        e + d for e in edges
+        for d in (-us, timedelta(0), us, day - us, day, month - us, month)
+    })
+
+    def micros(t: datetime) -> int:
+        return (t - epoch) // us
+
+    want = [partition_floor(tier, t) for t in stamps]
+    rows = (
+        spark.createDataFrame([(micros(t),) for t in stamps], "u long")
+        .select(partition_col(F.timestamp_micros("u"), tier).alias("p"), "u")
+        .orderBy("u")
+        .collect()
+    )
+    assert [r["p"] for r in rows] == want
+    assert partition_floor(tier, epoch - us) < epoch.date()
+    if partition_tier(tier) == "30d":
+        assert partition_floor(tier, datetime(2024, 1, 10)) == datetime(2023, 12, 19).date()
+    else:
+        assert all(p == t.date() for p, t in zip(want, stamps))
