@@ -38,25 +38,26 @@ encodes the commit that wrote them: ``c<seq>-`` (an append),
 :meth:`TierStore._data_files` is the sole owner of these rules — every
 walk of a tier's live data files goes through it.
 
-Schema: files keep the columns, names and types they were written
-with. Evolution is metadata, recorded as schema ops in the compact
-meta: ``add`` (an append brought columns the tier never had — recorded
-by :meth:`TierStore.append` itself), ``rename``, ``drop`` and
-``widen``. While any op is live (above the compaction horizon) every
-reader scans under the union of the files' footers, widest type per
-column, and resolves names at its horizon; a compaction rewrites every
-file under that union and bakes the ops, after which one footer is the
-tier's schema again. No reader opts into this: the store knows when
-its files disagree.
+Schema: files keep the columns and types they were written with, and
+a column's type never changes (an append narrower than declared is
+upcast, a wider or cross-family one raises). The one evolution is an
+``add``: an append that brings columns the tier never had records an
+``add`` schema op in the compact meta. While an add is live (above the
+compaction horizon) every reader scans under the union of the files'
+footers, serving NULL where a file lacks the column; a compaction
+rewrites every file under that union and bakes the op, after which one
+footer is the tier's schema again. No reader opts into this: the store
+knows when its files disagree. A live op of any other kind (``rename``,
+``widen``, ``drop``, written by earlier releases) is refused, never
+misread.
 
 Commit visibility — which row versions a horizon serves, given WAP
 remaps, hidden staged commits, rollback ranges, the compaction horizon
 and the retention floor — has one owner too: :class:`Visibility`,
 loaded once per store operation by :meth:`TierStore._visibility`. Every
-reader (``read``, ``read_summed``, ``read_incremental``, ``changes``,
-``snapshots``, compaction, the ``tier_store`` stream) resolves rows
-through it, and it raises the one "predates the compaction horizon"
-guard.
+reader (``read``, ``read_summed``, ``changes``, ``snapshots``,
+compaction, the ``tier_store`` stream) resolves rows through it, and it
+raises the one "predates the compaction horizon" guard.
 
 Serving snapshots: :meth:`TierStore.snapshot` keeps the deduped tier
 at the head, or at one as-of horizon, persisted for reuse across
@@ -66,7 +67,7 @@ queries (the router serves from it). ``read`` itself stays uncached.
   ``_deletes/`` file names. It is re-derived on every call and never
   trusted across calls, so a commit through any store instance or
   process (append, delete, WAP stage/publish/abandon, rollback,
-  compact, expire, schema op) rebuilds the snapshot on its next use.
+  compact, expire) rebuilds the snapshot on its next use.
 - Bound: one head and one as-of snapshot per tier and store instance;
   a new horizon or commit state unpersists the one it replaces, and a
   discarded store unpersists its own.
@@ -241,10 +242,9 @@ class Visibility(NamedTuple):
     - ``retention``: (oldest retained date, expiry seq) of the last
       :meth:`TierStore.expire`, or (None, 0) — also the mask over the
       rows an expiry left in a partition it could not drop whole;
-    - ``schema_ops``: the add/rename/drop/widen ops still live above
-      the compaction horizon (older ones are baked into the files),
-      seq-ascending — the columns a read resolves against the same
-      metadata view as its rows."""
+    - ``schema_ops``: the ``add`` ops still live above the compaction
+      horizon (older ones are baked into the files), seq-ascending —
+      while any is live, a read scans under the footer union."""
 
     tier: str
     remap: dict
@@ -357,7 +357,7 @@ class TierStore:
         self.multi_writer = bool(multi_writer)
         # declared-schema memo for append's write-time alignment —
         # avoids re-inferring the tier schema on every micro-batch
-        # append; invalidated by schema ops, refreshed before any raise
+        # append; invalidated when an append records an add op
         self._declared_types: dict[str, dict[str, str]] = {}
         # footer-schema memo for plain reads: {dir: (sample file path,
         # size, mtime_ns, StructType)} — see _footer_schema
@@ -578,13 +578,30 @@ class TierStore:
 
     def _visibility(self, tier: str) -> Visibility:
         """Load ``tier``'s :class:`Visibility` — the one decoder of the
-        staged-commit, horizon, retention and rollback metadata."""
+        staged-commit, horizon, retention and rollback metadata.
+
+        Raises on a live schema op other than ``add``: earlier releases
+        recorded metadata-only ``rename``/``widen``/``drop`` ops, which
+        this store no longer resolves, so serving such a tier would
+        show columns under the wrong names or types. Ops at or below
+        the horizon are baked into the files and harmless."""
         meta = self._read_compact_meta()
         staged = meta.get(f"_staged_{tier}", [])
         horizon = int(meta.get(tier, 0))
         ret = meta.get(f"_retention_{tier}")
         remap = {int(e["seq"]): int(e["pub_seq"]) for e in staged if e["state"] == "published"}
-        ops = sorted(meta.get(f"_schema_{tier}", []), key=lambda o: o["seq"])
+        ops = sorted(
+            (o for o in meta.get(f"_schema_{tier}", []) if o["seq"] > horizon),
+            key=lambda o: o["seq"],
+        )
+        for o in ops:
+            if o["kind"] != "add":
+                raise ValueError(
+                    f"tier {tier!r}: live {o['kind']!r} schema op at seq "
+                    f"{o['seq']} (above the compaction horizon {horizon}); "
+                    "only 'add' ops are resolved — compact the tier with "
+                    "the release that recorded the op before opening it"
+                )
         return Visibility(
             tier=tier,
             remap=remap,
@@ -592,7 +609,7 @@ class TierStore:
             rollbacks=tuple(self._rollback_ranges(tier)),
             min_as_of=horizon,
             retention=(str(ret["floor"]), int(ret["seq"])) if ret else (None, 0),
-            schema_ops=tuple(o for o in ops if o["seq"] > horizon),
+            schema_ops=tuple(ops),
         )
 
     def min_as_of(self, tier: str) -> int:
@@ -1098,158 +1115,42 @@ class TierStore:
                 del all_ranges[tier]
                 atomic_json_write(path, all_ranges)
 
-    # ---------- schema evolution (add / rename / drop / widen) ----------
-    # The tier's natural-key and lineage columns are structural: renames
-    # would break partitioning, dedup windows and delete-file joins —
-    # the same reason Iceberg restricts identifier-field changes. The
-    # sketch tiers' extra key columns are in the set too: compact's
-    # full-natural-key guard matches them by literal name, and delete
-    # files join on them (review catch, r5).
-    _PROTECTED_COLS = (
-        "bucket_start", "source", "commit_seq", "run_id", "p_date",
-        "bin", "qbin", "depth", "col",
-    )
-
-    def _schema_ops(self, tier: str) -> list[dict]:
-        """Recorded schema ops for ``tier``, seq-ascending — the
-        file-store analog of Iceberg's schema history (field ids)."""
-        ops = self._read_compact_meta().get(f"_schema_{tier}", [])
-        return sorted(ops, key=lambda o: o["seq"])
-
-    def _record_schema_op(self, tier: str, op: dict) -> None:
-        self._update_meta(
-            lambda m, t=tier, o=op: m.setdefault(f"_schema_{t}", []).append(o)
-        )
-        # every schema op changes the tier's declared types — drop the
-        # write-alignment memo so the next append re-infers from disk
-        self._declared_types.pop(tier, None)
-
-    def _current_columns(self, tier: str) -> list[str]:
-        """Current canonical column names (union of footers + live ops
-        applied). Footer metadata only — no Spark job."""
-        df = self.read(tier, deduped=False)
-        return [] if df is None else df.columns
-
-    def rename_column(self, tier: str, old: str, new: str) -> int:
-        """Metadata-only column rename (Iceberg ``ALTER TABLE RENAME
-        COLUMN``): no data file is touched; reads at/after the returned
-        seq serve ``new``, as-of reads below it still serve ``old``.
-        Appends written after the rename should use the new name;
-        either spelling is resolved on read, and the next ``compact``
-        rewrites everything under the canonical name."""
-        if old in self._PROTECTED_COLS or new in self._PROTECTED_COLS:
-            raise ValueError(
-                f"cannot rename {old!r}→{new!r}: natural-key/lineage "
-                f"columns {self._PROTECTED_COLS} are structural"
-            )
-        if old == new:
-            raise ValueError("rename requires distinct names")
-        cols = self._current_columns(tier)
-        if old not in cols:
-            raise ValueError(f"tier {tier!r} has no column {old!r} (have {cols})")
-        if new in cols:
-            raise ValueError(
-                f"tier {tier!r}: column {new!r} already exists — renaming "
-                "onto a live name would merge two columns"
-            )
-        seq = self.next_commit_seq()
-        self._record_schema_op(tier, {"kind": "rename", "from": old, "to": new, "seq": seq})
-        return seq
-
-    # narrow→wide rank order per family — the lossless promotions
-    # Iceberg's spec allows (int→long, float→double); everything else
-    # (string↔numeric, long→int) is a rewrite, not an evolution
-    _WIDEN_FAMILIES = (
-        ("tinyint", "smallint", "int", "bigint"),
-        ("float", "double"),
-    )
-    _WIDEN_ALIASES = {"long": "bigint", "integer": "int", "short": "smallint", "byte": "tinyint"}
-
-    @classmethod
-    def _widen_rank(cls, simple: str) -> tuple[int, int] | None:
-        simple = cls._WIDEN_ALIASES.get(simple, simple)
-        for fi, fam in enumerate(cls._WIDEN_FAMILIES):
+    # ---------- schema evolution (add) ----------
+    @staticmethod
+    def _widen_rank(simple: str) -> tuple[int, int] | None:
+        """(family, width) of a numeric type under the lossless
+        promotions Iceberg allows (int→long, float→double); None for
+        every other type."""
+        for fi, fam in enumerate(
+            (("tinyint", "smallint", "int", "bigint"), ("float", "double"))
+        ):
             if simple in fam:
                 return fi, fam.index(simple)
         return None
-
-    def widen_column(self, tier: str, col: str, to: str) -> int:
-        """Metadata-only type widening (Iceberg ``ALTER TABLE ... TYPE``
-        promotion): ``int``→``bigint`` (any integral step up) or
-        ``float``→``double``. No data file is touched; reads at/after
-        the returned seq serve the wide type (narrow files are upcast
-        by the parquet reader under an explicit requested schema — the
-        file-store analog of Iceberg resolving files against the
-        current schema by field id), as-of reads below it still serve
-        the narrow type the snapshot had. Appends written after the
-        widen should use the wide type; the next ``compact`` bakes it
-        into every file and reads return to plain inferred scans.
-
-        Declare the widen BEFORE appending wide values: like Iceberg,
-        the schema change gates the data change — a wide value written
-        under a narrow declared type is out of contract (an as-of read
-        below the widen would downcast it)."""
-        to = self._WIDEN_ALIASES.get(to, to)
-        if col in self._PROTECTED_COLS:
-            raise ValueError(f"cannot widen structural column {col!r}")
-        df = self.read(tier, deduped=False)
-        dtypes = {} if df is None else dict(df.dtypes)
-        if col not in dtypes:
-            raise ValueError(
-                f"tier {tier!r} has no column {col!r} (have {sorted(dtypes)})"
-            )
-        cur = dtypes[col]
-        cur_rank, to_rank = self._widen_rank(cur), self._widen_rank(to)
-        if to_rank is None:
-            raise ValueError(
-                f"{to!r} is not a widening target (allowed: "
-                f"{self._WIDEN_FAMILIES})"
-            )
-        if cur_rank is None or cur_rank[0] != to_rank[0]:
-            raise ValueError(
-                f"cannot widen {col!r}: {cur!r} → {to!r} crosses type "
-                "families (only int→long-family and float→double are "
-                "lossless promotions)"
-            )
-        if to_rank[1] <= cur_rank[1]:
-            raise ValueError(
-                f"cannot widen {col!r}: {to!r} is not wider than {cur!r}"
-            )
-        seq = self.next_commit_seq()
-        self._record_schema_op(
-            tier, {"kind": "widen", "col": col, "from": cur, "to": to, "seq": seq}
-        )
-        return seq
 
     def _align_write_schema(
         self, tier: str, df: DataFrame, commit_seq: int
     ) -> DataFrame:
         """Write-time schema alignment (the Iceberg write contract):
         every appended batch is resolved against the tier's DECLARED
-        (post-schema-ops) types before any file lands.
+        types before any file lands, so a column keeps one type across
+        the tier's files.
 
         - a column NARROWER than declared (int into a bigint tier) is
-          upcast here, so plain inferred scans never meet mixed-width
-          footers — without this the landmine only detonates at read
-          time, possibly long after the writer is gone;
-        - a column WIDER than declared raises with the fix spelled out
-          (``widen_column`` first — the schema change gates the data
-          change, exactly Iceberg's rule);
-        - a cross-family conflict (string vs int) raises — that is a
-          rewrite, not an evolution;
+          upcast here, so plain scans never meet mixed-width footers;
+        - a column WIDER than declared, or of another type family
+          (string vs int), raises — that is a rewrite, not an
+          evolution;
         - columns the tier has never had pass through, and an ``add``
           schema op is recorded at ``commit_seq`` before any file of
           the batch moves: every reader then scans under the footer
           union and serves them (NULL for older rows) until a
-          compaction bakes the op. A name a rename or drop retired is
-          not an addition — it is resolved on read as before;
+          compaction bakes the op;
         - declared columns the batch omits are written as NULLs, so a
           baked add never depends on which footer a plain scan samples.
 
         The declared types are memoized per tier (one inference per
-        store instance, not per micro-batch); any would-be raise first
-        refreshes the memo from disk so a concurrent writer's freshly
-        declared widen is honored rather than spuriously rejected."""
+        store instance, not per micro-batch)."""
         declared = self._declared_types.get(tier)
         if declared is None:
             cur = self.read(tier, deduped=False)
@@ -1258,51 +1159,19 @@ class TierStore:
             declared = dict(cur.dtypes)
             self._declared_types[tier] = declared
         dtypes = df.dtypes
-
-        def conflicts(decl):
-            out = []
-            for name, dt in dtypes:
-                if name in _LINEAGE_COLS:
-                    continue  # lineage: append overwrites these anyway
-                want = decl.get(name)
-                if want is None or dt == want:
-                    continue
-                out.append((name, dt, want))
-            return out
-
-        bad = conflicts(declared)
-        if bad:
-            # refresh once before judging: the memo may predate a
-            # concurrent widen/rename (narrow-vs-wide is re-checked
-            # against disk truth, never rejected off a stale memo).
-            # Merge the fresh read with the memo, keeping memo-only
-            # columns and the wider spelling per column, so the
-            # refresh can only gain knowledge, never forget it.
-            cur = self.read(tier, deduped=False)
-            fresh = dict(cur.dtypes) if cur is not None else {}
-            for name, t in declared.items():
-                have = fresh.get(name)
-                if have is None:
-                    fresh[name] = t
-                    continue
-                ra, rb = self._widen_rank(have), self._widen_rank(t)
-                if ra is not None and rb is not None and ra[0] == rb[0] and rb[1] > ra[1]:
-                    fresh[name] = t
-            declared = fresh
-            self._declared_types[tier] = declared
-            bad = conflicts(declared)
-        for name, dt, want in bad:
+        for name, dt in dtypes:
+            want = declared.get(name)
+            if name in _LINEAGE_COLS or want is None or dt == want:
+                continue  # lineage: append overwrites these anyway
             rin, rw = self._widen_rank(dt), self._widen_rank(want)
             if rin is not None and rw is not None and rin[0] == rw[0]:
                 if rin[1] < rw[1]:
                     df = df.withColumn(name, F.col(name).cast(want))
                     continue
                 raise ValueError(
-                    f"tier {tier!r}: append column {name!r} is {dt} but "
-                    f"the declared type is {want} — call "
-                    f"widen_column({tier!r}, {name!r}, {dt!r}) BEFORE "
-                    "appending wide values (the schema change gates the "
-                    "data change)"
+                    f"tier {tier!r}: append column {name!r} is {dt}, wider "
+                    f"than the declared {want} — a column's type does not "
+                    "change; cast the batch before append"
                 )
             raise ValueError(
                 f"tier {tier!r}: append column {name!r} type {dt} "
@@ -1316,45 +1185,34 @@ class TierStore:
             df = df.select(
                 "*", *[F.lit(None).cast(declared[n]).alias(n) for n in missing]
             )
-        new = [n for n in cols if n not in declared and n not in _LINEAGE_COLS]
-        if new:
-            ops = self._schema_ops(tier)
-            retired = {o["from"] for o in ops if o["kind"] == "rename"}
-            retired |= {o["col"] for o in ops if o["kind"] == "drop"}
-            added = [n for n in new if n not in retired]
-            if added:
-                self._record_schema_op(
-                    tier, {"kind": "add", "cols": added, "seq": int(commit_seq)}
-                )
+        added = [n for n in cols if n not in declared and n not in _LINEAGE_COLS]
+        if added:
+            op = {"kind": "add", "cols": added, "seq": int(commit_seq)}
+            self._update_meta(
+                lambda m, t=tier, o=op: m.setdefault(f"_schema_{t}", []).append(o)
+            )
+            # the tier's declared columns changed — drop the memo so the
+            # next append re-infers them from disk
+            self._declared_types.pop(tier, None)
         return df
 
-    def _union_read_schema(self, tier: str, ops: list[dict]):
+    def _union_read_schema(self, tier: str):
         """Explicit requested scan schema for a read whose files may
-        disagree (any live schema op, or compact's rewrite): the
-        per-footer field union — renames' two spellings and added
-        columns (NULL back-filled for files without them) — with the
-        WIDEST type per column, then any live widen targets applied on
-        top, so the request is wide even before the first wide file
-        lands. Spark's ``mergeSchema`` refuses int32-vs-int64 footers
-        and costs a schema-merge job, while the parquet reader happily
-        upcasts a narrow file under an explicit wider requested schema
-        (verified: Spark 4.x widening reads). Footer metadata only,
-        driver-side; the next compact bakes the ops and reads return
-        to single-footer scans. Data columns only: the partition column
+        disagree (a live ``add`` op, or compact's rewrite): the
+        per-footer field union — added columns are NULL back-filled
+        for files without them — with the WIDEST type per column (only
+        a concurrent writer that had not yet seen another's add can
+        write one column at two widths). Spark's ``mergeSchema``
+        refuses int32-vs-int64 footers and costs a schema-merge job,
+        while the parquet reader upcasts a narrow file under an
+        explicit wider requested schema. Footer metadata only,
+        driver-side; the next compact bakes the op and reads return to
+        single-footer scans. Data columns only: the partition column
         (``p_date``) stays inference-appended, identical to plain
         reads."""
         import pyarrow.parquet as pq
-        from pyspark.sql.types import (
-            ByteType, DoubleType, FloatType, IntegerType, LongType,
-            ShortType, StructField, StructType,
-        )
+        from pyspark.sql.types import StructField, StructType
         from pyspark.sql.pandas.types import from_arrow_schema
-
-        by_simple = {
-            "tinyint": ByteType(), "smallint": ShortType(),
-            "int": IntegerType(), "bigint": LongType(),
-            "float": FloatType(), "double": DoubleType(),
-        }
 
         def widest(name, a, b):
             ra, rb = self._widen_rank(a.simpleString()), self._widen_rank(b.simpleString())
@@ -1375,11 +1233,6 @@ class TierStore:
                     order.append(f.name)
                 elif merged[f.name] != f.dataType:
                     merged[f.name] = widest(f.name, merged[f.name], f.dataType)
-        for op in ops:
-            if op["kind"] == "widen" and op["col"] in merged:
-                merged[op["col"]] = widest(
-                    op["col"], merged[op["col"]], by_simple[op["to"]]
-                )
         return StructType([StructField(n, merged[n], True) for n in order])
 
     def _footer_schema(self, sample_file: str):
@@ -1416,86 +1269,6 @@ class TierStore:
         sch = from_arrow_schema(pq.read_schema(sample_file))
         self._footer_schemas[sample_file] = (*key, sch)
         return sch
-
-    def drop_column(self, tier: str, col: str) -> int:
-        """Metadata-only column drop: hidden from reads at/after the
-        returned seq, still served by as-of reads below it; physically
-        removed by the next ``compact`` whose expiry horizon covers the
-        drop (so preserved snapshots keep their column — and a
-        compaction can never resurrect a dropped name)."""
-        if col in self._PROTECTED_COLS:
-            raise ValueError(f"cannot drop structural column {col!r}")
-        if col not in self._current_columns(tier):
-            raise ValueError(f"tier {tier!r} has no column {col!r}")
-        seq = self.next_commit_seq()
-        self._record_schema_op(tier, {"kind": "drop", "col": col, "seq": seq})
-        return seq
-
-    def _apply_schema_ops(
-        self,
-        df: DataFrame,
-        ops: list[dict],
-        horizon: int | None,
-        canonical: bool,
-        drop_horizon: int | None,
-    ) -> DataFrame:
-        """Resolve physical column spellings to the horizon's display
-        schema. Four passes, each metadata-only column algebra:
-        1. canonicalize renames forward (coalesce both spellings — a
-           row's value lives under whichever name its file used);
-        2. widen forward (cast to the declared wide type — a no-op
-           under the explicit union scan schema, load-bearing for
-           paths that read physical truth, e.g. compact);
-        3. hide drops whose seq is within the drop horizon;
-        4. unless ``canonical``, cast back the widens and rename back
-           the renames (newest first) that postdate the read horizon,
-           so the as-of state shows the schema it had."""
-        h = float("inf") if horizon is None else int(horizon)
-
-        def _post_rename(col: str, from_seq: int) -> str:
-            # a widen recorded before a later rename names the column
-            # by its spelling AT WIDEN TIME — chase renames forward
-            for op in ops:
-                if (
-                    op["kind"] == "rename"
-                    and op["seq"] > from_seq
-                    and op["from"] == col
-                ):
-                    col = op["to"]
-            return col
-
-        for op in ops:
-            if op["kind"] == "rename":
-                old, new = op["from"], op["to"]
-                cols = df.columns
-                if old in cols and new in cols:
-                    df = df.withColumn(new, F.coalesce(new, old)).drop(old)
-                elif old in cols:
-                    df = df.withColumnRenamed(old, new)
-        for op in ops:
-            if op["kind"] == "widen":
-                c = _post_rename(op["col"], op["seq"])
-                if c in df.columns:
-                    df = df.withColumn(c, F.col(c).cast(op["to"]))
-        dh = h if drop_horizon is None else int(drop_horizon)
-        if canonical and drop_horizon is None:
-            dh = float("inf")
-        for op in ops:
-            if op["kind"] == "drop" and op["seq"] <= dh and op["col"] in df.columns:
-                df = df.drop(op["col"])
-        if not canonical:
-            # widen-backs first, on canonical spellings — the rename
-            # chase below would strand a cast that runs after its
-            # column was already renamed back
-            for op in reversed(ops):
-                if op["kind"] == "widen" and op["seq"] > h:
-                    c = _post_rename(op["col"], op["seq"])
-                    if c in df.columns:
-                        df = df.withColumn(c, F.col(c).cast(op["from"]))
-            for op in reversed(ops):
-                if op["kind"] == "rename" and op["seq"] > h and op["to"] in df.columns:
-                    df = df.withColumnRenamed(op["to"], op["from"])
-        return df
 
     # ---------- equality deletes ----------
     def _deletes_path(self, tier: str) -> str:
@@ -1904,11 +1677,11 @@ class TierStore:
         when nothing would be skipped — the caller then keeps the
         plain directory scan (identical plan, no file list to ship).
 
-        This is what keeps ``read_incremental``/``changes`` O(new
-        files) in *metadata*: without it every incremental batch lists
-        and opens the full table's footers just to let row-group stats
-        discard compacted history — at 10^12 rows that listing is the
-        storm Iceberg's manifests exist to avoid."""
+        This is what keeps ``changes`` O(new files) in *metadata*:
+        without it every incremental batch lists and opens the full
+        table's footers just to let row-group stats discard compacted
+        history — at 10^12 rows that listing is the storm Iceberg's
+        manifests exist to avoid."""
         # a published-but-not-yet-baked WAP commit lives in files whose
         # NAME carries its old staged seq while its EFFECTIVE seq is
         # the publish seq — any file that may contain such a row must
@@ -2105,13 +1878,9 @@ class TierStore:
         equality deletes (``deduped=False`` is the physical row-version
         view — compact, snapshots, additive folds).
 
-        Schema evolution is applied as metadata, Iceberg field-id
-        style (see the module docstring): a column a later append
-        added is served for every row (NULL where its file lacks it);
-        a renamed column's physical names are coalesced into the name
-        the requested horizon used (an as-of read BELOW the rename seq
-        serves the OLD name); drops are hidden only at horizons at or
-        after their seq.
+        Schema evolution (see the module docstring): a column a later
+        append added is served for every row, NULL where its file
+        lacks it.
 
         ``as_of_seq``: snapshot-as-of (time-travel) read — reconstruct
         the table state as of commit ``as_of_seq`` by restricting the
@@ -2166,7 +1935,6 @@ class TierStore:
         df = self._scan(
             tier,
             vis,
-            horizon=as_of_seq,
             exposed=chain if audit_seq is None else [int(audit_seq)],
             p_dates=p_dates,
             sources=sources,
@@ -2231,7 +1999,7 @@ class TierStore:
                     self._snapshots[slot] = held
                     return served
                 cached.unpersist()
-            df = self._scan(tier, vis, horizon=as_of_seq)
+            df = self._scan(tier, vis)
             if df is None:
                 return None
             if as_of_seq is not None:
@@ -2254,40 +2022,32 @@ class TierStore:
         self,
         tier: str,
         vis: Visibility,
-        horizon: int | None = None,
         exposed=(),
         merge_schema: bool = False,
         p_dates: list | None = None,
         sources: list | None = None,
-        canonical_names: bool = False,
         min_seq_hint: int | None = None,
         staged_raw: bool = False,
-        drop_horizon: int | None = None,
     ) -> DataFrame | None:
         """The row-version view every reader starts from (see
         :meth:`read` for the shared arguments): one scan of the tier's
-        live files, columns resolved through ``vis.schema_ops`` at
-        ``horizon``, WAP remap/hide applied, then the partition and
-        source row filters and the retention mask. No horizon filter
-        and no other masks — the caller applies those from the same
-        ``vis``. None for an empty tier. The internal readers' options:
+        live files, under the footer union while ``vis.schema_ops``
+        holds a live add, WAP remap/hide applied, then the partition
+        and source row filters and the retention mask. No horizon
+        filter and no other masks — the caller applies those from the
+        same ``vis``. None for an empty tier. The internal readers'
+        options:
 
         - ``merge_schema`` (compact): scan under the all-footer union
           even with no live schema op — a rewrite must carry every
           column any file has;
-        - ``canonical_names`` (changes, compact): serve CURRENT
-          names and drops regardless of ``horizon``, so two horizons'
-          images align and rewrites come out under current names;
-        - ``min_seq_hint`` (read_incremental, changes): plan only the
-          files whose name-encoded max seq exceeds the hint
+        - ``min_seq_hint`` (changes): plan only the files whose
+          name-encoded max seq exceeds the hint
           (:meth:`_plan_files_above_seq`). The caller promises to
           discard rows with ``commit_seq <= min_seq_hint`` anyway, so
           the hint changes which files are listed, never the result;
         - ``staged_raw`` (compact): skip the WAP remap/hide — the
-          staged rows' physical truth;
-        - ``drop_horizon`` (compact): bound which drops are physically
-          applied so history-preserving compaction keeps columns its
-          preserved snapshots still show."""
+          staged rows' physical truth."""
         path = self.tier_path(tier)
         # partition dirs can exist EMPTY (a torn keyed commit whose files
         # the replay repair removed, a crash between mkdir and the file
@@ -2297,13 +2057,11 @@ class TierStore:
         sample = next(self._data_files(path), None)
         if sample is None:
             return None
-        ops = vis.schema_ops
         reader = self.spark.read.option("basePath", path)
-        if merge_schema or ops:
-            # files may disagree on columns (live add/rename/drop) or
-            # types (live widen): request the footer-union schema,
-            # widest type per column
-            reader = reader.schema(self._union_read_schema(tier, ops))
+        if merge_schema or vis.schema_ops:
+            # files may disagree on columns (live add): request the
+            # footer-union schema
+            reader = reader.schema(self._union_read_schema(tier))
         else:
             # plain scan: explicit footer schema (driver-side pyarrow,
             # cached) replaces the per-read Spark inference job —
@@ -2328,14 +2086,6 @@ class TierStore:
         # basePath keeps p_date partition parsing identical for the
         # explicit file list; None → nothing skippable, plain dir scan
         df = reader.parquet(*planned) if planned is not None else reader.parquet(path)
-        if ops:
-            df = self._apply_schema_ops(
-                df,
-                ops,
-                horizon=horizon,
-                canonical=canonical_names,
-                drop_horizon=drop_horizon,
-            )
         if not staged_raw:
             # WAP: BEFORE any as-of filter and the newest-wins pick — a
             # published commit must order as the fresh commit it is
@@ -2408,7 +2158,7 @@ class TierStore:
         if not sum_cols:
             raise ValueError("read_summed requires sum_cols")
         vis = self._visibility(tier)
-        df = self._scan(tier, vis, horizon=as_of_seq)
+        df = self._scan(tier, vis)
         if df is None:
             return None
         if as_of_seq is not None:
@@ -2574,56 +2324,6 @@ class TierStore:
         return [agg[d] for d in sorted(agg)]
 
     # ---------- incremental / CDC ----------
-    def read_incremental(
-        self,
-        tier: str,
-        from_seq: int,
-        to_seq: int | None = None,
-        keys: tuple[str, ...] = DEFAULT_KEYS,
-    ) -> DataFrame | None:
-        """Incremental append scan (Iceberg ``incremental read``
-        analog): the NET upsert per key over commits in
-        ``(from_seq, to_seq]`` — the newest surviving, unmasked version
-        of every key touched in that range. A downstream consumer
-        (training-data export, cache refresh) applies these as upserts
-        instead of re-reading 10^12 rows; deletions are surfaced by
-        :meth:`changes`, not here.
-
-        Compaction-stability: requires ``to_seq >= min_as_of(tier)``
-        (raises otherwise). Proof that this suffices even though
-        compaction drops superseded versions: the in-range winner ``w``
-        of a key is lost only if some newer version ``v' > w`` with
-        ``v' <= horizon`` existed — but ``v' <= to_seq`` would make
-        ``v'`` the winner, so ``v' > to_seq``, i.e. ``horizon >
-        to_seq``. With ``to_seq >= horizon`` no net change is ever
-        lost. Equality deletes GC'd by compact are likewise safe here:
-        their masked versions were physically removed, which this
-        net-state scan reproduces.
-        """
-        to_eff = int(to_seq) if to_seq is not None else self.last_commit_seq()
-        from_seq = int(from_seq)
-        vis = self._visibility(tier)
-        vis.check(to_eff, "incremental read to_seq")
-        # min_seq_hint: only files that can hold in-range rows are
-        # planned — files whose every version predates from_seq cannot
-        # contribute a ranked winner here (the range filter drops them
-        # first), so skipping them is exact, and the incremental scan
-        # costs O(new files) in listing/footers, not O(table)
-        df = self._scan(tier, vis, min_seq_hint=from_seq)
-        if df is None:
-            return None
-        df = df.filter(
-            (F.col("commit_seq") > from_seq) & (F.col("commit_seq") <= to_eff)
-        )
-        # rolled-back versions are not net new rows at the range's
-        # horizon (a rollback crossing (from, to] surfaces as deletes
-        # in `changes`, never here — this scan is upserts-only)
-        out = self._newest_wins(vis.unvoided(df, to_eff), keys)
-        # deletes <= from_seq can never mask an in-range version
-        # (version > from_seq >= del_seq), so the as-of-bounded mask is
-        # exactly the range's own deletes
-        return self._apply_delete_mask(out, tier, vis, to_eff)
-
     def _touched_dates_from_manifest(
         self, tier: str, from_seq: int, to_eff: int, vis: Visibility
     ) -> tuple[bool, list | None]:
@@ -2763,12 +2463,11 @@ class TierStore:
         to_eff = int(to_seq) if to_seq is not None else self.last_commit_seq()
         from_seq = int(from_seq)
         vis = self._visibility(tier)
-        raw = self._scan(tier, vis, canonical_names=True)
+        raw = self._scan(tier, vis)
         if raw is None:
             return None
         # both images need exact history (raise past expired history —
-        # never a silent wrong diff); canonical names on both horizons
-        # (a rename inside (from, to] must not misalign the images)
+        # never a silent wrong diff)
         vis.check(from_seq)
         vis.check(to_eff)
         seq = F.col("commit_seq")
@@ -2782,7 +2481,7 @@ class TierStore:
         # `raw` stays the FULL table: delete-file expansion and
         # rollback-crossing sweeps below legitimately reach versions
         # older than from_seq
-        inc = self._scan(tier, vis, canonical_names=True, min_seq_hint=from_seq)
+        inc = self._scan(tier, vis, min_seq_hint=from_seq)
         touched = inc.filter(in_range).select(*keys)
         # one footer-grouping pass over the delete files, reused below
         del_groups = self._delete_groups(tier)
@@ -2871,9 +2570,9 @@ class TierStore:
         # delete-mask join each) and a full-outer join — three keyed
         # exchanges where one suffices, and max-of-struct partial-
         # aggregates map-side where row_number cannot.
-        vers = self._scan(
-            tier, vis, canonical_names=True, p_dates=p_dates
-        ).join(touched, list(keys), "leftsemi")
+        vers = self._scan(tier, vis, p_dates=p_dates).join(
+            touched, list(keys), "leftsemi"
+        )
         val_cols = [c for c in vers.columns if c not in keys]
         vers = vers.withColumn("_vpre", valid_at(from_seq)).withColumn(
             "_vpost", valid_at(to_eff)
@@ -3305,22 +3004,10 @@ class TierStore:
         # live add op or not (a store written before add ops were
         # recorded). Compact reads all footers anyway; the union cost
         # is amortized by the full rewrite.
-        # canonical_names: the rewrite bakes renames in (files come out
-        # uniformly under current names; as-of display below a rename
-        # stays a metadata reverse-map). drop_horizon: physically apply
-        # only drops the expiry horizon covers — history-preserving
-        # compaction must keep a column its preserved snapshots show.
         # staged_raw: the staged rows' physical truth — the WAP logic
         # above carries, bakes or drops them itself.
         vis = self._visibility(tier)
-        raw = self._scan(
-            tier,
-            vis,
-            merge_schema=True,
-            canonical_names=True,
-            drop_horizon=expire_below,
-            staged_raw=True,
-        )
+        raw = self._scan(tier, vis, merge_schema=True, staged_raw=True)
         if raw is None:
             return {"files_before": files_before, "files_after": files_before, "rows": 0}
         if drop_seqs:
@@ -3544,15 +3231,6 @@ class TierStore:
             # engages past hi) — the first still-correct snapshot after
             # the drop is hi+1
             new_horizon = max(new_horizon, max_rb_hi + 1)
-        if expire_below is None:
-            # full expiry physically applied EVERY recorded column drop
-            # — snapshots older than the newest drop no longer show the
-            # dropped column, so the horizon must cover it
-            schema_drop_seqs = [
-                o["seq"] for o in self._schema_ops(tier) if o["kind"] == "drop"
-            ]
-            if schema_drop_seqs:
-                new_horizon = max(new_horizon, max(schema_drop_seqs))
         # Record the horizon BEFORE the destructive swap (review fix):
         # a crash mid-swap may already have expired history, and an
         # unrecorded horizon would let read(as_of_seq=...) silently

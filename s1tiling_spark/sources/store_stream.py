@@ -15,24 +15,26 @@ Semantics (matching Iceberg's streaming read contract):
 - **Appends-only.** Each micro-batch carries the surviving appended row
   versions whose effective ``commit_seq`` lies in ``(start, end]``.
   Consumers apply newest-wins by ``commit_seq`` exactly as the store's
-  own reads do. Equality deletes and rollbacks *behind* the cursor are
-  not retracted (Iceberg: ``streaming-skip-delete-snapshots``); commits
-  already voided by a rollback at plan time are excluded.
+  own reads do. Equality deletes, rollbacks and retention expiries
+  *behind* the cursor are not retracted (Iceberg:
+  ``streaming-skip-delete-snapshots``); commits already voided by a
+  rollback at plan time are excluded, and so are rows already hidden by
+  an expiry at plan time (the retention mask the store's reads apply:
+  rows dated before the floor, committed before the expiry).
 - **WAP/branch aware.** Staged, abandoned, and unmerged-branch commits
   are invisible. A published WAP commit streams at its *publish* seq
   (the file keeps its staged name until compaction bakes the remap;
   the planner rewrites ``commit_seq`` to the publish seq in-flight).
 - **Compaction-safe.** A cursor at or past ``min_as_of`` is exact even
   across compactions: compacted files are name-tagged ``m<maxseq>`` and
-  row-filtered by seq range (superseded versions dropped by compaction
-  were, by the horizon proof on ``read_incremental``, never net rows of
-  any in-contract range). A cursor *behind* the horizon raises — never
-  a silently thinned batch.
+  row-filtered by seq range. A version compaction drops was superseded
+  by a newer one at or below the horizon, so it is never the net row of
+  a range that ends at or past the horizon. A cursor *behind* the
+  horizon raises — never a silently thinned batch.
 - **Schema pinned at stream start** (Spark streaming relations are
-  fixed-schema): the newest data file's physical schema with recorded
-  rename/drop/widen ops applied, plus the hive partition column
-  ``p_date``. Older files are aligned per-batch: renames resolved,
-  added columns null-filled, widened types upcast.
+  fixed-schema): the newest data file's physical schema plus the hive
+  partition column ``p_date``. Older files are aligned per-batch: a
+  column a later append added is null-filled.
 
 Scale shape: ``latestOffset``/``partitions`` are driver-side metadata
 reads (O(new files) via the ``c<seq>-``/``m<maxseq>-`` name manifest —
@@ -43,6 +45,9 @@ Python). ``maxCommitsPerBatch`` bounds a micro-batch the way Iceberg's
 """
 
 from __future__ import annotations
+
+import functools
+from datetime import date, datetime, timezone
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -61,18 +66,6 @@ def _store(path: str):
     return TierStore(None, path)
 
 
-def _apply_ops_to_names(names: list[str], ops: list[dict]) -> list[str]:
-    """Canonical current names for a physical column list: replay the
-    recorded rename/drop history (seq-ascending) over it."""
-    out = list(names)
-    for op in ops:
-        if op["kind"] == "rename" and op["from"] in out:
-            out[out.index(op["from"])] = op["to"]
-        elif op["kind"] == "drop" and op["col"] in out:
-            out.remove(op["col"])
-    return out
-
-
 def _newest_data_file(store, tier: str) -> str | None:
     """Highest-seq live data file (schema authority). Staged/branch
     files are fine here — they share the tier's declared schema."""
@@ -84,9 +77,8 @@ def _newest_data_file(store, tier: str) -> str | None:
 
 
 def _pinned_arrow_schema(store, tier: str):
-    """The stream's fixed emit schema: newest file's physical schema
-    with schema ops applied (renames resolved, drops removed, widens
-    upcast), ``p_date`` appended (date32, from the hive dir name)."""
+    """The stream's fixed emit schema: newest file's physical schema,
+    ``p_date`` appended (date32, from the hive dir name)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -107,21 +99,8 @@ def _pinned_arrow_schema(store, tier: str):
             return pa.list_(_norm(t.value_type))
         return t
 
-    sch = pq.read_schema(path)
-    ops = store._schema_ops(tier)
-    fields = []
-    for f in sch:
-        name = _apply_ops_to_names([f.name], ops)
-        if not name:  # dropped
-            continue
-        typ = _norm(f.type)
-        for op in ops:
-            if op["kind"] == "widen" and op["col"] == name[0]:
-                typ = {"bigint": pa.int64(), "double": pa.float64(),
-                       "int": pa.int32(), "smallint": pa.int16()}.get(op["to"], typ)
-        fields.append(pa.field(name[0], typ))
-    fields.append(pa.field("p_date", pa.date32()))
-    return pa.schema(fields)
+    fields = [pa.field(f.name, _norm(f.type)) for f in pq.read_schema(path)]
+    return pa.schema([*fields, pa.field("p_date", pa.date32())])
 
 
 class _FilePartition(InputPartition):
@@ -129,8 +108,8 @@ class _FilePartition(InputPartition):
     Attributes: path, p_date (hive dir value), remap_seq
     (published-WAP commit_seq override), row_range ((start, end] filter
     for compact outputs), excluded (rollback ranges, (lo, hi]),
-    rename_ops ((from, to) seq-ordered), ddl (pinned Arrow schema,
-    hex-serialized IPC)."""
+    retention ((floor date, expiry seq) of the tier's last expiry, or
+    (None, 0)), ddl (pinned Arrow schema, hex-serialized IPC)."""
 
     def __init__(self, **kw):
         self.__dict__.update(kw)
@@ -196,16 +175,12 @@ class TierStoreStreamReader(DataSourceStreamReader):
         store = _store(self.path)
         vis = store._visibility(self.tier)
         vis.check(lo, "stream cursor")
-        ops = store._schema_ops(self.tier)
-        renames = tuple(
-            (op["from"], op["to"]) for op in ops if op["kind"] == "rename"
-        )
         parts: list[InputPartition] = []
         for f in store._data_files(store.tier_path(self.tier)):
             if f.kind is None:
                 # legacy unprefixed file: conservatively a compact
                 # output covering all history — row-filter it
-                parts.append(self._mk(f, None, (lo, hi), vis.rollbacks, renames))
+                parts.append(self._mk(f, vis, None, (lo, hi), vis.rollbacks))
             elif f.kind == "c":
                 if f.seq in vis.hidden:
                     continue  # staged/abandoned/unmerged branch: invisible
@@ -213,62 +188,63 @@ class TierStoreStreamReader(DataSourceStreamReader):
                 eff = vis.remap.get(f.seq, f.seq)
                 if lo < eff <= hi and not vis.voided(eff):
                     remap = eff if f.seq in vis.remap else None
-                    parts.append(self._mk(f, remap, None, (), renames))
+                    parts.append(self._mk(f, vis, remap, None, ()))
             elif f.seq > lo:  # m<maxseq>: compact output, may hold in-range rows
-                parts.append(self._mk(f, None, (lo, hi), vis.rollbacks, renames))
+                parts.append(self._mk(f, vis, None, (lo, hi), vis.rollbacks))
         return parts
 
-    def _mk(self, f, remap, row_range, excluded, renames):
+    def _mk(self, f, vis, remap, row_range, excluded):
         return _FilePartition(
             path=f.path,
             p_date=f.p_date,
             remap_seq=remap,
             row_range=row_range,
             excluded=tuple(excluded),
-            rename_ops=tuple(renames),
+            retention=vis.retention,
             ddl=self.schema_json,
         )
 
     # ---- execution (Arrow worker, one file per partition) ----
     def read(self, partition: _FilePartition):
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         pinned = pa.ipc.read_schema(
             pa.BufferReader(bytes.fromhex(partition.ddl))
         )
         tbl = pq.read_table(partition.path)
-        # resolve historical names to canonical (rename evolution)
-        cur = list(tbl.schema.names)
-        for old, new in partition.rename_ops:
-            if old in cur and new not in cur:
-                cur[cur.index(old)] = new
-        tbl = tbl.rename_columns(cur)
-        if partition.row_range is not None:
-            import pyarrow.compute as pc
+        seq = tbl["commit_seq"]
 
-            lo, hi = partition.row_range
-            mask = pc.and_(
-                pc.greater(tbl["commit_seq"], pa.scalar(lo)),
-                pc.less_equal(tbl["commit_seq"], pa.scalar(hi)),
+        def within(a, b):  # a < commit_seq <= b
+            return pc.and_(pc.greater(seq, pa.scalar(a)), pc.less_equal(seq, pa.scalar(b)))
+
+        masks = []
+        if partition.row_range is not None:
+            masks.append(within(*partition.row_range))
+            masks += [pc.invert(within(a, b)) for a, b in partition.excluded]
+        floor, exp_seq = partition.retention
+        if floor is not None:
+            # the store's retention mask: an expiry hides the rows dated
+            # before its floor that were committed before it (a
+            # published WAP row counts at its publish seq)
+            eff = seq if partition.remap_seq is None else pa.scalar(partition.remap_seq)
+            cut = datetime.fromisoformat(floor).replace(tzinfo=timezone.utc)
+            expired = pc.and_(
+                pc.less(tbl["bucket_start"], pa.scalar(cut, tbl["bucket_start"].type)),
+                pc.less(eff, pa.scalar(exp_seq)),
             )
-            for a, b in partition.excluded:
-                inside = pc.and_(
-                    pc.greater(tbl["commit_seq"], pa.scalar(a)),
-                    pc.less_equal(tbl["commit_seq"], pa.scalar(b)),
-                )
-                mask = pc.and_(mask, pc.invert(inside))
-            tbl = tbl.filter(mask)
+            masks.append(pc.invert(pc.fill_null(expired, False)))
+        if masks:
+            tbl = tbl.filter(functools.reduce(pc.and_, masks))
         if tbl.num_rows == 0:
             return
         n = tbl.num_rows
         cols = []
         for f in pinned:
             if f.name == "p_date":
-                import datetime as _dt
-
                 cols.append(
-                    pa.array([_dt.date.fromisoformat(partition.p_date)] * n,
+                    pa.array([date.fromisoformat(partition.p_date)] * n,
                              type=pa.date32())
                 )
             elif f.name == "commit_seq" and partition.remap_seq is not None:

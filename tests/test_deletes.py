@@ -7,8 +7,8 @@ a LATER append re-inserts the key and wins; time travel applies only
 the deletes visible at the requested horizon. Compaction applies
 deletes physically when it expires history (and raises the as-of
 horizon over them), but keeps them logical under history-preserving
-``expire_below``. ``read_incremental``/``changes`` are the incremental
-append scan and changelog view derived from the same lineage.
+``expire_below``. ``changes`` is the changelog view derived from the
+same lineage.
 
 Reference analog: forced re-run / cache eviction of an existing product
 (`/root/reference/s1tiling/libs/S1FileManager.py:735-748`), generalized
@@ -195,45 +195,6 @@ def test_expire_below_compact_keeps_deletes_logical(spark, seq, tmp_path):
     # the [E, D) window: at s1 the delete (seq s2) is not yet visible
     assert_frames_match(_state(store, "1d", as_of_seq=s1), full_state)
     assert_frames_match(_state(store, "1d", as_of_seq=s2), masked_state)
-
-
-def test_read_incremental_net_change_survives_compaction(spark, seq, tmp_path):
-    """read_incremental(from) == the net winners of later commits;
-    identical before and after a full compact (winners keep their
-    original commit_seq), and refused when to_seq predates the
-    horizon (net changes below it are unreconstructable)."""
-    store = TierStore(spark, str(tmp_path / "incr"))
-    early = rollup_sequences(
-        seq.filter(F.col("event_ts") < "2024-01-20 00:00:00"), "1d"
-    )
-    full = rollup_sequences(seq, "1d").cache()
-    s1 = store.next_commit_seq()
-    store.append("1d", early, s1, "run-1")
-    state1 = _state(store, "1d")
-    s2 = store.next_commit_seq()
-    store.append("1d", full, s2, "run-2")
-
-    inc = store.read_incremental("1d", from_seq=s1)
-    pdf = inc.drop("run_id", "p_date").toPandas()
-    assert (pdf["commit_seq"] == s2).all()
-    # applying the upserts onto the pre state reconstructs the post state
-    import pandas as pd
-
-    keys = ["bucket_start", "source"]
-    up = pdf.drop(columns=["commit_seq"])
-    merged = pd.concat([state1[~state1.set_index(keys).index.isin(up.set_index(keys).index)], up])
-    assert_frames_match(merged, _state(store, "1d"))
-
-    before = inc.drop("run_id", "p_date", "commit_seq").toPandas()
-    store.compact("1d")
-    after = (
-        store.read_incremental("1d", from_seq=s1)
-        .drop("run_id", "p_date", "commit_seq")
-        .toPandas()
-    )
-    assert_frames_match(after, before)
-    with pytest.raises(ValueError, match="predates"):
-        store.read_incremental("1d", from_seq=0, to_seq=max(store.min_as_of("1d") - 1, 0))
 
 
 def test_changes_emits_insert_update_delete_with_images(spark, tmp_path):

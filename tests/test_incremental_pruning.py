@@ -1,7 +1,7 @@
 """Incremental file planning (r5): data-file names carry the max
 commit_seq they contain (`c<seq>-` append files, `m<maxseq>-` compact
-outputs), so `read_incremental`/`changes` plan ONLY the files that can
-hold rows past their cursor — the Iceberg incremental-manifest analog.
+outputs), so `changes` plans ONLY the files that can hold rows past
+its cursor — the Iceberg incremental-manifest analog.
 Without it every incremental batch lists and opens the whole table's
 footers just to let row-group stats discard compacted history; at
 10^12 rows that metadata storm is the thing manifests exist to avoid.
@@ -83,18 +83,6 @@ def test_plan_skips_compacted_history(spark, tmp_path):
     }
     # nothing skippable → None (plain dir scan keeps the plan identical)
     assert store._plan_files_above_seq("t", 0, store._visibility("t")) is None
-
-
-def test_read_incremental_parity_and_pruning(spark, tmp_path):
-    store, seqs = _seed(spark, str(tmp_path / "inc"))
-    inc = store.read_incremental("t", from_seq=seqs[2])
-    rows = {(r["p_date"].isoformat(), r["v"]) for r in inc.collect()}
-    assert rows == {("2024-01-02", 21), ("2024-01-03", 30)}
-    # the incremental scan opened only the two new append files
-    opened = {os.path.basename(p) for p in inc.inputFiles()}
-    assert opened == {
-        fn for fn in opened if fn.startswith("c")
-    } and len(opened) == 2
 
 
 def test_changes_parity_with_pruned_touched_scan(spark, tmp_path):

@@ -191,9 +191,6 @@ def _served(store, as_of, from_seq):
         "read": rows(store.read("t"), "source", "v", "n_flag"),
         "snapshot": rows(store.snapshot("t"), "source", "v", "n_flag"),
         "as_of": rows(store.read("t", as_of_seq=as_of), "source", "v", "n_flag"),
-        "incremental": rows(
-            store.read_incremental("t", from_seq=from_seq), "source", "v", "n_flag"
-        ),
         "changes": rows(store.changes("t", from_seq=from_seq), "op", "source", "n_flag"),
         "summed": rows(summed, "source", "v", "n_flag"),
     }
@@ -233,7 +230,6 @@ def test_added_column_served_by_every_reader(spark, tmp_path, new_day):
         "read": state,
         "snapshot": state,
         "as_of": state,
-        "incremental": {("a", 5, 9), ("c", 3, 7)},
         "changes": {("update", "a", 9), ("insert", "c", 7)},
         "summed": {("a", 6, 9), ("b", 2, None), ("c", 3, 7)},
     }
@@ -244,7 +240,6 @@ def test_added_column_served_by_every_reader(spark, tmp_path, new_day):
         "read": state,
         "snapshot": state,
         "as_of": state,
-        "incremental": set(),
         "changes": set(),
         "summed": state,
     }
@@ -257,7 +252,6 @@ def test_added_column_served_by_every_reader(spark, tmp_path, new_day):
         "read": head,
         "snapshot": head,
         "as_of": state,
-        "incremental": {("d", 4, None)},
         "changes": {("insert", "d", None)},
         "summed": head,
     }
@@ -297,140 +291,6 @@ def test_maybe_compact_triggers_on_version_ratio(spark, seq, tmp_path):
     assert r4["version_ratio"] is not None
 
 
-# ---------- rename / drop (metadata schema evolution) ----------
-
-_EVO_SCHEMA = "bucket_start timestamp, source string, v long"
-
-
-def _evo_rows(spark, ts, src, val, col="v"):
-    from datetime import datetime
-
-    return spark.createDataFrame(
-        [(datetime.fromisoformat(ts), src, val)],
-        _EVO_SCHEMA.replace(" v ", f" {col} "),
-    )
-
-
-def test_rename_column_resolves_both_spellings(spark, tmp_path):
-    """Metadata rename: current reads serve the new name coalescing
-    files written under either spelling; as-of reads BELOW the rename
-    still serve the old name; the rename survives a pure file
-    compaction AND a full compaction (VERDICT r4 ask #8)."""
-    store = TierStore(spark, str(tmp_path / "ren"))
-    s1 = store.next_commit_seq()
-    store.append("t", _evo_rows(spark, "2024-01-01 10:00:00", "a", 1), s1, "b1")
-    rn_seq = store.rename_column("t", "v", "val")
-    assert rn_seq > s1
-    s3 = store.next_commit_seq()
-    store.append(
-        "t", _evo_rows(spark, "2024-01-02 10:00:00", "b", 2, col="val"), s3, "b2"
-    )
-
-    cur = store.read("t")
-    assert "val" in cur.columns and "v" not in cur.columns
-    assert {(r["source"], r["val"]) for r in cur.collect()} == {("a", 1), ("b", 2)}
-
-    old = store.read("t", as_of_seq=s1)
-    assert "v" in old.columns and "val" not in old.columns
-    assert [(r["source"], r["v"]) for r in old.collect()] == [("a", 1)]
-
-    # pure file compaction (full history kept): both horizons intact
-    store.compact("t", expire_below=0)
-    cur = store.read("t")
-    assert {(r["source"], r["val"]) for r in cur.collect()} == {("a", 1), ("b", 2)}
-    old = store.read("t", as_of_seq=s1)
-    assert [(r["source"], r["v"]) for r in old.collect()] == [("a", 1)]
-
-    # full compaction bakes the canonical name into every file; the
-    # old-name as-of read still resolves as long as its snapshot
-    # survives the horizon
-    store.compact("t")
-    cur = store.read("t")
-    assert {(r["source"], r["val"]) for r in cur.collect()} == {("a", 1), ("b", 2)}
-    if store.min_as_of("t") <= s1:
-        old = store.read("t", as_of_seq=s1)
-        assert [(r["source"], r["v"]) for r in old.collect()] == [("a", 1)]
-
-
-def test_drop_column_hides_then_compaction_applies(spark, tmp_path):
-    """Metadata drop: hidden from current reads immediately, visible to
-    as-of reads below the drop; a history-preserving compaction keeps
-    the column physically (its snapshots still show it), a full
-    compaction removes it and extends the horizon so no read can
-    resurrect it silently."""
-    import pyarrow.parquet as _pq
-
-    store = TierStore(spark, str(tmp_path / "drop"))
-    df = spark.createDataFrame(
-        [(__import__("datetime").datetime(2024, 1, 1, 10), "a", 1, 99)],
-        "bucket_start timestamp, source string, v long, extra long",
-    )
-    s1 = store.next_commit_seq()
-    store.append("t", df, s1, "b1")
-    d_seq = store.drop_column("t", "extra")
-
-    cur = store.read("t")
-    assert "extra" not in cur.columns and cur.count() == 1
-    old = store.read("t", as_of_seq=s1)
-    assert old.select("extra").collect()[0][0] == 99
-
-    # history-preserving compaction keeps the column in the files
-    store.compact("t", expire_below=0)
-    assert store.read("t", as_of_seq=s1).select("extra").collect()[0][0] == 99
-    assert "extra" not in store.read("t").columns
-
-    # full compaction: physically gone, horizon covers the drop
-    store.compact("t")
-    tier_dir = store.tier_path("t")
-    for part in os.listdir(tier_dir):
-        if part.startswith("p_date="):
-            for fn in os.listdir(os.path.join(tier_dir, part)):
-                if fn.endswith(".parquet"):
-                    names = _pq.read_schema(os.path.join(tier_dir, part, fn)).names
-                    assert "extra" not in names
-    assert store.min_as_of("t") >= d_seq
-    with pytest.raises(ValueError, match="predates"):
-        store.read("t", as_of_seq=s1)
-
-
-def test_schema_op_validation(spark, tmp_path):
-    from datetime import datetime as _dt
-
-    store = TierStore(spark, str(tmp_path / "val"))
-    df = spark.createDataFrame(
-        [(_dt(2024, 1, 1, 10), "a", 1, 2)],
-        "bucket_start timestamp, source string, v long, w long",
-    )
-    store.append("t", df, store.next_commit_seq(), "b1")
-    with pytest.raises(ValueError, match="structural"):
-        store.rename_column("t", "source", "src")
-    with pytest.raises(ValueError, match="structural"):
-        store.drop_column("t", "bucket_start")
-    with pytest.raises(ValueError, match="no column"):
-        store.rename_column("t", "nope", "x")
-    with pytest.raises(ValueError, match="already exists"):
-        store.rename_column("t", "v", "w")
-
-
-def test_rename_then_changes_serves_canonical_schema(spark, tmp_path):
-    """A changelog range crossing a rename must not misalign columns:
-    both as-of states are read under canonical (current) names."""
-    store = TierStore(spark, str(tmp_path / "chren"))
-    s1 = store.next_commit_seq()
-    store.append("t", _evo_rows(spark, "2024-01-01 10:00:00", "a", 1), s1, "b1")
-    store.rename_column("t", "v", "val")
-    s3 = store.next_commit_seq()
-    store.append(
-        "t", _evo_rows(spark, "2024-01-01 10:00:00", "a", 5, col="val"), s3, "b2"
-    )
-    ch = store.changes("t", from_seq=s1, to_seq=s3)
-    rows = [(r["op"], r["val"]) for r in ch.collect()]
-    assert rows == [("update", 5)]
-
-
-# ---------- widen (type promotion) ----------
-
-
 def _typed_rows(spark, ts, src, val, vtype="int"):
     from datetime import datetime as _dt
 
@@ -440,156 +300,13 @@ def _typed_rows(spark, ts, src, val, vtype="int"):
     )
 
 
-def test_widen_column_mixes_narrow_and_wide_files(spark, tmp_path):
-    """Metadata widen (Iceberg type promotion int→long): narrow files
-    written before the widen and wide files after it scan TOGETHER
-    (mergeSchema refuses this — the explicit union schema is the
-    mechanism); current reads serve bigint with a genuinely 64-bit
-    value intact, as-of reads below the widen still serve int; compact
-    bakes the wide type into every footer."""
-    import pyarrow.parquet as _pq
-
-    store = TierStore(spark, str(tmp_path / "widen"))
-    s1 = store.next_commit_seq()
-    store.append("t", _typed_rows(spark, "2024-01-01 10:00:00", "a", 7), s1, "b1")
-    w_seq = store.widen_column("t", "v", "bigint")
-    assert w_seq > s1
-    big = 3_000_000_000  # > 2^31: only representable post-widen
-    s3 = store.next_commit_seq()
-    store.append(
-        "t",
-        _typed_rows(spark, "2024-01-02 10:00:00", "b", big, vtype="bigint"),
-        s3,
-        "b2",
-    )
-
-    cur = store.read("t")
-    assert dict(cur.dtypes)["v"] == "bigint"
-    assert {(r["source"], r["v"]) for r in cur.collect()} == {("a", 7), ("b", big)}
-
-    old = store.read("t", as_of_seq=s1)
-    assert dict(old.dtypes)["v"] == "int"
-    assert [(r["source"], r["v"]) for r in old.collect()] == [("a", 7)]
-
-    # changelog crossing the widen: canonical (wide) on both horizons
-    ch = store.changes("t", from_seq=s1, to_seq=s3)
-    assert [(r["op"], r["v"]) for r in ch.collect()] == [("insert", big)]
-
-    # history-preserving compaction: files rewritten wide, horizons intact
-    store.compact("t", expire_below=0)
-    for part in os.listdir(store.tier_path("t")):
-        if part.startswith("p_date="):
-            pdir = os.path.join(store.tier_path("t"), part)
-            for fn in os.listdir(pdir):
-                if fn.endswith(".parquet"):
-                    sch = _pq.read_schema(os.path.join(pdir, fn))
-                    assert str(sch.field("v").type) == "int64"
-    cur = store.read("t")
-    assert dict(cur.dtypes)["v"] == "bigint"
-    assert {(r["source"], r["v"]) for r in cur.collect()} == {("a", 7), ("b", big)}
-    old = store.read("t", as_of_seq=s1)
-    assert dict(old.dtypes)["v"] == "int"
-    assert [(r["source"], r["v"]) for r in old.collect()] == [("a", 7)]
-
-    # full compaction: op baked below the horizon, plain inferred reads
-    store.compact("t")
-    cur = store.read("t")
-    assert dict(cur.dtypes)["v"] == "bigint"
-    assert {(r["source"], r["v"]) for r in cur.collect()} == {("a", 7), ("b", big)}
-
-
-def test_widen_validation(spark, tmp_path):
-    from datetime import datetime as _dt
-
-    store = TierStore(spark, str(tmp_path / "wval"))
-    df = spark.createDataFrame(
-        [(_dt(2024, 1, 1, 10), "a", 1, 1.5, "x")],
-        "bucket_start timestamp, source string, v int, f float, lbl string",
-    )
-    store.append("t", df, store.next_commit_seq(), "b1")
-    with pytest.raises(ValueError, match="structural"):
-        store.widen_column("t", "commit_seq", "bigint")
-    with pytest.raises(ValueError, match="no column"):
-        store.widen_column("t", "nope", "bigint")
-    with pytest.raises(ValueError, match="crosses type families"):
-        store.widen_column("t", "v", "double")
-    with pytest.raises(ValueError, match="crosses type families"):
-        store.widen_column("t", "lbl", "bigint")
-    with pytest.raises(ValueError, match="not wider"):
-        store.widen_column("t", "v", "int")
-    with pytest.raises(ValueError, match="not a widening target"):
-        store.widen_column("t", "v", "string")
-    # float→double is the fractional promotion
-    store.widen_column("t", "f", "double")
-    assert dict(store.read("t").dtypes)["f"] == "double"
-    # and a second widen continues from the already-widened type
-    with pytest.raises(ValueError, match="not wider"):
-        store.widen_column("t", "f", "double")
-
-
-def test_widen_then_rename_resolves_through_the_chain(spark, tmp_path):
-    """A widen recorded before a later rename must keep applying to the
-    column's NEW spelling (the forward-resolution chain), and the as-of
-    read below both ops serves the original narrow name and type."""
-    store = TierStore(spark, str(tmp_path / "wren"))
-    s1 = store.next_commit_seq()
-    store.append("t", _typed_rows(spark, "2024-01-01 10:00:00", "a", 7), s1, "b1")
-    store.widen_column("t", "v", "bigint")
-    store.rename_column("t", "v", "val")
-    big = 4_000_000_000
-    s4 = store.next_commit_seq()
-    store.append(
-        "t",
-        spark.createDataFrame(
-            [(__import__("datetime").datetime(2024, 1, 2, 10), "b", big)],
-            "bucket_start timestamp, source string, val bigint",
-        ),
-        s4,
-        "b2",
-    )
-    cur = store.read("t")
-    assert dict(cur.dtypes)["val"] == "bigint" and "v" not in cur.columns
-    assert {(r["source"], r["val"]) for r in cur.collect()} == {("a", 7), ("b", big)}
-    old = store.read("t", as_of_seq=s1)
-    assert dict(old.dtypes)["v"] == "int" and "val" not in old.columns
-    assert [(r["source"], r["v"]) for r in old.collect()] == [("a", 7)]
-
-
 # ---------- write-time schema alignment (the Iceberg write contract) ----------
 
 
-def test_append_upcasts_narrow_batch_after_widen(spark, tmp_path):
-    """After ``widen_column`` the tier's declared type gates every
-    append: a batch still carrying the NARROW type is upcast at write
-    time, so no post-widen footer is ever narrow — plain inferred
-    scans (post-compact) never meet mixed widths, and the landmine
-    cannot detonate at read time after the writer is gone."""
-    store = TierStore(spark, str(tmp_path / "aw"))
-    s1 = store.next_commit_seq()
-    store.append("t", _typed_rows(spark, "2024-01-01 10:00:00", "a", 7), s1, "b1")
-    store.widen_column("t", "v", "bigint")
-    # narrow batch AFTER the widen — same store instance (memo must be
-    # invalidated by the schema op, not just refreshed on conflict)
-    s3 = store.next_commit_seq()
-    store.append("t", _typed_rows(spark, "2024-01-02 10:00:00", "b", 9), s3, "b2")
-
-    # every footer under the post-widen date is already int64
-    for part in os.listdir(store.tier_path("t")):
-        if part.startswith("p_date=2024-01-02"):
-            pdir = os.path.join(store.tier_path("t"), part)
-            for fn in os.listdir(pdir):
-                if fn.endswith(".parquet"):
-                    sch = pq.read_schema(os.path.join(pdir, fn))
-                    assert str(sch.field("v").type) == "int64"
-    cur = store.read("t")
-    assert dict(cur.dtypes)["v"] == "bigint"
-    assert {(r["source"], r["v"]) for r in cur.collect()} == {("a", 7), ("b", 9)}
-
-
-def test_append_wide_without_declared_widen_raises(spark, tmp_path):
-    """A wide value under a narrow declared type is out of contract
-    (an as-of read below the widen would downcast it): the append
-    fails fast, naming the widen_column call that legalizes it."""
+def test_append_wider_than_declared_raises(spark, tmp_path):
+    """A column's type never changes: a batch carrying a value wider
+    than the declared type fails fast instead of landing a footer
+    that disagrees with the tier."""
     store = TierStore(spark, str(tmp_path / "awr"))
     store.append(
         "t",
@@ -597,7 +314,7 @@ def test_append_wide_without_declared_widen_raises(spark, tmp_path):
         store.next_commit_seq(),
         "b1",
     )
-    with pytest.raises(ValueError, match="widen_column"):
+    with pytest.raises(ValueError, match="wider than the declared int"):
         store.append(
             "t",
             _typed_rows(spark, "2024-01-02 10:00:00", "b", 3_000_000_000, "bigint"),
@@ -615,42 +332,6 @@ def test_append_wide_without_declared_widen_raises(spark, tmp_path):
             store.next_commit_seq(),
             "b3",
         )
-
-
-def test_append_honors_concurrent_writers_widen(spark, tmp_path):
-    """The declared-type memo is per store instance; a widen declared
-    by ANOTHER process must be honored, not spuriously rejected off
-    the stale memo — the conflict path re-reads disk truth first."""
-    a = TierStore(spark, str(tmp_path / "cw"), multi_writer=True)
-    b = TierStore(spark, str(tmp_path / "cw"), multi_writer=True)
-    a.append(
-        "t",
-        _typed_rows(spark, "2024-01-01 10:00:00", "a", 7),
-        a.next_commit_seq(),
-        "b1",
-    )
-    # warm a's memo with the narrow declared type
-    a.append(
-        "t",
-        _typed_rows(spark, "2024-01-01 11:00:00", "a2", 8),
-        a.next_commit_seq(),
-        "b2",
-    )
-    b.widen_column("t", "v", "bigint")
-    big = 5_000_000_000
-    a.append(
-        "t",
-        _typed_rows(spark, "2024-01-02 10:00:00", "c", big, "bigint"),
-        a.next_commit_seq(),
-        "b3",
-    )
-    cur = a.read("t")
-    assert dict(cur.dtypes)["v"] == "bigint"
-    assert {(r["source"], r["v"]) for r in cur.collect()} == {
-        ("a", 7),
-        ("a2", 8),
-        ("c", big),
-    }
 
 
 def test_append_aligns_add_column_evolutions_later_spelling(spark, tmp_path):
@@ -695,3 +376,38 @@ def test_append_aligns_add_column_evolutions_later_spelling(spark, tmp_path):
     assert dict(cur.dtypes)["extra"] == "bigint"
     got = {(r["source"], r["v"], r["extra"]) for r in cur.collect()}
     assert got == {("a", 7, None), ("b", 8, 6_000_000_000), ("c", 9, 11)}
+
+
+def test_live_retired_schema_op_is_refused(spark, tmp_path):
+    """Earlier releases recorded metadata-only rename, widen and drop
+    ops. While one is live (above the compaction horizon) the store
+    refuses the tier, naming the op kind, instead of serving columns
+    under the wrong names or types; an op at or below the horizon is
+    baked into the files and harmless."""
+    store = TierStore(spark, str(tmp_path / "retired"))
+    s1 = store.next_commit_seq()
+    store.append("t", _typed_rows(spark, "2024-01-01 10:00:00", "a", 7), s1, "b1")
+    ops = {
+        "rename": {"kind": "rename", "from": "v", "to": "val"},
+        "widen": {"kind": "widen", "col": "v", "from": "int", "to": "bigint"},
+        "drop": {"kind": "drop", "col": "v"},
+    }
+    for kind, op in ops.items():
+        seq = store.next_commit_seq()
+        store._update_meta(lambda m, o={**op, "seq": seq}: m.__setitem__("_schema_t", [o]))
+        calls = {
+            "read": lambda: store.read("t"),
+            "snapshot": lambda: store.snapshot("t"),
+            "append": lambda: store.append(
+                "t",
+                _typed_rows(spark, "2024-01-02 10:00:00", "b", 8),
+                store.next_commit_seq(),
+                "b2",
+            ),
+        }
+        for what, call in calls.items():
+            with pytest.raises(ValueError, match=f"'t': live '{kind}' schema op"):
+                call()
+    # a compaction horizon at the op's seq: baked, served as the files are
+    store._update_meta(lambda m: m.__setitem__("t", seq))
+    assert {(r["source"], r["v"]) for r in store.read("t").collect()} == {("a", 7)}

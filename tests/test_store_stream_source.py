@@ -13,7 +13,9 @@ Contract under test:
   stream;
 - a cursor behind the compaction horizon fails loud (never a silently
   thinned batch); a compaction that *keeps* the horizon behind the
-  cursor is transparent (rows re-planned from m-files, still exact).
+  cursor is transparent (rows re-planned from m-files, still exact);
+- rows a retention expiry hid before the stream planned them never
+  stream, also where the expiry could not drop their partition whole.
 """
 
 from __future__ import annotations
@@ -39,12 +41,12 @@ def _rows(spark, *triples):
     )
 
 
-def _drain(spark, store_dir, ckpt, sink_rows, **opts):
+def _drain(spark, store_dir, ckpt, sink_rows, tier="t", **opts):
     """Run the stream until no new commits remain; collect rows."""
     reader = (
         spark.readStream.format("tier_store")
         .option("path", store_dir)
-        .option("tier", "t")
+        .option("tier", tier)
     )
     for k, v in opts.items():
         reader = reader.option(k, v)
@@ -204,3 +206,29 @@ def test_cursor_behind_horizon_fails_loud(registered, tmp_path):
     got: list = []
     with pytest.raises(Exception, match="horizon|predates"):
         _drain(spark, str(tmp_path / "s"), str(tmp_path / "ck"), got)
+
+
+def test_expired_rows_inside_a_kept_partition_never_stream(registered, tmp_path):
+    """``1d`` rows land in one partition per 30d bucket, so an expiry
+    whose floor cuts through that bucket drops no partition and hides
+    the older rows by the retention mask. A stream planned after the
+    expiry applies the same mask as ``read``; a row committed after
+    the expiry is not the expiry's to hide."""
+    spark = registered
+    store = TierStore(spark, str(tmp_path / "s"))
+    days = spark.createDataFrame(
+        [("a", datetime(2024, 1, d), d) for d in range(1, 11)], SCHEMA
+    )
+    store.append("1d", days, store.next_commit_seq(), "r1")
+    assert store.expire("1d", "2024-01-06") == 0
+    late = store.next_commit_seq()
+    store.append("1d", spark.createDataFrame([("b", datetime(2024, 1, 2), 99)], SCHEMA), late, "r2")
+
+    def served(rows):
+        return sorted((r["source"], r["bucket_start"].day, r["v"]) for r in rows)
+
+    want = [("a", d, d) for d in range(6, 11)] + [("b", 2, 99)]
+    assert served(store.read("1d", deduped=False).collect()) == sorted(want)
+    got: list = []
+    _drain(spark, str(tmp_path / "s"), str(tmp_path / "ck"), got, tier="1d")
+    assert served(got) == sorted(want)

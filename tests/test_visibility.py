@@ -6,10 +6,9 @@ publish seq, so it outranks a commit appended while it was staged), an
 abandoned stage, an unaudited staged commit, a rollback range and two
 equality deletes, one of them voided by the rollback. Each reader —
 current and as-of ``read``, the physical ``read(deduped=False)``,
-``read_summed``, ``read_incremental``, ``changes``,
-``snapshots().voided`` and the ``tier_store`` stream planner — is
-checked against :class:`Model`, a pure-Python statement of the rule
-over the appended rows.
+``read_summed``, ``changes``, ``snapshots().voided`` and the
+``tier_store`` stream planner — is checked against :class:`Model`, a
+pure-Python statement of the rule over the appended rows.
 """
 
 from __future__ import annotations
@@ -49,11 +48,11 @@ class Model:
             s <= d <= H and k in keys and not self.voided(d, h) for d, keys in self.deletes
         )
 
-    def live(self, h=None, lo=0):
-        return [(s, k, v) for s, k, v in self.versions(h) if s > lo and not self.voided(s, h)]
+    def live(self, h=None):
+        return [(s, k, v) for s, k, v in self.versions(h) if not self.voided(s, h)]
 
-    def state(self, h=None, lo=0):  # read(); read_incremental with lo
-        best = {k: (s, v) for s, k, v in self.live(h, lo)}  # seq-sorted: newest wins
+    def state(self, h=None):  # read()
+        best = {k: (s, v) for s, k, v in self.live(h)}  # seq-sorted: newest wins
         return {k: sv for k, sv in best.items() if not self.masked(sv[0], k, h)}
 
     def summed(self, h=None):
@@ -148,10 +147,6 @@ def test_readers_agree_with_the_model(tier):
         assert _versions(st.read("t", deduped=False, as_of_seq=h)) == m.versions(h), h
         summed = st.read_summed("t", keys=KEYS, sum_cols=("v",), as_of_seq=h)
         assert {_key(r): r["v"] for r in summed.collect()} == m.summed(h), h
-    for a in range(last + 1):
-        for b in range(a + 1, last + 1):
-            inc = st.read_incremental("t", from_seq=a, to_seq=b)
-            assert _state(inc) == m.state(b, lo=a), (a, b)
     snaps = {r["commit_seq"]: r["voided"] for r in st.snapshots("t").collect()}
     assert snaps == {s: m.voided(s) for s, _, _ in m.versions()}
     # the published commit outranks the commit appended while it was staged
@@ -204,7 +199,6 @@ def test_each_read_loads_visibility_metadata_once(tier, monkeypatch):
         "read": lambda: st.read("t"),
         "read(as_of_seq)": lambda: st.read("t", as_of_seq=3),
         "read_summed": lambda: st.read_summed("t", keys=KEYS, sum_cols=("v",)),
-        "read_incremental": lambda: st.read_incremental("t", from_seq=1),
         "changes": lambda: st.changes("t", from_seq=1, keys=KEYS),
     }
     for what, call in reads.items():
@@ -221,8 +215,6 @@ def test_horizon_guard_after_compaction(spark, tmp_path):
     msg = "predates the compaction horizon"
     with pytest.raises(ValueError, match=msg):
         st.read("t", as_of_seq=1)
-    with pytest.raises(ValueError, match=msg):
-        st.read_incremental("t", from_seq=0, to_seq=1)
     with pytest.raises(ValueError, match=msg):
         st.changes("t", from_seq=1, keys=KEYS)
     with pytest.raises(ValueError, match=msg):

@@ -115,7 +115,11 @@ def main() -> None:
 
     import __spark_entry__ as e
 
-    spark = build_session(master="local[8]", app_name="explain-audit")
+    # a fixed master and shuffle partition count keep the plan text
+    # (every hashpartitioning(…, N)) the same on any machine
+    spark = build_session(
+        master="local[8]", app_name="explain-audit", shuffle_partitions=64
+    )
     qs = e.queries()
     sections = []
     failures = 0
