@@ -31,12 +31,12 @@ from s1tiling_spark.sources.tables import load_table
 
 COUNTER_MOD = 100_000  # counter wraps at 1000.00 value-units
 
-# Shared derived-counter construction (Spark + oracle CTE) — imported
-# by `analytics_queries.counter_resets_1d` so resets() models the SAME
-# counter as increase()/rate(). The SQL wrap is ((x % m) + m) % m, the
-# pmod identity: DuckDB's plain `%` keeps the dividend's sign, so a
-# negative running cents sum (legal — `value` is an unconstrained
-# double) would diverge from Spark's pmod under bare `cum % m`.
+# Shared derived-counter construction (Spark + oracle CTE): every
+# counter query here models the SAME counter. The SQL wrap is
+# ((x % m) + m) % m, the pmod identity: DuckDB's plain `%` keeps the
+# dividend's sign, so a negative running cents sum (legal — `value` is
+# an unconstrained double) would diverge from Spark's pmod under bare
+# `cum % m`.
 COUNTER_CTE = f"""cum AS (
   SELECT event_type, ts, event_id, value,
          sum(CAST(round(value * 100) AS BIGINT)) OVER (

@@ -553,9 +553,9 @@ _IVJOIN_ORACLE = (
 
 @register("interval_join_calibration", oracle=_IVJOIN_ORACLE)
 def interval_join_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BEYOND-WINDOW EXTRA — event-time INTERVAL JOIN, the batch twin
-    of `streaming/join_stream.py`: sequences join the calibration row
-    whose 2h validity window covers their event time (same source).
+    """BEYOND-WINDOW EXTRA — event-time INTERVAL JOIN: sequences join
+    the calibration row whose 2h validity window covers their event
+    time (same source).
     Only every other 2h window is calibrated (w2h even), so half the
     windows genuinely drop — the interval condition, not a plain
     equi-join, decides membership. The gain is a dyadic rational of

@@ -292,36 +292,3 @@ def counter_increase(
         )
         .withColumn("rate_per_sec", F.col("increase") / F.lit(float(span)))
     )
-
-
-def counter_resets(
-    ts: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    counter_col: str,
-    tier: str,
-    order_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-bucket count of counter RESETS — PromQL ``resets()``: the
-    number of samples whose counter value is strictly below its
-    predecessor's (the worker restarted between the two scrapes).
-    Companion to :func:`counter_increase`; same one-shuffle shape
-    (series-key window, then a bucket groupBy that re-aggregates
-    within the same series)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(ts_col, *order_cols)
-    prev = F.lag(F.col(counter_col)).over(w)
-    is_reset = (
-        F.when(prev.isNull(), F.lit(None))
-        .when(F.col(counter_col) < prev, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    return (
-        ts.withColumn("_reset", is_reset)
-        .groupBy(*keys, bucket_col(F.col(ts_col), tier).alias("bucket_start"))
-        .agg(
-            F.sum("_reset").alias("resets"),
-            F.count("_reset").cast("long").alias("n_samples"),
-        )
-    )

@@ -312,9 +312,8 @@ def distinct_estimate(registers: DataFrame, m: int = HLL_M) -> DataFrame:
 
 def _with_cum_totals(sketch: DataFrame) -> DataFrame:
     """Long-form sketch + running (``cum``) and group (``total``)
-    counts per (bucket_start, source) ordered by qbin — the shared
-    rank scaffolding of :func:`sketch_quantiles` and
-    :func:`sketch_quantiles_interp`."""
+    counts per (bucket_start, source) ordered by qbin — the rank
+    scaffolding of :func:`sketch_quantiles`."""
     from pyspark.sql import Window
 
     w_cum = (
@@ -352,50 +351,5 @@ def sketch_quantiles(
             )
             .cast("int")
             .alias(out)
-        )
-    return cum.groupBy("bucket_start", "source").agg(*aggs)
-
-
-def sketch_quantiles_interp(
-    sketch: DataFrame,
-    percents: list[tuple[int, str]],
-    width: int = QSKETCH_WIDTH,
-) -> DataFrame:
-    """Prometheus ``histogram_quantile``-style estimates from a
-    long-form sketch: like :func:`sketch_quantiles`, but linearly
-    INTERPOLATED within the winning bucket instead of snapped to its
-    upper edge — the convention every metrics backend serves, halving
-    the worst-case error to width/2 under a uniform-within-bucket
-    assumption.
-
-    For rank r (exact integer, ``(p*total+99) div 100``) landing in
-    bucket qbin with in-bucket count ``cnt`` and cumulative count
-    below it ``cum - cnt``:
-
-        q = qbin*width + width * (r - (cum - cnt)) / cnt
-
-    Every term is an exact integer until the single division, so both
-    engines produce the identical double (+,*,/ of exact ints are
-    IEEE-deterministic).
-    """
-    cum = _with_cum_totals(sketch)
-    aggs = []
-    for p, out in percents:
-        rank = F.expr(f"({int(p)} * total + {100 - 1}) div 100")
-        below = F.col("cum") - F.col("cnt")
-        interp = (
-            (F.col("qbin") * F.lit(width)).cast("double")
-            + F.lit(float(width))
-            * (rank - below).cast("double")
-            / F.col("cnt").cast("double")
-        )
-        # the winner is the UNIQUE bucket straddling the rank
-        # (cum >= r and cum-below < r), so a plain min over the
-        # single non-null candidate is engine-agnostic — no
-        # min_by/arg_min null-key semantics to depend on
-        aggs.append(
-            F.min(
-                F.when((F.col("cum") >= rank) & (below < rank), interp)
-            ).alias(out)
         )
     return cum.groupBy("bucket_start", "source").agg(*aggs)

@@ -20,7 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DoubleType,
     LongType,
@@ -164,86 +163,6 @@ def counter_increase_stream(counter_stream: DataFrame) -> DataFrame:
             "append",
             GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-
-# ---------------------------------------------------------------------
-# Streaming rolling z-score: the stateful counterpart of
-# operators/analytics.rolling_zscore. State per series is the trailing
-# window of the last `window_n` integer cents values — bounded O(W)
-# regardless of throughput — so a score spanning a micro-batch
-# boundary is EXACT: the same integer sums the batch operator's window
-# frame sees, then the same double division/sqrt (IEEE-identical), so
-# stream output equals the batch operator row-for-row on in-order
-# delivery (same caveat as the counter stream: late out-of-order rows
-# would need retraction, which append mode cannot express).
-
-ZSCORE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("series", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("order_id", LongType()),
-        StructField("y", LongType()),
-        StructField("z", DoubleType()),
-    ]
-)
-
-ZSCORE_STATE_SCHEMA = StructType(
-    [StructField("window_vals", ArrayType(LongType()))]
-)
-
-
-def rolling_zscore_stream(
-    points: DataFrame, window_n: int = 32, min_periods: int = 12
-) -> DataFrame:
-    """points: streaming (series, ts, order_id, y) rows → streaming
-    per-row z-scores (NULL until ``min_periods`` priors exist or when
-    the window variance is zero — exactly the batch operator's
-    contract)."""
-
-    def _roll(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        (series,) = key
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch) == 0:
-            return
-        batch = batch.sort_values(["ts", "order_id"], kind="mergesort")
-        win = [int(v) for v in state.get[0]] if state.exists else []
-        zs: list[float | None] = []
-        for y in (int(v) for v in batch["y"]):
-            n = len(win)
-            if n >= min_periods:
-                s1 = sum(win)
-                s2 = sum(v * v for v in win)
-                rad = n * s2 - s1 * s1
-                # exact ints -> the identical IEEE divide/sqrt the
-                # batch operator performs JVM-side
-                zs.append((y * n - s1) / math.sqrt(rad) if rad > 0 else None)
-            else:
-                zs.append(None)
-            win.append(y)
-            if len(win) > window_n:
-                win.pop(0)
-        out = batch[["ts", "order_id", "y"]].copy()
-        # nullable Float64 so None stays NULL (a float64 NaN would
-        # diverge from the batch operator's NULL)
-        out["z"] = pd.array(zs, dtype="Float64")
-        out.insert(0, "series", series)
-        state.update((win,))
-        yield out
-
-    return points.groupBy("series").applyInPandasWithState(
-        _roll,
-        ZSCORE_OUTPUT_SCHEMA,
-        ZSCORE_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 

@@ -66,3 +66,25 @@ def test_synth_properties(spark):
     for r in hours:
         assert r["have"] < 45 * 24  # strictly fewer hours than the full span
     df.unpersist()
+
+
+def test_chunking_empty_and_remainder(spark):
+    """Chunking edge semantics: n_tok=0 emits NO chunks (the
+    descending-sequence phantom guard); remainders form a short tail."""
+    from s1tiling_spark.operators.textstats import chunk_token_arrays
+
+    df = spark.createDataFrame(
+        [
+            ("empty", "s", [], 0),
+            ("exact", "s", list(range(4)), 4),
+            ("tail", "s", list(range(5)), 5),
+        ],
+        "doc_id string, source string, tokens array<int>, n_tok int",
+    )
+    rows = chunk_token_arrays(df, max_len=4).collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r["doc_id"], []).append((r["chunk_id"], r["n_chunk_tok"]))
+    assert "empty" not in by_doc
+    assert sorted(by_doc["exact"]) == [(0, 4)]
+    assert sorted(by_doc["tail"]) == [(0, 4), (1, 1)]

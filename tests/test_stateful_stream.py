@@ -299,85 +299,3 @@ def test_append_idempotency_key_skips_replay(spark, tmp_path):
     # a genuinely new batch still lands
     n3 = store.append("c1h", df, store.next_commit_seq(), "b1", idempotency_key="batch-1")
     assert n3 == 1
-
-
-# -- streaming rolling z-score: exact batch convergence ----------------
-
-ZS_IN_SCHEMA = "series string, ts timestamp, order_id long, y long"
-
-
-def test_zscore_stream_equals_batch(spark, tmp_path):
-    """Two deliveries split MID-SERIES: the trailing-window state must
-    carry across the micro-batch boundary so every z equals the batch
-    operator's output bit-for-bit (NULLs included)."""
-    from s1tiling_spark.operators.analytics import rolling_zscore
-    from s1tiling_spark.streaming.stateful import rolling_zscore_stream
-
-    W, MINP = 8, 4
-    rows = []
-    for s in ("a", "b"):
-        for i in range(40):
-            y = (i * 2654435761 + (7 if s == "a" else 3)) % 997 - 300
-            if 18 <= i < 28:
-                y = 55  # plateau longer than W → zero-variance → NULL z
-            rows.append(
-                (s, datetime.fromisoformat("2024-01-01 00:00:00"), i, y)
-            )
-    # distinct timestamps (1-min apart) so ordering is by ts then id
-    rows = [
-        (s, datetime(2024, 1, 1, 0, 0, 0).replace(minute=i % 60,
-                                                  hour=i // 60), i, y)
-        for (s, _ts, i, y) in rows
-    ]
-
-    landing = str(tmp_path / "zs_landing")
-    out_dir = str(tmp_path / "zs_out")
-    ckpt = str(tmp_path / "zs_ckpt")
-
-    def deliver(batch_rows):
-        spark.createDataFrame(batch_rows, ZS_IN_SCHEMA).write.mode(
-            "append"
-        ).parquet(landing)
-
-    def run_once():
-        stream = spark.readStream.schema(ZS_IN_SCHEMA).parquet(landing)
-        q = (
-            rolling_zscore_stream(stream, window_n=W, min_periods=MINP)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-
-    # split mid-series: rows with i < 25 first (state ends inside the
-    # plateau), the rest in delivery 2
-    deliver([r for r in rows if r[2] < 25])
-    run_once()
-    deliver([r for r in rows if r[2] >= 25])
-    run_once()
-
-    got = {
-        (r["series"], r["order_id"]): r["z"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch_df = spark.createDataFrame(rows, ZS_IN_SCHEMA)
-    exp = {
-        (r["series"], r["order_id"]): r["z"]
-        for r in rolling_zscore(
-            batch_df,
-            keys=["series"],
-            ts_col="ts",
-            cents_col=F.col("y"),
-            id_col="order_id",
-            window_n=W,
-            min_periods=MINP,
-        ).collect()
-    }
-    assert set(got) == set(exp) and len(got) == 80
-    assert got == exp  # exact, NULLs included
-    # the plateau really produced NULLs past warm-up, and real z's exist
-    assert any(v is None for (k, v) in got.items() if k[1] > MINP)
-    assert sum(v is not None for v in got.values()) > 50

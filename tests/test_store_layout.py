@@ -123,3 +123,23 @@ def test_partition_vanishing_mid_walk_does_not_fail_read(layout, monkeypatch):
     assert "2024-01-01" not in [f.p_date for f in store._data_files(tier)]
     df = store.read("t", deduped=False)
     assert df is not None and df.count() == rows
+
+
+def test_compact_refuses_wrong_sketch_keys(spark, tmp_path):
+    """Compacting a long-form sketch tier without its bin key must be
+    REFUSED (it would physically delete all but one counter/group)."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from s1tiling_spark.plans.store import TierStore
+
+    store = TierStore(spark, str(tmp_path / "guard"))
+    hist = spark.createDataFrame(
+        [("2024-01-01 00:00:00", "s", 0, 5), ("2024-01-01 00:00:00", "s", 1, 7)],
+        "bucket_start string, source string, bin int, tok_cnt long",
+    ).withColumn("bucket_start", F.col("bucket_start").cast("timestamp"))
+    store.append("hist_1h", hist, store.next_commit_seq(), "r0")
+    with pytest.raises(ValueError, match="sketch key"):
+        store.compact("hist_1h")  # default keys lack 'bin'
+    stats = store.compact("hist_1h", keys=("bucket_start", "source", "bin"))
+    assert stats["rows"] == 2

@@ -71,12 +71,6 @@ AUDITS = {
         "Window (struct ordering makes it a SortAggregate — still "
         "map-side partials, one shuffle)",
     ),
-    "metric_correlation_1d": (
-        ["BroadcastHashJoin", "InMemoryTableScan", "!SortMergeJoin"],
-        "pair join must broadcast the persisted hour-anchor relation "
-        "(both join sides read the cache — ONE scan of the input), "
-        "never sort-merge the raw table against itself",
-    ),
     "irate_idelta_1h": (
         ["WindowGroupLimit", "=1:Exchange hashpartitioning"],
         "last-2-per-(series,hour) must compile to WindowGroupLimit "
