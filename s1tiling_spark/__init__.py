@@ -15,8 +15,8 @@ Layout
 ------
 - ``session``    : tuned SparkSession builder (AQE, Arrow, UTC)
 - ``sources``    : driver parquet loaders + deterministic sequence synth
-- ``operators``  : rollup tiers, gap-fill, dedup, similarity, text stats,
-                   relational operator mappings (SURVEY.md §2)
+- ``operators``  : rollup tiers, gap-fill, dedup, text stats, relational
+                   operator mappings (SURVEY.md §2)
 - ``functions``  : vectorized kernels (Gorilla XOR, delta-of-delta,
                    token-histogram sketches)
 - ``plans``      : incremental planner (one commit seq + one refresh

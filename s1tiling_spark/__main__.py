@@ -24,8 +24,6 @@ Subcommands:
              (Iceberg rollback_to_snapshot; metadata-only)
   tag        named snapshot refs: set | list | drop
   metrics    dump the metrics table
-  index      persistent ANN index lifecycle: build | append | status |
-             compact over an embeddings parquet (vec_id, embedding)
   tail       store-to-store streaming over the tier_store source:
              cascade (additive tier -> coarser additive tier) or
              mirror (newest-wins replica); --drain = one catch-up pass
@@ -227,19 +225,6 @@ def main(argv: list[str] | None = None) -> int:
         "--sync", action="store_true",
         help="also delete tier keys absent from the source (snapshot sync)",
     )
-
-    vidx = sub.add_parser("index", help="persistent ANN index lifecycle")
-    vidx.add_argument("action", choices=("build", "append", "status", "compact"))
-    vidx.add_argument("--index", required=True, help="index base dir")
-    vidx.add_argument("--input", help="embeddings parquet (build/append)")
-    vidx.add_argument("--bands", type=int, default=4)
-    vidx.add_argument("--r", type=int, default=None, help="band-key bits (default: derived from corpus size)")
-    vidx.add_argument(
-        "--kind", choices=("lsh", "ivf"), default="lsh",
-        help="index family: banded-SRP LSH (default) or inverted-file IVF",
-    )
-    vidx.add_argument("--n-cells", type=int, default=None,
-                      help="IVF cell count (default: isqrt(corpus))")
 
     tailp = sub.add_parser(
         "tail",
@@ -495,36 +480,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(json.dumps({"branch": args.name, "dropped": True}))
             else:
                 print(json.dumps(store.branches(args.tier)))
-        elif args.cmd == "index":
-            from s1tiling_spark.plans.vector_index import VectorIndex
-
-            idx = VectorIndex(spark, args.index)
-            ivf = args.kind == "ivf"
-            if args.action == "status":
-                # grown_stale first: it may tighten n_vectors_upper via
-                # the exact count — read meta AFTER so the printed
-                # numbers are self-consistent
-                stale = idx.ivf_grown_stale() if ivf else idx.grown_stale()
-                meta = idx.ivf_meta() if ivf else idx.meta()
-                print(json.dumps(dict(meta, grown_stale=stale) if meta else None))
-            elif args.action == "compact":
-                if ivf:
-                    raise SystemExit(
-                        "IVF assignments dedup on read; compact applies to "
-                        "--kind lsh signatures"
-                    )
-                print(json.dumps(idx.compact()))
-            else:
-                if not args.input:
-                    raise SystemExit("index build/append requires --input")
-                emb = spark.read.parquet(args.input)
-                if args.action == "build":
-                    if ivf:
-                        print(json.dumps(idx.build_ivf(emb, n_cells=args.n_cells)))
-                    else:
-                        print(json.dumps(idx.build(emb, bands=args.bands, r=args.r)))
-                else:
-                    print(json.dumps(idx.append_ivf(emb) if ivf else idx.append(emb)))
         elif args.cmd == "tail":
             from s1tiling_spark.plans.store import TierStore
             from s1tiling_spark.streaming.store_tail import (

@@ -4,7 +4,7 @@ deterministic dataset splits + stratified sampling (one gated query),
 semi-structured property extraction (regex + JSON, one gated query),
 and event sessionization. All JVM column algebra, all oracle-gated.
 
-These extend the dedup/similarity/quality families with the
+These extend the dedup/quality families with the
 transform-side of a data pipeline — the reference's analog is the
 filename/metadata surgery every product goes through before
 processing (`/root/reference/s1tiling/libs/otbwrappers/s1_to_s2.py:
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.dedup import MD5_LONG_SQL, md5_long
+from s1tiling_spark.operators.rollup import MD5_LONG_SQL, md5_long
 from s1tiling_spark.registry import register
 from s1tiling_spark.sources.tables import load_table
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from s1tiling_spark.operators.rollup import md5_long
+
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 MINHASH_REDUCE = 1 << 20  # pre-mod so a*h + b stays < 2^40
 
@@ -82,15 +84,6 @@ def shingles_col(text: Column, k: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(words, i, k)),
         )
     )
-
-
-def md5_long(c: Column) -> Column:
-    """Deterministic 60-bit integer hash computable in any SQL engine:
-    first 15 hex chars of md5."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-MD5_LONG_SQL = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 # ------------------------------------------------------------- exact
@@ -446,7 +439,7 @@ def near_dup_survivors(
     max_iters: int = 25,
 ) -> DataFrame:
     """End-to-end dedup resolution: a pair relation (from any generator
-    — Jaccard, MinHash-LSH, embedding near-dup) → the SURVIVING corpus,
+    — Jaccard, MinHash-LSH) → the SURVIVING corpus,
     one canonical document per duplicate cluster.
 
     This is the composition every real pipeline runs after pair

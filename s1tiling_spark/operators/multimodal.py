@@ -46,7 +46,7 @@ MEDIA_KINDS = ("image", "audio", "video")
 
 
 def _md5_long(c: Column) -> Column:
-    """60-bit md5-derived integer (same formula as dedup.md5_long;
+    """60-bit md5-derived integer (same formula as rollup.md5_long;
     inlined so this module pickles standalone by value)."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 

@@ -34,8 +34,6 @@ from datetime import date, datetime, timedelta
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.dedup import md5_long
-
 TIERS = ("1h", "1d", "30d")
 # every tier bucket is a whole number of seconds aligned to the Unix
 # epoch (1h/1d truncation in UTC is the same floor)
@@ -44,6 +42,16 @@ _TRUNC = {"1h": "hour", "1d": "day"}
 _EPOCH = datetime(1970, 1, 1)
 N_HIST_BINS = 64
 VOCAB = 50_000
+
+
+def md5_long(c: Column) -> Column:
+    """Deterministic 60-bit integer hash computable in any SQL engine:
+    first 15 hex chars of md5."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+# DuckDB mirror of md5_long, for oracle SQL
+MD5_LONG_SQL = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def bucket_col(ts: Column, tier: str) -> Column:

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.dedup import MD5_LONG_SQL, md5_long
+from s1tiling_spark.operators.rollup import MD5_LONG_SQL, md5_long
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
@@ -35,7 +35,7 @@ CMS_WIDTH = 256
 
 def _cms_col(token: Column, depth: int, width: int) -> Column:
     """Column index of `token` in hash row `depth` — the repo-standard
-    md5-derived integer (dedup.md5_long) folded to the row width."""
+    md5-derived integer (rollup.md5_long) folded to the row width."""
     h = md5_long(F.concat(F.lit(f"cms{depth}:"), token.cast("string")))
     return F.pmod(h, F.lit(width)).cast("int")
 
@@ -185,7 +185,7 @@ def quantile_sketch_merge(lower: DataFrame, bucket: Column) -> DataFrame:
 # sketch and MERGE = element-wise max — associative, idempotent (the
 # property exact counts lack), O(m) state per group at any cardinality.
 #
-# Hash discipline: the repo-standard 60-bit md5 (dedup.md5_long), so
+# Hash discipline: the repo-standard 60-bit md5 (rollup.md5_long), so
 # registers are bit-identical in Spark and DuckDB (the gated query
 # compares the merged register vectors themselves, all integers) and at
 # any parallelism. Long form (bucket_start, source, reg, rho) makes the

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.dedup import md5_long, words_col
+from s1tiling_spark.operators.dedup import words_col
+from s1tiling_spark.operators.rollup import md5_long
 
 # tiny per-language stopword lists (public common words)
 STOPWORDS = {

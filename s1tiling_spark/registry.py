@@ -2,9 +2,8 @@
 
 Every implemented operator registers (name, spark_fn, oracle_sql). The
 driver runs the Spark fn and the DuckDB oracle side-by-side at sf0.01
-and compares row count + schema + value hash. Operators whose semantics
-are not SQL-expressible (compression kernels, streaming) register with
-``oracle=None`` → the driver records a weaker rows-only check.
+and compares row count + schema + value hash. The oracle is required:
+a query without one would only get a rows-only check.
 """
 
 from __future__ import annotations
@@ -21,13 +20,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Entry:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
 
 
 _REGISTRY: dict[str, Entry] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str):
     """Decorator: register a (spark, sf_dir) -> DataFrame query."""
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -46,7 +45,7 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {n: e.oracle for n, e in _REGISTRY.items() if e.oracle is not None}
+    return {n: e.oracle for n, e in _REGISTRY.items()}
 
 
 _LOADED = False

@@ -111,9 +111,10 @@ def build_session(
         # NOTE (r6): coalescePartitions.parallelismFirst=false was
         # measured and REJECTED as a global default — it halves the
         # lifecycle gates' task storms but collapses the CPU-heavy
-        # small-shuffle queries (embedding_near_dup 4.8 -> 8.8 s) by
-        # serializing their post-shuffle compute; the cached-plan flag
-        # below captures nearly all of the win without that risk.
+        # small-shuffle queries (an all-pairs near-dup query went
+        # 4.8 -> 8.8 s) by serializing their post-shuffle compute; the
+        # cached-plan flag below captures nearly all of the win without
+        # that risk.
         # Let AQE re-plan the partitioning of CACHED plan output too:
         # persisted intermediates (rollup outputs, changelog touched
         # sets) otherwise freeze at the initial shuffle partition count

@@ -24,7 +24,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,64 +49,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         _SCHEMA_CACHE[path] = df.schema
         return df
     return spark.read.schema(cached).parquet(path)
-
-
-def parquet_row_count(name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
-    """Exact table row count from Parquet FOOTER METADATA — no Spark
-    job, no data scan. The cluster analog of reading a table's stats
-    from the catalog (Iceberg snapshot summary / Parquet num_rows):
-    scale-derived plan parameters (ANN key width, IVF cell count) come
-    from here instead of a count() scan (VERDICT r3 What's-wrong #3)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        return pq.ParquetFile(path).metadata.num_rows
-    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    if not files:
-        # a silent 0 would plan degraded, oracle-mismatching ANN
-        # parameters (derive_r(0)); fail actionably instead
-        raise FileNotFoundError(
-            f"no parquet footers under {path!r} — cannot derive row count"
-        )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def footer_rows_upper_bound(df) -> int | None:
-    """Driver-side row-count UPPER BOUND for a parquet-backed DataFrame,
-    from the footers of ``df.inputFiles()`` — no Spark job. Filters or
-    dedup applied after the scan make the true count smaller, never
-    larger, so the bound is safe wherever the consumer only needs a
-    scale parameter that may round conservatively UP (ANN key width,
-    IVF cell count: a slightly-too-large N means slightly narrower
-    buckets / more cells, both recall-safe with multiprobe / nprobe).
-
-    Returns None when the plan is not file-backed (createDataFrame,
-    streaming) or any input is not parquet — callers fall back to a
-    count() job. ``inputFiles()`` is metadata-only: Spark resolves it
-    from the already-analyzed logical plan's FileIndex, no tasks run.
-    """
-    import pyarrow.parquet as pq
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        if not f.split("?", 1)[0].endswith(".parquet"):
-            return None
-        try:
-            total += pq.ParquetFile(f.removeprefix("file:")).metadata.num_rows
-        except Exception:
-            # non-local URI (s3a://, hdfs://) or unreadable footer —
-            # fall back to the caller's count() job rather than failing
-            # plan construction
-            return None
-    return total

@@ -58,72 +58,3 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS {ta}")
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
-
-
-def test_ann_band_join_through_bucketed_signature_table(spark, tmp_path):
-    """The ANN serving path at 10^9 vectors (VERDICT r4 ask #5): persist
-    the banded signature table ``bucketBy(band, key)`` — the candidate
-    probe join then leaves the CORPUS side Exchange-free (bucketed scan
-    output partitioning satisfies the join), so per-query cost is the
-    probe side only, never a corpus-wide shuffle. Results stay
-    bit-identical to the broadcast-probe fresh path (full ann_lsh_topk
-    parity after re-rank)."""
-    from s1tiling_spark.operators.similarity import (
-        _prepared,
-        _rerank_topk,
-        ann_lsh_topk,
-        derive_r,
-        srp_banded_arrow,
-    )
-    from s1tiling_spark.sources.tables import load_table, parquet_row_count
-    from tests.conftest import SF_DIR_ORACLE
-
-    emb = load_table(spark, "embeddings", SF_DIR_ORACLE)
-    n = parquet_row_count("embeddings", SF_DIR_ORACLE)
-    r = derive_r(n)
-    prep = _prepared(emb).cache()
-    banded = srp_banded_arrow(prep, 4, r)
-    tname = f"sigs_b_{uuid.uuid4().hex[:8]}"
-    (
-        banded.write.bucketBy(8, "band", "key")
-        .sortBy("band", "key")
-        .option("path", str(tmp_path / tname))
-        .saveAsTable(tname)
-    )
-    # probe relation: every query's band keys (multiprobe 0 keeps the
-    # probe construction out of the plan under test)
-    corpus = spark.table(tname)
-    probes = (
-        corpus.filter(F.pmod(F.col("vec_id"), F.lit(50)) == 0)
-        .select(F.col("vec_id").alias("q_id"), "band", "key")
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        cand = (
-            corpus.join(probes, ["band", "key"])
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select("q_id", "vec_id")
-            .dropDuplicates(["q_id", "vec_id"])
-        )
-        plan = _plan_of(cand)
-        # corpus side: bucketed scan feeds the join directly
-        assert "Bucketed: true" in plan, plan
-        # the only Exchanges allowed are the probe-side repartition to
-        # the corpus bucketing and the dropDuplicates agg — never a
-        # corpus-side shuffle (which would show as a third Exchange)
-        n_exchanges = plan.count("Exchange")
-        assert n_exchanges <= 2, f"corpus side shuffled:\n{plan}"
-
-        # parity: re-rank the bucketed-join candidates == fresh compute
-        got = _rerank_topk(cand, prep, 5).toPandas()
-        want = ann_lsh_topk(
-            emb, k=5, query_mod=50, r=r, multiprobe=0
-        ).toPandas()
-        from tests.helpers import assert_frames_match
-
-        assert_frames_match(got, want)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        prep.unpersist()

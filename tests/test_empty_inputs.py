@@ -12,12 +12,8 @@ from __future__ import annotations
 
 import pytest
 
+from s1tiling_spark.sources.tables import TABLES
 from tests.conftest import SF_DIR_ORACLE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")

@@ -6,9 +6,8 @@ assert the PLAN has the shape the engine was designed around.
 - positive shapes: pushed filters, broadcast hash joins for small
   dims, TakeOrderedAndProject for top-k;
 - negative shape: NO BroadcastNestedLoopJoin / CartesianProduct
-  anywhere except the explicitly sanctioned small-scale baselines
-  (the brute-force ANN and the exact all-pairs near-dup oracle
-  formulations, both documented as non-scale paths).
+  anywhere except the explicitly sanctioned broadcast-small-side
+  shapes (an interval theta-join and a metadata grid construction).
 """
 
 from __future__ import annotations
@@ -18,16 +17,10 @@ from contextlib import redirect_stdout
 
 import pytest
 
-# queries whose documented SEMANTICS are all-pairs / broadcast-loop at
-# small scale (each has a bucketed scale-path sibling)
+# queries whose documented SEMANTICS are a broadcast-loop join over a
+# small side
 SANCTIONED_LOOP_JOINS = {
-    "ann_brute_topk",  # broadcast query side over corpus — stated baseline
     "coverage_join",  # interval theta-join, broadcast small side by design
-    "ann_ivf_topk",  # broadcast √N-row codebook × corpus: the O(N·C) assignment pass
-    # blk<=blk loop join over the N_MATMUL_BLOCKS-row PACKED-BLOCK
-    # relation (16×16 metadata rows — the distributed block-matmul
-    # shape), not a row-level loop join
-    "embedding_near_dup_exact",
     # hours × broadcast(series) GRID construction (both sides are
     # DISTINCT-collapsed metadata relations, O(buckets)·O(series),
     # never O(samples)) feeding the staleness anti-join

@@ -48,10 +48,6 @@ AUDITS = {
         ["BroadcastHashJoin"],
         "geoid offset dim must broadcast",
     ),
-    "ann_lsh_topk": (
-        ["BroadcastHashJoin"],
-        "multiprobe band keys equi-join the corpus banding (no loop join)",
-    ),
     "tier_routed_range": (
         ["HashAggregate"],
         "tier-router union re-aggregates partials (no raw scan)",
