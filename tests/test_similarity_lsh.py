@@ -1,28 +1,7 @@
-"""Dedup operators: connected-components closure over a pair graph,
-and the Jaccard stop-shingle guard (a no-op at a sane threshold, and
-it drops a shingle every document shares)."""
+"""The Jaccard stop-shingle guard of the dedup operators: a no-op at a
+sane threshold, and it drops a shingle every document shares."""
 
 from __future__ import annotations
-
-
-def test_connected_components_chain_and_cliques(spark):
-    """Hash-min propagation must close transitive chains (a-b, b-c, c-d
-    → one component) and keep disjoint cliques apart; keeper = min id."""
-    from s1tiling_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    got = {
-        r["doc_id"]: (r["component"], r["keep"])
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {
-        1: (1, True), 2: (1, False), 3: (1, False), 4: (1, False),
-        10: (10, True), 11: (10, False),
-        20: (20, True), 21: (20, False),
-    }
 
 
 def test_jaccard_stop_shingle_guard_noop(spark, sf_dir):
