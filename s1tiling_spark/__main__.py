@@ -118,7 +118,7 @@ def main(argv: list[str] | None = None) -> int:
         default="latest",
         help="merge discipline: latest = newest version per key wins "
         "(upsert tiers); sum = fold partials by summing --sum-cols "
-        "(additive tiers, e.g. streaming counter partials)",
+        "(additive tiers, e.g. matview or tail partials)",
     )
     cmp_.add_argument(
         "--sum-cols",

@@ -201,8 +201,7 @@ def distinct_sketch_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# Gaps-and-islands (batch analog of the streaming gap detector,
-# streaming/stateful.py): contiguous runs of present 1h buckets per
+# Gaps-and-islands: contiguous runs of present 1h buckets per
 # source via the classic hour_index - row_number() group key; one row
 # per island with its span and length. Pure integer arithmetic.
 @register(

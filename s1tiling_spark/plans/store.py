@@ -119,12 +119,6 @@ STAGING_GC_AGE_S = 6 * 3600.0
 # critical sections are single-JSON read-modify-writes, milliseconds)
 META_MUTEX_STALE_S = 300.0
 
-# after acquiring the maintenance lock, a multi_writer compact waits
-# this long for append move-phases that passed their lock check just
-# before the acquisition to drain (a move phase is a handful of
-# renames — milliseconds; the grace is three orders of magnitude over)
-MAINT_GRACE_S = 2.0
-
 
 class ConcurrentCommitError(RuntimeError):
     """A maintenance rewrite raced a live writer's in-flight commit —
@@ -342,19 +336,13 @@ class Visibility(NamedTuple):
 class TierStore:
     """Directory-backed tier-table store with MERGE-on-read semantics."""
 
-    def __init__(
-        self, spark: SparkSession, base_dir: str, multi_writer: bool = False
-    ):
-        """``multi_writer``: set when more than one PROCESS writes this
-        store concurrently (e.g. a streaming sink plus a maintenance
-        daemon). Adds the maintenance-grace wait to compaction
-        (:data:`MAINT_GRACE_S`); the seq CAS, the meta mutex, the
-        maintenance lock and append's wait-on-maintenance are always
-        on — only the grace sleep is gated, so the single-process test
-        path stays fast."""
+    def __init__(self, spark: SparkSession, base_dir: str):
+        """The seq CAS, the meta mutex, the maintenance lock and
+        append's wait-on-maintenance are always on: a refresh's
+        concurrent tier writes, the CLI's maintenance, the matview and
+        the tail may share one store."""
         self.spark = spark
         self.base_dir = base_dir
-        self.multi_writer = bool(multi_writer)
         # declared-schema memo for append's write-time alignment —
         # avoids re-inferring the tier schema on every micro-batch
         # append; invalidated when an append records an add op
@@ -476,10 +464,6 @@ class TierStore:
                     f"(lock age {age:.0f}s) — retry next cycle"
                 )
         try:
-            if self.multi_writer:
-                # drain append move-phases that passed their check
-                # just before we acquired
-                time.sleep(MAINT_GRACE_S)
             yield
         finally:
             with contextlib.suppress(OSError):
@@ -676,11 +660,12 @@ class TierStore:
         twice and none is skipped by the allocator itself (a writer
         that crashes after allocating leaves a hole, which readers
         already tolerate: a seq with no rows is an empty commit).
-        This replaces the r4 single-writer seq file; the repo ships two
-        independent writers (the streaming sink and the maybe_compact
-        daemon), so the commit counter is the one piece of metadata
-        that MUST be multi-process safe. Tags/rollback remain
-        advisory-single-writer (documented on each)."""
+        This replaces the r4 single-writer seq file; a refresh's
+        concurrent tier writes, the CLI's maintenance, the matview and
+        the tail all allocate seqs, so the commit counter is the one
+        piece of metadata that MUST be multi-process safe.
+        Tags/rollback remain advisory-single-writer (documented on
+        each)."""
         d = self._commits_dir()
         os.makedirs(d, exist_ok=True)
         candidate = self.last_commit_seq() + 1
@@ -756,9 +741,9 @@ class TierStore:
         files once the writer is provably dead (same age discipline as
         torn keyed appends). A NEW ``stage`` under the same audit_id
         REPAIRS a ``staging`` leftover instead (removes the torn
-        files, restages) — the replay contract of the streaming sink:
-        an audit_id is owned by one logical producer, and its replay
-        only runs after the prior attempt died. Returns the staged
+        files, restages) — the replay contract of an at-least-once
+        producer: an audit_id is owned by one logical producer, and its
+        replay only runs after the prior attempt died. Returns the staged
         commit seq (an internal handle — the PUBLISHED seq is minted
         at publish time)."""
         existing = next(
@@ -1494,12 +1479,12 @@ class TierStore:
         matview gate's refresh cost).
 
         ``idempotency_key``: replay protection for at-least-once
-        producers (Spark's foreachBatch recipe — pass the streaming
-        batchId). An append whose key was already committed for this
-        tier is SKIPPED (returns 0). This matters doubly for ADDITIVE
-        tiers (:meth:`read_summed`): newest-wins reads merely waste
-        space on a replayed batch, but an additive read would
-        double-count it.
+        producers (the tail passes its micro-batch id, the matview its
+        changelog cursor range). An append whose key was already
+        committed for this tier is SKIPPED (returns 0). This matters
+        doubly for ADDITIVE tiers (:meth:`read_summed`): newest-wins
+        reads merely waste space on a replayed batch, but an additive
+        read would double-count it.
 
         Exactly-once protocol (two-phase marker, closes the r4 replay
         window): the key's marker is written in state ``pending``
@@ -1513,10 +1498,11 @@ class TierStore:
         ``committed`` flip → replay removes the c<seq> files (whether
         some or all landed) and redoes; after the flip → replay skips.
         No interleaving double-counts an additive tier. The repair
-        runs ONLY under the same idempotency key (the streaming
-        contract guarantees the prior attempt is dead when its batch
-        replays) — a generic GC must not touch pending commits, because
-        under multi-writer they may be a LIVE append mid-move.
+        runs ONLY under the same idempotency key (the tail's and the
+        matview's replay contract guarantees the prior attempt is dead
+        when its batch replays) — a generic GC must not touch pending
+        commits, because under multi-writer they may be a LIVE append
+        mid-move.
         """
         from pyspark.sql import Observation
 
@@ -1721,7 +1707,8 @@ class TierStore:
         Written as ONE O_APPEND write to a per-tier JSONL sidecar, not
         a rewrite of the whole compact-meta JSON: the meta rewrite made
         each micro-batch append pay O(all files since last compaction)
-        in metadata I/O (O(N²) cumulative for a streaming sink).
+        in metadata I/O (O(N²) cumulative for the tail, which appends
+        every micro-batch).
         Compaction folds the sidecar back into the meta baseline and
         truncates it. Purely advisory at every step: a file with no
         entry (torn line, line lost to a crash, entry raced past a
@@ -2142,8 +2129,8 @@ class TierStore:
     ) -> DataFrame | None:
         """ADDITIVE merge-on-read: fold all row versions per key with a
         grouped SUM instead of newest-wins. For tiers whose appended
-        rows are mergeable PARTIALS — streaming counter-increase
-        partials, long-form sketch counters — where a later delivery
+        rows are mergeable PARTIALS — matview and tail partials,
+        long-form sketch counters — where a later delivery
         INCREMENTS the bucket rather than superseding it. (Newest-wins
         ``read`` would silently drop every partial but the last; the
         two merge disciplines are per-tier contracts, like Iceberg's
@@ -2152,8 +2139,8 @@ class TierStore:
         ``as_of_seq`` time travel composes (sum versions ≤ horizon).
 
         At-least-once producers MUST pass a replay-stable
-        ``idempotency_key`` to :meth:`append` (e.g. the streaming
-        batchId): an additive read has no way to dedup a replayed
+        ``idempotency_key`` to :meth:`append` (e.g. the tail's
+        micro-batch id): an additive read has no way to dedup a replayed
         batch after the fact — summing is exactly what it does."""
         if not sum_cols:
             raise ValueError("read_summed requires sum_cols")
@@ -2679,7 +2666,8 @@ class TierStore:
         """Atomically replace the refresh record, AFTER the data it
         describes is appended. ``watermarks``: tier → source → epoch
         micros; merged newest-wins into the record, so a concurrent
-        writer's watermark (the streaming sink's) is never lost.
+        writer's watermark (another refresh's, or a
+        :meth:`commit_checkpoint` caller's) is never lost.
         ``metrics`` replaces the previous refresh's rows when given.
         A crash before this call leaves the old record: the next
         refresh recomputes the same buckets and newest-wins reads
@@ -2821,8 +2809,8 @@ class TierStore:
         - ``"latest"`` (default): newest version per key wins — for
           upsert tiers read via :meth:`read`.
         - ``"sum"``: fold all versions per key into ONE row whose
-          ``sum_cols`` are summed — for ADDITIVE tiers (streaming
-          counter partials, long-form sketch counters) read via
+          ``sum_cols`` are summed — for ADDITIVE tiers (matview and
+          tail partials, long-form sketch counters) read via
           :meth:`read_summed`. Compacting an additive tier in latest
           mode would silently DELETE all partials but the newest; the
           caller owns knowing the tier's discipline, exactly as with

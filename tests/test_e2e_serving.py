@@ -1,10 +1,10 @@
-"""End-to-end serving loop: streaming ingest → store MERGE →
+"""End-to-end serving loop: cumulative 1h deliveries → store MERGE →
 physical compaction → tier cascade FROM THE STORE → router-served
 range query — the whole production path in one test, gated against a
 direct raw-table aggregate (exact integers).
 
 This is the integration the components exist for: data arrives in
-overlapping micro-batches, lands via dedup-on-read MERGE, gets
+overlapping cumulative deliveries, lands via dedup-on-read MERGE, gets
 physically compacted, the coarser tiers are maintained from the stored
 1h tier (never from raw), and a time-range question is answered from
 the coarsest covering tiers — equal, exactly, to scanning the raw
@@ -16,11 +16,10 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from s1tiling_spark.operators.rollup import rollup_from_lower
+from s1tiling_spark.operators.rollup import rollup_from_lower, rollup_sequences
 from s1tiling_spark.plans.router import routed_range_totals
 from s1tiling_spark.plans.store import TierStore
 from s1tiling_spark.sources.synth import synth_sequences
-from s1tiling_spark.streaming.rollup_stream import run_stream_into_store
 from tests.helpers import assert_frames_match
 
 N = 3000
@@ -29,19 +28,17 @@ _END = datetime(2024, 2, 9, 17)
 
 
 def test_stream_store_compact_route_e2e(spark, tmp_path):
-    landing = str(tmp_path / "landing")
     seq = synth_sequences(spark, N).cache()
     part = F.pmod(F.xxhash64("doc_id"), F.lit(10))
 
-    # two overlapping micro-batch deliveries into the store
+    # two overlapping cumulative deliveries into the store: the second
+    # re-delivers every bucket of the first, and newest-wins merges them
     store = TierStore(spark, str(tmp_path / "store"))
-    for batch in (seq.filter(part < 6), seq.filter(part >= 6)):
-        batch.write.mode("append").parquet(landing)
-        q = run_stream_into_store(
-            spark, landing, store, str(tmp_path / "ckpt"),
-            available_now=True, watermark="60 days",
+    for i, delivered in enumerate((seq.filter(part < 6), seq)):
+        store.append(
+            "1h", rollup_sequences(delivered, "1h"), store.next_commit_seq(),
+            f"delivery-{i}",
         )
-        q.awaitTermination(240)
 
     # physically apply the MERGE (one file per partition, newest wins)
     stats = store.compact("1h")

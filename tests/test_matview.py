@@ -179,50 +179,3 @@ def test_refresh_rebuilds_when_base_history_expired(spark, store):
     mv.refresh("mv-next")
     assert_frames_match(_view_state(mv), _expected(store))
 
-
-def test_stream_store_matview_e2e(spark, tmp_path):
-    """Continuous-aggregate e2e: streaming micro-batches MERGE into the
-    base tier (newest-wins cumulative window values), and an
-    incremental matview refresh after each delivery converges to the
-    exact batch recompute — the full TimescaleDB-style pipeline:
-    stream → tier → changelog → view."""
-    from s1tiling_spark.streaming.rollup_stream import run_stream_into_store
-
-    landing = str(tmp_path / "landing")
-    seq = synth_sequences(spark, 2500).cache()
-    part = F.pmod(F.xxhash64("doc_id"), F.lit(10))
-    early, late = seq.filter(part < 6), seq.filter(part >= 6)
-
-    store_dir = TierStore(spark, str(tmp_path / "store"))
-    mv = _daily_view(store_dir)
-
-    early.write.mode("append").parquet(landing)
-    q = run_stream_into_store(
-        spark, landing, store_dir, str(tmp_path / "ckpt"),
-        available_now=True, watermark="60 days",
-    )
-    assert q.awaitTermination(240), "stream did not finish in 240s"
-    mv.refresh("mv-early")
-    assert_frames_match(_view_state(mv), _expected(store_dir))
-
-    # late delivery overlaps every bucket: the stream MERGEs cumulative
-    # window values, the changelog sees them as updates
-    late.write.mode("append").parquet(landing)
-    q2 = run_stream_into_store(
-        spark, landing, store_dir, str(tmp_path / "ckpt"),
-        available_now=True, watermark="60 days",
-    )
-    assert q2.awaitTermination(240), "stream did not finish in 240s"
-    mv.refresh("mv-late")
-
-    want = (
-        seq.groupBy(
-            F.date_trunc("day", F.col("event_ts")).alias("bucket_start"), "source"
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum("n_tok").cast("long").alias("sum_n_tok"),
-        )
-        .toPandas()
-    )
-    assert_frames_match(_view_state(mv), want)

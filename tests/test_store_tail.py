@@ -2,8 +2,7 @@
 the continuous-aggregate cascade and the replica, each proven by exact
 convergence against the batch computation of the same final state —
 including across a stop, more upstream commits, and a checkpointed
-resume (the kill-and-resume discipline of tests/test_stream_resume.py
-applied to a store-tailing pipeline)."""
+resume."""
 
 from __future__ import annotations
 
@@ -132,7 +131,7 @@ def test_cli_tail_cascade_drain(spark, tmp_path):
     )
     env = dict(
         os.environ,
-        PYTHONPATH="/root/repo",
+        PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         SPARK_GRAFT_MASTER="local[2]",
     )
     out = subprocess.run(

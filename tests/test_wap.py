@@ -199,77 +199,6 @@ def test_planner_never_skips_published_unbaked_rows(spark, tmp_path):
     ).count() == 0  # baked remap preserves the publish horizon
 
 
-# ---------- validated streaming publish (WAP at micro-batch grain) ----------
-
-
-def test_validated_stream_publishes_good_abandons_bad(spark, tmp_path):
-    """Two deliveries through the WAP streaming sink: a good batch
-    publishes (visible, newest-wins), a poisoned batch is abandoned —
-    never visible, not even transiently — and a replayed decided batch
-    is a no-op."""
-    from pyspark.sql import functions as F
-
-    from s1tiling_spark.operators.rollup import rollup_sequences
-    from s1tiling_spark.sources.synth import synth_sequences
-    from s1tiling_spark.streaming.rollup_stream import (
-        run_validated_stream_into_store,
-    )
-
-    landing = str(tmp_path / "landing")
-    seq = synth_sequences(spark, 2000).cache()
-    good = seq.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
-    bad = seq.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1).withColumn(
-        "source", F.lit("poisoned")
-    )
-    store = TierStore(spark, str(tmp_path / "store"))
-
-    def validate(df):
-        return df.filter(F.col("source") == "poisoned").limit(1).count() == 0
-
-    good.write.mode("append").parquet(landing)
-    q = run_validated_stream_into_store(
-        spark, landing, store, str(tmp_path / "ckpt"),
-        validate, available_now=True, watermark="60 days",
-    )
-    q.awaitTermination(240)
-    expect = rollup_sequences(good, "1h")
-    served = store.read("1h", keys=("bucket_start", "source"))
-    assert served is not None
-    assert served.count() == expect.count()
-    assert store._staged_entries("1h")[0]["state"] == "published"
-
-    bad.write.mode("append").parquet(landing)
-    q2 = run_validated_stream_into_store(
-        spark, landing, store, str(tmp_path / "ckpt"),
-        validate, available_now=True, watermark="60 days",
-    )
-    q2.awaitTermination(240)
-    served2 = store.read("1h", keys=("bucket_start", "source"))
-    assert served2.filter(F.col("source") == "poisoned").count() == 0
-    assert served2.count() == expect.count()  # nothing leaked
-    states = {e["audit_id"]: e["state"] for e in store._staged_entries("1h")}
-    assert sorted(states.values()) == ["abandoned", "published"]
-
-    # replay of decided batches: a third run over the same landing data
-    # (fresh checkpoint replays both batches' ids? no — same checkpoint,
-    # no new data → no-op; assert the store did not change)
-    before = sorted(
-        (r["bucket_start"], r["source"], r["commit_seq"])
-        for r in served2.collect()
-    )
-    q3 = run_validated_stream_into_store(
-        spark, landing, store, str(tmp_path / "ckpt"),
-        validate, available_now=True, watermark="60 days",
-    )
-    q3.awaitTermination(240)
-    after = sorted(
-        (r["bucket_start"], r["source"], r["commit_seq"])
-        for r in store.read("1h", keys=("bucket_start", "source")).collect()
-    )
-    assert after == before
-    seq.unpersist()
-
-
 def test_stage_repairs_torn_prior_attempt(spark, tmp_path):
     """stage() under an audit_id whose prior attempt died mid-write
     (state `staging`) removes the torn files and restages — the

@@ -6,12 +6,13 @@ order-insensitive values. Usage: python tools/check_oracle.py [names...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = __import__("os").environ.get("CHECK_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("CHECK_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 def norm_cell(v):
@@ -52,13 +53,19 @@ def main():
     from s1tiling_spark.session import build_session
     from s1tiling_spark.sources.tables import TABLES
 
+    qs, osql = e.queries(), e.oracle_sql()
+    only = set(sys.argv[1:])
+    unknown = [name for name in sys.argv[1:] if name not in qs]
+    for name in unknown:
+        print(f"FAIL  {name}: no such query")
+    if unknown:
+        sys.exit(1)
+
     spark = build_session(master="local[8]", app_name="oracle-check", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    qs, osql = e.queries(), e.oracle_sql()
-    only = set(sys.argv[1:])
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
