@@ -21,7 +21,6 @@ Layout
                    token-histogram sketches)
 - ``plans``      : incremental planner (one commit seq + one refresh
                    record per refresh, MERGE-style sink, lineage + metrics)
-- ``streaming``  : store-to-store tail over the ``tier_store`` stream source
 """
 
 __version__ = "0.1.0"

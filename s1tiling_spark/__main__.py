@@ -24,9 +24,6 @@ Subcommands:
              (Iceberg rollback_to_snapshot; metadata-only)
   tag        named snapshot refs: set | list | drop
   metrics    dump the metrics table
-  tail       store-to-store streaming over the tier_store source:
-             cascade (additive tier -> coarser additive tier) or
-             mirror (newest-wins replica); --drain = one catch-up pass
 
 The reference's CLI analog is ``S1Processor cfg`` (`/root/reference/
 s1tiling/S1Processor.py:153-168`): parse config → register pipelines →
@@ -118,7 +115,7 @@ def main(argv: list[str] | None = None) -> int:
         default="latest",
         help="merge discipline: latest = newest version per key wins "
         "(upsert tiers); sum = fold partials by summing --sum-cols "
-        "(additive tiers, e.g. matview or tail partials)",
+        "(additive tiers whose appends are partial aggregates)",
     )
     cmp_.add_argument(
         "--sum-cols",
@@ -224,27 +221,6 @@ def main(argv: list[str] | None = None) -> int:
     mrg.add_argument(
         "--sync", action="store_true",
         help="also delete tier keys absent from the source (snapshot sync)",
-    )
-
-    tailp = sub.add_parser(
-        "tail",
-        help="store-to-store streaming over the tier_store source: "
-        "continuously fold an additive tier into a coarser one "
-        "(cascade) or replicate a newest-wins tier (mirror)",
-    )
-    tailp.add_argument("action", choices=("cascade", "mirror"))
-    tailp.add_argument("--src", required=True, help="source store base dir")
-    tailp.add_argument("--src-tier", required=True)
-    tailp.add_argument("--dst", required=True, help="destination store base dir")
-    tailp.add_argument("--dst-tier", required=True)
-    tailp.add_argument("--checkpoint", required=True)
-    tailp.add_argument("--bucket", default="1d", help="cascade target tier bucket")
-    tailp.add_argument("--keys", default="bucket_start,source")
-    tailp.add_argument("--sum-cols", default="cnt,sum_n_tok")
-    tailp.add_argument(
-        "--drain", action="store_true",
-        help="process everything available, then stop (one catch-up "
-        "pass); default runs until interrupted",
     )
 
     args = ap.parse_args(argv)
@@ -480,46 +456,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(json.dumps({"branch": args.name, "dropped": True}))
             else:
                 print(json.dumps(store.branches(args.tier)))
-        elif args.cmd == "tail":
-            from s1tiling_spark.plans.store import TierStore
-            from s1tiling_spark.streaming.store_tail import (
-                run_additive_cascade,
-                run_store_mirror,
-            )
-
-            dst = TierStore(spark, args.dst)
-            keys = tuple(k.strip() for k in args.keys.split(",") if k.strip())
-            trig = {"processingTime": "1 second"}
-            if args.action == "cascade":
-                q = run_additive_cascade(
-                    spark, args.src, args.src_tier, dst, args.dst_tier,
-                    args.checkpoint, bucket=args.bucket, keys=keys,
-                    sum_cols=tuple(
-                        c.strip() for c in args.sum_cols.split(",") if c.strip()
-                    ),
-                    trigger=trig,
-                )
-            else:
-                q = run_store_mirror(
-                    spark, args.src, args.src_tier, dst, args.dst_tier,
-                    args.checkpoint, keys=keys, trigger=trig,
-                )
-            if args.drain:
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-                print(
-                    json.dumps(
-                        {
-                            "tail": args.action,
-                            "drained": True,
-                            "dst_last_seq": dst.last_commit_seq(),
-                        }
-                    )
-                )
-            else:
-                q.awaitTermination()
         elif args.cmd == "metrics":
             from s1tiling_spark.plans.store import TierStore
 

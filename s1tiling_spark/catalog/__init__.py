@@ -6,7 +6,7 @@ IMPORT ORDER IS LOAD-BEARING: the driver's correctness gate records
 the FIRST 50 registered queries (CORRECTNESS_r02 recorded exactly
 entries 1-50 of 68 — an observed hard cap). The 44 core queries —
 every SURVEY §2 operator and every LLM-pipeline operator — therefore
-register FIRST, with the 21 beyond-§2 extras
+register FIRST, with the 19 beyond-§2 extras
 (TPC-H, the counter family, the store-backed lifecycles and the
 serving extras) registered LAST so any overflow can only ever drop
 extras, never a §2 gate. Extras are judge-verifiable via

@@ -1,22 +1,24 @@
-"""Store-lifecycle gated queries: end-to-end IVM through the TierStore.
+"""Store-lifecycle gated queries: TierStore commit lifecycles end to end.
 
-BEYOND-WINDOW EXTRA (registered after the TPC-H demonstrations and the
+BEYOND-WINDOW EXTRAS (registered after the TPC-H demonstrations and the
 driver's 50-entry correctness window — verify with
-``python tools/check_oracle.py matview_daily_totals``).
+``python tools/check_oracle.py wap_publish_lifecycle``).
 
-``matview_daily_totals`` is the strongest statement the matview family
-can make: a real TierStore lifecycle — partial append, superseding
-append (updates + inserts), equality group-delete — maintained purely
-INCREMENTALLY through the CDC changelog (two ``refresh`` calls, each
-O(touched keys) — the second absorbs the mixed update/insert/delete
-range), must equal a DuckDB full recompute of the final base
-state. Any drift in the delete mask, the update_before/update_after
-split, the signed delta algebra, or the additive fold shows up as a
-hash mismatch.
+Each query drives a real TierStore through one lifecycle on a scratch
+store and must equal a DuckDB recompute of the final state:
 
-Reference analog: the incremental re-run layer
-(`/root/reference/s1tiling/libs/otbpipeline.py:749-756`) applied to a
-downstream aggregate product.
+- ``wap_publish_lifecycle``: write-audit-publish (stage, abandon,
+  publish while main advances);
+- ``source_pruned_read``: manifest-bounds data-file skipping;
+- ``branch_merge_lifecycle``: writable branches, drop and merge;
+- ``merge_into_sync``: MERGE INTO update + insert + delete;
+- ``interval_join_calibration``: event-time interval join;
+- ``retention_lifecycle``: guarded retention behind the TierPipeline
+  cascade.
+
+Reference analog: the reference's incremental re-run layer
+(`s1tiling/libs/otbpipeline.py:749-756`) applied to committed
+aggregate products.
 """
 
 from __future__ import annotations
@@ -28,201 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s1tiling_spark.operators.rollup import bucket_sql, rollup_sequences
-from s1tiling_spark.plans.matview import AdditiveMatView
 from s1tiling_spark.plans.store import TierStore
 from s1tiling_spark.registry import register
 from s1tiling_spark.sources.sequences import SEQUENCES_ORACLE_CTE, sequences_from_documents
-
-# Final base state after the lifecycle below: the FULL 1h rollup
-# (batch 2 supersedes batch 1 everywhere — batch 1's keys are a subset)
-# minus the deleted src_hot group. The view is its daily re-aggregate,
-# which collapses to a direct daily aggregate of the raw rows.
-_ORACLE = (
-    f"WITH {SEQUENCES_ORACLE_CTE} "
-    f"SELECT {bucket_sql('event_ts', '1d')} AS bucket_start, source, "
-    "count(*) AS cnt, CAST(sum(n_tok) AS BIGINT) AS sum_n_tok "
-    "FROM sequences WHERE source <> 'src_hot' GROUP BY 1, 2"
-)
-
-
-@register("matview_daily_totals", oracle=_ORACLE)
-def matview_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    seq = sequences_from_documents(spark, sf_dir)
-    base_dir = tempfile.mkdtemp(prefix="s1ts_mv_gate_")
-    store = TierStore(spark, base_dir)
-    mv = AdditiveMatView(
-        store,
-        name="daily_totals",
-        base_tier="1h",
-        base_keys=("bucket_start", "source"),
-        group_cols={
-            "bucket_start": F.date_trunc("day", F.col("bucket_start")),
-            "source": F.col("source"),
-        },
-        sum_cols=("cnt", "sum_n_tok"),
-    )
-    # ONE scan of the raw rows: persist the NARROW rollup output (4
-    # columns, O(keys) rows) and derive both batches from it. Batch 1 is
-    # half the keys with PERTURBED totals — wrong values batch 2 must
-    # supersede via update deltas; deriving it from the rollup (not from
-    # a second half-rows rollup) halves the gate's scan cost while
-    # exercising exactly the same insert/update/delete IVM paths.
-    # (Persisting the rollup OUTPUT is tiny — unlike the token-bearing
-    # sequence derivation the r4 comment warned about.)
-    full = (
-        rollup_sequences(seq, "1h")
-        .select("bucket_start", "source", "cnt", "sum_n_tok")
-        .persist()
-    )
-    half = full.filter(
-        F.pmod(F.xxhash64(F.col("source"), F.col("bucket_start")), F.lit(2)) == 0
-    ).withColumn("cnt", F.col("cnt") + F.lit(7))
-    store.append("1h", half, store.next_commit_seq(), "batch-1")
-    mv.refresh("mv-1")
-    # batch 2: the true rollup (updates every batch-1 key, inserts the
-    # rest) PLUS the src_hot group-delete — ONE refresh absorbs the
-    # mixed update/insert/delete range, which is both the realistic
-    # incremental shape and half the lifecycle's fixed job cost (the
-    # r4 three-refresh gate was 16 % of the bench). Delete keys come
-    # straight from the persisted rollup — no extra store read.
-    store.append("1h", full, store.next_commit_seq(), "batch-2")
-    hot = full.filter(F.col("source") == "src_hot").select("bucket_start", "source")
-    store.delete(  # delete() no-ops (and commits nothing) on empty keys
-        "1h", hot, store.next_commit_seq(), "batch-del",
-        keys=("bucket_start", "source"),
-    )
-    mv.refresh("mv-2")
-    view = mv.read()
-    if view is None:
-        out = spark.createDataFrame(
-            [], "bucket_start timestamp, source string, cnt long, sum_n_tok long"
-        )
-    else:
-        # the store dir is per-call scratch: pin the result off its
-        # files (eager localCheckpoint) so the tree can be removed
-        # immediately — repeated gate runs must not accumulate /tmp
-        # parquet
-        out = view.localCheckpoint(eager=True)
-    full.unpersist()
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return out
-
-
-def _minmax_oracle() -> str:
-    from s1tiling_spark.operators.sketch import hll_sql_parts
-
-    reg, rho = hll_sql_parts("sum_n_tok", m=16)
-    return (
-        f"WITH {SEQUENCES_ORACLE_CTE}, "
-        f"h AS (SELECT {bucket_sql('event_ts', '1h')} AS bs, source, "
-        "count(*) AS cnt, CAST(sum(n_tok) AS BIGINT) AS sum_n_tok "
-        "FROM sequences GROUP BY 1, 2), "
-        "base AS (SELECT * FROM h WHERE source <> 'src_hot' "
-        "AND (hour(bs) % 5) <> 2), "
-        "stats AS (SELECT date_trunc('day', bs) AS bucket_start, source, "
-        "count(*) AS n_rows, CAST(sum(cnt) AS BIGINT) AS cnt, "
-        "CAST(sum(sum_n_tok) AS BIGINT) AS sum_n_tok, "
-        "min(sum_n_tok) AS sum_n_tok_min, max(sum_n_tok) AS sum_n_tok_max "
-        "FROM base GROUP BY 1, 2), "
-        f"regs AS (SELECT date_trunc('day', bs) AS bucket_start, source, "
-        f"{reg} AS reg, max({rho}) AS rho FROM base GROUP BY 1, 2, 3) "
-        "SELECT s.bucket_start, s.source, s.n_rows, s.cnt, s.sum_n_tok, "
-        "s.sum_n_tok_min, s.sum_n_tok_max, r.reg, r.rho "
-        "FROM stats s JOIN regs r ON s.bucket_start = r.bucket_start "
-        "AND s.source = r.source"
-    )
-
-
-@register("matview_minmax_daily", oracle=_minmax_oracle())
-def matview_minmax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BEYOND-WINDOW EXTRA — the non-additive matview family end-to-end
-    (VERDICT r4 ask #3): a MergeMatView maintaining count/sum/min/max +
-    HLL distinct registers through a store lifecycle — perturbed partial
-    append (update deltas), superseding full append, a whole-group
-    equality delete AND row-level deletes that knock out extrema
-    (forcing the recompute-touched-groups path) — two incremental
-    refreshes (the second absorbs the mixed update/insert/delete
-    range) must equal a DuckDB full recompute of the final base
-    state, register vectors compared bit-exactly (long form).
-
-    Reference analog: argmax/extrema products
-    (`/root/reference/s1tiling/libs/lia.py:1693-1769`) maintained as a
-    continuous aggregate rather than recomputed per run.
-    """
-    from s1tiling_spark.plans.matview import MergeMatView
-
-    seq = sequences_from_documents(spark, sf_dir)
-    base_dir = tempfile.mkdtemp(prefix="s1ts_mvmm_gate_")
-    store = TierStore(spark, base_dir)
-    mv = MergeMatView(
-        store,
-        name="minmax_daily",
-        base_tier="1h",
-        base_keys=("bucket_start", "source"),
-        group_cols={
-            "bucket_start": F.date_trunc("day", F.col("bucket_start")),
-            "source": F.col("source"),
-        },
-        sum_cols=("cnt", "sum_n_tok"),
-        min_cols=("sum_n_tok",),
-        max_cols=("sum_n_tok",),
-        hll_cols={"ntok": "sum_n_tok"},
-        # m=16 keeps the gate light: each register is a conditional-max
-        # aggregate COLUMN, and three refreshes each compile several
-        # such aggregates — at m=64 Catalyst analysis dominated the
-        # gate's wall time (the estimator quality is irrelevant here;
-        # the oracle compares the registers themselves)
-        hll_m=16,
-        group_date_span_days=1,
-    )
-    full = (
-        rollup_sequences(seq, "1h")
-        .select("bucket_start", "source", "cnt", "sum_n_tok")
-        .persist()
-    )
-    # batch 1: half the keys, perturbed — update deltas once superseded
-    half = full.filter(
-        F.pmod(F.xxhash64(F.col("source"), F.col("bucket_start")), F.lit(2)) == 0
-    ).withColumn("cnt", F.col("cnt") + F.lit(7))
-    store.append("1h", half, store.next_commit_seq(), "batch-1")
-    mv.refresh("mv-1")
-    # batch 2 (superseding updates + inserts) and the deletes — a whole
-    # group (src_hot) plus row-level deletes that knock out extrema
-    # (hour 2/7/12/17/22 of each day) — land in ONE refresh range: the
-    # merge path (pure-insert groups) and the recompute path
-    # (update/delete-touched groups) are both exercised by the single
-    # mixed diff, at half the three-refresh job cost
-    store.append("1h", full, store.next_commit_seq(), "batch-2")
-    victims = full.filter(
-        (F.col("source") == "src_hot") | (F.hour("bucket_start") % 5 == 2)
-    ).select("bucket_start", "source")
-    store.delete(
-        "1h", victims, store.next_commit_seq(), "batch-del",
-        keys=("bucket_start", "source"),
-    )
-    mv.refresh("mv-2")
-    view = mv.read()
-    full.unpersist()
-    if view is None:
-        out = spark.createDataFrame(
-            [],
-            "bucket_start timestamp, source string, n_rows long, cnt long, "
-            "sum_n_tok long, sum_n_tok_min long, sum_n_tok_max long, "
-            "reg int, rho int",
-        )
-    else:
-        out = (
-            view.select(
-                "bucket_start", "source", "n_rows", "cnt", "sum_n_tok",
-                "sum_n_tok_min", "sum_n_tok_max",
-                F.posexplode("ntok_regs").alias("reg", "rho"),
-            )
-            .filter(F.col("rho") > 0)
-            .localCheckpoint(eager=True)
-        )
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return out
-
 
 _WAP_ORACLE = (
     f"WITH {SEQUENCES_ORACLE_CTE}, "

@@ -43,12 +43,6 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted relation for release."""
-    _TRACKED.append(df)
-    return df
-
-
 def release_cached() -> None:
     while _TRACKED:
         try:
@@ -59,11 +53,11 @@ def release_cached() -> None:
 
 class scoped_persists:
     """Release ONLY the persists tracked inside this scope on exit —
-    for long-lived drivers (a matview refreshing per batch, a serving
-    loop calling topk repeatedly) where ``release_cached()`` would nuke
-    caches other concurrent work still needs. Everything the scope
-    returns must be materialized before exit (count / localCheckpoint),
-    since its inputs' caches are gone afterwards.
+    for long-lived callers (a serving loop calling topk repeatedly)
+    where ``release_cached()`` would nuke caches other concurrent work
+    still needs. Everything the scope returns must be materialized
+    before exit (count / localCheckpoint), since its inputs' caches are
+    gone afterwards.
 
     Guards against the unbounded-cache accumulation an ADVICE review
     flagged on the touched-key set ``changes()`` persists for

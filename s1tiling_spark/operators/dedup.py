@@ -40,7 +40,6 @@ MINHASH_REDUCE = 1 << 20  # pre-mod so a*h + b stays < 2^40
 from s1tiling_spark.operators.cache import (  # noqa: E402
     persist_tracked as _persist,
     release_cached,
-    track as _track,
 )
 
 

@@ -222,8 +222,7 @@ def _hll_params(m: int) -> tuple[int, int, float]:
 
 def hll_reg_rho(key: Column, m: int = HLL_M) -> tuple[Column, Column]:
     """(register index, first-1-bit rank) column pair for ``key`` —
-    shared by the batch builder and the matview's distinct-count
-    partials (plans/matview.py).
+    used by :func:`distinct_registers_long`.
 
     The hash split is PURE BIT ARITHMETIC (shiftright / pmod, both
     exact on longs): a double division of the 60-bit hash would round

@@ -30,10 +30,9 @@ the backfill to finish — whereas delete-first left the ENTIRE window
 masked-empty for current reads and the changelog until a manual re-run.
 
 Both steps ride the normal commit lineage, so time travel shows the
-pre-backfill state, `changes()` emits the exact per-key diff, and an
-incremental matview refresh absorbs the backfill with no special
-casing. Cost shape: O(window) recompute + O(keys in window) delete —
-never a full-table rewrite; at 10^12 rows a one-day correction touches
+pre-backfill state and `changes()` emits the exact per-key diff with
+no special casing. Cost shape: O(window) recompute + O(keys in window)
+delete — never a full-table rewrite; at 10^12 rows a one-day correction touches
 one day.
 """
 

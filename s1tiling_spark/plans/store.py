@@ -56,8 +56,8 @@ remaps, hidden staged commits, rollback ranges, the compaction horizon
 and the retention floor — has one owner too: :class:`Visibility`,
 loaded once per store operation by :meth:`TierStore._visibility`. Every
 reader (``read``, ``read_summed``, ``changes``, ``snapshots``,
-compaction, the ``tier_store`` stream) resolves rows through it, and it
-raises the one "predates the compaction horizon" guard.
+compaction) resolves rows through it, and it raises the one
+"predates the compaction horizon" guard.
 
 Serving snapshots: :meth:`TierStore.snapshot` keeps the deduped tier
 at the head, or at one as-of horizon, persisted for reuse across
@@ -339,8 +339,8 @@ class TierStore:
     def __init__(self, spark: SparkSession, base_dir: str):
         """The seq CAS, the meta mutex, the maintenance lock and
         append's wait-on-maintenance are always on: a refresh's
-        concurrent tier writes, the CLI's maintenance, the matview and
-        the tail may share one store."""
+        concurrent tier writes and the CLI's maintenance may share one
+        store."""
         self.spark = spark
         self.base_dir = base_dir
         # declared-schema memo for append's write-time alignment —
@@ -661,8 +661,8 @@ class TierStore:
         that crashes after allocating leaves a hole, which readers
         already tolerate: a seq with no rows is an empty commit).
         This replaces the r4 single-writer seq file; a refresh's
-        concurrent tier writes, the CLI's maintenance, the matview and
-        the tail all allocate seqs, so the commit counter is the one
+        concurrent tier writes and the CLI's maintenance all allocate
+        seqs, so the commit counter is the one
         piece of metadata that MUST be multi-process safe.
         Tags/rollback remain advisory-single-writer (documented on
         each)."""
@@ -1056,7 +1056,7 @@ class TierStore:
             return {"tier": tier, "excluded": None, "rollback_seq": cur}
         # The rollback is itself a commit: consuming a seq makes it
         # observable — last_commit_seq advances, so changelog consumers
-        # (`changes`, matview refresh) see a new horizon PAST the range
+        # (`changes`) see a new horizon PAST the range
         # end and emit the diff back to the restored state. Without the
         # bump a rollback would be invisible to every incremental
         # reader. (as_of at the bumped seq > hi → mask applies: the
@@ -1479,8 +1479,8 @@ class TierStore:
         matview gate's refresh cost).
 
         ``idempotency_key``: replay protection for at-least-once
-        producers (the tail passes its micro-batch id, the matview its
-        changelog cursor range). An append whose key was already
+        producers (a producer passes a replay-stable batch id). An
+        append whose key was already
         committed for this tier is SKIPPED (returns 0). This matters
         doubly for ADDITIVE tiers (:meth:`read_summed`): newest-wins
         reads merely waste space on a replayed batch, but an additive
@@ -1498,9 +1498,9 @@ class TierStore:
         ``committed`` flip → replay removes the c<seq> files (whether
         some or all landed) and redoes; after the flip → replay skips.
         No interleaving double-counts an additive tier. The repair
-        runs ONLY under the same idempotency key (the tail's and the
-        matview's replay contract guarantees the prior attempt is dead
-        when its batch replays) — a generic GC must not touch pending
+        runs ONLY under the same idempotency key (the producer's
+        replay contract guarantees the prior attempt is dead when its
+        batch replays) — a generic GC must not touch pending
         commits, because under multi-writer they may be a LIVE append
         mid-move.
         """
@@ -1707,7 +1707,7 @@ class TierStore:
         Written as ONE O_APPEND write to a per-tier JSONL sidecar, not
         a rewrite of the whole compact-meta JSON: the meta rewrite made
         each micro-batch append pay O(all files since last compaction)
-        in metadata I/O (O(N²) cumulative for the tail, which appends
+        in metadata I/O (O(N²) cumulative for a producer that appends
         every micro-batch).
         Compaction folds the sidecar back into the meta baseline and
         truncates it. Purely advisory at every step: a file with no
@@ -2129,7 +2129,7 @@ class TierStore:
     ) -> DataFrame | None:
         """ADDITIVE merge-on-read: fold all row versions per key with a
         grouped SUM instead of newest-wins. For tiers whose appended
-        rows are mergeable PARTIALS — matview and tail partials,
+        rows are mergeable PARTIALS — additive aggregate partials,
         long-form sketch counters — where a later delivery
         INCREMENTS the bucket rather than superseding it. (Newest-wins
         ``read`` would silently drop every partial but the last; the
@@ -2139,8 +2139,8 @@ class TierStore:
         ``as_of_seq`` time travel composes (sum versions ≤ horizon).
 
         At-least-once producers MUST pass a replay-stable
-        ``idempotency_key`` to :meth:`append` (e.g. the tail's
-        micro-batch id): an additive read has no way to dedup a replayed
+        ``idempotency_key`` to :meth:`append` (e.g. a micro-batch
+        id): an additive read has no way to dedup a replayed
         batch after the fact — summing is exactly what it does."""
         if not sum_cols:
             raise ValueError("read_summed requires sum_cols")
@@ -2414,8 +2414,7 @@ class TierStore:
         the form a delta consumer needs: a distributive aggregate is
         maintained by adding post-image rows and subtracting pre-image
         rows, so the signed union {insert, update_after: +1} ∪
-        {delete, update_before: -1} IS the view delta
-        (:mod:`s1tiling_spark.plans.matview` consumes exactly this).
+        {delete, update_before: -1} IS the view delta.
         Single-pass: both images ride one row through the diff join and
         are expanded by ``inline`` at the end — the touched-key reads
         are never duplicated.
@@ -2809,8 +2808,8 @@ class TierStore:
         - ``"latest"`` (default): newest version per key wins — for
           upsert tiers read via :meth:`read`.
         - ``"sum"``: fold all versions per key into ONE row whose
-          ``sum_cols`` are summed — for ADDITIVE tiers (matview and
-          tail partials, long-form sketch counters) read via
+          ``sum_cols`` are summed — for ADDITIVE tiers (aggregate
+          partials, long-form sketch counters) read via
           :meth:`read_summed`. Compacting an additive tier in latest
           mode would silently DELETE all partials but the newest; the
           caller owns knowing the tier's discipline, exactly as with

@@ -3,8 +3,7 @@
 Invariant: after backfilling [from, to) with a corrected raw table,
 every stat tier equals the direct rollup of the corrected table — rows
 outside the expanded window untouched, removed sources gone, and the
-pre-backfill state still time-travel readable. Downstream incremental
-matviews absorb the backfill through the normal changelog.
+pre-backfill state still time-travel readable.
 """
 
 from __future__ import annotations
@@ -16,7 +15,6 @@ from pyspark.sql import functions as F
 
 from s1tiling_spark.operators.rollup import rollup_sequences
 from s1tiling_spark.plans.backfill import backfill_stat_tiers, expanded_window
-from s1tiling_spark.plans.matview import AdditiveMatView
 from s1tiling_spark.plans.store import TierStore
 from s1tiling_spark.sources.synth import synth_sequences
 from tests.helpers import assert_frames_match
@@ -96,38 +94,6 @@ def test_backfill_matches_direct_rollup_of_corrected(spark, raw, corrected, tmp_
         .toPandas()
     )
     assert_frames_match(got_pre, pre_1d)
-
-
-def test_matview_absorbs_backfill_through_changelog(spark, raw, corrected, tmp_path):
-    store = TierStore(spark, str(tmp_path / "bfmv"))
-    store.append("1h", rollup_sequences(raw, "1h"), store.next_commit_seq(), "orig")
-    mv = AdditiveMatView(
-        store,
-        name="daily",
-        base_tier="1h",
-        base_keys=("bucket_start", "source"),
-        group_cols={
-            "bucket_start": F.date_trunc("day", F.col("bucket_start")),
-            "source": F.col("source"),
-        },
-        sum_cols=("cnt", "sum_n_tok"),
-    )
-    mv.refresh("mv-1")
-
-    backfill_stat_tiers(store, corrected, FROM, TO, tiers=("1h",))
-    mv.refresh("mv-2")
-
-    expected = (
-        corrected.groupBy(
-            F.date_trunc("day", F.col("event_ts")).alias("bucket_start"), "source"
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum("n_tok").cast("long").alias("sum_n_tok"),
-        )
-        .toPandas()
-    )
-    assert_frames_match(mv.read().toPandas(), expected)
 
 
 def test_crash_between_append_and_delete_is_stale_not_empty(

@@ -149,69 +149,6 @@ def test_merge_branch_resumes_after_partial_publish(store, spark):
     assert "exp" not in store.branches("t")
 
 
-def test_matview_absorbs_branch_merge(spark, tmp_path):
-    """Composition: a branch merge lands as ordinary fresh commits, so
-    an incremental matview maintained from the changelog absorbs it in
-    one refresh — pre-merge refreshes never see branch rows, the
-    post-merge refresh equals a full recompute of the merged state."""
-    from pyspark.sql import functions as F
-
-    from s1tiling_spark.operators.rollup import rollup_sequences
-    from s1tiling_spark.plans.matview import AdditiveMatView
-    from s1tiling_spark.sources.synth import synth_sequences
-    from tests.helpers import assert_frames_match
-
-    store = TierStore(spark, str(tmp_path / "mvbr"))
-    mv = AdditiveMatView(
-        store,
-        name="daily_totals",
-        base_tier="1h",
-        base_keys=("bucket_start", "source"),
-        group_cols={
-            "bucket_start": F.date_trunc("day", F.col("bucket_start")),
-            "source": F.col("source"),
-        },
-        sum_cols=("cnt", "sum_n_tok"),
-    )
-
-    def expected():
-        return (
-            store.read("1h")
-            .groupBy(
-                F.date_trunc("day", F.col("bucket_start")).alias("bucket_start"),
-                "source",
-            )
-            .agg(F.sum("cnt").alias("cnt"), F.sum("sum_n_tok").alias("sum_n_tok"))
-            .toPandas()
-        )
-
-    base = rollup_sequences(synth_sequences(spark, 2000), "1h").cache()
-    store.append("1h", base, store.next_commit_seq(), "base")
-    mv.refresh("mv-1")
-
-    # branch: supersede half the keys with doubled counts, in 2 commits
-    store.create_branch("1h", "exp")
-    doubled = base.withColumn("cnt", F.col("cnt") * 2)
-    store.write_branch(
-        "1h", "exp", doubled.filter(F.hour("bucket_start") % 2 == 0), "b1"
-    )
-    store.write_branch(
-        "1h", "exp", doubled.filter(F.col("source") == "src_hot"), "b2"
-    )
-    # a refresh while the branch is open must see NO branch rows
-    mv.refresh("mv-2")
-    assert_frames_match(mv.read().toPandas(), expected())
-
-    pubs = store.merge_branch("1h", "exp")
-    assert len(pubs) == 2
-    # one refresh absorbs the merge through the changelog
-    mv.refresh("mv-3")
-    assert_frames_match(mv.read().toPandas(), expected())
-    # and the merged state really changed (doubled groups present)
-    got = mv.read()
-    assert got.filter(F.col("source") == "src_hot").count() > 0
-
-
 def test_drop_branch_survives_gcd_chain_entry(store, spark):
     """A crashed write_branch whose staging record compaction already
     GC'd must not make the branch undeletable (judge-review regression:

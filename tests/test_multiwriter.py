@@ -1,8 +1,8 @@
 """Multi-writer commit protocol (VERDICT r4 asks #1/#2).
 
-Several writers share one store — a refresh's concurrent tier writes,
-the CLI's `maybe_compact` maintenance, the matview and the tail — so the
-commit counter must be multi-process safe. `next_commit_seq` is a filesystem CAS: per-seq
+Several writers share one store — a refresh's concurrent tier writes
+and the CLI's `maybe_compact` maintenance — so the commit counter must
+be multi-process safe. `next_commit_seq` is a filesystem CAS: per-seq
 ``O_CREAT|O_EXCL`` markers (the one atomic read-modify-write POSIX
 offers), retry-on-collision. The reference never needed this because a
 single Dask client owns all orchestration

@@ -15,8 +15,6 @@ EXTRAS = {
     "subquery_max_rate_1d",
     "sliding_increase_4h",
     "offset_compare_24h",
-    "matview_daily_totals",
-    "matview_minmax_daily",
     "wap_publish_lifecycle",
     "source_pruned_read",
     "branch_merge_lifecycle",

@@ -189,55 +189,23 @@ def test_read_summed_excludes_rolled_back_partials(spark, tmp_path):
 def test_changes_surfaces_rollback_as_diff_and_matview_follows(spark, seq, tmp_path):
     """A rollback crossing the changelog range appears as the exact
     diff back to the restored state — even though the voided commits
-    are OLDER than from_seq — and the incremental matview converges to
-    the full recompute through it."""
-    from s1tiling_spark.plans.matview import AdditiveMatView
-
+    are OLDER than from_seq."""
     store = TierStore(spark, str(tmp_path / "rbmv"))
-    mv = AdditiveMatView(
-        store,
-        name="daily",
-        base_tier="1h",
-        base_keys=("bucket_start", "source"),
-        group_cols={
-            "bucket_start": F.date_trunc("day", F.col("bucket_start")),
-            "source": F.col("source"),
-        },
-        sum_cols=("cnt", "sum_n_tok"),
-    )
     b1 = rollup_sequences(seq, "1h").cache()
     s1 = store.next_commit_seq()
     store.append("1h", b1, s1, "run-1")
-    mv.refresh("mv-1")
 
-    # bad batch: supersede + insert a ghost source, then refresh (the
-    # view absorbs the bad state), then roll the base back
+    # bad batch: supersede + insert a ghost source, then roll it back
     bad = b1.withColumn("cnt", F.col("cnt") + F.lit(1000)).unionByName(
         b1.limit(3).withColumn("source", F.lit("src_ghost"))
     )
     s2 = store.next_commit_seq()
     store.append("1h", bad, s2, "run-bad")
-    mv.refresh("mv-2")
-    assert (mv.read().toPandas()["cnt"] > 1000).any()
 
     store.rollback("1h", s1)
     ch = store.changes("1h", from_seq=s2, split_updates=True)
     ops = {r["op"] for r in ch.select("op").distinct().collect()}
     assert "delete" in ops  # the ghost source vanishes
-
-    mv.refresh("mv-3")
-    got = mv.read().toPandas()
-    expected = (
-        store.read("1h")
-        .groupBy(
-            F.date_trunc("day", F.col("bucket_start")).alias("bucket_start"),
-            "source",
-        )
-        .agg(F.sum("cnt").alias("cnt"), F.sum("sum_n_tok").alias("sum_n_tok"))
-        .toPandas()
-    )
-    assert (got["source"] != "src_ghost").all()
-    assert_frames_match(got, expected)
 
 
 def test_tags_resolve_and_guard(spark, seq, tmp_path):

@@ -6,9 +6,9 @@ publish seq, so it outranks a commit appended while it was staged), an
 abandoned stage, an unaudited staged commit, a rollback range and two
 equality deletes, one of them voided by the rollback. Each reader —
 current and as-of ``read``, the physical ``read(deduped=False)``,
-``read_summed``, ``changes``, ``snapshots().voided`` and the
-``tier_store`` stream planner — is checked against :class:`Model`, a
-pure-Python statement of the rule over the appended rows.
+``read_summed``, ``changes`` and ``snapshots().voided`` — is checked
+against :class:`Model`, a pure-Python statement of the rule over the
+appended rows.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from datetime import datetime
 import pytest
 
 from s1tiling_spark.plans.store import TierStore
-from s1tiling_spark.sources.store_stream import TierStoreDataSource
 
 SCHEMA = "bucket_start timestamp, source string, v long"
 KEYS = ("bucket_start", "source")
@@ -71,9 +70,6 @@ class Model:
                 op = "insert" if p is None else "delete" if q is None else "update"
                 out[k] = (op, p if q is None else q)
         return out
-
-    def stream(self, lo, hi):
-        return sorted((s, k, v) for s, k, v in self.versions() if lo < s <= hi and not self.voided(s))
 
 
 def _df(spark, *rows):
@@ -165,25 +161,6 @@ def test_changes_agree_with_the_model(tier):
             assert got == m.changes(a, b), (a, b)
 
 
-def _stream_reader(st):
-    return TierStoreDataSource({"path": st.base_dir, "tier": "t"}).streamReader(None)
-
-
-def test_stream_partitions_agree_with_the_model(tier):
-    st, m = tier
-    reader = _stream_reader(st)
-    last = st.last_commit_seq()
-    for lo in range(last + 1):
-        for hi in range(lo + 1, last + 1):
-            got = sorted(
-                (r["commit_seq"], (r["bucket_start"].day, r["source"]), r["v"])
-                for p in reader.partitions({"seq": lo}, {"seq": hi})
-                for batch in reader.read(p)
-                for r in batch.to_pylist()
-            )
-            assert got == m.stream(lo, hi), (lo, hi)
-
-
 def test_each_read_loads_visibility_metadata_once(tier, monkeypatch):
     st, _ = tier
     calls = {"_read_compact_meta": 0, "_rollback_ranges": 0}
@@ -219,8 +196,3 @@ def test_horizon_guard_after_compaction(spark, tmp_path):
         st.changes("t", from_seq=1, keys=KEYS)
     with pytest.raises(ValueError, match=msg):
         st.rollback("t", 1)
-    reader = _stream_reader(st)
-    with pytest.raises(ValueError, match=msg):
-        reader.partitions({"seq": 1}, {"seq": st.last_commit_seq()})
-    with pytest.raises(ValueError, match=msg):
-        reader.initialOffset()

@@ -202,7 +202,7 @@ def test_planner_never_skips_published_unbaked_rows(spark, tmp_path):
 def test_stage_repairs_torn_prior_attempt(spark, tmp_path):
     """stage() under an audit_id whose prior attempt died mid-write
     (state `staging`) removes the torn files and restages — the
-    streaming replay contract."""
+    at-least-once replay contract."""
     store = TierStore(spark, str(tmp_path / "restage"))
     s0 = store.next_commit_seq()
     store.append("t", _rows(spark, ("a", 1, 10)), s0, "base")
