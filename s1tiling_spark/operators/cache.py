@@ -50,34 +50,3 @@ def release_cached() -> None:
         except Exception:
             pass
 
-
-class scoped_persists:
-    """Release ONLY the persists tracked inside this scope on exit —
-    for long-lived callers (a serving loop calling topk repeatedly)
-    where ``release_cached()`` would nuke caches other concurrent work
-    still needs. Everything the scope returns must be materialized
-    before exit (count / localCheckpoint), since its inputs' caches are
-    gone afterwards.
-
-    Guards against the unbounded-cache accumulation an ADVICE review
-    flagged on the touched-key set ``changes()`` persists for
-    partition pruning.
-    """
-
-    def __enter__(self) -> "scoped_persists":
-        # membership by IDENTITY, not list index: persist_tracked's
-        # _prune() may compact _TRACKED mid-scope, which would shift a
-        # saved index past the scope's own entries and release nothing
-        # (review catch, r5 — the >= _PRUNE_AT serving loop is exactly
-        # this class's use case)
-        self._before = {id(df) for df in _TRACKED}
-        return self
-
-    def __exit__(self, *exc) -> None:
-        scoped = [df for df in _TRACKED if id(df) not in self._before]
-        _TRACKED[:] = [df for df in _TRACKED if id(df) in self._before]
-        for df in scoped:
-            try:
-                df.unpersist()
-            except Exception:
-                pass

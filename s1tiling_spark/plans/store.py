@@ -61,7 +61,12 @@ compaction) resolves rows through it, and it raises the one
 
 Serving snapshots: :meth:`TierStore.snapshot` keeps the deduped tier
 at the head, or at one as-of horizon, persisted for reuse across
-queries (the router serves from it). ``read`` itself stays uncached.
+queries (the router serves from it). ``read`` never builds one, but a
+head ``read(tier, sources=…)`` under the defaults (deduped, default
+keys, no ``as_of_seq``, ``branch`` or ``audit_seq``) is served from the
+tier's held head snapshot, filtered to those sources and ``p_dates``,
+whenever :meth:`TierStore.snapshot` would return that snapshot without
+rebuilding it; every other read plans its file scan.
 - Key: ``(tier, as_of_seq)`` plus the live data files (relative
   path, size, mtime), the :class:`Visibility` record and the
   ``_deletes/`` file names. It is re-derived on every call and never
@@ -1904,6 +1909,14 @@ class TierStore:
         bounds`, the Iceberg manifest lower/upper-bounds analog) admit
         none of the requested sources — the single-source serving read
         scans O(that source's files), not O(all files of the date).
+        Served from the held head snapshot instead, scanning no file,
+        when the read is otherwise a default head read (deduped,
+        default keys, no ``as_of_seq``, ``branch`` or ``audit_seq``)
+        and :meth:`snapshot` would return its held head snapshot
+        without rebuilding it — same rows, since the snapshot is this
+        read's dedup over every source. A stale held snapshot is
+        released here as :meth:`snapshot` would release it; ``read``
+        never builds one.
 
         ``audit_seq``: also serve that staged commit's rows
         (:meth:`audit_read`).
@@ -1919,6 +1932,20 @@ class TierStore:
                 )
             as_of_seq, chain = self._branch_seqs(tier, branch)
         vis = self._visibility(tier)
+        if (
+            sources is not None
+            and deduped
+            and tuple(keys) == DEFAULT_KEYS
+            and as_of_seq is None
+            and branch is None
+            and audit_seq is None
+            and (tier, False) in self._snapshots
+        ):
+            key = self._snapshot_key(tier, vis, None)
+            with self._snapshot_lock:
+                held = self._held_snapshot((tier, False), key)
+            if held is not None:
+                return self._filter_rows(held, tier, p_dates, sources)
         df = self._scan(
             tier,
             vis,
@@ -1963,29 +1990,15 @@ class TierStore:
         with no data files and, as of a horizon, for a tier with no rows
         at it: that emptiness is probed once per build, never per
         query. The cache fills on the snapshot's first use."""
-        from s1tiling_spark.operators.cache import is_cached, persist_tracked
+        from s1tiling_spark.operators.cache import persist_tracked
 
         vis = self._visibility(tier)
-        path = self.tier_path(tier)
-        files = []
-        for f in self._data_files(path):
-            try:
-                st = os.stat(f.path)
-            except OSError:
-                continue  # retired by a concurrent compact
-            files.append((f.rel, st.st_size, st.st_mtime_ns))
-        dels = self._deletes_path(tier)
-        deletes = sorted(os.listdir(dels)) if os.path.isdir(dels) else []
-        key = (as_of_seq, tuple(files), vis, tuple(deletes))
+        key = self._snapshot_key(tier, vis, as_of_seq)
         slot = (tier, as_of_seq is not None)
         with self._snapshot_lock:
-            held = self._snapshots.pop(slot, None)
+            held = self._held_snapshot(slot, key)
             if held is not None:
-                held_key, cached, served = held
-                if held_key == key and is_cached(cached):
-                    self._snapshots[slot] = held
-                    return served
-                cached.unpersist()
+                return held
             df = self._scan(tier, vis)
             if df is None:
                 return None
@@ -2004,6 +2017,51 @@ class TierStore:
             served = cached.drop("_snapshot")
             self._snapshots[slot] = (key, cached, served)
             return served
+
+    def _snapshot_key(
+        self, tier: str, vis: Visibility, as_of_seq: int | None
+    ) -> tuple:
+        """The commit state a serving snapshot is keyed by (see the
+        module docstring): the horizon, every live data file's
+        (relative path, size, mtime), the :class:`Visibility` record
+        and the ``_deletes/`` file names."""
+        files = []
+        for f in self._data_files(self.tier_path(tier)):
+            try:
+                st = os.stat(f.path)
+            except OSError:
+                continue  # retired by a concurrent compact
+            files.append((f.rel, st.st_size, st.st_mtime_ns))
+        dels = self._deletes_path(tier)
+        deletes = sorted(os.listdir(dels)) if os.path.isdir(dels) else []
+        return (as_of_seq, tuple(files), vis, tuple(deletes))
+
+    def _held_snapshot(self, slot: tuple, key: tuple) -> DataFrame | None:
+        """The snapshot held in ``slot`` if it was built under ``key``
+        and is still cached; a stale or released one is unpersisted and
+        dropped. The caller holds the snapshot lock."""
+        from s1tiling_spark.operators.cache import is_cached
+
+        held = self._snapshots.pop(slot, None)
+        if held is None:
+            return None
+        held_key, cached, served = held
+        if held_key == key and is_cached(cached):
+            self._snapshots[slot] = held
+            return served
+        cached.unpersist()
+        return None
+
+    @staticmethod
+    def _filter_rows(
+        df: DataFrame, tier: str, p_dates: list | None, sources: list | None
+    ) -> DataFrame:
+        """``read``'s ``p_dates`` and ``sources`` row filters."""
+        if p_dates is not None:
+            df = df.filter(F.col("p_date").isin(_partitions_holding(tier, p_dates)))
+        if sources is not None:
+            df = df.filter(F.col("source").isin([str(s) for s in sources]))
+        return df
 
     def _scan(
         self,
@@ -2087,13 +2145,9 @@ class TierStore:
                 utc_date(F.col("bucket_start")) < F.lit(date.fromisoformat(floor))
             ) & (F.col("commit_seq") < exp_seq)
             df = df.filter(~F.coalesce(expired, F.lit(False)))
-        if p_dates is not None:
-            df = df.filter(F.col("p_date").isin(_partitions_holding(tier, p_dates)))
-        if sources is not None:
-            # the row filter is ALWAYS applied — file skipping above is
-            # a pure scan optimization, never the correctness mechanism
-            df = df.filter(F.col("source").isin([str(s) for s in sources]))
-        return df
+        # the source row filter is ALWAYS applied — file skipping above
+        # is a pure scan optimization, never the correctness mechanism
+        return self._filter_rows(df, tier, p_dates, sources)
 
     @staticmethod
     def _newest_wins(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:

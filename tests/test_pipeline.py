@@ -544,7 +544,7 @@ def test_store_read_dynamic_partition_pruning(spark, seq, tmp_path):
     assert got_days == kept
 
 
-def test_changes_and_matview_survive_retention(spark, seq, tmp_path):
+def test_changes_survive_retention(spark, seq, tmp_path):
     """Retention must not brick incremental consumers: changes() over a
     range that starts below the expiry seq still works (both as-of
     states read the same surviving files — no spurious retraction)."""
@@ -562,27 +562,6 @@ def test_changes_and_matview_survive_retention(spark, seq, tmp_path):
     # changes() from below the expiry seq still serves the diff
     ch = store.changes("1h", from_seq=lag_cursor)
     assert ch.filter(F.col("op") == "insert").count() > 0
-
-
-def test_scoped_persists_survives_registry_prune(spark, monkeypatch):
-    """scoped_persists must release by IDENTITY: a persist_tracked()
-    inside the scope can trigger the registry's _prune() compaction,
-    which shifts indices — an index-based mark would then release
-    nothing (the exact unbounded-cache leak the scope guards)."""
-    from s1tiling_spark.operators import cache
-
-    monkeypatch.setattr(cache, "_PRUNE_AT", 2)
-    cache.release_cached()
-    a = cache.persist_tracked(spark.range(5))
-    b = cache.persist_tracked(spark.range(6))
-    b.unpersist()  # stale registry entry — _prune() will drop it
-    with cache.scoped_persists():
-        inner = cache.persist_tracked(spark.range(7))  # triggers _prune
-        inner.count()
-        assert inner.storageLevel.useMemory
-    assert not inner.storageLevel.useMemory  # scope released it
-    assert a.storageLevel.useMemory  # outer persist untouched
-    cache.release_cached()
 
 
 def test_failed_lower_write_stops_its_cascades(spark, seq, tmp_path, monkeypatch):

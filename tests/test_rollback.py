@@ -186,7 +186,7 @@ def test_read_summed_excludes_rolled_back_partials(spark, tmp_path):
     assert [r["cnt"] for r in got2] == [30]
 
 
-def test_changes_surfaces_rollback_as_diff_and_matview_follows(spark, seq, tmp_path):
+def test_changes_surfaces_rollback_as_diff(spark, seq, tmp_path):
     """A rollback crossing the changelog range appears as the exact
     diff back to the restored state — even though the voided commits
     are OLDER than from_seq."""

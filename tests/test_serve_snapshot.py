@@ -1,10 +1,12 @@
 """Serving snapshots (``TierStore.snapshot``): the router serves its
 tier reads from persisted deduped snapshots keyed by the tier's commit
 state. Contract under test:
-- reuse: a second routed query on an unchanged store scans no tier file;
+- reuse: a second routed query on an unchanged store scans no tier file,
+  and neither does a head ``read(tier, sources=…)`` while that tier's
+  head snapshot is held;
 - invalidation: after any commit — by this store instance or another
-  one on the same path — the routed answer equals the answer over a
-  fresh ``TierStore``;
+  one on the same path — the routed answer and the ``sources=`` read
+  equal the answers over a fresh ``TierStore``;
 - bound: at most a head and an as-of snapshot per tier and store, all
   freed by ``release_cached()`` or by discarding the store, and rebuilt
   on their next use.
@@ -61,6 +63,15 @@ def _fresh(store):
     return TierStore(store.spark, store.base_dir)
 
 
+def _sourced(store):
+    """A ``sources=`` head read of 1h and 1d, plain and with ``p_dates``."""
+    return [
+        sorted(tuple(r) for r in store.read(t, sources=["s0", "s1"], **kw).collect())
+        for t in ("1h", "1d")
+        for kw in ({}, {"p_dates": ["2024-01-20"]})
+    ]
+
+
 @pytest.fixture
 def served(spark, raw, tmp_path):
     """A store built from the raw rows before ``_CUT``, with warm head
@@ -100,6 +111,16 @@ def test_second_query_scans_no_tier_file(spark, served):
     cold = _jobs(spark, "snapshot-cold", lambda: _routed(_fresh(store)))
     warm = _jobs(spark, "snapshot-warm", lambda: _routed(store))
     assert 0 < len(warm) < len(cold)
+    # a single-source read is served from the held head snapshot, with
+    # the rows a fresh store's file scan returns
+    for kw in ({}, {"p_dates": ["2024-01-20"]}):
+        assert not scanned(store.read("1h", sources=["s1"], **kw))
+    rows = _sourced(store)
+    assert rows == _sourced(_fresh(store))
+    # a released snapshot is never served: the read scans files again
+    release_cached()
+    assert scanned(store.read("1h", sources=["s1"]))
+    assert _sourced(store) == rows
 
 
 def _day_rows(store, source, cnt):
@@ -159,8 +180,11 @@ def test_commit_invalidates_snapshot(served, raw, op):
     store, _ = served
     before = _routed(store)
     op(store, raw)
+    # a stale held snapshot is released, a rebuilt one served
+    assert _sourced(store) == _sourced(_fresh(store))
     after = _routed(store)
     assert after == _routed(_fresh(store))
+    assert _sourced(store) == _sourced(_fresh(store))
     if op is not _compact:  # invisible to the answer
         assert after != before
 
